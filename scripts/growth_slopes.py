@@ -45,7 +45,6 @@ def run_sf(sf: str, names: list, best_of: str) -> dict:
         "SPARK_GRAFT_SF_DIR": f"/root/testdata/{sf}",
         "SPARK_GRAFT_ONLY": ",".join(names),
         "SPARK_GRAFT_BEST_OF": best_of,
-        "SPARK_GRAFT_CPUS": "32",
     }
     import os
     out = subprocess.run(

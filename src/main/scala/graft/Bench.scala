@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Env knobs:
   *  - SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  *  - SPARK_GRAFT_CPUS     local[N] (default 32)
+  *  - SPARK_GRAFT_CPUS     local[N] (default: all cores)
   *  - SPARK_GRAFT_BEST_OF  measured passes; per-query min is reported
   *                         (default 3 — one-off environment stalls on
   *                         this shared VM otherwise land on whichever
@@ -31,11 +31,9 @@ object Bench {
 
   /** Single source of truth for the per-query artifact's location — the
     * warm-pass reader, the regression reader, and the writer all resolve
-    * THIS path (round-7 advice: two hardcoded literals could drift, and
-    * a checkout outside /root/repo silently disabled the warm pass). */
+    * THIS path (round-7 advice: two hardcoded literals could drift). */
   private[graft] def benchLastPath: java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "BENCH_LAST.json")
+    repoRoot.resolve("BENCH_LAST.json")
 
   /** Accumulates per-stage totals across the whole app; per-query deltas
     * are taken by snapshotting before/after each run. */
@@ -141,24 +139,35 @@ object Bench {
     spark.catalog.clearCache()
   }
 
+  /** Compact number: enough precision for a seconds-scale bench, short
+    * enough that the whole per-query line survives a 2000-char stdout
+    * tail window (round 2's 4 KB line was truncated mid-JSON and the
+    * official per-query numbers were lost). */
+  private def fmt(v: Double): String =
+    if (v.isNaN) "null"
+    else {
+      val s = f"$v%.2f"
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
+      else s
+    }
+
+  /** `"name":secs` entries of the slowest queries, slowest first, whose
+    * comma-joined length fits `budget` chars. Stops at the first entry
+    * that does not fit, so a cheaper query with a shorter name never
+    * takes the place of a heavier one. */
+  private[graft] def topFitting(best: Seq[(String, Double)], budget: Int): Seq[String] = {
+    val entries = best.filterNot(_._2.isNaN).sortBy(-_._2)
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    // joined length after each entry: the first adds its own length,
+    // every later one a comma too
+    val joined = entries.scanLeft(-1)(_ + 1 + _.length).tail
+    entries.take(joined.takeWhile(_ <= budget).size)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val bestOf = sys.env.getOrElse("SPARK_GRAFT_BEST_OF", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on tmpfs: disk writeback stalls on /tmp were
-      // randomly charging 30-45s to whichever query shuffled at the
-      // wrong moment (observed across repeated runs; GC and CPU steal
-      // were ruled out by instrumentation)
-      .config("spark.local.dir", "/dev/shm/graft_spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     val meter = new StageMeter
     spark.sparkContext.addSparkListener(meter)
 
@@ -299,17 +308,6 @@ object Bench {
       .map { case (f, qs) => f -> qs.map(_._2).sum }
       .toSeq.sortBy(_._1)
 
-    // compact number: enough precision for a seconds-scale bench, short
-    // enough that the whole per-query line survives the driver's
-    // 2000-char stdout tail window (round 2's 4 KB line was truncated
-    // mid-JSON and the official per-query numbers were lost)
-    def fmt(v: Double): String =
-      if (v.isNaN) "null"
-      else {
-        val s = f"$v%.2f"
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-        else s
-      }
     val qs = best.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -433,18 +431,10 @@ object Bench {
     // stderr above; this line only ADDS driver-visible entries.
     val topBudget = 2000 -
       (s"[bench] families: $familiesJson failed: $failedJson".length + 250)
-    val topEntries = best.filterNot(_._2.isNaN).sortBy(-_._2)
-    val topSb = new StringBuilder
-    var topN = 0
-    for ((k, v) <- topEntries) {
-      val e = (if (topN == 0) "" else ",") + "\"" + k + "\":" + fmt(v)
-      if (topSb.length + e.length <= topBudget - 60) {
-        topSb.append(e); topN += 1
-      }
-    }
+    val top = topFitting(best, topBudget - 60)
     val queriesTop =
-      s"""{"metric":"queries_top","unit":"sec","n_top":$topN,""" +
-        s""""queries":{${topSb.toString}}}"""
+      s"""{"metric":"queries_top","unit":"sec","n_top":${top.size},""" +
+        s""""queries":{${top.mkString(",")}}}"""
 
     // The driver json-parses the LAST stdout line. Three rounds of
     // "parsed": null taught: (a) the line must be SHORT (~150 bytes —

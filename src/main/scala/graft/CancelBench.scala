@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.DataGen
 
 /** Reference-parity benchmark main (reference main.rs:34-54): generate or
@@ -21,15 +20,9 @@ object CancelBench {
     val rowsPerFile = sys.env.getOrElse("GRAFT_ROWS_PER_FILE", "500000").toLong
     val maxWait = sys.env.getOrElse("GRAFT_MAX_WAIT_MS", "60").toLong
 
-    val spark = SparkSession.builder()
-      .master("local[4]") // reference target_partitions=4 (main.rs:124-125)
-      .appName("graft-cancel-bench")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.parquet.filterPushdown", "true") // main.rs:126
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // reference target_partitions=4 (main.rs:124-125); parquet filter
+    // pushdown (main.rs:126) is Spark's default
+    val spark = GraftSession.local("graft-cancel-bench", cores = 4)
 
     DataGen.findOrGenerate(spark, dataDir, numFiles, rowsPerFile)
     // GRAFT_NO_PERSIST=1 — the memory-pressure sweep (r9 task 8): under

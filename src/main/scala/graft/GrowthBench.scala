@@ -19,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * Bench: warm-up pass at sf0.01 first (C2 tiering), best-of-N per
   * (query, sf), persisted-RDD cleanup between runs, tmpfs shuffle dirs.
   *
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BEST_OF (default 2),
-  * SPARK_GRAFT_ONLY (comma-separated subset).
+  * Env: SPARK_GRAFT_CPUS (default: all cores), SPARK_GRAFT_BEST_OF
+  * (default 2), SPARK_GRAFT_ONLY (comma-separated subset).
   */
 object GrowthBench {
 
@@ -165,25 +165,14 @@ object GrowthBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val bestOf = sys.env.getOrElse("SPARK_GRAFT_BEST_OF", "2").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-growth")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dirs are the right default up to ~sf1; an sf10
-      // pass spills tens of GB and tmpfs IS physical memory — the r10
-      // first sf1→sf10 attempt was OOM-killed (rc=137) with 80 GB of
-      // /dev/shm spill. Big-corpus runs override to a disk path.
-      .config("spark.local.dir", sys.env.getOrElse(
-        "SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // tmpfs shuffle dirs are the right default up to ~sf1; an sf10
+    // pass spills tens of GB and tmpfs IS physical memory — the r10
+    // first sf1→sf10 attempt was OOM-killed (rc=137) with 80 GB of
+    // /dev/shm spill. Big-corpus runs set SPARK_LOCAL_DIRS to disk.
+    val spark = GraftSession.local("graft-growth")
 
     val defs = flagships
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-wall harness for the viral-safe corpus-cleaning capstone
   * (`pipeline_viral_clean`, r13 verdict stretch #8): runs the EXACT
   * registry implementation (graft.operators.Dedup.viralCleanRun — one
@@ -14,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Env: SPARK_GRAFT_PIPELINE_DIR (corpus to measure),
   * SPARK_GRAFT_WARM_DIR (default /root/testdata/sf0.01),
-  * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_LOCAL_DIR (shuffle dir —
-  * big-corpus runs point it at disk, not tmpfs).
+  * SPARK_GRAFT_CPUS (default: all cores), SPARK_LOCAL_DIRS (shuffle
+  * dir — big-corpus runs point it at disk, not tmpfs).
   */
 object PipelineBench {
 
@@ -24,18 +22,7 @@ object PipelineBench {
       "SPARK_GRAFT_PIPELINE_DIR", "/root/testdata/sf0.01")
     val warmDir = sys.env.getOrElse(
       "SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse(
-        "SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-pipeline")
 
     // C2 warm pass (discarded)
     graft.operators.Dedup.viralCleanRun(spark, warmDir).collect()
@@ -50,7 +37,7 @@ object PipelineBench {
     val total = (System.nanoTime() - t0) / 1e9
 
     println(s"## pipeline_viral_clean stage walls — corpus `$dir`, " +
-      s"local[$cpus]")
+      s"local[${GraftSession.cores}]")
     println()
     println("| stage | wall s | rows out |")
     println("|---|---|---|")

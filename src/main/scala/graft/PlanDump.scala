@@ -1,40 +1,33 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Optimization-round evidence tool: `runMain graft.PlanDump <tag> <q...>`
   * writes each query's `.explain("formatted")` output to
   * plans/<round>/<query>_<tag>.txt (tag = "before" / "after"), so plan
   * claims in OPTIMIZATION_*.md are checkable without running Spark.
-  * Round dir and data dir are env-tunable; defaults match round 13.
+  * Env: SPARK_GRAFT_ROUND (required unless SPARK_GRAFT_PLANS_DIR names
+  * the output dir), SPARK_GRAFT_REPO, SPARK_GRAFT_SF_DIR.
   * Dev/evidence tooling only — never on the bench or verify path. */
 object PlanDump {
+
+  /** SPARK_GRAFT_PLANS_DIR, else `<repo>/plans/<SPARK_GRAFT_ROUND>`. The
+    * round has no default: a fixed one silently overwrote that round's
+    * committed evidence whenever a later round forgot the variable. */
+  private[graft] def outDir(env: Map[String, String]): Path =
+    env.get("SPARK_GRAFT_PLANS_DIR").map(Paths.get(_)).getOrElse {
+      val round = env.getOrElse("SPARK_GRAFT_ROUND", throw new IllegalArgumentException(
+        "PlanDump: set SPARK_GRAFT_ROUND (e.g. r15) to choose plans/<round>/"))
+      repoRoot.resolve("plans").resolve(round)
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <tag> <query> [query...]")
     val tag = args.head
-    // plans dir defaults to a per-ROUND subdir via SPARK_GRAFT_ROUND
-    // (r13 advice: a fixed r13 default silently overwrote that round's
-    // committed evidence when a later round forgot the env var)
-    val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "r14")
-    val outDir = Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", s"/root/repo/plans/$round"))
+    val outDir = this.outDir(sys.env)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir") + "/graft_spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-plandump")
     for (n <- args.tail) {
       val df = Registry.byName(n).run(spark, sfDir)
       // Dataset.explain prints to stdout; use the QueryExecution API to

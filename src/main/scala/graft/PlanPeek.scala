@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 /** Dev loop for plan audits: `runMain graft.PlanPeek <query...>` executes
   * each registry query on the smoke corpus and prints its FINAL adaptive
@@ -8,11 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * assertions; this prints the evidence. */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-planpeek")
     for (n <- args) {
       println(s"===== $n =====")
       val df = Registry.byName(n).run(spark, "/root/testdata/sf0.001")

@@ -12,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session UDF registrations, catalog reads. It must NOT mutate
   * SparkContext-global state — `setCheckpointDir`, `hadoopConfiguration`,
   * `setJobGroup`/`setLocalProperty` on the shared context, GLOBAL temp
-  * views, or `SparkSession.builder.config` on the running session —
-  * any of which would race across workers and corrupt the correctness
-  * record non-deterministically. `localCheckpoint()` (no checkpoint
-  * dir) and per-operator `Files.createTempDirectory` paths are fine.
+  * views, or session-builder `config` calls against the running
+  * session — any of which would race across workers and corrupt the
+  * correctness record non-deterministically. `localCheckpoint()` (no
+  * checkpoint dir) and per-operator `graft.jvmScratchDir` paths are fine.
   * RegistrySpec greps every operator source file for the forbidden
   * calls; add a justified exclusion there if a future operator
   * genuinely needs one (and then it must also force

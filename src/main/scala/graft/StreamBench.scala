@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -42,7 +41,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01),
   *      SPARK_GRAFT_SF_DIR_X10 (decade corpus; "" disables the decade
-  *      leg), SPARK_GRAFT_CPUS (default 8), SPARK_GRAFT_ONLY (subset).
+  *      leg), SPARK_GRAFT_CPUS (default: all cores), SPARK_GRAFT_ONLY
+  *      (subset), SPARK_GRAFT_REPO (where STREAM_BENCH.md is written).
   */
 object StreamBench {
 
@@ -120,22 +120,13 @@ object StreamBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val x10Dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_X10",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)
     val fsyncUs = fsyncProbeUs()
     System.err.println(s"[streambench] fsync probe: $fsyncUs us median")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft_spark")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.StreamBench$StreamBenchListener")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-stream-bench", conf = Map(
+      "spark.sql.streaming.streamingQueryListeners" ->
+        "graft.StreamBench$StreamBenchListener"))
 
     val defs = Registry.all.filter(_.name.startsWith("stream_"))
       .filter(d => only.forall(_.contains(d.name)))
@@ -201,8 +192,8 @@ object StreamBench {
 
     val sb = new StringBuilder
     sb ++= "# STREAM_BENCH — micro-batch latency per streaming operator\n\n"
-    sb ++= s"Corpus: `$sfDir`, local[$cpus], warm pass discarded, pass 2 " +
-      "reported. Columns: operator wall (start -> final sink read), " +
+    sb ++= s"Corpus: `$sfDir`, local[${GraftSession.cores}], " +
+      "warm pass discarded, pass 2 reported. Columns: operator wall (start -> final sink read), " +
       "micro-batches observed (incl. state-commit/empty batches), " +
       "per-batch `triggerExecution` p50/p95/max, total input rows, and " +
       "the state-store footprint (max rows / MB across batches, summed " +
@@ -274,8 +265,7 @@ object StreamBench {
           f"| ${a.stateBytes / 1e6}%.2f | $verdict |\n"
       }
     }
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "STREAM_BENCH.md")
+    val out = repoRoot.resolve("STREAM_BENCH.md")
     java.nio.file.Files.writeString(out, sb.toString)
     println(s"[streambench] wrote $out (${report.size} operators, " +
       s"${decade.size} decade rows)")

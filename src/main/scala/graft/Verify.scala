@@ -46,8 +46,7 @@ object Verify {
 
   private[graft] def gateLog(fields: (String, String)*): Unit =
     try {
-      val root = Seq("/root/repo", ".")
-        .find(p => Files.isDirectory(Paths.get(p, ".git"))).getOrElse(".")
+      val root = repoRoot.toString
       val esc = (s: String) => s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
@@ -97,7 +96,6 @@ object Verify {
     // (dev loop for a single operator; the driver passes two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Concurrent query dumps (round-9: a sequential full-registry dump
     // is ~11 min at local[32] and far worse at the default local[4] —
     // long enough to risk a driver-side timeout, the one mechanism that
@@ -109,14 +107,8 @@ object Verify {
     // tables) cannot race; the shared SparkContext schedules fairly.
     // Set SPARK_GRAFT_VERIFY_WORKERS=1 to restore the sequential path.
     val workers = sys.env.get("SPARK_GRAFT_VERIFY_WORKERS")
-      .map(_.toInt).getOrElse(math.min(8, cpus.toInt)).max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .map(_.toInt).getOrElse(math.min(8, GraftSession.cores)).max(1)
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()
     val nWritten = new AtomicInteger(0)

@@ -417,16 +417,7 @@ object Dedup {
   private[graft] def minhashIndexDir(s: SparkSession, dir: String): String =
     minhashIndexDirs.getOrElseUpdate(
       graft.Tables.corpusFingerprint(dir, "documents"), {
-      val p = java.nio.file.Files.createTempDirectory("graft_minhash_index")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        if (Files.exists(p)) {
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      }
+      val p = graft.jvmScratchDir("graft_minhash_index")
       bandsOf(signatures(s, dir))
         .filter(pmod(col("doc_id"), lit(13)) =!= 0)
         .write.mode("overwrite").partitionBy("band_id")
@@ -467,10 +458,18 @@ object Dedup {
     * halve the heavy pass — the scale-vs-local tradeoff the round
     * rules ask to parameterize rather than hard-code either way. */
   private[graft] def matPairs(pairs: DataFrame): DataFrame =
-    if (pairs.sparkSession.conf
-        .getOption("spark.graft.materializePairs").exists(_.toBoolean))
-      pairs.localCheckpoint()
+    if (materializePairs(pairs.sparkSession)) pairs.localCheckpoint()
     else pairs
+
+  private final val MaterializePairsKey = "spark.graft.materializePairs"
+
+  /** The [[matPairs]] switch: unset is false; anything other than
+    * true/false fails naming the key. */
+  private[graft] def materializePairs(s: SparkSession): Boolean =
+    s.conf.getOption(MaterializePairsKey).exists { v =>
+      v.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+        s"$MaterializePairsKey must be true or false, got '$v'"))
+    }
 
   /** Exact Jaccard for pairs sharing >= 1 shingle, via inverted index.
     * Shingles with document frequency above `maxDf` are dropped from the
@@ -496,8 +495,7 @@ object Dedup {
     // barrier costs more wall than the redundant explode.
     val allPostings0 = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val allPostings =
-      if (sh.sparkSession.conf
-          .getOption("spark.graft.materializePairs").exists(_.toBoolean))
+      if (materializePairs(sh.sparkSession))
         allPostings0.repartition(col("shingle")).localCheckpoint()
       else allPostings0
     val viral = allPostings.groupBy("shingle")
@@ -1500,10 +1498,6 @@ object Dedup {
     QueryDef(
       "q_hamming_join_rule",
       (s, dir) => {
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.HammingJoinRewrite))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.HammingJoinRewrite
         val sig = simhashedWide(s, dir).localCheckpoint()
         val x = sig.select(col("doc_id").as("a_id"), col("simhash").as("ha"))
         val y = sig.select(col("doc_id").as("b_id"), col("simhash").as("hb"))
@@ -2868,10 +2862,6 @@ object Dedup {
     * which truncates this subtree out of the final plan string). */
   private[graft] def declarativeHammingPairs(
       s: SparkSession, dir: String): DataFrame = {
-    if (!s.experimental.extraOptimizations
-        .contains(graft.plans.HammingJoinRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.HammingJoinRewrite
     val sig = simhashedWide(s, dir).localCheckpoint()
     val x = sig.select(col("doc_id").as("a_id"), col("simhash").as("ha"))
     val y = sig.select(col("doc_id").as("b_id"), col("simhash").as("hb"))

@@ -427,24 +427,8 @@ object Multimodal {
          CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_payload_bytes
        FROM documents ORDER BY doc_id"""
 
-  // per-process-unique scratch for the BinaryType round-trip, reused
-  // across invocations and deleted at JVM exit (same discipline as
-  // sources.Formats: a fixed path would let concurrent JVMs clobber
-  // each other; a fresh dir per call would leak under /tmp)
-  private lazy val ioScratch: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_mm_io")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
-    p.toString
-  }
+  // scratch for the BinaryType round-trip, reused across invocations
+  private lazy val ioScratch: String = graft.jvmScratchDir("graft_mm_io").toString
 
   val defs: Seq[QueryDef] = Seq(
 

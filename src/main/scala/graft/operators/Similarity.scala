@@ -718,18 +718,7 @@ object Similarity {
       "sim_ann_ivf_refresh",
       (s, dir) => {
         val e = embParallel(s, dir)
-        val tmpP = java.nio.file.Files
-          .createTempDirectory("graft_ivf_refresh")
-        sys.addShutdownHook {
-          import java.nio.file.{Files, Path}
-          if (Files.exists(tmpP)) {
-            val walk = Files.walk(tmpP)
-            try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-              .forEach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }
-        val tmp = tmpP.toString
+        val tmp = graft.jvmScratchDir("graft_ivf_refresh").toString
         e.filter(pmod(col("vec_id"), lit(13)) =!= 0)
           .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
         val idxBase = ivfIndexDir(s, tmp) // build #1: base corpus
@@ -1828,16 +1817,7 @@ object Similarity {
   private[graft] def ivfIndexDir(s: SparkSession, dir: String): String =
     ivfIndexDirs.getOrElseUpdate(
       graft.Tables.corpusFingerprint(dir, "embeddings"), {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_index")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        if (Files.exists(p)) {
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      }
+      val p = graft.jvmScratchDir("graft_ivf_index")
       val centroids = ivfCentroids(s, dir)
       centroids.coalesce(1).write.mode("overwrite")
         .parquet(s"$p/centroids")
@@ -2096,16 +2076,7 @@ object Similarity {
   private[graft] def knnIndexDir(s: SparkSession, dir: String): String =
     knnIndexDirs.getOrElseUpdate(
       graft.Tables.corpusFingerprint(dir, "embeddings"), {
-      val p = java.nio.file.Files.createTempDirectory("graft_knn_index")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        if (Files.exists(p)) {
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      }
+      val p = graft.jvmScratchDir("graft_knn_index")
       knnGraphEdges(s, embParallel(s, dir))
         .write.mode("overwrite").parquet(s"$p/edges")
       p.toString

@@ -148,9 +148,9 @@ case class CosineTopKExec(
     copy(child = newChild)
 }
 
-/** Public surface: install the strategy (idempotent, public
-  * `experimental.extraStrategies` API) and run the operator, finishing
-  * the per-partition partials with a cheap k-bounded window merge. */
+/** Public surface: run the operator, finishing the per-partition partials
+  * with a cheap k-bounded window merge. The planner strategy comes with
+  * the session (`graft.GraftSession` installs `GraftExtensions`). */
 object CosineTopKOp {
 
   /** Queries ride in the serialized operator (driver memory + task
@@ -165,10 +165,10 @@ object CosineTopKOp {
     require(queries.size <= MaxQueries,
       s"CosineTopK: ${queries.size} queries exceeds MaxQueries=$MaxQueries " +
         "(queries are broadcast in the operator; use sim_ann_lsh/ivf for large query sets)")
-    if (!spark.experimental.extraStrategies.contains(CosineTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ CosineTopKStrategy
-    }
+    require(org.apache.spark.sql.GraftPlanBridge.strategies(spark)
+        .contains(CosineTopKStrategy),
+      "CosineTopK: this session cannot plan the operator; build it with " +
+        "graft.GraftSession.local (or .withExtensions(new GraftExtensions))")
     val partial = org.apache.spark.sql.GraftPlanBridge.ofRows(
       spark, CosineTopK(queries, k, candidates.queryExecution.logical))
     val w = Window.partitionBy(col("q_id"))

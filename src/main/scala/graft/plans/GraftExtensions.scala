@@ -26,12 +26,14 @@ object CosineSelfSimplify extends Rule[LogicalPlan] {
 }
 
 /** Session extensions wiring: registers the native `cosine_sim` function
-  * permanently (so plain SQL text can call it) and injects the
-  * self-similarity fold into the optimizer.
+  * permanently (so plain SQL text can call it), injects the
+  * self-similarity fold and the Hamming-join rewrite into the optimizer,
+  * and the CosineTopK strategy into the planner.
   *
-  * Usage: SparkSession.builder().withExtensions(new GraftExtensions)...
-  * For an already-running session, `spark.experimental.extraOptimizations`
-  * accepts CosineSelfSimplify directly (tested in ExtensionsSpec).
+  * Usage: `graft.GraftSession.local(app)` installs these at session
+  * creation, so every session it builds (and every `newSession()` of
+  * it) plans with the same rules whatever ran before; a hand-built
+  * session gets them with `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -41,5 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
     ext.injectOptimizerRule(_ => CosineSelfSimplify)
     ext.injectOptimizerRule(_ => HammingJoinRewrite)
+    ext.injectPlannerStrategy(_ => CosineTopKStrategy)
   }
 }

@@ -26,9 +26,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * application.
   *
   * Scope guards: inner joins; both columns LongType, each referencing
-  * exactly one side; 0 <= k < 63. Installed per-session via
-  * `spark.experimental.extraOptimizations` (like CosineSelfSimplify) or
-  * `GraftExtensions`.
+  * exactly one side; 0 <= k < 63. Comes with every session that
+  * `graft.GraftSession` builds, through `GraftExtensions`.
   */
 object HammingJoinRewrite extends Rule[LogicalPlan] {
 

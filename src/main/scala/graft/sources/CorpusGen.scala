@@ -504,15 +504,8 @@ object CorpusGen {
     val scale = if (args.length > 1) args(1).toDouble else 0.01
     val seed = if (args.length > 2) args(2).toLong else 7L
     val mode = if (args.length > 3) args(3) else "healthy"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-corpusgen")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-corpusgen", cores = 8,
+      conf = Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     write(spark, out, scale, seed, mode)
     println(s"[corpusgen] wrote ${Tablesn.mkString(",")} to $out " +
       s"(scale=$scale seed=$seed mode=$mode)")

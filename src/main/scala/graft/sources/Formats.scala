@@ -20,29 +20,14 @@ object Formats {
        CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
 
-  // per-process-unique scratch (a fixed path would let two concurrent
-  // JVMs — Verify + Bench — clobber each other's round-trip files), but
-  // REUSED across invocations within the process and deleted at JVM
-  // exit: a fresh dir per call leaked a lineitem-sized directory under
-  // /tmp for every bench pass / verify run
+  // one round-trip scratch dir per format, REUSED across invocations
+  // within the process: a dir per call held a lineitem-sized directory
+  // for every bench pass / verify run
   private val scratchDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def scratchFor(fmt: String): String =
-    scratchDirs.getOrElseUpdate(fmt, {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_fmt_$fmt")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(p)) {
-          val walk = Files.walk(p)
-          try walk.sorted(Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      }
-      p.toString
-    })
+    scratchDirs.getOrElseUpdate(fmt, graft.jvmScratchDir(s"graft_fmt_$fmt").toString)
 
   private def roundTrip(s: SparkSession, dir: String, fmt: String,
       opts: Map[String, String] = Map.empty,

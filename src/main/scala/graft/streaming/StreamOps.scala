@@ -1564,24 +1564,12 @@ object StreamOps {
         // content IS the aggregate, bit-for-bit. State is domain-
         // bounded (one row per event type), so complete mode is the
         // deployable choice exactly as in stream_tv_drift.
-        val ckptP = java.nio.file.Files
-          .createTempDirectory("graft_state_rd")
         // the returned DataFrame reads the checkpoint LAZILY (the caller
         // materializes it after we return), so an eager finally-delete
         // would yank the store out from under the scan; clean up at JVM
-        // exit instead — same pattern as sim_ann_ivf_refresh's corpus
-        // dir — so repeated verify/test runs stop accumulating
+        // exit instead, so repeated verify/test runs stop accumulating
         // state-store files (r9 advice)
-        sys.addShutdownHook {
-          import java.nio.file.{Files, Path}
-          if (Files.exists(ckptP)) {
-            val walk = Files.walk(ckptP)
-            try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-              .forEach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }
-        val ckpt = ckptP.toString
+        val ckpt = graft.jvmScratchDir("graft_state_rd").toString
         val sink = s"graft_stream_strd_${nameCounter.incrementAndGet()}"
         val q = rawEventStream(s, dir)
           .groupBy("event_type").agg(count(lit(1)).as("n"))

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The bench runner's failure contract: a query that throws must surface
   * ok=false (the driver-facing JSON then carries "ok":{...:false} and a
   * non-zero "failures" count) instead of reporting a near-zero elapsed
-  * time as a fast success. */
+  * time as a fast success. Also the artifact paths of the other tools. */
 class BenchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -30,5 +30,22 @@ class BenchSpec extends AnyFunSuite {
       (s, dir) => Tables.load(s, dir, "not_a_table"),
       None)
     assert(!Bench.runOne(spark, missing, TestSpark.sf)._2)
+  }
+
+  test("queries_top stops at the first entry that does not fit") {
+    val best = Seq("cheap" -> 1.0, "heavy_query_with_a_long_name" -> 5.0,
+      "top" -> 9.0, "failed" -> Double.NaN)
+    // room for "top" plus a short entry, not for the long heavy one
+    val budget = "\"top\":9".length + ",\"cheap\":1".length
+    assert(Bench.topFitting(best, budget) === Seq("\"top\":9"))
+    assert(Bench.topFitting(best, 1000) === Seq("\"top\":9",
+      "\"heavy_query_with_a_long_name\":5", "\"cheap\":1"))
+  }
+
+  test("PlanDump refuses to pick a plans round on its own") {
+    val e = intercept[IllegalArgumentException](PlanDump.outDir(Map.empty))
+    assert(e.getMessage.contains("SPARK_GRAFT_ROUND"), e.getMessage)
+    assert(PlanDump.outDir(Map("SPARK_GRAFT_ROUND" -> "r99")) ===
+      repoRoot.resolve("plans/r99"))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.EngineFns._
@@ -167,16 +168,25 @@ class DedupTextSpec extends AnyFunSuite {
     assert(agree > 0.25 && agree < 0.85)
   }
 
+  /** All (a_id, b_id, hamming) with a_id < b_id and hamming <= 3, computed
+    * in Scala over the collected signatures: a Spark join here would itself
+    * be rewritten by the session's HammingJoinRewrite into the very
+    * pigeonhole blocking it is meant to check. */
+  private def allPairsWithin3(sig: DataFrame): Set[(Long, Long, Long)] = {
+    val s = sig.select("doc_id", "simhash").collect()
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getLong(1)))
+    (for {
+      (a, sa) <- s.iterator; (b, sb) <- s.iterator if a < b
+      h = java.lang.Long.bitCount(sa ^ sb).toLong if h <= 3
+    } yield (a, b, h)).toSet
+  }
+
   test("simhash chunk-blocking produces exactly the all-pairs pair set") {
     // the naive quadratic form, kept ONLY here as the equivalence check
     // for the shipped pigeonhole equi-join
-    val sig = Registry.byName("dedup_simhash").run(spark, TestSpark.sf)
-    val naive = sig.as("x")
-      .join(broadcast(sig.as("y")), col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val naive = allPairsWithin3(
+      Registry.byName("dedup_simhash").run(spark, TestSpark.sf))
     val chunked = Registry.byName("dedup_simhash_pairs").run(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(chunked === naive)
@@ -191,13 +201,8 @@ class DedupTextSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.contains((0L, 1L)))
     // equivalence on the real corpus: chunk-blocked == naive all-pairs
-    val wide = Registry.byName("dedup_simhash_wide").run(spark, TestSpark.sf)
-    val naive = wide.as("x")
-      .join(broadcast(wide.as("y")), col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val naive = allPairsWithin3(
+      Registry.byName("dedup_simhash_wide").run(spark, TestSpark.sf))
     val chunked = Registry.byName("dedup_simhash_wide_pairs").run(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(chunked === naive)
@@ -221,6 +226,19 @@ class DedupTextSpec extends AnyFunSuite {
     val uncapped = operators.Dedup.jaccardPairs(docs, maxDf = 1000)
       .select("a_id", "b_id").collect().length
     assert(uncapped === 66)
+  }
+
+  test("spark.graft.materializePairs reads as a boolean and names itself otherwise") {
+    val s = spark.newSession()
+    val key = "spark.graft.materializePairs"
+    assert(!operators.Dedup.materializePairs(s))
+    s.conf.set(key, "true")
+    assert(operators.Dedup.materializePairs(s))
+    s.conf.set(key, "false")
+    assert(!operators.Dedup.materializePairs(s))
+    s.conf.set(key, "1")
+    val e = intercept[IllegalArgumentException](operators.Dedup.materializePairs(s))
+    assert(e.getMessage.contains(key), e.getMessage)
   }
 
   test("connected components: chain, triangle and singleton collapse to min id") {

@@ -4,20 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // static conf: catalog tables (BucketingSpec) land in /tmp, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cores = 4,
+    // static conf: catalog tables (BucketingSpec) land in /tmp, not the repo
+    conf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 
   val sf: String = "/root/testdata/sf0.001"
 }
