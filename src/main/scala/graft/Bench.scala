@@ -35,6 +35,32 @@ object Bench {
   private[graft] def benchLastPath: java.nio.file.Path =
     repoRoot.resolve("BENCH_LAST.json")
 
+  /** What a later run reads back from BENCH_LAST.json: the per-query
+    * pass history, the per-query best and the corpus fingerprint. */
+  private[graft] final case class LastRun(
+      passes: Map[String, List[Double]],
+      queries: Map[String, Double],
+      corpus: Option[String])
+
+  /** Parse a BENCH_LAST.json line; a missing or unreadable file reads as
+    * empty. */
+  private[graft] def readLast(path: java.nio.file.Path): LastRun = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    def fields(o: JsonNode): Map[String, JsonNode] =
+      o.properties().asScala.map(e => e.getKey -> e.getValue).toMap
+    try {
+      val root = new ObjectMapper().readTree(path.toFile)
+      LastRun(
+        fields(root.path("passes")).map { case (k, v) =>
+          k -> v.elements().asScala.map(_.asDouble).toList },
+        fields(root.path("queries")).map { case (k, v) => k -> v.asDouble },
+        Option(root.get("corpus")).map(_.asText))
+    } catch {
+      case _: Exception => LastRun(Map.empty, Map.empty, None)
+    }
+  }
+
   /** Accumulates per-stage totals across the whole app; per-query deltas
     * are taken by snapshotting before/after each run. */
   private final class StageMeter extends SparkListener {
@@ -206,26 +232,9 @@ object Bench {
     // sweep (BENCH_LAST.json "passes") showed pass1 > 3x the later-pass
     // minimum: self-tuning, and costs only what pass 1 would have burned
     // anyway — the burn just stops landing in the measured samples.
-    val prevPassHist: Map[String, List[Double]] =
-      try {
-        val lp = benchLastPath
-        if (java.nio.file.Files.exists(lp)) {
-          val txt = java.nio.file.Files.readString(lp)
-          val ps = txt.indexOf("\"passes\":{")
-          // bound the scan to the passes OBJECT: values are flat arrays,
-          // so the first '}' after the opening brace closes it — without
-          // the bound, any later key holding a numeric array would be
-          // misread as pass history (round-7 advice)
-          val pe = if (ps < 0) -1 else txt.indexOf('}', ps)
-          if (ps < 0 || pe < 0) Map.empty
-          else "\"([A-Za-z0-9_]+)\":\\[([0-9.eE+,-]+)\\]".r
-            .findAllMatchIn(txt.substring(ps, pe + 1))
-            .map(m => m.group(1) -> m.group(2).split(',').map(_.toDouble).toList)
-            .toMap
-        } else Map.empty
-      } catch { case _: Exception => Map.empty }
+    val last = readLast(benchLastPath)
     val coldShapes = defs.filter { d =>
-      prevPassHist.get(d.name).exists { ps =>
+      last.passes.get(d.name).exists { ps =>
         ps.size >= 2 && ps.tail.min > 0.0 && ps.head / ps.tail.min > 3.0
       }
     }
@@ -257,6 +266,7 @@ object Bench {
     for (pass <- 1 to bestOf) {
       defs.foreach { d =>
         val g0 = gcMs; val j0 = jitMs; val c0 = procCpuMs
+        val o0 = Tables.observeFallbacks
         val s0 = meter.snap()
         val (sec, ok) = runOne(spark, d, sfDir)
         clearPersisted(spark)
@@ -266,7 +276,8 @@ object Bench {
             f"jit=${jitMs - j0}ms cc=${codeCacheUsed / 1048576}MB " +
             f"procCpu=${procCpuMs - c0}ms task=${s1(0) - s0(0)}ms " +
             f"taskCpu=${s1(1) - s0(1)}ms shufRd=${(s1(2) - s0(2)) / 1048576}MB " +
-            f"shufWr=${(s1(3) - s0(3)) / 1048576}MB spill=${(s1(4) - s0(4)) / 1048576}MB")
+            f"shufWr=${(s1(3) - s0(3)) / 1048576}MB spill=${(s1(4) - s0(4)) / 1048576}MB " +
+            s"obsFallback=${Tables.observeFallbacks - o0}")
         passes(d.name) = sec :: passes(d.name)
         if (ok && (!bestOk.contains(d.name) || sec < bestOk(d.name)))
           bestOk(d.name) = sec
@@ -344,29 +355,13 @@ object Bench {
       // per-query regression report vs the previous run's BENCH_LAST:
       // with 160+ benched queries a single-query 2x regression hides
       // inside total noise (round-3 advice: q_fmt_csv 1.36->2.32 s was
-      // only visible by manual diff). Parse the old per-query map
-      // before overwriting and print the top-5 slowdowns.
+      // only visible by manual diff). Print the top-5 slowdowns.
       val lastPath = benchLastPath
-      val prev: Map[String, Double] =
-        if (java.nio.file.Files.exists(lastPath)) {
-          val txt = java.nio.file.Files.readString(lastPath)
-          val qStart = txt.indexOf("\"queries\":{")
-          if (qStart < 0) Map.empty
-          else {
-            val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-            "\"([^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        } else Map.empty
+      val prev = last.queries
       // fingerprint gate: a regenerated corpus makes per-query deltas
       // incomparable (round-4 postmortem: x0.4-x2.0 swings on untouched
       // code tracked corpus regeneration, not code changes)
-      val prevFp =
-        if (java.nio.file.Files.exists(lastPath))
-          "\"corpus\":\"([0-9a-f]+)\"".r
-            .findFirstMatchIn(java.nio.file.Files.readString(lastPath))
-            .map(_.group(1))
-        else None
+      val prevFp = last.corpus
       if (prev.nonEmpty && !prevFp.contains(fp)) {
         System.err.println(
           s"[bench] corpus fingerprint changed (${prevFp.getOrElse("none")} " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** Table access for the driver corpus (TESTDATA.md).
   *
@@ -9,6 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * schema is inferred from the parquet footers. Spark's vectorized
   * parquet reader gives the same columnar scan with column pruning and
   * row-group skipping (reference main.rs:126,131) built in.
+  *
+  * Metadata derived from the corpus files (row counts, split counts,
+  * the directories of indexes built from a table) is memoized here and
+  * nowhere else: see `memo`.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -35,58 +39,113 @@ object Tables {
     if (scanPartitions(df, p) >= p) df else df.repartition(p)
   }
 
-  /** Measured scan partition count, cached per (input file set,
-    * parallelism): `df.rdd.getNumPartitions` forces a second full
-    * analyze/optimize/physical-planning pass PER INVOCATION just to
-    * read the split count (r13 advice) — the count depends only on the
-    * scanned files and the session parallelism, so measure once per
-    * distinct file set and JVM. The file list itself comes from the
-    * already-analyzed plan (no extra planning pass). */
-  private val splitCounts = scala.collection.concurrent.TrieMap[String, Int]()
-
+  /** Measured scan partition count. `df.rdd.getNumPartitions` pays a
+    * second analyze/optimize/physical-planning pass per call (r13
+    * advice), so a file scan's count is memoized on its input files
+    * and the parallelism. A frame with no input files (checkpointed,
+    * in-memory) has nothing to key on and is measured directly. */
   private def scanPartitions(df: DataFrame, p: Int): Int = {
-    val key = df.inputFiles.sorted.mkString("|") + "#" + p
-    splitCounts.getOrElseUpdate(key, df.rdd.getNumPartitions)
+    val files = df.inputFiles
+    if (files.isEmpty) df.rdd.getNumPartitions
+    else {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val stats = files.toSeq.map { f =>
+        val path = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+        val st = path.getFileSystem(conf).getFileStatus(path)
+        (f, st.getLen, st.getModificationTime)
+      }
+      memoOn(filesFingerprint(stats), s"splits@$p")(df.rdd.getNumPartitions)
+    }
   }
 
   /** load + parallel — for operators whose scan feeds heavy map work. */
   def loadParallel(spark: SparkSession, dir: String, name: String): DataFrame =
     parallel(spark, load(spark, dir, name))
 
-  /** Table row count, memoized per corpus fingerprint (r14 — the same
-    * discipline as Similarity.embCount / r13 verdict #4): registry-gate
-    * pre-flights (requireAllPairsSmall, text_shard_pack's salt width)
-    * otherwise launch a count() job at EVERY query build. The count
-    * depends only on the table files (size+mtime — an in-place rewrite
-    * rebuilds), so measure once per file set and JVM. */
-  private val rowCounts = scala.collection.concurrent.TrieMap[String, Long]()
-
+  /** Table row count (memoized: registry-gate pre-flights and plane or
+    * stride sizing otherwise launch a count job at every query build). */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
-    rowCounts.getOrElseUpdate(corpusFingerprint(dir, name),
-      load(spark, dir, name).count())
+    memo(dir, name, "rows")(load(spark, dir, name).count())
 
-  /** Long metric from an `Observation` attached to a frame that was
-    * just eagerly materialized (localCheckpoint): the aggregate is
-    * collected DURING the materialization job, replacing the second
-    * count job previously paid per convergence check / stage count.
-    * Listener delivery is asynchronous — poll briefly and fall back to
-    * the caller's equivalent recompute over the materialized blocks
-    * (identical value, just a spare job) if the metric never lands.
-    * A null metric value (sum over zero rows) reads as 0. */
-  def observedLong(obs: org.apache.spark.sql.Observation, key: String)(
-      fallback: => Long): Long =
-    try {
-      import scala.concurrent.Await
-      import scala.concurrent.duration.DurationInt
-      val row = Await.result(obs.future, 2.seconds)
-      row.getAs[Any](key) match {
-        case n: Long => n
-        case null => 0L
-        case _ => fallback
-      }
-    } catch {
-      case _: java.util.concurrent.TimeoutException => fallback
+  /** Corpus metadata memo: `compute` runs once per (fingerprint of the
+    * files under `dir/table.parquet`, `what`) and JVM, where `what`
+    * names the derived value ("rows", "ivf_index", "ppr_seeds", ...).
+    *
+    * The fingerprint is every file's relative path, size and mtime, so
+    * a table rewritten in place (a test regenerating data, the refresh
+    * lifecycle appending a batch) recomputes instead of serving a stale
+    * value; keying on `dir` or on file names alone would not (r9
+    * advice). Listing the files is O(#files) driver metadata work, the
+    * same cost Spark pays to plan the scan.
+    *
+    * Only metadata is memoized — counts, split counts, the directory of
+    * an index built from the corpus — never a query's result. */
+  def memo[T](dir: String, table: String, what: String)(compute: => T): T =
+    memoOn(corpusFingerprint(dir, table), what)(compute)
+
+  private val memos = scala.collection.concurrent.TrieMap[(String, String), Any]()
+
+  private def memoOn[T](fingerprint: String, what: String)(compute: => T): T =
+    memos.getOrElseUpdate((fingerprint, what), compute).asInstanceOf[T]
+
+  /** Order-independent digest of (file, size, mtime) triples. */
+  private def filesFingerprint(files: Seq[(String, Long, Long)]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    files.sorted.foreach { case (f, size, mtime) =>
+      md.update(s"$f:$size:$mtime|".getBytes("UTF-8"))
     }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  private def corpusFingerprint(dir: String, table: String): String = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(s"$dir/$table.parquet")
+    if (!Files.exists(root)) s"$dir/$table:absent"
+    else {
+      val walk = Files.walk(root)
+      val files =
+        try walk.iterator().asScala.filter((p: Path) => Files.isRegularFile(p))
+          .map(p => (root.relativize(p).toString, Files.size(p),
+            Files.getLastModifiedTime(p).toMillis))
+          .toList
+        finally walk.close()
+      s"$dir/$table#${filesFingerprint(files)}"
+    }
+  }
+
+  private val obsFallbacks = new java.util.concurrent.atomic.AtomicLong
+
+  /** Process-wide count of checkpointMeasured fallbacks so far. */
+  def observeFallbacks: Long = obsFallbacks.get
+
+  /** `df` localCheckpointed, plus `metric` — a Long aggregate over its
+    * rows — collected during the checkpoint job via `Dataset.observe`
+    * instead of by a second job. Listener delivery is asynchronous: if
+    * the metric has not landed within 2 s, the same aggregate runs over
+    * the checkpointed blocks (same value, one spare job) and
+    * `observeFallbacks` goes up. A null metric (a sum over zero rows)
+    * reads as 0. */
+  def checkpointMeasured(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = new Observation()
+    val frame = df.observe(obs, metric.as("m")).localCheckpoint()
+    (frame, observedLong(obs)({
+      obsFallbacks.incrementAndGet()
+      asLong(frame.agg(metric).head().get(0))
+    }))
+  }
+
+  private def observedLong(obs: Observation)(fallback: => Long): Long = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.DurationInt
+    try asLong(Await.result(obs.future, 2.seconds).get(0))
+    catch { case _: java.util.concurrent.TimeoutException => fallback }
+  }
+
+  private def asLong(v: Any): Long = v match {
+    case null => 0L
+    case n: Long => n
+  }
 
   /** events.ts normalized to TimestampType micros whatever the parquet
     * physical type. The corpus has shipped it two ways across driver
@@ -118,30 +177,4 @@ object Tables {
     * queries (scalar subqueries, correlated EXISTS) can run verbatim. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Cheap corpus fingerprint for build-once index caches (ivfIndexDir,
-    * minhashIndexDir): relative path + size + mtime of every file under
-    * the table's parquet tree, hashed. Keying a JVM-lifetime cache on
-    * `dir` alone serves STALE indexes if the corpus files at that path
-    * are rewritten within one JVM (a test regenerating data in place,
-    * or the refresh lifecycle appending a batch) — r9 advice. Listing
-    * footers is O(#files) driver metadata work, the same cost Spark
-    * itself pays to plan the scan, so this stays cheap at any scale. */
-  def corpusFingerprint(dir: String, table: String): String = {
-    import java.nio.file.{Files, Path, Paths}
-    val root = Paths.get(s"$dir/$table.parquet")
-    if (!Files.exists(root)) s"$dir/$table:absent"
-    else {
-      val walk = Files.walk(root)
-      val parts =
-        try walk.filter(p => Files.isRegularFile(p))
-          .sorted()
-          .map[String]((p: Path) =>
-            s"${root.relativize(p)}:${Files.size(p)}:" +
-              s"${Files.getLastModifiedTime(p).toMillis}")
-          .toArray.mkString("|")
-        finally walk.close()
-      s"$dir/$table#${parts.hashCode}"
-    }
-  }
 }

@@ -403,27 +403,19 @@ object Dedup {
       }: _*)).as("band"))
       .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
 
-  /** Build-once/save cache for dedup_minhash_served's band index: the
+  /** Build-once/save for dedup_minhash_served's band index: the
     * EXISTING corpus's (doc_id, band_key, band_id) relation persisted as
     * parquet partitioned by band_id (a served probe reads only its own
-    * band's files). Keyed by corpus dir + a file-metadata fingerprint
-    * (size/mtime of every documents.parquet part, r9 advice) so a corpus
-    * rewritten IN PLACE within one JVM rebuilds instead of serving the
-    * stale index; refresh = rebuild into a new dir and swap — the same
-    * lifecycle as Similarity.ivfIndexDir. */
-  private val minhashIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+    * band's files); the same lifecycle as Similarity.ivfIndexDir. */
   private[graft] def minhashIndexDir(s: SparkSession, dir: String): String =
-    minhashIndexDirs.getOrElseUpdate(
-      graft.Tables.corpusFingerprint(dir, "documents"), {
+    Tables.memo(dir, "documents", "minhash_index") {
       val p = graft.jvmScratchDir("graft_minhash_index")
       bandsOf(signatures(s, dir))
         .filter(pmod(col("doc_id"), lit(13)) =!= 0)
         .write.mode("overwrite").partitionBy("band_id")
         .parquet(s"$p/bands")
       p.toString
-    })
+    }
 
   /** (doc_id, simhash): 16-bit SimHash on the whole-stage-codegen path —
     * explode tokens, hash with the scalar md5 expression, take the 16
@@ -2191,13 +2183,9 @@ object Dedup {
       "dedup_eval",
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
-        // the truth count rides the checkpoint job via observe (r14)
-        val obsT = new org.apache.spark.sql.Observation()
-        val truth = jaccardPairs(sh)
+        val (truth, nTruth) = Tables.checkpointMeasured(jaccardPairs(sh)
           .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
-          .observe(obsT, count(lit(1)).as("n")).localCheckpoint()
-        val nTruth = Tables.observedLong(obsT, "n")(truth.count())
+          .select("a_id", "b_id"), count(lit(1)))
         // bands materialized once, partitioned on the self-join key
         // (r14, §2.4): the signature pipeline otherwise ran twice —
         // once per join side — and both sides re-exchanged
@@ -2438,13 +2426,9 @@ object Dedup {
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
         val withSig = signaturesFrom(sh).localCheckpoint()
-        // truth count rides the checkpoint job via observe (r14)
-        val obsT = new org.apache.spark.sql.Observation()
-        val truth = jaccardPairs(sh)
+        val (truth, nTruth) = Tables.checkpointMeasured(jaccardPairs(sh)
           .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
-          .observe(obsT, count(lit(1)).as("n")).localCheckpoint()
-        val nTruth = Tables.observedLong(obsT, "n")(truth.count())
+          .select("a_id", "b_id"), count(lit(1)))
         // one pass per leg (r14, the dedup_eval scorecard shape):
         // candidate count and truth-hit count fold into a single
         // aggregate over a broadcast-truth left join, so each leg's
@@ -2989,11 +2973,7 @@ object Dedup {
     import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
     def stage(name: String)(f: => DataFrame): (DataFrame, Long) = {
       val t0 = System.nanoTime()
-      // the stage row count rides the checkpoint job via observe (r14)
-      // instead of a second count job per stage — 7 jobs saved per run
-      val obs = new org.apache.spark.sql.Observation()
-      val frame = f.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      val n = Tables.observedLong(obs, "n")(frame.count())
+      val (frame, n) = Tables.checkpointMeasured(f, count(lit(1)))
       onStage(name, n, (System.nanoTime() - t0) / 1e9)
       (frame, n)
     }
@@ -3454,23 +3434,17 @@ object Dedup {
       // label(rep) is in the same component as rep, so the min-label
       // invariant is preserved while the hop count to the component
       // minimum halves.
-      // convergence metric rides the checkpoint job itself (r14):
-      // the filter+count previously ran as a SECOND job per iteration
-      // over the checkpoint blocks — pure fixed job overhead ×2 per
-      // generation in a loop every clustering query runs 3–6 times
-      // (observe passes rows through unchanged; results identical)
-      val obs = new org.apache.spark.sql.Observation()
-      val next = stepped
+      // the convergence count rides the checkpoint job (r14): a
+      // separate filter+count job per iteration was pure fixed overhead
+      // in a loop every clustering query runs 3–6 times
+      val (next, nChanged) = Tables.checkpointMeasured(stepped
         .join(
           stepped.select(col("u").as("rep_id"), col("rep_id").as("rep2")),
           Seq("rep_id"), "left")
         .select(col("u"), col("old_rep"),
-          least(col("rep_id"), coalesce(col("rep2"), col("rep_id"))).as("rep_id"))
-        .observe(obs, sum(when(col("rep_id") =!= col("old_rep"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint()
-      changed = Tables.observedLong(obs, "changed")(
-        next.filter(col("rep_id") =!= col("old_rep")).count())
+          least(col("rep_id"), coalesce(col("rep2"), col("rep_id"))).as("rep_id")),
+        sum(when(col("rep_id") =!= col("old_rep"), 1L).otherwise(0L)))
+      changed = nChanged
       labels = next.select("u", "rep_id")
       iters += 1
     }

@@ -32,13 +32,6 @@ import graft.{QueryDef, Tables}
   * quadratic. Ranks stay distributed; the driver holds only N.
   */
 object Graph {
-  /** PPR seed count memoized per corpus fingerprint (r14 — the
-    * Tables.rowCount discipline): the seed census depends only on the
-    * documents files, not the query, so measure once per file set. */
-  private val pprSeedCounts =
-    scala.collection.concurrent.TrieMap[String, Long]()
-
-
   private val Q = 1000000000000L // 10^12 rank quantization
   private val Iters = 3
   // HITS quantum is deliberately smaller than Q: the max-norm rescale
@@ -74,8 +67,6 @@ object Graph {
         // of every iteration's join reuses this one exchange (§2.4)
         val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        // bounded driver state: one scalar, memoized per corpus
-        // fingerprint (r14) — no count() job per query build
         val n = Tables.rowCount(s, dir, "documents")
         // empty corpus: the result is empty regardless of the share —
         // guard the scala-side division (degenerate-corpus sweep, r8)
@@ -801,9 +792,7 @@ object Graph {
         val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val isSeed = col("doc_id") % PprSeedMod === 0
-        // bounded driver scalar, memoized per corpus fingerprint (r14)
-        val nSeeds = pprSeedCounts.getOrElseUpdate(
-          Tables.corpusFingerprint(dir, "documents"),
+        val nSeeds = Tables.memo(dir, "documents", "ppr_seeds")(
           docs.filter(isSeed).count())
         // no seeds (e.g. an empty corpus): every rank is 0 and the
         // seed-share literals are never applied to any row — guard the

@@ -51,20 +51,6 @@ object Similarity {
   private def centStride(n: Long): Long =
     math.max(50L, math.floor(math.sqrt(n.toDouble)).toLong)
 
-  /** Embeddings row count, memoized per corpus fingerprint (r13 verdict
-    * task #4): planesOf/centStride ran an EAGER count() job at query-
-    * BUILD time for every LSH/IVF query — at 100 TB a count(*) job per
-    * query construction is a real stall before the actual query starts.
-    * The count depends only on the corpus files, so measure it once per
-    * file-set fingerprint (size+mtime — an in-place rewrite rebuilds,
-    * the minhashIndexDir discipline) and reuse across query builds. */
-  private val embCountCache =
-    scala.collection.concurrent.TrieMap[String, Long]()
-
-  private def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.getOrElseUpdate(
-      Tables.corpusFingerprint(dir, "embeddings"),
-      emb(s, dir).count())
   private val BeamWidth = 8 // graph-search beam (> TopK + 1: self-cut room)
   private val GraphSearchRounds = 3 // synchronous beam expansions
 
@@ -119,7 +105,7 @@ object Similarity {
     * scalar per query build, same pre-flight discipline as
     * centStride. */
   private def planesOf(s: SparkSession, dir: String): Int =
-    planesFor(embCount(s, dir))
+    planesFor(Tables.rowCount(s, dir, "embeddings"))
 
   /** Hyperplane component r(j, k) in [-1.0, 1.0], derived from the
     * md5-based hash31 of "j_k" — engine-portable (the DuckDB oracle
@@ -698,15 +684,15 @@ object Similarity {
 
     // Index REFRESH semantics (r9, VERDICT task 7) — the missing leg of
     // the build/save/serve/inspect lifecycle: a batch is APPENDED to the
-    // corpus, the index cache's corpus fingerprint changes, the next
+    // corpus, the embeddings files' fingerprint changes, the next
     // serve triggers a rebuild against the appended corpus, and the
     // served results must equal an inline build over base+batch — the
     // dedup_incremental discipline applied to ANN. Mechanics: the
     // original embeddings are split 12:1 (vec_id % 13) into a private
     // corpus dir; the base slice is written and indexed (build #1), the
     // batch slice is appended as new parquet files, and serving the
-    // SAME dir again rebuilds (build #2) because ivfIndexDir keys its
-    // cache on file size/mtime fingerprints, not the path. The operator
+    // SAME dir again rebuilds (build #2) because Tables.memo keys the
+    // index on file size/mtime, not the path. The operator
     // asserts the rebuild actually happened (distinct index dirs) and
     // returns the post-refresh served top-k. Since base ∪ batch is
     // exactly the original corpus, the oracle is the standard inline
@@ -814,7 +800,7 @@ object Similarity {
         // gate) so the baseline cannot be pointed at a large corpus by
         // accident — the production path is sim_embed_neardup (LSH).
         Dedup.requireAllPairsSmall(
-          embCount(s, dir),
+          Tables.rowCount(s, dir, "embeddings"),
           "sim_embed_neardup_exact", "vectors", "sim_embed_neardup")
         val base = embParallel(s, dir)
         val a = base.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
@@ -1764,10 +1750,8 @@ object Similarity {
     * coarse quantizer. */
   private def ivfCentroids(s: SparkSession, dir: String): DataFrame = {
     val e = embParallel(s, dir)
-    // √N stride (see CentStrideSql): a bounded driver scalar, the same
-    // pre-flight discipline as requireAllPairsSmall; the count is the
-    // fingerprint-memoized one — no count() job per query build
-    e.filter(col("vec_id") % centStride(embCount(s, dir)) === 0)
+    // √N stride (see CentStrideSql)
+    e.filter(col("vec_id") % centStride(Tables.rowCount(s, dir, "embeddings")) === 0)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
   }
 
@@ -1806,17 +1790,10 @@ object Similarity {
     * PARTITIONED BY list_id so a served probe reads only its own
     * lists' files, the on-disk analog of the list-keyed equi-join). At
     * 100 TB the build is one assignment pass; refresh = rebuild into a
-    * new dir and swap the path, exactly what this keyed cache does. */
-  private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  // keyed on dir + file-metadata fingerprint (r9 advice): a corpus
-  // rewritten in place within one JVM gets a fresh index build, never a
-  // stale served answer — and the refresh operator (sim_ann_ivf_refresh)
-  // gets rebuild-on-append for free from the same key.
+    * new dir and swap the path, which the memo does once the embeddings
+    * files change (sim_ann_ivf_refresh). */
   private[graft] def ivfIndexDir(s: SparkSession, dir: String): String =
-    ivfIndexDirs.getOrElseUpdate(
-      graft.Tables.corpusFingerprint(dir, "embeddings"), {
+    Tables.memo(dir, "embeddings", "ivf_index") {
       val p = graft.jvmScratchDir("graft_ivf_index")
       val centroids = ivfCentroids(s, dir)
       centroids.coalesce(1).write.mode("overwrite")
@@ -1825,7 +1802,7 @@ object Similarity {
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$p/lists")
       p.toString
-    })
+    }
 
   /** Search the SAVED index: loads centroids + inverted lists from
     * parquet (first call per corpus builds and saves them) and routes
@@ -2067,20 +2044,15 @@ object Similarity {
       .select("src_id", "nbr_id")
   }
 
-  /** Build-once/save/load cache for the k-NN graph index — the
-    * ivfIndexDir lifecycle applied to the graph family: keyed on the
-    * corpus file-metadata fingerprint so an in-place rewrite rebuilds. */
-  private val knnIndexDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+  /** Build-once/save/load for the k-NN graph index — the ivfIndexDir
+    * lifecycle applied to the graph family. */
   private[graft] def knnIndexDir(s: SparkSession, dir: String): String =
-    knnIndexDirs.getOrElseUpdate(
-      graft.Tables.corpusFingerprint(dir, "embeddings"), {
+    Tables.memo(dir, "embeddings", "knn_index") {
       val p = graft.jvmScratchDir("graft_knn_index")
       knnGraphEdges(s, embParallel(s, dir))
         .write.mode("overwrite").parquet(s"$p/edges")
       p.toString
-    })
+    }
 
   /** GraphSearchRounds synchronous beam expansions over a prebuilt edge
     * relation, then the closing top-k — the serving half of the graph

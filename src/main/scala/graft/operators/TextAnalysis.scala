@@ -1475,8 +1475,6 @@ object TextAnalysis {
       "text_shard_pack",
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        // memoized pre-flight (r14): the salt width depends only on the
-        // corpus row count — no count() job per query build
         val nSalt = math.max(1L, Tables.rowCount(s, dir, "documents") / 2048L)
         val nTok = tokenCount(col("text"))
         val u = hash31(concat_ws("|", lit("spack"), col("doc_id").cast("string")))

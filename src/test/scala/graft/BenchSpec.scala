@@ -42,6 +42,29 @@ class BenchSpec extends AnyFunSuite {
       "\"heavy_query_with_a_long_name\":5", "\"cheap\":1"))
   }
 
+  test("readLast reads passes, queries and corpus back from a BENCH_LAST line") {
+    val f = java.nio.file.Files.createTempFile("bench_last", ".json")
+    try {
+      // the written format, with a later key holding a numeric array
+      // that must not be read as pass history
+      java.nio.file.Files.writeString(f,
+        """{"metric":"total","value":3.5,"unit":"sec",""" +
+          """"queries":{"q_a":1.25,"dedup_b":2.25},""" +
+          """"passes":{"q_a":[1.5,1.25],"dedup_b":[2.25,3.0]},""" +
+          """"variance":{"q_a":1.2,"dedup_b":1.33},"families":{"q":1.25},""" +
+          """"failures":0,"failed":[],"best_of":2,"sf":"/data/sf0.1",""" +
+          """"corpus":"0a1b2c3d4e5f6071","later":[9.5,8.5]}""" + "\n")
+      val last = Bench.readLast(f)
+      assert(last.passes ===
+        Map("q_a" -> List(1.5, 1.25), "dedup_b" -> List(2.25, 3.0)))
+      assert(last.queries === Map("q_a" -> 1.25, "dedup_b" -> 2.25))
+      assert(last.corpus === Some("0a1b2c3d4e5f6071"))
+    } finally java.nio.file.Files.delete(f)
+    val missing = Bench.readLast(f)
+    assert(missing.passes.isEmpty && missing.queries.isEmpty &&
+      missing.corpus.isEmpty)
+  }
+
   test("PlanDump refuses to pick a plans round on its own") {
     val e = intercept[IllegalArgumentException](PlanDump.outDir(Map.empty))
     assert(e.getMessage.contains("SPARK_GRAFT_ROUND"), e.getMessage)

@@ -17,20 +17,19 @@ class DedupTextSpec extends AnyFunSuite {
   test("observe-backed counts ride the checkpoint job and match direct counts") {
     // r14: connectedComponents' convergence check and viralCleanRun's
     // stage counts read an Observation collected DURING localCheckpoint
-    // materialization instead of running a second count job. The -1
-    // fallback asserts the metric actually DELIVERED (a fallback hit
-    // would return -1 and fail loudly here).
-    val obs = new org.apache.spark.sql.Observation()
-    val df = (0L until 1000L).toDF("x").filter(col("x") % 3 === 0)
-      .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    assert(Tables.observedLong(obs, "n")(-1L) === df.count())
+    // materialization instead of running a second count job. The
+    // fallback counter must not move: the metric actually DELIVERED.
+    val f0 = Tables.observeFallbacks
+    val (df, n) = Tables.checkpointMeasured(
+      (0L until 1000L).toDF("x").filter(col("x") % 3 === 0), count(lit(1)))
+    assert(n === df.count())
     // empty frame: a sum-style metric comes back null -> reads as 0
-    val obs2 = new org.apache.spark.sql.Observation()
-    val empty = (0L until 10L).toDF("x").filter(col("x") > 100)
-      .observe(obs2, sum(when(col("x") > 5, 1L).otherwise(0L)).as("c"))
-      .localCheckpoint()
+    val (empty, c) = Tables.checkpointMeasured(
+      (0L until 10L).toDF("x").filter(col("x") > 100),
+      sum(when(col("x") > 5, 1L).otherwise(0L)))
     assert(empty.count() === 0L)
-    assert(Tables.observedLong(obs2, "c")(-1L) === 0L)
+    assert(c === 0L)
+    assert(Tables.observeFallbacks - f0 === 0L)
   }
 
   test("paragraph dedup empties an exact-duplicate doc, keeps the first") {

@@ -48,6 +48,36 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** A non-comment operator-source line, with the line above it. */
+  private case class SourceHit(path: String, lineNo: Int, line: String,
+      above: String) {
+    override def toString: String = s"$path:$lineNo: ${line.trim}"
+  }
+
+  /** Non-comment lines of the operator sources containing any `needles`. */
+  private def operatorSourceHits(needles: Seq[String]): Seq[SourceHit] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val roots = Seq("operators", "sources", "functions", "streaming")
+      .map(d => Paths.get("src/main/scala/graft", d))
+      .filter(Files.isDirectory(_))
+    roots.flatMap { root =>
+      val walk = Files.walk(root)
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val lines = Files.readAllLines(p).asScala.toIndexedSeq
+          lines.indices.collect {
+            case i if needles.exists(lines(i).contains) &&
+              !lines(i).trim.startsWith("//") =>
+              SourceHit(p.toString, i + 1, lines(i),
+                if (i > 0) lines(i - 1) else "")
+          }
+        }.toList
+      finally walk.close()
+    }
+  }
+
   // Session-scoped-state contract guard (r9 advice): graft.Verify runs
   // operators concurrently, one newSession() per worker over a SHARED
   // SparkContext — an operator mutating SparkContext-global state would
@@ -57,11 +87,6 @@ class RegistrySpec extends AnyFunSuite {
   // QueryDef (Registry.scala). Add a justified exclusion here only for
   // an operator that also forces SPARK_GRAFT_VERIFY_WORKERS=1.
   test("operator sources avoid SparkContext-global state mutations") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val roots = Seq("operators", "sources", "functions", "streaming")
-      .map(d => Paths.get("src/main/scala/graft", d))
-      .filter(Files.isDirectory(_))
     val forbidden = Seq(
       "setCheckpointDir",          // global checkpoint dir on the context
       "hadoopConfiguration.set",   // shared Hadoop conf mutation
@@ -70,22 +95,30 @@ class RegistrySpec extends AnyFunSuite {
       "setJobGroup",               // context-thread-global job metadata
       "setLocalProperty",          // ditto (Cancel.scala owns its session)
       "setJobDescription")
-    val hits = roots.flatMap { root =>
-      val walk = Files.walk(root)
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val lines = Files.readAllLines(p).asScala
-          lines.zipWithIndex.collect {
-            case (l, i) if forbidden.exists(l.contains) &&
-              !l.trim.startsWith("//") => s"$p:${i + 1}: ${l.trim}"
-          }
-        }.toList
-      finally walk.close()
-    }
+    val hits = operatorSourceHits(forbidden)
     assert(hits.isEmpty,
       "SparkContext-global state mutation in operator code (races " +
         "under the parallel Verify — see the QueryDef contract):\n" +
         hits.mkString("\n"))
+  }
+
+  // Corpus metadata is memoized in one place, Tables.memo, keyed on the
+  // files' size+mtime fingerprint: an operator owning its own cache or
+  // building its own key can go stale in ways the memo cannot.
+  test("operator sources own no caches and build no corpus fingerprints") {
+    // the only caches left hold no corpus metadata
+    val allowed = Map(
+      // a pure function of the plane count
+      "Similarity.scala" -> "val planeConstCache",
+      // keyed by format name
+      "Formats.scala" -> "val scratchDirs")
+    val hits = operatorSourceHits(Seq("TrieMap", "corpusFingerprint"))
+      .filterNot { h =>
+        allowed.get(java.nio.file.Paths.get(h.path).getFileName.toString)
+          .exists(e => h.line.contains(e) || h.above.contains(e))
+      }
+    assert(hits.isEmpty,
+      "operator-owned cache or fingerprint (route it through " +
+        "Tables.memo):\n" + hits.mkString("\n"))
   }
 }

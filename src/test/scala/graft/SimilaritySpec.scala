@@ -186,8 +186,9 @@ class SimilaritySpec extends AnyFunSuite {
       .collect()
     assert(inline.nonEmpty)
     assert(served.toSeq === inline.toSeq)
-    // second serve hits the already-saved index (the TrieMap cache keys
-    // by corpus dir) and stays identical — the load path is stable
+    // second serve hits the already-saved index (Tables.memo keys it
+    // on the corpus fingerprint) and stays identical — the load path
+    // is stable
     val servedAgain = Registry.byName("sim_ann_ivf_served")
       .run(spark, corpus).collect()
     assert(servedAgain.toSeq === served.toSeq)
