@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table access for the driver corpus (TESTDATA.md).
   *
@@ -10,9 +11,14 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
   * parquet reader gives the same columnar scan with column pruning and
   * row-group skipping (reference main.rs:126,131) built in.
   *
-  * Metadata derived from the corpus files (row counts, split counts,
-  * the directories of indexes built from a table) is memoized here and
-  * nowhere else: see `memo`.
+  * Metadata derived from the corpus files (schemas, row counts, split
+  * counts, the directories of indexes built from a table) is memoized
+  * here and nowhere else: see `memo`. Like the reference, which infers
+  * a table's schema once when it registers the ListingTable, a table's
+  * schema is inferred once per file set (`fileSchema`), keyed on the
+  * files' fingerprint plus the session's values of the confs that
+  * change parquet schema inference (`schemaConfs`); every later `load`
+  * passes it to the reader and launches no footer-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -21,7 +27,43 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, dir, name)
+
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(fileSchema(spark, dir, name))
+      .parquet(s"$dir/$name.parquet")
+
+  /** Session confs whose values change the schema parquet inference
+    * returns for the same files. */
+  private val schemaConfs: Seq[String] = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** Session confs that change how a file scan is split. */
+  private val splitConfs: Seq[String] = Seq(
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum")
+
+  /** `what` qualified by the session's values of `confs`, so a memo
+    * entry measured under one setting is never served under another. */
+  private def confKeyed(spark: SparkSession, what: String,
+      confs: Seq[String]): String =
+    confs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
+      .mkString(s"$what@", ",", "")
+
+  /** The schema `spark.read.parquet` infers for `dir/name.parquet` under
+    * the session's confs; for events that is the raw file schema (ts not
+    * normalized). Inference reads footers in a Spark job (about 100 ms at
+    * local[4]), so it runs once per file set and `schemaConfs` values,
+    * in any session of the JVM. */
+  def fileSchema(spark: SparkSession, dir: String, name: String): StructType =
+    memo(dir, name, confKeyed(spark, "schema", schemaConfs))(
+      spark.read.parquet(s"$dir/$name.parquet").schema)
 
   /** Spread an under-split scan across every core before heavy per-row
     * expression work (md5 ladders, shingle explosion, image decode).
@@ -41,9 +83,10 @@ object Tables {
 
   /** Measured scan partition count. `df.rdd.getNumPartitions` pays a
     * second analyze/optimize/physical-planning pass per call (r13
-    * advice), so a file scan's count is memoized on its input files
-    * and the parallelism. A frame with no input files (checkpointed,
-    * in-memory) has nothing to key on and is measured directly. */
+    * advice), so a file scan's count is memoized on its input files,
+    * the parallelism and the session's `splitConfs`. A frame with no
+    * input files (checkpointed, in-memory) has nothing to key on and is
+    * measured directly. */
   private def scanPartitions(df: DataFrame, p: Int): Int = {
     val files = df.inputFiles
     if (files.isEmpty) df.rdd.getNumPartitions
@@ -54,7 +97,9 @@ object Tables {
         val st = path.getFileSystem(conf).getFileStatus(path)
         (f, st.getLen, st.getModificationTime)
       }
-      memoOn(filesFingerprint(stats), s"splits@$p")(df.rdd.getNumPartitions)
+      memoOn(filesFingerprint(stats),
+        confKeyed(df.sparkSession, s"splits@$p", splitConfs))(
+        df.rdd.getNumPartitions)
     }
   }
 
@@ -69,7 +114,9 @@ object Tables {
 
   /** Corpus metadata memo: `compute` runs once per (fingerprint of the
     * files under `dir/table.parquet`, `what`) and JVM, where `what`
-    * names the derived value ("rows", "ivf_index", "ppr_seeds", ...).
+    * names the derived value ("rows", "ivf_index", "ppr_seeds", ...)
+    * and, for a value that depends on session confs, their values
+    * ("schema@spark.sql.parquet.binaryAsString=false,...").
     *
     * The fingerprint is every file's relative path, size and mtime, so
     * a table rewritten in place (a test regenerating data, the refresh
@@ -78,10 +125,14 @@ object Tables {
     * advice). Listing the files is O(#files) driver metadata work, the
     * same cost Spark pays to plan the scan.
     *
-    * Only metadata is memoized — counts, split counts, the directory of
-    * an index built from the corpus — never a query's result. */
+    * A path with no local files to list (absent, or not on the local
+    * file system) has nothing to key on: `compute` runs every call.
+    *
+    * Only metadata is memoized — schemas, counts, split counts, the
+    * directory of an index built from the corpus — never a query's
+    * result. */
   def memo[T](dir: String, table: String, what: String)(compute: => T): T =
-    memoOn(corpusFingerprint(dir, table), what)(compute)
+    corpusFingerprint(dir, table).fold(compute)(memoOn(_, what)(compute))
 
   private val memos = scala.collection.concurrent.TrieMap[(String, String), Any]()
 
@@ -97,11 +148,11 @@ object Tables {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private def corpusFingerprint(dir: String, table: String): String = {
+  private def corpusFingerprint(dir: String, table: String): Option[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(s"$dir/$table.parquet")
-    if (!Files.exists(root)) s"$dir/$table:absent"
+    if (!Files.exists(root)) None
     else {
       val walk = Files.walk(root)
       val files =
@@ -110,7 +161,7 @@ object Tables {
             Files.getLastModifiedTime(p).toMillis))
           .toList
         finally walk.close()
-      s"$dir/$table#${filesFingerprint(files)}"
+      Some(s"$dir/$table#${filesFingerprint(files)}")
     }
   }
 
@@ -119,27 +170,27 @@ object Tables {
   /** Process-wide count of checkpointMeasured fallbacks so far. */
   def observeFallbacks: Long = obsFallbacks.get
 
-  /** `df` localCheckpointed, plus `metric` — a Long aggregate over its
-    * rows — collected during the checkpoint job via `Dataset.observe`
-    * instead of by a second job. Listener delivery is asynchronous: if
-    * the metric has not landed within 2 s, the same aggregate runs over
-    * the checkpointed blocks (same value, one spare job) and
-    * `observeFallbacks` goes up. A null metric (a sum over zero rows)
-    * reads as 0. */
-  def checkpointMeasured(df: DataFrame, metric: Column): (DataFrame, Long) = {
-    val obs = new Observation()
-    val frame = df.observe(obs, metric.as("m")).localCheckpoint()
-    (frame, observedLong(obs)({
-      obsFallbacks.incrementAndGet()
-      asLong(frame.agg(metric).head().get(0))
-    }))
-  }
-
-  private def observedLong(obs: Observation)(fallback: => Long): Long = {
+  /** `df` localCheckpointed, plus `metrics` — Long aggregates over its
+    * rows, in order — collected during the checkpoint job via
+    * `Dataset.observe` instead of by a second job. Listener delivery is
+    * asynchronous: if the metrics have not landed within 2 s, the same
+    * aggregates run over the checkpointed blocks (same values, one spare
+    * job) and `observeFallbacks` goes up. A null metric (a sum over zero
+    * rows) reads as 0. */
+  def checkpointMeasured(df: DataFrame, metrics: Column*)
+      : (DataFrame, Seq[Long]) = {
     import scala.concurrent.Await
     import scala.concurrent.duration.DurationInt
-    try asLong(Await.result(obs.future, 2.seconds).get(0))
-    catch { case _: java.util.concurrent.TimeoutException => fallback }
+    val obs = new Observation()
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    val frame = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
+    val row =
+      try Await.result(obs.future, 2.seconds)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        obsFallbacks.incrementAndGet()
+        frame.agg(metrics.head, metrics.tail: _*).head()
+      }
+    (frame, row.toSeq.map(asLong))
   }
 
   private def asLong(v: Any): Long = v match {
@@ -158,12 +209,12 @@ object Tables {
     * exactly, so oracle comparisons stay bit-for-bit either way. */
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = read(spark, dir, "events")
     df.withColumn("ts", normTsCol(df.schema))
   }
 
   /** The ts-normalizing column for an events schema (see loadEvents). */
-  def normTsCol(schema: org.apache.spark.sql.types.StructType)
+  def normTsCol(schema: StructType)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, expr}
     schema("ts").dataType match {

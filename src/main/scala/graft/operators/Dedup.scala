@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -2183,7 +2183,7 @@ object Dedup {
       "dedup_eval",
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
-        val (truth, nTruth) = Tables.checkpointMeasured(jaccardPairs(sh)
+        val (truth, Seq(nTruth)) = Tables.checkpointMeasured(jaccardPairs(sh)
           .filter(col("jaccard") >= JaccardThreshold)
           .select("a_id", "b_id"), count(lit(1)))
         // bands materialized once, partitioned on the self-join key
@@ -2426,7 +2426,7 @@ object Dedup {
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
         val withSig = signaturesFrom(sh).localCheckpoint()
-        val (truth, nTruth) = Tables.checkpointMeasured(jaccardPairs(sh)
+        val (truth, Seq(nTruth)) = Tables.checkpointMeasured(jaccardPairs(sh)
           .filter(col("jaccard") >= JaccardThreshold)
           .select("a_id", "b_id"), count(lit(1)))
         // one pass per leg (r14, the dedup_eval scorecard shape):
@@ -2971,36 +2971,43 @@ object Dedup {
       s: SparkSession, dir: String,
       onStage: (String, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
     import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
-    def stage(name: String)(f: => DataFrame): (DataFrame, Long) = {
+    def stage(name: String, more: Column*)(f: => DataFrame)
+        : (DataFrame, Seq[Long]) = {
       val t0 = System.nanoTime()
-      val (frame, n) = Tables.checkpointMeasured(f, count(lit(1)))
-      onStage(name, n, (System.nanoTime() - t0) / 1e9)
-      (frame, n)
+      val (frame, ms) = Tables.checkpointMeasured(f, count(lit(1)) +: more: _*)
+      onStage(name, ms.head, (System.nanoTime() - t0) / 1e9)
+      (frame, ms)
     }
-    val (input, nDocs) = stage("read")(
-      docsParallel(s, dir).select("doc_id", "text", "source"))
-    val (kept, nKept) = stage("quality_gate")(input
-      .filter(tokenCount(col("text")) >= 8 &&
-        stopwordRatio(col("text")) <= 0.35 &&
-        noiseRatio(col("text")) <= 0.25 &&
-        avgWordLen(col("text")) >= 3.0))
-    val (sh, _) = stage("shingle")(
-      kept.select(col("doc_id"), shingles(col("text"), 3).as("sh")))
-    val (cand, nCand) = stage("band_candidates_star_capped")(
-      bandCandidatesStarCapped(sh, TextBandBucketCap))
+    val nDocs = Tables.rowCount(s, dir, "documents")
+    // read → quality gate → shingle is map-only after the read's
+    // repartition: one barrier for the frame every later stage reuses
+    val (gated, Seq(nKept)) = stage("read_gate_shingle")(
+      docsParallel(s, dir)
+        .filter(tokenCount(col("text")) >= 8 &&
+          stopwordRatio(col("text")) <= 0.35 &&
+          noiseRatio(col("text")) <= 0.25 &&
+          avgWordLen(col("text")) >= 3.0)
+        .select(col("doc_id"), col("text"), col("source"),
+          shingles(col("text"), 3).as("sh")))
+    val kept = gated.select("doc_id", "text", "source")
+    val sh = gated.select("doc_id", "sh")
+    // the Jaccard test rides the candidate checkpoint as a column, so
+    // n_cand and n_pairs come from one job
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val (verified, nPairs) = stage("jaccard_verify")(cand
-      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
-      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
-      .filter(inter.cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double")
-        >= JaccardThreshold)
-      .select("a_id", "b_id"))
-    val (reps, nReps) = stage("cluster_collapse")(
+    val (cand, Seq(nCand, nPairs)) = stage("band_candidates_verify",
+        sum(when(col("ok"), 1L).otherwise(0L)))(
+      bandCandidatesStarCapped(sh, TextBandBucketCap)
+        .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
+        .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
+        .select(col("a_id"), col("b_id"), (inter.cast("double") /
+          (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double")
+          >= JaccardThreshold).as("ok")))
+    val verified = cand.filter(col("ok")).select("a_id", "b_id")
+    val (reps, Seq(nReps)) = stage("cluster_collapse")(
       connectedComponents(kept.select("doc_id"), verified)
         .filter(col("doc_id") === col("rep_id")).select("doc_id"))
     val d38 = "decimal(38,0)"
-    val (sampled, nSampled) = stage("token_budget_sample") {
+    val (_, Seq(nSampled, nToks)) = stage("token_budget_sample", sum("n_toks")) {
       val docs = kept.join(reps, Seq("doc_id"), "left_semi")
         .withColumn("n_toks", size(split(col("text"), " ")).cast("long"))
       val st = docs.groupBy("source")
@@ -3023,8 +3030,6 @@ object Dedup {
         .filter(col("cum_toks") - col("n_toks") < col("budget_toks"))
         .select("doc_id", "n_toks")
     }
-    val nToks = sampled.agg(coalesce(sum("n_toks"), lit(0L)).cast("long"))
-      .first().getLong(0)
     import s.implicits._
     Seq((nDocs, nKept, nCand, nPairs, nReps, nSampled, nToks))
       .toDF("n_docs", "n_kept", "n_cand", "n_pairs", "n_reps",
@@ -3437,7 +3442,7 @@ object Dedup {
       // the convergence count rides the checkpoint job (r14): a
       // separate filter+count job per iteration was pure fixed overhead
       // in a loop every clustering query runs 3–6 times
-      val (next, nChanged) = Tables.checkpointMeasured(stepped
+      val (next, Seq(nChanged)) = Tables.checkpointMeasured(stepped
         .join(
           stepped.select(col("u").as("rep_id"), col("rep_id").as("rep2")),
           Seq("rep_id"), "left")

@@ -1798,7 +1798,10 @@ object Similarity {
       val centroids = ivfCentroids(s, dir)
       centroids.coalesce(1).write.mode("overwrite")
         .parquet(s"$p/centroids")
+      // an explicit partition count, which AQE does not coalesce: the
+      // lists are written from every core, one file per list
       ivfAssignTop1(s, embParallel(s, dir), broadcast(centroids))
+        .repartition(s.sparkContext.defaultParallelism, col("list_id"))
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$p/lists")
       p.toString

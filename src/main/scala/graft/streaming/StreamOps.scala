@@ -26,11 +26,10 @@ object StreamOps {
   /** Run the windowed aggregation as a real streaming query to completion
     * and return the final (complete-mode) result as a batch DataFrame. */
   def hourlyByType(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     // ts is parquet timestamp[ns]: stream it as raw nanos (long) and
     // convert to a microsecond timestamp in-plan (see Tables.loadEvents).
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_hourly_${nameCounter.incrementAndGet()}"
     // The file stream source wants a directory: stream the sf dir with a
     // glob that selects just the events table.
@@ -66,9 +65,8 @@ object StreamOps {
     * split. Converges to the SAME table as the batch operator: the
     * oracle is Numerics.HistDriftOracleSql verbatim. */
   def tvDriftStreaming(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_tv_${nameCounter.incrementAndGet()}"
     val q = s.readStream
       .schema(schema)
@@ -110,9 +108,8 @@ object StreamOps {
     * the SAME Numerics.changepointFinish the batch operator uses — one
     * detector, two execution modes. */
   def changepointStreaming(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_cp_${nameCounter.incrementAndGet()}"
     val DayUs = 86400000000L
     val q = s.readStream
@@ -137,9 +134,8 @@ object StreamOps {
   /** Streaming 6-hour OHLC: q_ohlc's one-pass min_by/max_by aggregate as
     * an incremental streaming aggregation (see the stream_ohlc def). */
   def ohlcStreaming(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_ohlc_${nameCounter.incrementAndGet()}"
     val BucketUs = 21600000000L // 6 hours — same constant as q_ohlc
     val q = s.readStream
@@ -181,9 +177,8 @@ object StreamOps {
     * mode sink holds only the aggregated table (∝ windows x types,
     * never ∝ events). */
   def hoppingByType(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_hopping_${nameCounter.incrementAndGet()}"
     val q = s.readStream
       .schema(schema)
@@ -221,9 +216,8 @@ object StreamOps {
     * 100 TB the snapshot is a real table format and the merge is its
     * MERGE INTO, but the per-batch plan is exactly this one. */
   def foreachBatchMerge(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val tableRoot = java.nio.file.Files
       .createTempDirectory("graft_fb_merge").toString
     @volatile var current: Option[String] = None
@@ -268,9 +262,8 @@ object StreamOps {
     * rates); the deduped append stream lands in a memory sink and is
     * summarized batch-side. */
   def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_dedup_${nameCounter.incrementAndGet()}"
     val q = s.readStream
       .schema(schema)
@@ -306,9 +299,8 @@ object StreamOps {
     * operator exists to absorb. Bounded replay here fits in one
     * micro-batch, so the batch DISTINCT oracle is exact. */
   def streamingDedupWm(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     val sink = s"graft_stream_dedup_wm_${nameCounter.incrementAndGet()}"
     val q = s.readStream
       .schema(schema)
@@ -361,7 +353,7 @@ object StreamOps {
   def eventStream(s: SparkSession, dir: String): Dataset[Ev] = {
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -644,7 +636,7 @@ object StreamOps {
 
   private def rawEventStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "events")
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -720,8 +712,8 @@ object StreamOps {
     * simply never closes. */
   private final class SentinelStage(s: SparkSession, dir: String) {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    private val src = s.read.parquet(s"$dir/events.parquet")
-    val schema: org.apache.spark.sql.types.StructType = src.schema
+    val schema: org.apache.spark.sql.types.StructType =
+      graft.Tables.fileSchema(s, dir, "events")
     val stage: String = java.nio.file.Files
       .createTempDirectory("graft_sentinel_stage").toString
     java.nio.file.Files.copy(
@@ -729,7 +721,7 @@ object StreamOps {
       java.nio.file.Paths.get(s"$stage/00_events.parquet"))
 
     def addSentinel(eventTypes: String*): Unit = {
-      val maxRow = src.withColumn("ts", graft.Tables.normTsCol(schema))
+      val maxRow = graft.Tables.load(s, dir, "events")
         .agg(max(unix_micros(col("ts")))).head()
       // empty corpus: max(ts) is NULL — any base works, the sentinel
       // only exists to push watermarks past (nonexistent) real data
@@ -1086,7 +1078,7 @@ object StreamOps {
     * store, and results append to a keyed sink. Identical output to
     * sim_ann_ivf — shared oracle. */
   def streamAnnProbe(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "embeddings")
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_ann_probe").toString + "/out"
     val q = s.readStream
@@ -1140,7 +1132,7 @@ object StreamOps {
     * occurrences are reassembled batch-side into cleaned documents. */
   def streamParagraphDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_paradedup_${nameCounter.incrementAndGet()}"
     val q = graft.operators.Dedup.paragraphs(
         s.readStream
@@ -1221,7 +1213,7 @@ object StreamOps {
     * Oracle: the lag-window TTL rule in doc_id arithmetic. */
   def streamParagraphDedupTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_paradedup_ttl_${nameCounter.incrementAndGet()}"
     val q = graft.operators.Dedup.paragraphs(
         s.readStream
@@ -1289,7 +1281,7 @@ object StreamOps {
     import s.implicits._
     import graft.functions.EngineFns.{minhashSig, shingles}
     import graft.operators.Dedup.{BandRows, NumPerms}
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_neardup_${nameCounter.incrementAndGet()}"
     val bands = s.readStream
       .schema(schema)
@@ -1393,7 +1385,7 @@ object StreamOps {
     import s.implicits._
     import graft.functions.EngineFns.{minhashSig, shingles}
     import graft.operators.Dedup.{BandRows, NumPerms}
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_neardup_ttl_${nameCounter.incrementAndGet()}"
     val bands = s.readStream
       .schema(schema)
@@ -1716,9 +1708,8 @@ object StreamOps {
     QueryDef(
       "stream_session_window",
       (s, dir) => {
-        val path = s"$dir/events.parquet"
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(path).schema
+        val schema = graft.Tables.fileSchema(s, dir, "events")
         val sink = s"graft_stream_sesswin_${nameCounter.incrementAndGet()}"
         val q = s.readStream
           .schema(schema)
@@ -1858,9 +1849,8 @@ object StreamOps {
     QueryDef(
       "stream_static_enrich",
       (s, dir) => {
-        val path = s"$dir/events.parquet"
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(path).schema
+        val schema = graft.Tables.fileSchema(s, dir, "events")
         val sink = s"graft_stream_enrich_${nameCounter.incrementAndGet()}"
         val cust = broadcast(graft.Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment")))
@@ -1903,11 +1893,10 @@ object StreamOps {
     QueryDef(
       "stream_ingest_dedup",
       (s, dir) => {
-        val path = s"$dir/documents.parquet"
-        val schema = s.read.parquet(path).schema
+        val schema = graft.Tables.fileSchema(s, dir, "documents")
         val sink = s"graft_stream_ingest_${nameCounter.incrementAndGet()}"
         val standing = broadcast(
-          s.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
+          graft.Tables.load(s, dir, "documents")
             .filter(col("doc_id") % 7 === 0)
             .select(md5(col("text").cast("binary")).as("fp"))
             .distinct()
@@ -1947,8 +1936,7 @@ object StreamOps {
     QueryDef(
       "stream_quality_gate",
       (s, dir) => {
-        val path = s"$dir/documents.parquet"
-        val schema = s.read.parquet(path).schema
+        val schema = graft.Tables.fileSchema(s, dir, "documents")
         val sink = s"graft_stream_qgate_${nameCounter.incrementAndGet()}"
         val q = s.readStream
           .schema(schema)
@@ -1995,7 +1983,7 @@ object StreamOps {
       (s, dir) => {
         import s.implicits._
         import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
+        val schema = graft.Tables.fileSchema(s, dir, "documents")
         val sink = s"graft_stream_pipeclean_${nameCounter.incrementAndGet()}"
         val q = s.readStream
           .schema(schema)
@@ -2082,7 +2070,7 @@ object StreamOps {
       (s, dir) => {
         import s.implicits._
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val schema = graft.Tables.fileSchema(s, dir, "events")
         val sink = s"graft_stream_rlimit_${nameCounter.incrementAndGet()}"
         val q = s.readStream
           .schema(schema)
@@ -2141,7 +2129,7 @@ object StreamOps {
       (s, dir) => {
         import s.implicits._
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val schema = graft.Tables.fileSchema(s, dir, "events")
         val sink = s"graft_stream_scd2_${nameCounter.incrementAndGet()}"
         val q = s.readStream
           .schema(schema)

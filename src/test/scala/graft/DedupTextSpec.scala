@@ -20,11 +20,11 @@ class DedupTextSpec extends AnyFunSuite {
     // materialization instead of running a second count job. The
     // fallback counter must not move: the metric actually DELIVERED.
     val f0 = Tables.observeFallbacks
-    val (df, n) = Tables.checkpointMeasured(
+    val (df, Seq(n)) = Tables.checkpointMeasured(
       (0L until 1000L).toDF("x").filter(col("x") % 3 === 0), count(lit(1)))
     assert(n === df.count())
     // empty frame: a sum-style metric comes back null -> reads as 0
-    val (empty, c) = Tables.checkpointMeasured(
+    val (empty, Seq(c)) = Tables.checkpointMeasured(
       (0L until 10L).toDF("x").filter(col("x") > 100),
       sum(when(col("x") > 5, 1L).otherwise(0L)))
     assert(empty.count() === 0L)

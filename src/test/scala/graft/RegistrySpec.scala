@@ -78,6 +78,11 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  /** `h` is on, or just below, the line its file's `allowed` entry names. */
+  private def allowlisted(allowed: Map[String, String])(h: SourceHit): Boolean =
+    allowed.get(java.nio.file.Paths.get(h.path).getFileName.toString)
+      .exists(e => h.line.contains(e) || h.above.contains(e))
+
   // Session-scoped-state contract guard (r9 advice): graft.Verify runs
   // operators concurrently, one newSession() per worker over a SHARED
   // SparkContext — an operator mutating SparkContext-global state would
@@ -113,12 +118,34 @@ class RegistrySpec extends AnyFunSuite {
       // keyed by format name
       "Formats.scala" -> "val scratchDirs")
     val hits = operatorSourceHits(Seq("TrieMap", "corpusFingerprint"))
-      .filterNot { h =>
-        allowed.get(java.nio.file.Paths.get(h.path).getFileName.toString)
-          .exists(e => h.line.contains(e) || h.above.contains(e))
-      }
+      .filterNot(allowlisted(allowed))
     assert(hits.isEmpty,
       "operator-owned cache or fingerprint (route it through " +
         "Tables.memo):\n" + hits.mkString("\n"))
+  }
+
+  // A corpus table is read through Tables.load, or its raw schema taken
+  // from Tables.fileSchema: both reuse the schema inferred once per file
+  // set, while a direct read of `$dir/<table>.parquet` pays a footer-
+  // inference job at every query build. An operator's own index or
+  // scratch directories are not corpus tables; they pass explicit
+  // schemas or test a write→read round trip, and stay allowed.
+  test("operator sources read corpus tables only through Tables") {
+    val files = Tables.names.map(t => s"$t.parquet\"")
+    // a corpus file path that no Spark reader reads
+    val allowed = Map(
+      // copies the events file's bytes into a streaming stage directory
+      "StreamOps.scala" -> "Files.copy(")
+    val hits = operatorSourceHits(files)
+      .filter { h =>
+        // a path literal to the table, or a batch read that globs it
+        !h.line.contains(".write") &&
+          (files.exists(f => h.line.contains("/" + f)) ||
+            h.line.contains(".read."))
+      }
+      .filterNot(allowlisted(allowed))
+    assert(hits.isEmpty,
+      "direct read of a corpus table (call Tables.load or " +
+        "Tables.fileSchema):\n" + hits.mkString("\n"))
   }
 }

@@ -4,19 +4,25 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tables' corpus-metadata memo: a split count or row count must follow
-  * the frame and the files it was measured on, never a shared or stale
-  * key. */
+/** Tables' corpus-metadata memo: a schema, split count or row count must
+  * follow the frame, the files and the session confs it was measured
+  * on, never a shared or stale key. */
 class TablesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  /** Write `rows` random longs as `dir/t.parquet/data.parquet`, always
-    * under that one file name. */
-  private def writeTable(dir: Path, rows: Long): Unit = {
-    val tmp = dir.resolve(s"tmp_$rows")
-    spark.range(rows).selectExpr("id", "hash(id) * id AS v").coalesce(1)
+  /** Write `rows` rows of `cols` (SQL expressions over `id`; by default
+    * random longs) as `dir/t.parquet/data.parquet`, always under that
+    * one file name. */
+  private def writeTable(dir: Path, rows: Long,
+      cols: Seq[String] = Seq("id", "hash(id) * id AS v")): Unit = {
+    val tmp = Files.createTempDirectory(dir, "tmp").resolve("out")
+    spark.range(rows).selectExpr(cols: _*).coalesce(1)
       .write.parquet(tmp.toString)
     val ls = Files.list(tmp)
     val file =
@@ -59,5 +65,97 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.rowCount(spark, dir.toString, "t") === 100L)
     writeTable(dir, 250)
     assert(Tables.rowCount(spark, dir.toString, "t") === 250L)
+  }
+
+  test("parallel re-measures a table after the file-split confs change") {
+    val dir = Files.createTempDirectory("graft_tables_split_confs")
+    writeTable(dir, 100000)
+    val s = spark.newSession()
+    val p = s.sparkContext.defaultParallelism
+    val whole = Tables.load(s, dir.toString, "t")
+    assert(whole.rdd.getNumPartitions < p)
+    assert(Tables.parallel(s, whole).rdd.getNumPartitions === p)
+    s.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    val split = Tables.load(s, dir.toString, "t")
+    val splits = split.rdd.getNumPartitions
+    assert(splits > p)
+    assert(Tables.parallel(s, split).rdd.getNumPartitions === splits)
+  }
+
+  test("load gives every corpus table the schema parquet inference gives") {
+    val s = spark.newSession()
+    Tables.names.foreach { n =>
+      // loads first: loadEvents sets the nanos conf the raw read needs
+      val loaded = Tables.load(s, TestSpark.sf, n).schema
+      val raw = s.read.parquet(s"${TestSpark.sf}/$n.parquet")
+      assert(Tables.fileSchema(s, TestSpark.sf, n) === raw.schema, n)
+      val expected =
+        if (n == "events") raw.withColumn("ts", Tables.normTsCol(raw.schema))
+        else raw
+      assert(loaded === expected.schema, n)
+    }
+  }
+
+  test("a second load of the same files launches no Spark job") {
+    val dir = Files.createTempDirectory("graft_tables_schema").toString
+    writeTable(Path.of(dir), 100)
+    val sc = spark.sparkContext
+    // fresh sessions: the shared one may carry a keyed conf set earlier
+    val s = spark.newSession()
+    assert(JobCount(sc)(Tables.load(s, dir, "t")) >= 1)
+    assert(JobCount(sc)(Tables.load(s, dir, "t")) === 0)
+    assert(JobCount(sc)(Tables.load(spark.newSession(), dir, "t")) === 0)
+  }
+
+  test("a table rewritten in place with other columns is inferred again") {
+    val dir = Files.createTempDirectory("graft_tables_rewrite")
+    writeTable(dir, 100)
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq === Seq("id", "v"))
+    writeTable(dir, 100, Seq("id", "CAST(id AS STRING) AS w", "id * 2 AS x"))
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq ===
+      Seq("id", "w", "x"))
+  }
+
+  test("flipping a schema-inference conf infers again") {
+    // a raw binary column, without the Spark schema Spark's own writer
+    // stores in the footer (which would override binaryAsString)
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_tables_binary")
+    val file = Files.createDirectories(dir.resolve("t.parquet"))
+      .resolve("data.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; required binary b; }")
+    val groups = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file.toUri))
+      .withType(schema).build()
+    try (0 until 3).foreach { i =>
+      w.write(groups.newGroup().append("id", i.toLong).append("b", s"v$i"))
+    } finally w.close()
+    val s = spark.newSession()
+    def bType = Tables.load(s, dir.toString, "t").schema("b").dataType
+    s.conf.set("spark.sql.parquet.binaryAsString", "false")
+    assert(bType === BinaryType)
+    s.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(bType === StringType)
+    s.conf.set("spark.sql.parquet.binaryAsString", "false")
+    assert(bType === BinaryType)
+  }
+
+  test("checkpointMeasured returns several metrics, in order, from one job") {
+    val f0 = Tables.observeFallbacks
+    val sc = spark.sparkContext
+    var measured: (DataFrame, Seq[Long]) = null
+    val jobs = JobCount(sc) {
+      measured = Tables.checkpointMeasured(spark.range(100).toDF(),
+        count(lit(1)), sum(when(col("id") % 2 === 0, 1L).otherwise(0L)),
+        sum(when(col("id") < 0, 1L)))
+    }
+    assert(jobs === 1)
+    assert(measured._2 === Seq(100L, 50L, 0L))
+    assert(measured._1.count() === 100L)
+    assert(Tables.observeFallbacks - f0 === 0L)
   }
 }
