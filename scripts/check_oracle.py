@@ -27,27 +27,13 @@ import numpy as np
 import pandas as pd
 
 
-def _current_round(root):
-    """The round being built = max(CORRECTNESS_r*.json present) + 1 —
-    the driver writes round N's record at the N->N+1 boundary, so no
-    maintained state is needed. 0 on any inference failure."""
-    try:
-        import re
-        ns = [int(m.group(1)) for f in os.listdir(root)
-              if (m := re.match(r"CORRECTNESS_r(\d+)\.json$", f))]
-        return (max(ns) + 1) if ns else 0
-    except Exception:
-        return 0
-
-
 def gate_log(**fields):
     """Round-10 forensics (VERDICT r9 task #1): append one JSON line per
     gate invocation so the round record shows whether the driver ever
-    RAN the gate even if its outputs are discarded. Rotated per round
-    since r12 (the r11 unbounded-growth nit): lines land in
-    gate_logs/GATE_LOG_r<N>.jsonl (same inference as Verify.gateLog;
-    r1-r11 history preserved at gate_logs/GATE_LOG_r01_r11.jsonl, root
-    GATE_LOG.jsonl is a pointer). Best-effort — never fails the gate."""
+    RAN the gate even if its outputs are discarded. Lines land in
+    gate_logs/GATE_LOG.jsonl, the same file Verify.gateLog appends to
+    (git-ignored; the per-round logs of r1-r14 stay tracked there).
+    Best-effort — never fails the gate."""
     try:
         root = next((p for p in ("/root/repo", ".")
                      if os.path.isdir(os.path.join(p, ".git"))), ".")
@@ -74,13 +60,8 @@ def gate_log(**fields):
                       else str(v)) for k, v in fields.items()}}
         rec.update({f"env.{k}": v for k, v in sorted(os.environ.items())
                     if k.startswith(("SPARK_GRAFT_", "CHECK_"))})
-        rnd = _current_round(root)
-        if rnd > 0:
-            os.makedirs(os.path.join(root, "gate_logs"), exist_ok=True)
-            path = os.path.join(root, "gate_logs", f"GATE_LOG_r{rnd:02d}.jsonl")
-        else:
-            path = os.path.join(root, "GATE_LOG.jsonl")
-        with open(path, "a") as f:
+        os.makedirs(os.path.join(root, "gate_logs"), exist_ok=True)
+        with open(os.path.join(root, "gate_logs", "GATE_LOG.jsonl"), "a") as f:
             f.write(json.dumps(rec) + "\n")
     except Exception:
         pass

@@ -159,8 +159,9 @@ object Bench {
     * queries) and steals execution memory — observed as late-sweep
     * queries burning multiples of their isolated task CPU. The result
     * is already fully materialized to the noop sink, so nothing still
-    * references the blocks. */
-  private def clearPersisted(spark: SparkSession): Unit = {
+    * references the blocks. The one sweep every harness main
+    * (GrowthBench, PipelineBench, StreamBench) runs between queries. */
+  private[graft] def clearPersisted(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical wall-vs-sf growth slopes for the flagship operators.
   *
   * SCALE.md argues scale safety from plan SHAPES (bucketed equi-joins,
@@ -158,12 +156,6 @@ object GrowthBench {
         "/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1"))
 
-  private def clearPersisted(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.catalog.clearCache()
-  }
-
   def main(args: Array[String]): Unit = {
     val bestOf = sys.env.getOrElse("SPARK_GRAFT_BEST_OF", "2").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -191,14 +183,14 @@ object GrowthBench {
       catch { case e: Throwable =>
         System.err.println(s"[growth] WARMUP FAILED ${d.name}: $e")
       }
-      clearPersisted(spark)
+      Bench.clearPersisted(spark)
     }
 
     // per (query, sf): best of N walls
     val wall = collection.mutable.Map[(String, String), Double]()
     for (pass <- 1 to bestOf; sf <- sfDirs; (d, _) <- defs) {
       val (sec, ok) = Bench.runOne(spark, d, sf)
-      clearPersisted(spark)
+      Bench.clearPersisted(spark)
       System.err.println(
         f"[growth] p$pass ${sf.split('/').last} ${d.name}: $sec%.2f s ok=$ok")
       if (ok) {

@@ -26,8 +26,7 @@ object PipelineBench {
 
     // C2 warm pass (discarded)
     graft.operators.Dedup.viralCleanRun(spark, warmDir).collect()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    Bench.clearPersisted(spark)
 
     val rows = collection.mutable.ArrayBuffer[(String, Long, Double)]()
     val t0 = System.nanoTime()

@@ -158,9 +158,7 @@ object StreamBench {
           out :+= Row(d.name, wall, evs.size, pct(durs, 0.5),
             pct(durs, 0.95), durs.lastOption.getOrElse(0L),
             evs.map(_._2).sum, sRows, sBytes)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Bench.clearPersisted(spark)
       }
       out
     }

@@ -10,40 +10,10 @@ object Verify {
     * 100% green, and nothing in-tree recorded whether the driver ever
     * INVOKED the gate. Append one JSON line per invocation — once at
     * entry (survives a driver-side kill) and once at exit with rc and
-    * wall — to a committed per-round log. Best-effort: logging must
-    * never fail the gate itself.
-    *
-    * Rotation (r12, the r11 nit): the log is append-only and every
-    * driver/builder/judge run extends it, so a single file becomes
-    * unreadable by round 30. Lines now land in
-    * gate_logs/GATE_LOG_r<N>.jsonl where N is inferred as
-    * max(CORRECTNESS_r*.json present) + 1 — the round currently being
-    * built, with zero maintained state (the driver writes round N's
-    * record at the N→N+1 boundary). r1–r11 history is preserved at
-    * gate_logs/GATE_LOG_r01_r11.jsonl; the root GATE_LOG.jsonl is a
-    * one-line pointer. Fallback on any inference error: the old root
-    * path. */
-  private[graft] def currentRound(root: String): Int =
-    try {
-      val rx = "CORRECTNESS_r(\\d+)\\.json".r
-      val stream = Files.list(Paths.get(root))
-      // mx stays 0 when no CORRECTNESS file matched: return 0 (root
-      // GATE_LOG.jsonl fallback) to agree with check_oracle.py's
-      // _current_round on an empty repo, not r01 (r12 advice).
-      val mx = try {
-        val seen = stream.iterator()
-        var m = 0
-        while (seen.hasNext) {
-          seen.next().getFileName.toString match {
-            case rx(n) => m = math.max(m, n.toInt)
-            case _ => ()
-          }
-        }
-        m
-      } finally stream.close()
-      if (mx == 0) 0 else mx + 1
-    } catch { case _: Throwable => 0 }
-
+    * wall — to gate_logs/GATE_LOG.jsonl, which check_oracle.py appends
+    * to as well. The directory is git-ignored; the per-round logs of
+    * r1-r14 stay tracked there. Best-effort: logging must never fail
+    * the gate itself. */
   private[graft] def gateLog(fields: (String, String)*): Unit =
     try {
       val root = repoRoot.toString
@@ -54,12 +24,8 @@ object Verify {
       val line = fields
         .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
         .mkString("{", ", ", "}\n")
-      val round = currentRound(root)
-      val target = if (round > 0) {
-        Files.createDirectories(Paths.get(root, "gate_logs"))
-        Paths.get(root, "gate_logs", f"GATE_LOG_r$round%02d.jsonl")
-      } else Paths.get(root, "GATE_LOG.jsonl")
-      Files.writeString(target, line,
+      Files.createDirectories(Paths.get(root, "gate_logs"))
+      Files.writeString(Paths.get(root, "gate_logs", "GATE_LOG.jsonl"), line,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch { case _: Throwable => () }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -437,32 +438,6 @@ object Dedup {
           .reduce(_ + _).as("simhash"))
   }
 
-  /** Materialize a pair relation that is about to feed BOTH legs of a
-    * symmetric union — conf-gated, default OFF (r14, measured): with
-    * idle cores at bench scale the two legs compute IN PARALLEL inside
-    * one job, so wall ≈ max(leg) and a localCheckpoint only SERIALIZES
-    * that work (one eager barrier + block write before the union job —
-    * driver-measured as a net wall loss on every cluster-family query
-    * at sf0.1, while halving taskCpu). At 100 TB the posting self-join
-    * behind the pair relation is the dominant shuffle and computing it
-    * twice doubles real network/disk bytes, so a production deployment
-    * sets spark.graft.materializePairs=true and pays one barrier to
-    * halve the heavy pass — the scale-vs-local tradeoff the round
-    * rules ask to parameterize rather than hard-code either way. */
-  private[graft] def matPairs(pairs: DataFrame): DataFrame =
-    if (materializePairs(pairs.sparkSession)) pairs.localCheckpoint()
-    else pairs
-
-  private final val MaterializePairsKey = "spark.graft.materializePairs"
-
-  /** The [[matPairs]] switch: unset is false; anything other than
-    * true/false fails naming the key. */
-  private[graft] def materializePairs(s: SparkSession): Boolean =
-    s.conf.getOption(MaterializePairsKey).exists { v =>
-      v.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
-        s"$MaterializePairsKey must be true or false, got '$v'"))
-    }
-
   /** Exact Jaccard for pairs sharing >= 1 shingle, via inverted index.
     * Shingles with document frequency above `maxDf` are dropped from the
     * index (stop-shingle cap — see MaxShingleDF). The viral-shingle set
@@ -474,22 +449,19 @@ object Dedup {
     // the shingle frame feeds four subtrees (sizes, DF count, and both
     // sides of the posting self-join — alias renames defeat exchange
     // reuse); one localCheckpoint computes the shingle expression once
-    // and every consumer reads the materialized blocks
-    val sh = shIn.localCheckpoint()
+    // and every consumer reads the materialized blocks. A frame the
+    // caller already checkpointed is read as it is: checkpointing it
+    // again would only copy its blocks in one more eager job.
+    val sh = shIn.queryExecution.logical match {
+      case _: LogicalRDD => shIn
+      case _ => shIn.localCheckpoint()
+    }
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    // At production scale, explode + hash-partition ON THE JOIN KEY
-    // once and materialize (§2.4): the posting relation feeds the DF
-    // aggregate and BOTH sides of the self-join, and a checkpointed
-    // frame keeps its physical partitioning — one posting exchange
-    // total instead of three. Conf-gated DEFAULT OFF like matPairs
-    // (r14, measured): locally the three computes run in parallel
-    // inside one job over the sh checkpoint blocks, and the eager
-    // barrier costs more wall than the redundant explode.
-    val allPostings0 = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val allPostings =
-      if (materializePairs(sh.sparkSession))
-        allPostings0.repartition(col("shingle")).localCheckpoint()
-      else allPostings0
+    // the posting relation feeds the DF aggregate and both sides of the
+    // self-join; locally the three computes run in parallel inside one
+    // job over the sh checkpoint blocks (r14, measured: materializing
+    // it costs more wall than the redundant explode)
+    val allPostings = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val viral = allPostings.groupBy("shingle")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
@@ -507,6 +479,25 @@ object Dedup {
         col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common")).cast("double"))
   }
+
+  /** The near-duplicate graph's edge list: (a_id, b_id) with a_id < b_id
+    * for every pair of `sh` at or above [[JaccardThreshold]]. Every dedup
+    * and graph query over that graph starts here; only the queries that
+    * report the scores (n_common, jaccard) or use every candidate pair
+    * call [[jaccardPairs]] themselves. */
+  private[graft] def jaccardEdges(sh: DataFrame): DataFrame =
+    jaccardPairs(sh)
+      .filter(col("jaccard") >= JaccardThreshold).select("a_id", "b_id")
+
+  /** An (a_id, b_id) edge list in both orientations as (u, v). Both
+    * union legs read `pairs`: each recomputes its plan unless the
+    * caller checkpointed it. Locally the two legs run in parallel
+    * inside one job, which r14 measured cheaper than a barrier before
+    * the union; at 100 TB the recompute doubles the pair generator's
+    * shuffle, a trade-off for a size-measured materialization policy. */
+  private[graft] def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(col("a_id").as("u"), col("b_id").as("v"))
+      .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1594,11 +1585,8 @@ object Dedup {
     QueryDef(
       "dedup_cluster",
       (s, dir) => {
-        val pairs = jaccardPairs(shingled(s, dir))
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        connectedComponents(docs, pairs)
+        connectedComponents(docs, jaccardEdges(shingled(s, dir)))
           .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
@@ -1642,9 +1630,7 @@ object Dedup {
     QueryDef(
       "dedup_cluster_multi",
       (s, dir) => {
-        val jac = jaccardPairs(shingled(s, dir))
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
+        val jac = jaccardEdges(shingled(s, dir))
         val sim = simhashChunkPairs(simhashedWide(s, dir), numChunks = 4, chunkBits = 15)
           .select("a_id", "b_id")
         val embp = Similarity.nearDupPairs(s, dir).select("a_id", "b_id")
@@ -2183,9 +2169,8 @@ object Dedup {
       "dedup_eval",
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
-        val (truth, Seq(nTruth)) = Tables.checkpointMeasured(jaccardPairs(sh)
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id"), count(lit(1)))
+        val (truth, Seq(nTruth)) =
+          Tables.checkpointMeasured(jaccardEdges(sh), count(lit(1)))
         // bands materialized once, partitioned on the self-join key
         // (r14, §2.4): the signature pipeline otherwise ran twice —
         // once per join side — and both sides re-exchanged
@@ -2328,12 +2313,9 @@ object Dedup {
     QueryDef(
       "dedup_weighting",
       (s, dir) => {
-        val pairs = jaccardPairs(shingled(s, dir))
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val w = Window.partitionBy("rep_id")
-        connectedComponents(docs, pairs)
+        connectedComponents(docs, jaccardEdges(shingled(s, dir)))
           .withColumn("cluster_size", count(lit(1)).over(w))
           .select(col("doc_id"), col("rep_id"), col("cluster_size"),
             (col("doc_id") === col("rep_id")).as("canonical"),
@@ -2374,11 +2356,8 @@ object Dedup {
     QueryDef(
       "dedup_cluster_sizes",
       (s, dir) => {
-        val pairs = jaccardPairs(shingled(s, dir))
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id")
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        connectedComponents(docs, pairs)
+        connectedComponents(docs, jaccardEdges(shingled(s, dir)))
           .groupBy("rep_id").agg(count(lit(1)).as("cluster_size"))
           .groupBy("cluster_size")
           .agg(count(lit(1)).as("n_clusters"),
@@ -2426,9 +2405,8 @@ object Dedup {
       (s, dir) => {
         val sh = shingled(s, dir).localCheckpoint()
         val withSig = signaturesFrom(sh).localCheckpoint()
-        val (truth, Seq(nTruth)) = Tables.checkpointMeasured(jaccardPairs(sh)
-          .filter(col("jaccard") >= JaccardThreshold)
-          .select("a_id", "b_id"), count(lit(1)))
+        val (truth, Seq(nTruth)) =
+          Tables.checkpointMeasured(jaccardEdges(sh), count(lit(1)))
         // one pass per leg (r14, the dedup_eval scorecard shape):
         // candidate count and truth-hit count fold into a single
         // aggregate over a broadcast-truth left join, so each leg's
@@ -3394,19 +3372,12 @@ object Dedup {
     // are the right scale choice too: one extra generation of blocks,
     // no HDFS round-trip; a 100 TB deployment with preemptible
     // executors would switch to reliable checkpoint() on the same loop.
-    // the caller's pair relation optionally materializes BEFORE the
-    // symmetric union (r14): both union legs otherwise re-run the whole
-    // candidate-generation plan — one full pass each. See matPairs for
-    // why the default keeps the redundant-but-PARALLEL shape locally.
-    val p0 = matPairs(pairs)
     // edges hash-partitioned ON THE ITERATION JOIN KEY before the
     // checkpoint (r14, §2.4): every iteration equi-joins edges on v,
     // and a checkpointed frame keeps its physical partitioning, so the
     // edge side of that join never re-exchanges — one edge shuffle
     // total across all iterations instead of one per iteration.
-    val edges = p0.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(p0.select(col("b_id").as("u"), col("a_id").as("v")))
-      .repartition(col("v"))
+    val edges = undirected(pairs).repartition(col("v"))
       .localCheckpoint()
     // iterate ONLY over vertices that appear in an edge: every other
     // document is trivially its own representative and joins back in at

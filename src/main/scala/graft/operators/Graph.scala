@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -23,8 +23,9 @@ import graft.{QueryDef, Tables}
   * standard simplification when ranking only within the edge-bearing
   * subgraph.
   *
-  * Scale shape: the edge list is built once (inverted-index join — the
-  * same 100 TB-safe generator every dedup operator uses), localCheckpoint
+  * Scale shape: the edge list is built once by Dedup.jaccardEdges
+  * (inverted-index join — the same 100 TB-safe generator every dedup
+  * operator uses) and made undirected by Dedup.undirected, localCheckpoint
   * bounds lineage, and each iteration is ONE equi-join (edges x ranks on
   * u, both sides hash-partitioned on the join key) plus ONE map-side
   * combined aggregation on v — the textbook distributed PageRank step
@@ -52,55 +53,12 @@ object Graph {
     QueryDef(
       "graph_pagerank",
       (s, dir) => {
-        // pairs optionally materialized before the symmetric union (Dedup.matPairs, conf-gated): both
-        // union legs otherwise re-run the whole posting-join candidate
-        // aggregation — one full pass each
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v")
-        val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-        // (u, v, deg_u) is re-read every iteration: materialize once,
-        // hash-partitioned ON THE ITERATION JOIN KEY u so the edge side
-        // of every iteration's join reuses this one exchange (§2.4)
-        val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
-        val docs = Tables.load(s, dir, "documents").select("doc_id")
         val n = Tables.rowCount(s, dir, "documents")
         // empty corpus: the result is empty regardless of the share —
         // guard the scala-side division (degenerate-corpus sweep, r8)
         val share = if (n == 0) 0L else Q / n
         val base = if (n == 0) 0L else 15L * Q / (100L * n)
-        // iterate ONLY over edge-bearing vertices (r14 — the
-        // connectedComponents treatment): an untouched document never
-        // receives a contribution, so its rank is exactly the base term
-        // every iteration; attach it once at the end instead of carrying
-        // the corpus-scale docs frame (a documents re-scan and
-        // corpus-wide join) through every iteration.
-        val touched = eD.select(col("u").as("doc_id")).distinct()
-          .localCheckpoint()
-        var r = touched.select(col("doc_id"), lit(share).as("r"))
-        for (_ <- 0 until Iters) {
-          val contrib = eD
-            .join(r.select(col("doc_id").as("u"), col("r")), "u")
-            .select(col("v"), expr("(85 * r) div (100 * deg)").as("c"))
-            .groupBy("v").agg(sum(col("c")).as("cs"))
-          r = touched
-            .join(contrib.select(col("v").as("doc_id"), col("cs")),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              (lit(base) + coalesce(col("cs"), lit(0L))).as("r"))
-          // with a FIXED small iteration count the chained plan executes
-          // as one job (edges read from the checkpoint blocks each time);
-          // a long-running production loop would localCheckpoint every
-          // ~10 generations to bound lineage, as connectedComponents does
-        }
-        val rAll = coalesce(col("r"), lit(base))
-        docs.join(r, Seq("doc_id"), "left")
-          .select(col("doc_id"), rAll.as("pagerank_q"),
-            (rAll.cast("double") / lit(Q.toDouble)).as("pagerank"))
-          .orderBy("doc_id")
+        ranked(s, dir, init = lit(share), restart = lit(base), "pagerank")
       },
       Some(PagerankOracleSql)),
 
@@ -111,11 +69,7 @@ object Graph {
     QueryDef(
       "graph_degrees",
       (s, dir) => {
-        // pairs optionally materialized before the endpoint union (Dedup.matPairs, conf-gated): both legs
-        // otherwise re-run the candidate aggregation — one pass each
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
         pairs.select(col("a_id").as("doc_id"))
           .union(pairs.select(col("b_id").as("doc_id")))
           .groupBy("doc_id").agg(count(lit(1)).as("degree"))
@@ -147,9 +101,7 @@ object Graph {
       "graph_assortativity",
       (s, dir) => {
         val d38 = "decimal(38,0)"
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id")
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
           .localCheckpoint() // feeds the degree agg AND both edge sides
         val deg = pairs.select(col("a_id").as("doc_id"))
           .union(pairs.select(col("b_id").as("doc_id")))
@@ -225,8 +177,7 @@ object Graph {
     QueryDef(
       "graph_hits",
       (s, dir) => {
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
           .select(col("a_id").as("u"), col("b_id").as("v"))
           .localCheckpoint()
         val docs = Tables.load(s, dir, "documents").select("doc_id")
@@ -345,9 +296,7 @@ object Graph {
     QueryDef(
       "graph_triangles",
       (s, dir) => {
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id")
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
           .localCheckpoint() // feeds three subtrees: compute edges once
         val ab = pairs.select(col("a_id").as("a"), col("b_id").as("b"))
         val bc = pairs.select(col("a_id").as("wb"), col("b_id").as("c"))
@@ -379,15 +328,9 @@ object Graph {
     QueryDef(
       "graph_labelprop",
       (s, dir) => {
-        // pairs optionally materialized before the symmetric union (Dedup.matPairs, conf-gated): both
-        // legs otherwise re-run the candidate aggregation; lpaLabels
-        // re-materializes the union partitioned on its round join key
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v")
+        // lpaLabels materializes the edges partitioned on its round
+        // join key
+        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val lbl = lpaLabels(docs, edges)
         val sizes = lbl.groupBy("label")
@@ -413,13 +356,8 @@ object Graph {
     QueryDef(
       "graph_neighbor_sim",
       (s, dir) => {
-        // pairs optionally materialized before the symmetric union (Dedup.matPairs, conf-gated)
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v").localCheckpoint()
+        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+          .localCheckpoint()
         val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
         val wedges = edges.toDF("z", "a")
           .join(deg.select(col("u").as("z"), col("deg").as("deg_z")), "z")
@@ -486,13 +424,8 @@ object Graph {
     QueryDef(
       "graph_neighbor_sim_capped",
       (s, dir) => {
-        // pairs optionally materialized before the symmetric union (Dedup.matPairs, conf-gated)
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v").localCheckpoint()
+        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+          .localCheckpoint()
         neighborSimCapped(edges)
       },
       Some(s"""WITH ${Dedup.JaccardPairsCte},
@@ -538,16 +471,11 @@ object Graph {
     QueryDef(
       "graph_random_walk",
       (s, dir) => {
-        // pairs optionally materialized before the union (Dedup.matPairs); edges
-        // hash-partitioned on the step join key u so every step's join
-        // reuses one exchange (r14, §2.4 — the rename to "cur" keeps
-        // the checkpointed partitioning)
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v").repartition(col("u")).localCheckpoint()
+        // edges hash-partitioned on the step join key u so every step's
+        // join reuses one exchange (r14, §2.4 — the rename to "cur"
+        // keeps the checkpointed partitioning)
+        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+          .repartition(col("u")).localCheckpoint()
         val starts = edges.select(col("u").as("doc_id")).distinct()
         var walk = starts.select(col("doc_id"), col("doc_id").as("cur"))
         for (k <- 1 to WalkSteps) {
@@ -585,16 +513,11 @@ object Graph {
       "graph_kcore",
       (s, dir) => {
         val K = 2
-        // pairs optionally materialized before the union (Dedup.matPairs), and the
-        // surviving edge set re-materialized PER ROUND: `keep` is
-        // referenced by both semi-joins and `edges` by three subtrees,
-        // so an un-checkpointed round multiplies the plan ~3x per round
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        var edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v").localCheckpoint()
+        // the edge set is materialized: `keep` is referenced by both
+        // semi-joins and `edges` by three subtrees, so an un-checkpointed
+        // edge set multiplies the plan ~3x per round
+        var edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+          .localCheckpoint()
         // rounds stay LAZY over the checkpointed edge blocks (r14:
         // per-round localCheckpoints were tried and measured worse —
         // three extra eager barriers for a plan whose 3-deep nesting
@@ -646,11 +569,7 @@ object Graph {
         // each recursion level re-ran the entire posting-join pair
         // generator; the checkpointed view makes every frontier join a
         // block read, pre-partitioned on the join key u (§2.4)
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s2, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-          .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
+        Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
           .repartition(col("u")).localCheckpoint()
           .createOrReplaceTempView("graft_bfs_edges")
         // DISTINCT in the recursive member: the frontier is a SET of
@@ -718,12 +637,8 @@ object Graph {
         // join a block read, pre-partitioned on the join key u (§2.4).
         // Same relation: symmetric edges → row_number per u ordered by
         // v → rn <= F, exactly the former cap CTE.
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s2, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
         val capW = Window.partitionBy("u").orderBy("v")
-        pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-          .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
+        Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
           .withColumn("rn", row_number().over(capW))
           .filter(col("rn") <= BfsCapF).select("u", "v")
           .repartition(col("u")).localCheckpoint()
@@ -778,51 +693,19 @@ object Graph {
     QueryDef(
       "graph_ppr",
       (s, dir) => {
-        // same r14 treatment as graph_pagerank: pairs optionally materialized
-        // before the symmetric union, edges pre-partitioned on the
-        // iteration join key, iteration restricted to edge-bearing
-        // vertices (an untouched doc's rank is exactly its restart term)
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").transform(Dedup.matPairs)
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v")
-        val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-        val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
-        val docs = Tables.load(s, dir, "documents").select("doc_id")
         val isSeed = col("doc_id") % PprSeedMod === 0
         val nSeeds = Tables.memo(dir, "documents", "ppr_seeds")(
-          docs.filter(isSeed).count())
+          Tables.load(s, dir, "documents").select("doc_id")
+            .filter(isSeed).count())
         // no seeds (e.g. an empty corpus): every rank is 0 and the
         // seed-share literals are never applied to any row — guard the
         // scala-side divisions only (degenerate-corpus sweep, r8)
         val seedShare = if (nSeeds == 0) 0L else Q / nSeeds
         val restartShare = if (nSeeds == 0) 0L else 15L * Q / (100L * nSeeds)
-        val touched = eD.select(col("u").as("doc_id")).distinct()
-          .localCheckpoint()
-        var r = touched.select(col("doc_id"),
-          when(isSeed, lit(seedShare)).otherwise(lit(0L)).as("r"))
-        for (_ <- 0 until Iters) {
-          val contrib = eD
-            .join(r.select(col("doc_id").as("u"), col("r")), "u")
-            .select(col("v"), expr("(85 * r) div (100 * deg)").as("c"))
-            .groupBy("v").agg(sum(col("c")).as("cs"))
-          r = touched
-            .join(contrib.select(col("v").as("doc_id"), col("cs")),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              (when(isSeed, lit(restartShare)).otherwise(lit(0L))
-                + coalesce(col("cs"), lit(0L))).as("r"))
-        }
-        // untouched docs: restart term only (seed) or 0 (non-seed) —
-        // exactly what the full-frame loop yielded for them
-        val rAll = coalesce(col("r"),
-          when(isSeed, lit(restartShare)).otherwise(lit(0L)))
-        docs.join(r, Seq("doc_id"), "left")
-          .select(col("doc_id"), rAll.as("ppr_q"),
-            (rAll.cast("double") / lit(Q.toDouble)).as("ppr"))
-          .orderBy("doc_id")
+        ranked(s, dir,
+          init = when(isSeed, lit(seedShare)).otherwise(lit(0L)),
+          restart = when(isSeed, lit(restartShare)).otherwise(lit(0L)),
+          "ppr")
       },
       Some(PprOracleSql)),
 
@@ -842,18 +725,14 @@ object Graph {
     QueryDef(
       "graph_modularity",
       (s, dir) => {
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").localCheckpoint()
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir)).localCheckpoint()
         // m = 0 (edgeless graph): modularity is undefined — the report
         // row still materializes with m=0, intra=0 and NULL statistics,
         // exactly what the oracle produces on the same input (sums over
         // empty relations are NULL, 0/0.0 double division is NaN which
         // the NULL sum term absorbs). Degenerate-corpus sweep, r8 —
         // this replaced a loud require that the oracle had no twin for.
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v")
+        val edges = Dedup.undirected(pairs)
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val lbl = lpaLabels(docs, edges).localCheckpoint()
         val mDf = pairs.agg(count(lit(1)).as("m"))
@@ -909,12 +788,8 @@ object Graph {
     QueryDef(
       "graph_conductance",
       (s, dir) => {
-        val pairs = Dedup.jaccardPairs(Dedup.shingled(s, dir))
-          .filter(col("jaccard") >= Dedup.JaccardThreshold)
-          .select("a_id", "b_id").localCheckpoint()
-        val edges = pairs
-          .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("u", "v")
+        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir)).localCheckpoint()
+        val edges = Dedup.undirected(pairs)
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val lbl = lpaLabels(docs, edges).localCheckpoint()
         // localCheckpoint: the union below references this relation
@@ -951,6 +826,49 @@ object Graph {
       },
       Some(ConductanceOracleSql))
   )
+
+  /** The quantized-integer rank loop graph_pagerank and graph_ppr share:
+    * `Iters` rounds of r(v) = restart(v) + Σ over edges u→v of
+    * (85 · r(u)) div (100 · deg(u)) on the undirected near-dup graph,
+    * starting from r(v) = init(v). `init` and `restart` are columns over
+    * `doc_id`. Only edge-bearing vertices iterate (r14, the
+    * connectedComponents treatment): an untouched document never
+    * receives a contribution, so its rank is exactly its restart term,
+    * attached once at the end instead of carrying the corpus-scale docs
+    * frame through every round. Returns (doc_id, <out>_q, <out>): the
+    * quantized rank and its double value, over every document. */
+  private def ranked(s: SparkSession, dir: String, init: Column,
+      restart: Column, out: String): DataFrame = {
+    val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+    val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
+    // (u, v, deg_u) is re-read every round: materialize once,
+    // hash-partitioned ON THE ROUND JOIN KEY u so the edge side of every
+    // round's join reuses this one exchange (§2.4)
+    val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
+    val touched = eD.select(col("u").as("doc_id")).distinct()
+      .localCheckpoint()
+    var r = touched.select(col("doc_id"), init.as("r"))
+    for (_ <- 0 until Iters) {
+      val contrib = eD
+        .join(r.select(col("doc_id").as("u"), col("r")), "u")
+        .select(col("v"), expr("(85 * r) div (100 * deg)").as("c"))
+        .groupBy("v").agg(sum(col("c")).as("cs"))
+      r = touched
+        .join(contrib.select(col("v").as("doc_id"), col("cs")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), (restart + coalesce(col("cs"), lit(0L))).as("r"))
+      // with a FIXED small round count the chained plan executes as one
+      // job (edges read from the checkpoint blocks each time); a
+      // long-running production loop would localCheckpoint every ~10
+      // generations to bound lineage, as connectedComponents does
+    }
+    val rAll = coalesce(col("r"), restart)
+    Tables.load(s, dir, "documents").select("doc_id")
+      .join(r, Seq("doc_id"), "left")
+      .select(col("doc_id"), rAll.as(s"${out}_q"),
+        (rAll.cast("double") / lit(Q.toDouble)).as(out))
+      .orderBy("doc_id")
+  }
 
   /** DuckDB replay of the synchronous LPA rounds — generated like
     * PagerankOracleSql so round count and tie-break can never drift. */
@@ -1131,8 +1049,8 @@ object Graph {
     //    the neighbor join and the carry-forward, doubling the logical
     //    plan per round (the round-3 plan held 2^3 copies of round 0,
     //    re-running the edge join each — plan-audited in r14). A
-    //    stride-2 variant (checkpoint every other round, matPairs-style
-    //    parallel recompute of the skipped round) was A/B-measured 13%
+    //    stride-2 variant (checkpoint every other round, parallel
+    //    recompute of the skipped round) was A/B-measured 13%
     //    WORSE on all three LPA queries: unlike a map-only subtree, the
     //    duplicated round carries its own window EXCHANGE, so the
     //    recompute doubles shuffled bytes rather than soaking idle

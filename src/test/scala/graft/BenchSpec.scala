@@ -71,4 +71,30 @@ class BenchSpec extends AnyFunSuite {
     assert(PlanDump.outDir(Map("SPARK_GRAFT_ROUND" -> "r99")) ===
       repoRoot.resolve("plans/r99"))
   }
+
+  test("PlanDump normalizes expression, exchange and RDD ids, nothing else") {
+    val before = """(1) Scan ExistingRDD
+      |Arguments: [u#12L, v#13L], MapPartitionsRDD[4036] at localCheckpoint at Dedup.scala:457, ExistingRDD, UnknownPartitioning(0)
+      |(3) Exchange
+      |Input [2]: [u#12L, v#13L]
+      |Arguments: hashpartitioning(u#12L, 4), ENSURE_REQUIREMENTS, [plan_id=45]
+      |(4) Filter [codegen id : 2]
+      |Condition : (jaccard#7 >= 0.015)""".stripMargin
+    val after = before.replace("#12L", "#40L").replace("#13L", "#41L")
+      .replace("plan_id=45", "plan_id=101").replace("#7 ", "#9 ")
+      .replace("RDD[4036]", "RDD[12]")
+    assert(PlanDump.normalize(before) === PlanDump.normalize(after))
+    assert(PlanDump.normalize(before) ===
+      """(1) Scan ExistingRDD
+        |Arguments: [u#NL, v#NL], MapPartitionsRDD[N] at localCheckpoint at Dedup.scala:457, ExistingRDD, UnknownPartitioning(0)
+        |(3) Exchange
+        |Input [2]: [u#NL, v#NL]
+        |Arguments: hashpartitioning(u#NL, 4), ENSURE_REQUIREMENTS, [plan_id=N]
+        |(4) Filter [codegen id : 2]
+        |Condition : (jaccard#N >= 0.015)""".stripMargin)
+    // a real plan change still shows
+    assert(PlanDump.normalize(before) !==
+      PlanDump.normalize(before.replace("hashpartitioning(u#12L, 4)",
+        "hashpartitioning(v#13L, 4)")))
+  }
 }

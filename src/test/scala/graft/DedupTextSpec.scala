@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -227,17 +228,16 @@ class DedupTextSpec extends AnyFunSuite {
     assert(uncapped === 66)
   }
 
-  test("spark.graft.materializePairs reads as a boolean and names itself otherwise") {
-    val s = spark.newSession()
-    val key = "spark.graft.materializePairs"
-    assert(!operators.Dedup.materializePairs(s))
-    s.conf.set(key, "true")
-    assert(operators.Dedup.materializePairs(s))
-    s.conf.set(key, "false")
-    assert(!operators.Dedup.materializePairs(s))
-    s.conf.set(key, "1")
-    val e = intercept[IllegalArgumentException](operators.Dedup.materializePairs(s))
-    assert(e.getMessage.contains(key), e.getMessage)
+  test("jaccardPairs reads an already-checkpointed shingle frame as it is") {
+    // dedup_eval and dedup_lsh_tune checkpoint the shingle frame they
+    // share; checkpointing it again inside jaccardPairs would be one more
+    // eager job copying the query's largest frame
+    val sc = spark.sparkContext
+    val sh = operators.Dedup.shingled(spark, TestSpark.sf).localCheckpoint()
+    assert(JobCount(sc)(operators.Dedup.jaccardPairs(sh)) === 0)
+    // a frame that is not materialized yet is still checkpointed once
+    assert(JobCount(sc)(operators.Dedup.jaccardPairs(
+      operators.Dedup.shingled(spark, TestSpark.sf))) >= 1)
   }
 
   test("connected components: chain, triangle and singleton collapse to min id") {

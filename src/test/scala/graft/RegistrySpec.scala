@@ -48,11 +48,26 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  /** A non-comment operator-source line, with the line above it. */
+  /** A non-comment operator-source line, with the line above it and the
+    * name of the registry query whose body holds it ("" outside one). */
   private case class SourceHit(path: String, lineNo: Int, line: String,
-      above: String) {
+      above: String, query: String) {
     override def toString: String = s"$path:$lineNo: ${line.trim}"
   }
+
+  private val QueryName = "\"([a-z0-9_]+)\",".r
+
+  /** The registry query whose body holds line `i`: the nearest
+    * `QueryDef(` + `"name",` above it, unless a top-level member of the
+    * enclosing object (two-space indent) comes first. */
+  private def enclosingQuery(lines: IndexedSeq[String], i: Int): String =
+    (i to 1 by -1).iterator.map { j =>
+      (lines(j).trim, lines(j - 1).trim) match {
+        case (QueryName(n), prev) if prev.endsWith("QueryDef(") => Some(n)
+        case _ if lines(j).matches("  [^ ].*") => Some("")
+        case _ => None
+      }
+    }.collectFirst { case Some(n) => n }.getOrElse("")
 
   /** Non-comment lines of the operator sources containing any `needles`. */
   private def operatorSourceHits(needles: Seq[String]): Seq[SourceHit] = {
@@ -71,17 +86,22 @@ class RegistrySpec extends AnyFunSuite {
             case i if needles.exists(lines(i).contains) &&
               !lines(i).trim.startsWith("//") =>
               SourceHit(p.toString, i + 1, lines(i),
-                if (i > 0) lines(i - 1) else "")
+                if (i > 0) lines(i - 1) else "", enclosingQuery(lines, i))
           }
         }.toList
       finally walk.close()
     }
   }
 
-  /** `h` is on, or just below, the line its file's `allowed` entry names. */
-  private def allowlisted(allowed: Map[String, String])(h: SourceHit): Boolean =
-    allowed.get(java.nio.file.Paths.get(h.path).getFileName.toString)
-      .exists(e => h.line.contains(e) || h.above.contains(e))
+  /** `h` is on, or just below, a line one of its file's `allowed`
+    * entries names, or in the body of the query an entry names. */
+  private def allowlisted(allowed: Iterable[(String, String)])(
+      h: SourceHit): Boolean = {
+    val file = java.nio.file.Paths.get(h.path).getFileName.toString
+    allowed.exists { case (f, e) =>
+      f == file && (h.line.contains(e) || h.above.contains(e) || h.query == e)
+    }
+  }
 
   // Session-scoped-state contract guard (r9 advice): graft.Verify runs
   // operators concurrently, one newSession() per worker over a SHARED
@@ -147,5 +167,34 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "direct read of a corpus table (call Tables.load or " +
         "Tables.fileSchema):\n" + hits.mkString("\n"))
+  }
+
+  // An operator's behaviour is set by its query and the session's Spark
+  // confs, never by a project-private knob: a default-off
+  // `spark.graft.*` switch doubles the configurations the operator must
+  // be tested under while no test, benchmark or tool sets it.
+  test("operator sources read no spark.graft.* session conf") {
+    val hits = operatorSourceHits(Seq("\"spark.graft."))
+    assert(hits.isEmpty,
+      "spark.graft.* conf key in operator code:\n" + hits.mkString("\n"))
+  }
+
+  // The near-duplicate graph has one source: Dedup.jaccardEdges filters
+  // jaccardPairs at JaccardThreshold. A query that filters the scored
+  // pairs itself is a second definition of the edge list.
+  test("the Jaccard edge list is built only by Dedup.jaccardEdges") {
+    val allowed = Seq(
+      "Dedup.scala" -> "def jaccardPairs(",  // the definition
+      "Dedup.scala" -> "def jaccardEdges(",  // the one edge-list builder
+      // report the scores (n_common, jaccard), not just the edges
+      "Dedup.scala" -> "dedup_ngram_jaccard",
+      "Multimodal.scala" -> "mm_crossmodal_audit",
+      // uses every candidate pair, unfiltered, for containment scores
+      "Dedup.scala" -> "dedup_containment")
+    val hits = operatorSourceHits(Seq("jaccardPairs("))
+      .filterNot(allowlisted(allowed))
+    assert(hits.isEmpty,
+      "near-dup edge list built outside Dedup.jaccardEdges (call it, or " +
+        "allowlist a query that needs the scores):\n" + hits.mkString("\n"))
   }
 }
