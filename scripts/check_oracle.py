@@ -31,12 +31,12 @@ def gate_log(**fields):
     """Round-10 forensics (VERDICT r9 task #1): append one JSON line per
     gate invocation so the round record shows whether the driver ever
     RAN the gate even if its outputs are discarded. Lines land in
-    gate_logs/GATE_LOG.jsonl, the same file Verify.gateLog appends to
-    (git-ignored; the per-round logs of r1-r14 stay tracked there).
-    Best-effort — never fails the gate."""
+    gate_logs/GATE_LOG.jsonl under SPARK_GRAFT_REPO, else the working
+    directory: the same file, by the same rule, that Verify.gateLog
+    appends to (git-ignored; the per-round logs of r1-r14 stay tracked
+    there). Best-effort — never fails the gate."""
     try:
-        root = next((p for p in ("/root/repo", ".")
-                     if os.path.isdir(os.path.join(p, ".git"))), ".")
+        root = os.environ.get("SPARK_GRAFT_REPO", ".")
         # caller identity (round-10 verdict nit: driver/builder/judge
         # lines were indistinguishable). GATE_CALLER wins; else the
         # parent process's cmdline.

@@ -133,37 +133,25 @@ object Bench {
       .take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Execute one registry query to completion against the noop sink.
+  /** Execute one registry query to completion against the noop sink, in
+    * one `Tables.scoped`, so its intermediates are released when it ends.
     * Returns (wall seconds, ok) — a query that throws reports ok=false
-    * and its JSON entry must never masquerade as a fast success
-    * (BenchSpec covers the failure path). */
-  def runOne(spark: SparkSession, d: QueryDef, sfDir: String): (Double, Boolean) = {
+    * (logged as `<what> FAILED <name>`) and its JSON entry must never
+    * masquerade as a fast success (BenchSpec covers the failure path). */
+  def runOne(spark: SparkSession, d: QueryDef, sfDir: String,
+      what: String = "[bench]"): (Double, Boolean) = {
     val t0 = System.nanoTime()
     val ok =
       try {
-        d.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Tables.scoped(
+          d.run(spark, sfDir).write.format("noop").mode("overwrite").save())
         true
       } catch {
         case e: Throwable =>
-          System.err.println(s"[bench] FAILED ${d.name}: $e")
+          System.err.println(s"$what FAILED ${d.name}: $e")
           false
       }
     ((System.nanoTime() - t0) / 1e9, ok)
-  }
-
-  /** Drop every persisted/localCheckpointed RDD and cached table left
-    * behind by a finished query. Operators use localCheckpoint to reuse
-    * expensive intermediates WITHIN one query; across a 150+-query
-    * best-of-2 sweep those blocks are dead weight that accumulates in
-    * the storage pool (hundreds of checkpointed RDDs by the late
-    * queries) and steals execution memory — observed as late-sweep
-    * queries burning multiples of their isolated task CPU. The result
-    * is already fully materialized to the noop sink, so nothing still
-    * references the blocks. The one sweep every harness main
-    * (GrowthBench, PipelineBench, StreamBench) runs between queries. */
-  private[graft] def clearPersisted(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    spark.catalog.clearCache()
   }
 
   /** Compact number: enough precision for a seconds-scale bench, short
@@ -215,14 +203,7 @@ object Bench {
     // small enough to keep warm-up under a minute. A warm-up failure is
     // loud: it predicts a measured-run failure.
     val warmDir = "/root/testdata/sf0.01"
-    defs.foreach { d =>
-      try d.run(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] WARMUP FAILED ${d.name}: $e")
-      }
-      clearPersisted(spark)
-    }
+    defs.foreach(d => runOne(spark, d, warmDir, "[bench] WARMUP"))
 
     // Second, TARGETED warm pass at the measured scale: AQE shapes sf0.1
     // plans differently from sf0.01 (coalesced partitions, switched join
@@ -243,15 +224,8 @@ object Bench {
       System.err.println(s"[bench] full-scale warm for cold shapes: " +
         coldShapes.map(_.name).mkString(", "))
       coldShapes.foreach { d =>
-        val t0 = System.nanoTime()
-        try d.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] FULL-WARM FAILED ${d.name}: $e")
-        }
-        clearPersisted(spark)
-        System.err.println(
-          f"[bench] warm@sf ${d.name}: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        val (sec, _) = runOne(spark, d, sfDir, "[bench] FULL-WARM")
+        System.err.println(f"[bench] warm@sf ${d.name}: $sec%.2f s")
       }
     }
 
@@ -270,7 +244,6 @@ object Bench {
         val o0 = Tables.observeFallbacks
         val s0 = meter.snap()
         val (sec, ok) = runOne(spark, d, sfDir)
-        clearPersisted(spark)
         val s1 = meter.snap()
         System.err.println(
           f"[bench] p$pass ${d.name}: $sec%.2f s ok=$ok gc=${gcMs - g0}ms " +

@@ -177,20 +177,12 @@ object GrowthBench {
     // AQE plan shapes it compiles are the ones the measured passes run.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.01")
-    defs.foreach { case (d, _) =>
-      try d.run(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[growth] WARMUP FAILED ${d.name}: $e")
-      }
-      Bench.clearPersisted(spark)
-    }
+    defs.foreach { case (d, _) => Bench.runOne(spark, d, warmDir, "[growth] WARMUP") }
 
     // per (query, sf): best of N walls
     val wall = collection.mutable.Map[(String, String), Double]()
     for (pass <- 1 to bestOf; sf <- sfDirs; (d, _) <- defs) {
-      val (sec, ok) = Bench.runOne(spark, d, sf)
-      Bench.clearPersisted(spark)
+      val (sec, ok) = Bench.runOne(spark, d, sf, "[growth]")
       System.err.println(
         f"[growth] p$pass ${sf.split('/').last} ${d.name}: $sec%.2f s ok=$ok")
       if (ok) {

@@ -25,14 +25,12 @@ object PipelineBench {
     val spark = GraftSession.local("graft-pipeline")
 
     // C2 warm pass (discarded)
-    graft.operators.Dedup.viralCleanRun(spark, warmDir).collect()
-    Bench.clearPersisted(spark)
+    Tables.scoped(graft.operators.Dedup.viralCleanRun(spark, warmDir).collect())
 
     val rows = collection.mutable.ArrayBuffer[(String, Long, Double)]()
     val t0 = System.nanoTime()
-    val manifest = graft.operators.Dedup.viralCleanRun(spark, dir,
-      (stage, n, wall) => rows += ((stage, n, wall)))
-    val m = manifest.collect()(0)
+    val m = Tables.scoped(graft.operators.Dedup.viralCleanRun(spark, dir,
+      (stage, n, wall) => rows += ((stage, n, wall))).collect()(0))
     val total = (System.nanoTime() - t0) / 1e9
 
     println(s"## pipeline_viral_clean stage walls — corpus `$dir`, " +
@@ -45,7 +43,7 @@ object PipelineBench {
     }
     println(f"| **total (incl. final agg)** | $total%.2f | |")
     println()
-    println("Manifest: " + manifest.columns.zipWithIndex
+    println("Manifest: " + m.schema.fieldNames.zipWithIndex
       .map { case (c, i) => s"$c=${m.get(i)}" }.mkString(", "))
     spark.stop()
   }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `setJobGroup`/`setLocalProperty` on the shared context, GLOBAL temp
   * views, or session-builder `config` calls against the running
   * session — any of which would race across workers and corrupt the
-  * correctness record non-deterministically. `localCheckpoint()` (no
+  * correctness record non-deterministically. `Tables.materialize` (no
   * checkpoint dir) and per-operator `graft.jvmScratchDir` paths are fine.
   * RegistrySpec greps every operator source file for the forbidden
   * calls; add a justified exclusion there if a future operator

@@ -137,15 +137,7 @@ object StreamBench {
       var out = Vector.empty[Row]
       for (pass <- 1 to 2; d <- defs if subset.contains(d.name)) {
         BatchSink.drain() // discard anything left from the previous op
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            d.run(spark, dir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[streambench] FAILED ${d.name}: $e"); false
-          }
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (wall, ok) = Bench.runOne(spark, d, dir, "[streambench]")
         val evs = BatchSink.drain()
         val durs = evs.map(_._1).sorted
         val sRows = evs.map(_._3).maxOption.getOrElse(0L)
@@ -158,7 +150,6 @@ object StreamBench {
           out :+= Row(d.name, wall, evs.size, pct(durs, 0.5),
             pct(durs, 0.95), durs.lastOption.getOrElse(0L),
             evs.map(_._2).sum, sRows, sBytes)
-        Bench.clearPersisted(spark)
       }
       out
     }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Table access for the driver corpus (TESTDATA.md).
@@ -165,12 +167,68 @@ object Tables {
     }
   }
 
+  /** `df` computed once into executor storage (`localCheckpoint`) for
+    * every later consumer to read: the one way operator code materializes
+    * an intermediate. A frame that already scans a checkpoint is returned
+    * as it is. The checkpoint's RDD, job and SQL execution carry the call
+    * site of the line that called `materialize` (`localCheckpoint at
+    * Dedup.scala:457`), so a barrier stays attributed to its operator.
+    * Its blocks are released when the enclosing `scoped` closes; with no
+    * scope open, when Spark's `ContextCleaner` drops the unreachable RDD. */
+  def materialize(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ =>
+      val sc = df.sparkSession.sparkContext
+      val keys = Seq("callSite.short", "callSite.long")
+      val saved = keys.map(sc.getLocalProperty)
+      keys.zip(callerSite()).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      val frame =
+        try df.localCheckpoint()
+        finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      val r = frame.queryExecution.logical.asInstanceOf[LogicalRDD]
+      Option(scope.get).foreach(_.add(r.rdd))
+      frame
+  }
+
+  /** The short and long call-site forms Spark would record for a
+    * checkpoint taken where `materialize` was called: from the first
+    * frame past `materialize` outside Spark and Scala. */
+  private def callerSite(): Seq[String] = {
+    val user = Thread.currentThread.getStackTrace.toSeq
+      .dropWhile(_.getMethodName != "materialize")
+      .dropWhile(_.getMethodName == "materialize")
+      .dropWhile(f => f.getClassName.startsWith("org.apache.spark.") ||
+        f.getClassName.startsWith("scala."))
+    Seq(s"localCheckpoint at ${user.head.getFileName}:${user.head.getLineNumber}",
+      user.take(20).mkString("\n"))
+  }
+
+  /** The RDDs materialized in this thread's innermost `scoped` body; a
+    * thread the body starts (a stream running `foreachBatch`) inherits it. */
+  private val scope = new InheritableThreadLocal[java.util.Queue[RDD[_]]]
+
+  /** `body`, after which every RDD `materialize` checkpointed while it
+    * ran (on this thread or one it started) is unpersisted, non-blocking,
+    * on return, throw or cancel alike: a harness runs each query, build
+    * and action, in one scope. Concurrent scopes keep their own RDDs; one
+    * registered after its scope closed is left to the `ContextCleaner`. */
+  def scoped[T](body: => T): T = {
+    val outer = scope.get
+    val rdds = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
+    scope.set(rdds)
+    try body
+    finally {
+      scope.set(outer)
+      rdds.forEach(_.unpersist(blocking = false))
+    }
+  }
+
   private val obsFallbacks = new java.util.concurrent.atomic.AtomicLong
 
   /** Process-wide count of checkpointMeasured fallbacks so far. */
   def observeFallbacks: Long = obsFallbacks.get
 
-  /** `df` localCheckpointed, plus `metrics` — Long aggregates over its
+  /** `df` materialized, plus `metrics` — Long aggregates over its
     * rows, in order — collected during the checkpoint job via
     * `Dataset.observe` instead of by a second job. Listener delivery is
     * asynchronous: if the metrics have not landed within 2 s, the same
@@ -183,7 +241,7 @@ object Tables {
     import scala.concurrent.duration.DurationInt
     val obs = new Observation()
     val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
-    val frame = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
+    val frame = materialize(df.observe(obs, named.head, named.tail: _*))
     val row =
       try Await.result(obs.future, 2.seconds)
       catch { case _: java.util.concurrent.TimeoutException =>

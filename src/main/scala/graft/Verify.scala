@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,18 +18,21 @@ object Verify {
   private[graft] def gateLog(fields: (String, String)*): Unit =
     try {
       val root = repoRoot.toString
-      val esc = (s: String) => s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
-      val line = fields
-        .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-        .mkString("{", ", ", "}\n")
       Files.createDirectories(Paths.get(root, "gate_logs"))
-      Files.writeString(Paths.get(root, "gate_logs", "GATE_LOG.jsonl"), line,
+      Files.writeString(Paths.get(root, "gate_logs", "GATE_LOG.jsonl"),
+        gateLine(fields) + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch { case _: Throwable => () }
+
+  private val json = new ObjectMapper()
+
+  /** One gate-log line: a JSON object of string values, in order. */
+  private[graft] def gateLine(fields: Seq[(String, String)]): String = {
+    val o = json.createObjectNode()
+    fields.foreach { case (k, v) => o.put(k, v) }
+    json.writeValueAsString(o)
+  }
 
   private[graft] def gateEnv: Seq[(String, String)] =
     sys.env.toSeq.collect {
@@ -87,8 +91,10 @@ object Verify {
     def runOne(sess: SparkSession, name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try {
-        fn(sess, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        // one scope per query: each concurrent worker frees the blocks
+        // its own query materialized, and only those
+        Tables.scoped(fn(sess, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         nWritten.incrementAndGet()
       } catch { case e: Throwable =>
         nFailed.incrementAndGet()
@@ -121,21 +127,9 @@ object Verify {
       }
       threads.foreach(_.join())
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val sql = json.createObjectNode()
+    SparkEntry.oracleSql.foreach { case (k, v) => sql.put(k, v) }
+    json.writeValue(new java.io.File(s"$outDir/oracle_sql.json"), sql)
     // manifest.json (round-8 postmortem: CORRECTNESS_r08 recorded ZERO
     // entries and nothing failed loud): the gate-side checker refuses an
     // empty or partial dump when this says the registry is bigger — an
@@ -146,14 +140,15 @@ object Verify {
     // only when it sees n_selected < n_queries).
     val wallS = (System.nanoTime() - t0) / 1e9
     import scala.jdk.CollectionConverters._
-    val manifest =
-      s"""{"n_queries": ${SparkEntry.queries.size},
-         | "n_selected": ${selected.size},
-         | "n_written": ${nWritten.get},
-         | "n_failed": ${nFailed.get},
-         | "failed": ${failed.asScala.toSeq.sorted.map(q).mkString("[", ",", "]")},
-         | "wall_s": ${f"$wallS%.1f"}}""".stripMargin
-    Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
+    val manifest = json.createObjectNode()
+      .put("n_queries", SparkEntry.queries.size)
+      .put("n_selected", selected.size)
+      .put("n_written", nWritten.get)
+      .put("n_failed", nFailed.get)
+    manifest.set[JsonNode]("failed",
+      json.valueToTree[JsonNode](failed.asScala.toSeq.sorted.asJava))
+    manifest.put("wall_s", new java.math.BigDecimal(f"$wallS%.1f"))
+    json.writeValue(new java.io.File(s"$outDir/manifest.json"), manifest)
     println(s"[verify] wrote ${nWritten.get}/${selected.size} query dumps, " +
       s"${nFailed.get} failed, ${f"$wallS%.1f"}s, workers=$workers")
     gateLog(Seq(

@@ -22,10 +22,6 @@ object EngineFns {
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10)
       .cast("long") % 2147483647L
 
-  /** SQL-text form of hash31 for use inside expr(...) lambdas. */
-  def hash31Sql(x: String): String =
-    s"pmod(cast(conv(substr(md5(cast($x as binary)), 1, 15), 16, 10) as bigint), 2147483647)"
-
   /** Whitespace tokens. */
   def toks(c: Column): Column = split(c, " ")
 

@@ -108,7 +108,7 @@ object Clustering {
       "emb_kmeans",
       (s, dir) => {
         val e = emb(s, dir).select("vec_id", "embedding")
-          .localCheckpoint() // Iters + 1 passes re-read the corpus; scan once
+          .transform(Tables.materialize) // Iters + 1 passes re-read the corpus; scan once
         var cents: IndexedSeq[Array[Double]] =
           e.filter(col("vec_id") % SeedStride === 0 &&
               col("vec_id") < SeedStride.toLong * K)
@@ -146,7 +146,7 @@ object Clustering {
     QueryDef(
       "sim_semdedup",
       (s, dir) => {
-        val e = emb(s, dir).select("vec_id", "embedding").localCheckpoint()
+        val e = Tables.materialize(emb(s, dir).select("vec_id", "embedding"))
         var cents: IndexedSeq[Array[Double]] =
           e.filter(col("vec_id") % SeedStride === 0 &&
               col("vec_id") < SeedStride.toLong * K)
@@ -193,7 +193,7 @@ object Clustering {
     QueryDef(
       "emb_silhouette",
       (s, dir) => {
-        val e = emb(s, dir).select("vec_id", "embedding").localCheckpoint()
+        val e = Tables.materialize(emb(s, dir).select("vec_id", "embedding"))
         var cents: IndexedSeq[Array[Double]] =
           e.filter(col("vec_id") % SeedStride === 0 &&
               col("vec_id") < SeedStride.toLong * K)
@@ -267,7 +267,7 @@ object Clustering {
     QueryDef(
       "sample_kcenter",
       (s, dir) => {
-        val e = emb(s, dir).select("vec_id", "embedding").localCheckpoint()
+        val e = Tables.materialize(emb(s, dir).select("vec_id", "embedding"))
         val first = e.orderBy("vec_id").limit(1).collect()
         if (first.isEmpty)
           e.limit(0).select(col("vec_id"), lit(0L).as("c_rank"),
@@ -650,12 +650,12 @@ object Clustering {
       "emb_dbscan",
       (s, dir) => {
         val pairs = Similarity.nearDupPairs(s, dir)
-          .select("a_id", "b_id").localCheckpoint()
+          .select("a_id", "b_id").transform(Tables.materialize)
         val deg = pairs.select(col("a_id").as("vec_id"))
           .unionAll(pairs.select(col("b_id").as("vec_id")))
           .groupBy("vec_id").agg(count(lit(1)).as("n_neighbors"))
         val core = deg.filter(col("n_neighbors") >= DbscanMinPts)
-          .select("vec_id").localCheckpoint()
+          .select("vec_id").transform(Tables.materialize)
         val corePairs = pairs
           .join(core.select(col("vec_id").as("a_id")), Seq("a_id"))
           .join(core.select(col("vec_id").as("b_id")), Seq("b_id"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -449,13 +448,9 @@ object Dedup {
     // the shingle frame feeds four subtrees (sizes, DF count, and both
     // sides of the posting self-join — alias renames defeat exchange
     // reuse); one localCheckpoint computes the shingle expression once
-    // and every consumer reads the materialized blocks. A frame the
-    // caller already checkpointed is read as it is: checkpointing it
-    // again would only copy its blocks in one more eager job.
-    val sh = shIn.queryExecution.logical match {
-      case _: LogicalRDD => shIn
-      case _ => shIn.localCheckpoint()
-    }
+    // and every consumer reads the materialized blocks (a frame the
+    // caller already materialized is read as it is)
+    val sh = Tables.materialize(shIn)
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
     // the posting relation feeds the DF aggregate and both sides of the
     // self-join; locally the three computes run in parallel inside one
@@ -656,7 +651,7 @@ object Dedup {
         // on BOTH engines keeps the arithmetic exact to ~1e38, and past
         // that Spark's ANSI decimal overflow THROWS — loud, never wrong.
         val w19 = col("w").cast("decimal(19,0)")
-        val wm = w.localCheckpoint() // feeds norms + both dot-join sides
+        val wm = Tables.materialize(w) // feeds norms + both dot-join sides
         val norms = wm.groupBy("doc_id")
           .agg(sum(w19 * w19).as("n2"))
         val dots = wm.as("a").join(wm.as("b"), Seq("shingle"))
@@ -664,7 +659,7 @@ object Dedup {
           .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
           .agg(sum(col("a.w").cast("decimal(19,0)") *
             col("b.w").cast("decimal(19,0)")).as("dot"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val directed = dots
           .select(col("a_id").as("src"), col("b_id").as("dst"), col("dot"))
           .unionAll(dots
@@ -827,7 +822,7 @@ object Dedup {
           col("doc_id").asc)
         val wc = w.withColumn("prn", row_number().over(ws))
           .filter(col("prn") <= TfidfPostingCap).drop("prn")
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val w19 = col("w").cast("decimal(19,0)")
         val norms = wc.groupBy("doc_id")
           .agg(sum(w19 * w19).as("n2"))
@@ -836,7 +831,7 @@ object Dedup {
           .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
           .agg(sum(col("a.w").cast("decimal(19,0)") *
             col("b.w").cast("decimal(19,0)")).as("dot"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val directed = dots
           .select(col("a_id").as("src"), col("b_id").as("dst"), col("dot"))
           .unionAll(dots
@@ -986,7 +981,7 @@ object Dedup {
     QueryDef(
       "dedup_prefix_filter",
       (s, dir) =>
-        prefixPairsFrom(shingled(s, dir).localCheckpoint(), None)
+        prefixPairsFrom(shingled(s, dir).transform(Tables.materialize), None)
           .orderBy("a_id", "b_id"),
       Some(s"""WITH d AS (
                  SELECT doc_id, list_distinct(list_transform(
@@ -1072,7 +1067,7 @@ object Dedup {
     QueryDef(
       "dedup_prefix_filter_capped",
       (s, dir) =>
-        prefixPairsFrom(shingled(s, dir).localCheckpoint(),
+        prefixPairsFrom(shingled(s, dir).transform(Tables.materialize),
             Some(PrefixPostingCap))
           .orderBy("a_id", "b_id"),
       Some(s"""WITH d AS (
@@ -1177,7 +1172,7 @@ object Dedup {
         // signature pipeline and the exact-Jaccard verification of
         // candidates): one disk-backed localCheckpoint materializes the
         // shingle frame so neither recomputes the shingle expression
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         val cand = bandCandidatesFrom(sh)
         val withSh = cand
           .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
@@ -1208,7 +1203,7 @@ object Dedup {
     QueryDef(
       "dedup_minhash_pairs_capped",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         val cand = bandCandidatesFrom(sh, Some(TextBandBucketCap))
         val withSh = cand
           .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
@@ -1241,10 +1236,10 @@ object Dedup {
     QueryDef(
       "dedup_minhash_bbit",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         // signatures feed the band keys AND the packed form: checkpoint
         // so the 16-permutation min-aggregate runs once
-        val withSig = signaturesFrom(sh).localCheckpoint()
+        val withSig = Tables.materialize(signaturesFrom(sh))
         val bands = bandsOf(withSig)
         val cand = bands.as("x").join(bands.as("y"),
             col("x.band_id") === col("y.band_id") &&
@@ -1481,7 +1476,7 @@ object Dedup {
     QueryDef(
       "q_hamming_join_rule",
       (s, dir) => {
-        val sig = simhashedWide(s, dir).localCheckpoint()
+        val sig = Tables.materialize(simhashedWide(s, dir))
         val x = sig.select(col("doc_id").as("a_id"), col("simhash").as("ha"))
         val y = sig.select(col("doc_id").as("b_id"), col("simhash").as("hb"))
         x.join(y, expr("bit_count(ha ^ hb) <= 3") && col("a_id") < col("b_id"))
@@ -1711,7 +1706,7 @@ object Dedup {
       (s, dir) => {
         // bands feed both sides of the probe; one localCheckpoint keeps
         // the signature pipeline from running twice
-        val bands = bandsOf(signatures(s, dir)).localCheckpoint()
+        val bands = Tables.materialize(bandsOf(signatures(s, dir)))
         val isNew = pmod(col("doc_id"), lit(5)) === 0
         val batchBands = bands.filter(isNew)
           .select(col("band_id"), col("band_key"), col("doc_id").as("new_id"))
@@ -1755,7 +1750,7 @@ object Dedup {
           .parquet(s"$idx/bands")
           .select(col("doc_id").as("corpus_id"), col("band_id"),
             col("band_key"))
-        val sh = shingled(s, dir).localCheckpoint() // verify legs x2
+        val sh = Tables.materialize(shingled(s, dir)) // verify legs x2
         val batchBands =
           bandsOf(signaturesFrom(sh.filter(pmod(col("doc_id"), lit(13)) === 0)))
             .select(col("doc_id").as("batch_id"), col("band_id"),
@@ -1821,7 +1816,7 @@ object Dedup {
         val postings = docsParallel(s, dir)
           .select(col("doc_id"), split(col("text"), " ").as("ts"))
           .select(col("doc_id"), posexplode(wins).as(Seq("pos", "w")))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val viral = postings.groupBy("w")
           .agg(count(lit(1)).as("df")).filter(col("df") > MaxShingleDF)
           .select("w")
@@ -1835,7 +1830,7 @@ object Dedup {
             .orderBy("a_pos"))
         // matched rows feed both aggregates (distinct-window count and
         // the island streaks) — checkpoint the small matched set once
-        val mm = m.localCheckpoint()
+        val mm = Tables.materialize(m)
         val nsh = mm.groupBy("a_id", "b_id")
           .agg(count_distinct(col("w")).as("n_shared"))
         val runs = mm.withColumn("island", island)
@@ -1954,7 +1949,7 @@ object Dedup {
           .withColumn("rep",
             min(col("doc_id")).over(Window.partitionBy("text")))
           .filter(col("doc_id") === col("rep")).drop("rep")
-          .localCheckpoint() // feeds the simhash pipeline AND the anti-join
+          .transform(Tables.materialize) // feeds the simhash pipeline AND the anti-join
         val drops = simhashChunkPairs(
             simhashWideOf(deduped), numChunks = 4, chunkBits = 15)
           .select(col("b_id").as("doc_id")).distinct()
@@ -2168,14 +2163,14 @@ object Dedup {
     QueryDef(
       "dedup_eval",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         val (truth, Seq(nTruth)) =
           Tables.checkpointMeasured(jaccardEdges(sh), count(lit(1)))
         // bands materialized once, partitioned on the self-join key
         // (r14, §2.4): the signature pipeline otherwise ran twice —
         // once per join side — and both sides re-exchanged
         val bands = bandsOf(signaturesFrom(sh))
-          .repartition(col("band_id"), col("band_key")).localCheckpoint()
+          .repartition(col("band_id"), col("band_key")).transform(Tables.materialize)
         val mhCand = bands.as("x").join(bands.as("y"),
             col("x.band_id") === col("y.band_id") &&
               col("x.band_key") === col("y.band_key") &&
@@ -2237,7 +2232,7 @@ object Dedup {
         val positions = Tables.load(s, dir, "documents")
           .select(col("doc_id"), explode(array(posCols: _*)).as("pos"))
           .distinct()
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val isNew = pmod(col("doc_id"), lit(5)) === 0
         val bits = positions.filter(!isNew).select("pos").distinct()
         positions.filter(isNew)
@@ -2276,7 +2271,7 @@ object Dedup {
       (s, dir) => {
         // the pair relation feeds BOTH direction projections — checkpoint
         // so the posting self-join + aggregation runs once, not twice
-        val p = jaccardPairs(shingled(s, dir)).localCheckpoint()
+        val p = Tables.materialize(jaccardPairs(shingled(s, dir)))
         val ab = p.select(col("a_id").as("src_id"), col("b_id").as("dst_id"),
           (col("n_common").cast("double") / col("n_a").cast("double"))
             .as("containment"))
@@ -2403,8 +2398,8 @@ object Dedup {
     QueryDef(
       "dedup_lsh_tune",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
-        val withSig = signaturesFrom(sh).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
+        val withSig = Tables.materialize(signaturesFrom(sh))
         val (truth, Seq(nTruth)) =
           Tables.checkpointMeasured(jaccardEdges(sh), count(lit(1)))
         // one pass per leg (r14, the dedup_eval scorecard shape):
@@ -2474,11 +2469,11 @@ object Dedup {
     QueryDef(
       "dedup_cap_recall",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         val exact = prefixPairsFrom(sh, None)
-          .select("a_id", "b_id").localCheckpoint()
+          .select("a_id", "b_id").transform(Tables.materialize)
         val capped = prefixPairsFrom(sh, Some(PrefixPostingCap))
-          .select("a_id", "b_id").localCheckpoint()
+          .select("a_id", "b_id").transform(Tables.materialize)
         val nExact = exact.agg(count(lit(1)).as("n_exact"))
         val nCapped = capped.agg(count(lit(1)).as("n_capped"))
         val nHit = capped.join(exact, Seq("a_id", "b_id"), "left_semi")
@@ -2522,7 +2517,7 @@ object Dedup {
     QueryDef(
       "dedup_planted_recall",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         // ONE banded checkpoint shared by both generator legs (r14):
         // the exact and capped legs previously each rebuilt the whole
         // signature pipeline and eagerly checkpointed their candidate
@@ -2541,7 +2536,7 @@ object Dedup {
               substring(col("source"), 6, 30).cast("long")).as("a_id"),
             greatest(col("doc_id"),
               substring(col("source"), 6, 30).cast("long")).as("b_id"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val nCand = cand.agg(count(lit(1)).as("n_candidates"))
         val nTruth = truth.agg(count(lit(1)).as("n_truth"))
         val nHit = truth.join(cand, Seq("a_id", "b_id"), "left_semi")
@@ -2642,7 +2637,7 @@ object Dedup {
     QueryDef(
       "dedup_recall_curve",
       (s, dir) => {
-        val sh = shingled(s, dir).localCheckpoint()
+        val sh = Tables.materialize(shingled(s, dir))
         // shared banded checkpoint + lazy legs (r14) — see
         // dedup_planted_recall; here each candidate set has exactly one
         // consumer (its withJ join), so laziness costs no recompute.
@@ -2659,7 +2654,7 @@ object Dedup {
               substring(col("source"), 6, 30).cast("long")).as("a_id"),
             greatest(col("doc_id"),
               substring(col("source"), 6, 30).cast("long")).as("b_id"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val posts = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
         val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
         val common = truth
@@ -2824,7 +2819,7 @@ object Dedup {
     * which truncates this subtree out of the final plan string). */
   private[graft] def declarativeHammingPairs(
       s: SparkSession, dir: String): DataFrame = {
-    val sig = simhashedWide(s, dir).localCheckpoint()
+    val sig = Tables.materialize(simhashedWide(s, dir))
     val x = sig.select(col("doc_id").as("a_id"), col("simhash").as("ha"))
     val y = sig.select(col("doc_id").as("b_id"), col("simhash").as("hb"))
     x.join(y, expr("bit_count(ha ^ hb) <= 3") && col("a_id") < col("b_id"))
@@ -2854,7 +2849,7 @@ object Dedup {
     * checkpoint instead of rebuilding the signature pipeline per leg. */
   private[graft] def bandRowsChk(sh: DataFrame): DataFrame =
     bandRows(sh)
-      .repartition(col("band_id"), col("band_key")).localCheckpoint()
+      .repartition(col("band_id"), col("band_key")).transform(Tables.materialize)
 
   private[graft] def bandCandidatesFromRows(
       bands0: DataFrame, cap: Option[Int]): DataFrame = {
@@ -2922,7 +2917,7 @@ object Dedup {
     val stat = bandRows(sh)
       .withColumn("bdf", count(lit(1)).over(wB))
       .withColumn("anchor", min("doc_id").over(wB))
-      .localCheckpoint()
+      .transform(Tables.materialize)
     val small = stat.filter(col("bdf") <= cap)
       .select("doc_id", "band_id", "band_key")
     val smallPairs = small.as("x").join(small.as("y"),
@@ -3045,7 +3040,7 @@ object Dedup {
     val prefix = cap.fold(pre0) { k =>
       pre0.withColumn("prn", row_number().over(wSamp))
         .filter(col("prn") <= k).drop("prn")
-    }.localCheckpoint()
+    }.transform(Tables.materialize)
     val cand = prefix.select(col("shingle"), col("doc_id").as("a_id"))
       .join(prefix.select(col("shingle"), col("doc_id").as("b_id")),
         Seq("shingle"))
@@ -3061,7 +3056,7 @@ object Dedup {
         col("n_a").cast("double") * lit(PrefixJaccardT))
       .filter(col("n_a").cast("double") >=
         col("n_b").cast("double") * lit(PrefixJaccardT))
-      .localCheckpoint()
+      .transform(Tables.materialize)
     candLen
       .join(postings.select(col("doc_id").as("a_id"), col("shingle")),
         Seq("a_id"))
@@ -3318,7 +3313,7 @@ object Dedup {
     // once for the broadcast build. One localCheckpoint materializes the
     // tiny (doc_id, simhash) frame (16 bytes/row at any corpus size) so
     // the corpus is hashed exactly once.
-    val sigOnce = sig.localCheckpoint()
+    val sigOnce = Tables.materialize(sig)
     val chunks = sigOnce.select(
         col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(numChunks - 1))).as("chunk_idx"))
@@ -3367,7 +3362,7 @@ object Dedup {
     // but keeps the logical plan, so an iterative join loop builds a
     // plan that doubles every iteration — planning (and plan-string
     // logging) goes exponential and the job wedges around iteration 15.
-    // Checkpointing rewrites each generation to a LogicalRDD, keeping
+    // Checkpointing rewrites each generation to a scan of its blocks, keeping
     // every iteration's plan O(1). Local (executor-block) checkpoints
     // are the right scale choice too: one extra generation of blocks,
     // no HDFS round-trip; a 100 TB deployment with preemptible
@@ -3378,14 +3373,14 @@ object Dedup {
     // edge side of that join never re-exchanges — one edge shuffle
     // total across all iterations instead of one per iteration.
     val edges = undirected(pairs).repartition(col("v"))
-      .localCheckpoint()
+      .transform(Tables.materialize)
     // iterate ONLY over vertices that appear in an edge: every other
     // document is trivially its own representative and joins back in at
     // the end. At 100 TB the near-dup set is a small fraction of the
     // corpus, so this shrinks every per-iteration join/shuffle from
     // |corpus| to |touched vertices| (~2x pairs).
     var labels = edges.select(col("u")).distinct()
-      .select(col("u"), col("u").as("rep_id")).localCheckpoint()
+      .select(col("u"), col("u").as("rep_id")).transform(Tables.materialize)
     var changed = 1L
     var iters = 0
     val maxIters = 50

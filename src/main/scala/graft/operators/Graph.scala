@@ -102,7 +102,7 @@ object Graph {
       (s, dir) => {
         val d38 = "decimal(38,0)"
         val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
-          .localCheckpoint() // feeds the degree agg AND both edge sides
+          .transform(Tables.materialize) // feeds the degree agg AND both edge sides
         val deg = pairs.select(col("a_id").as("doc_id"))
           .union(pairs.select(col("b_id").as("doc_id")))
           .groupBy("doc_id").agg(count(lit(1)).as("degree"))
@@ -179,7 +179,7 @@ object Graph {
       (s, dir) => {
         val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
           .select(col("a_id").as("u"), col("b_id").as("v"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         // isEmpty is a limit(1) probe over the already-materialized
         // checkpoint blocks — a full count() here forced an extra
@@ -210,7 +210,7 @@ object Graph {
           // unchanged; untouched docs re-attach as (0, 0) at the end,
           // exactly what the full-frame loop yielded for them.
           def rescale(x: DataFrame, c: String): DataFrame = {
-            val xm = x.localCheckpoint()
+            val xm = Tables.materialize(x)
             val mx = xm.agg(max(col(c)).as("mx"))
             xm.crossJoin(broadcast(mx))
               .select(col("doc_id"),
@@ -218,7 +218,7 @@ object Graph {
           }
           val touched = pairs.select(col("u").as("doc_id"))
             .union(pairs.select(col("v").as("doc_id")))
-            .distinct().localCheckpoint()
+            .distinct().transform(Tables.materialize)
           var h = touched.select(col("doc_id"), lit(HitsQ).as("h"))
           var a: DataFrame = null
           for (_ <- 0 until HitsIters) {
@@ -297,7 +297,7 @@ object Graph {
       "graph_triangles",
       (s, dir) => {
         val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir))
-          .localCheckpoint() // feeds three subtrees: compute edges once
+          .transform(Tables.materialize) // feeds three subtrees: compute edges once
         val ab = pairs.select(col("a_id").as("a"), col("b_id").as("b"))
         val bc = pairs.select(col("a_id").as("wb"), col("b_id").as("c"))
         val ac = pairs.select(col("a_id").as("wa"), col("b_id").as("wc"))
@@ -357,7 +357,7 @@ object Graph {
       "graph_neighbor_sim",
       (s, dir) => {
         val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
         val wedges = edges.toDF("z", "a")
           .join(deg.select(col("u").as("z"), col("deg").as("deg_z")), "z")
@@ -425,7 +425,7 @@ object Graph {
       "graph_neighbor_sim_capped",
       (s, dir) => {
         val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         neighborSimCapped(edges)
       },
       Some(s"""WITH ${Dedup.JaccardPairsCte},
@@ -475,7 +475,7 @@ object Graph {
         // join reuses one exchange (r14, §2.4 — the rename to "cur"
         // keeps the checkpointed partitioning)
         val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .repartition(col("u")).localCheckpoint()
+          .repartition(col("u")).transform(Tables.materialize)
         val starts = edges.select(col("u").as("doc_id")).distinct()
         var walk = starts.select(col("doc_id"), col("doc_id").as("cur"))
         for (k <- 1 to WalkSteps) {
@@ -517,7 +517,7 @@ object Graph {
         // semi-joins and `edges` by three subtrees, so an un-checkpointed
         // edge set multiplies the plan ~3x per round
         var edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         // rounds stay LAZY over the checkpointed edge blocks (r14:
         // per-round localCheckpoints were tried and measured worse —
         // three extra eager barriers for a plan whose 3-deep nesting
@@ -570,7 +570,7 @@ object Graph {
         // generator; the checkpointed view makes every frontier join a
         // block read, pre-partitioned on the join key u (§2.4)
         Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
-          .repartition(col("u")).localCheckpoint()
+          .repartition(col("u")).transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_edges")
         // DISTINCT in the recursive member: the frontier is a SET of
         // (src, node) per hop, not a bag of paths — on a dense family
@@ -641,7 +641,7 @@ object Graph {
         Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
           .withColumn("rn", row_number().over(capW))
           .filter(col("rn") <= BfsCapF).select("u", "v")
-          .repartition(col("u")).localCheckpoint()
+          .repartition(col("u")).transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_cap")
         s2.sql(s"""
           WITH RECURSIVE
@@ -725,7 +725,7 @@ object Graph {
     QueryDef(
       "graph_modularity",
       (s, dir) => {
-        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir)).localCheckpoint()
+        val pairs = Tables.materialize(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
         // m = 0 (edgeless graph): modularity is undefined — the report
         // row still materializes with m=0, intra=0 and NULL statistics,
         // exactly what the oracle produces on the same input (sums over
@@ -734,7 +734,7 @@ object Graph {
         // this replaced a loud require that the oracle had no twin for.
         val edges = Dedup.undirected(pairs)
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        val lbl = lpaLabels(docs, edges).localCheckpoint()
+        val lbl = Tables.materialize(lpaLabels(docs, edges))
         val mDf = pairs.agg(count(lit(1)).as("m"))
         val intraDf = pairs
           .join(lbl.select(col("doc_id").as("a_id"), col("label").as("la")),
@@ -788,10 +788,10 @@ object Graph {
     QueryDef(
       "graph_conductance",
       (s, dir) => {
-        val pairs = Dedup.jaccardEdges(Dedup.shingled(s, dir)).localCheckpoint()
+        val pairs = Tables.materialize(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
         val edges = Dedup.undirected(pairs)
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        val lbl = lpaLabels(docs, edges).localCheckpoint()
+        val lbl = Tables.materialize(lpaLabels(docs, edges))
         // localCheckpoint: the union below references this relation
         // TWICE (la side + lb side), and Spark's subtree reuse does not
         // fire across a self-union — without the checkpoint the
@@ -802,7 +802,7 @@ object Graph {
           .join(lbl.select(col("doc_id").as("b_id"), col("label").as("lb")),
             "b_id")
           .filter(col("la") =!= col("lb"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val cut = labeled.select(col("la").as("community"))
           .union(labeled.select(col("lb").as("community")))
           .groupBy("community").agg(count(lit(1)).as("cut_edges"))
@@ -844,9 +844,9 @@ object Graph {
     // (u, v, deg_u) is re-read every round: materialize once,
     // hash-partitioned ON THE ROUND JOIN KEY u so the edge side of every
     // round's join reuses this one exchange (§2.4)
-    val eD = edges.join(deg, "u").repartition(col("u")).localCheckpoint()
+    val eD = Tables.materialize(edges.join(deg, "u").repartition(col("u")))
     val touched = eD.select(col("u").as("doc_id")).distinct()
-      .localCheckpoint()
+      .transform(Tables.materialize)
     var r = touched.select(col("doc_id"), init.as("r"))
     for (_ <- 0 until Iters) {
       val contrib = eD
@@ -1055,7 +1055,7 @@ object Graph {
     //    duplicated round carries its own window EXCHANGE, so the
     //    recompute doubles shuffled bytes rather than soaking idle
     //    cores. Per-round barriers are the measured optimum here.
-    val e = edges.repartition(col("u")).localCheckpoint()
+    val e = Tables.materialize(edges.repartition(col("u")))
     var lbl = e.select(col("v").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("label"))
     for (_ <- 0 until Iters) {
@@ -1070,7 +1070,7 @@ object Graph {
       lbl = lbl.join(winner, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint()
+        .transform(Tables.materialize)
     }
     docs.join(lbl, Seq("doc_id"), "left")
       .select(col("doc_id"),

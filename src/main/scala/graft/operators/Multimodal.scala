@@ -371,7 +371,7 @@ object Multimodal {
         explode(expr(s"sequence(0, ${nChunks - 1})")).as("k"))
       .withColumn("ck", expr(s"shiftright(phash, $chunkBits*k) & $mask"))
       .repartition(col("format"), col("k"), col("ck"))
-      .localCheckpoint()
+      .transform(Tables.materialize)
     val a = chunks.select(col("format"), col("k"), col("ck"),
       col("doc_id").as("a_id"), col("phash").as("pa"))
     val b = chunks.select(col("format"), col("k"), col("ck"),
@@ -1176,7 +1176,7 @@ object Multimodal {
     QueryDef(
       "mm_cdc_match",
       (s, dir) => {
-        val hs = cdcChunks(s, dir).localCheckpoint()
+        val hs = Tables.materialize(cdcChunks(s, dir))
         val viral = hs.groupBy("ch").agg(count(lit(1)).as("df"))
           .filter(col("df") > CdcMaxChunkDf).select("ch")
         val kept = hs.join(broadcast(viral), Seq("ch"), "left_anti")
@@ -1251,7 +1251,7 @@ object Multimodal {
         val postings = docs(s, dir)
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
           .select(col("doc_id"), explode(array_distinct(wins)).as("w"))
-          .localCheckpoint() // feeds the DF cap and both split sides
+          .transform(Tables.materialize) // feeds the DF cap and both split sides
         val viralW = postings.groupBy("w").agg(count(lit(1)).as("df"))
           .filter(col("df") > 10000).select("w")
         val keptW = postings.join(broadcast(viralW), Seq("w"), "left_anti")
@@ -1260,7 +1260,7 @@ object Multimodal {
             .select(col("w"), col("doc_id").as("bench_id")), Seq("w"))
           .groupBy("doc_id", "bench_id")
           .agg(count(lit(1)).as("n_shared_windows"))
-        val hs = cdcChunks(s, dir, wavOnly = false).localCheckpoint()
+        val hs = Tables.materialize(cdcChunks(s, dir, wavOnly = false))
         val viralC = hs.groupBy("ch").agg(count(lit(1)).as("df"))
           .filter(col("df") > CdcMaxChunkDf).select("ch")
         val keptC = hs.join(broadcast(viralC), Seq("ch"), "left_anti")

@@ -1138,7 +1138,7 @@ object Numerics {
             (col("value").cast("decimal(12,2)") * 100).cast("long")
               .as("cents"))
           .groupBy("event_type", "cents").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint() // feeds the quartile scan AND the fence count
+          .transform(Tables.materialize) // feeds the quartile scan AND the fence count
         val w = Window.partitionBy("event_type").orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val cum = g.withColumn("cum", sum(col("cnt")).over(w))

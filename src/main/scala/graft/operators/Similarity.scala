@@ -1307,7 +1307,7 @@ object Similarity {
       "sim_ann_graph_search",
       (s, dir) => graphBeamSearch(s, dir,
         knnGraphEdges(s, embParallel(s, dir))
-          .localCheckpoint()), // all rounds expand against ONE build
+          .transform(Tables.materialize)), // all rounds expand against ONE build
       Some(graphSearchSql())),
 
     // The graph family's SERVED form (r12, adjudication #5 follow-up):
@@ -1350,7 +1350,7 @@ object Similarity {
       (s, dir) => {
         val Q = 262144.0 // 2^18 quantization of both factors
         val e = embParallel(s, dir).select("vec_id", "embedding")
-          .localCheckpoint() // 3 iterations re-read the corpus; scan once
+          .transform(Tables.materialize) // 3 iterations re-read the corpus; scan once
         var v = Array.fill(64)(0.125) // deterministic unit start: 1/sqrt(64)
         for (_ <- 0 until 3) {
           val vCol = array(v.map(lit): _*)
@@ -1389,7 +1389,7 @@ object Similarity {
       "sim_ivf_tradeoff",
       (s, dir) => {
         val exact = graft.Registry.byName("sim_topk_bruteforce")
-          .run(s, dir).select(col("q_id"), col("vec_id")).localCheckpoint()
+          .run(s, dir).select(col("q_id"), col("vec_id")).transform(Tables.materialize)
         val queries = embParallel(s, dir).filter(col("vec_id") < NumQueries)
         // ONE corpus assignment pass shared by every nprobe leg (r13,
         // verdict task #4): ivfCandidatesFor builds the N·√N
@@ -1402,7 +1402,7 @@ object Similarity {
           ivfAssignTop1(s, embParallel(s, dir), broadcast(centroids))
         def leg(nprobe: Int): DataFrame = {
           val cand = ivfCandidatesOn(s, nprobe, queries, centroids, assigned)
-            .localCheckpoint() // feeds both the top-k and the cost count
+            .transform(Tables.materialize) // feeds both the top-k and the cost count
           val ann = ivfTopKOf(cand)
             .select(col("q_id").as("a_qid"), col("vec_id").as("a_vid"))
           val hits = exact
@@ -1455,7 +1455,7 @@ object Similarity {
         val truth = e.filter(col("vec_id") >= PlantBase)
           .select((col("vec_id") - PlantBase).as("src"),
             col("vec_id").as("dup"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val buck = e
           .withColumn("bucket", bucketColFor(planesOf(s, dir)).cast("long"))
           .select("vec_id", "bucket")
@@ -1472,7 +1472,7 @@ object Similarity {
             e.join(involved, Seq("vec_id"), "left_semi"),
             broadcast(ivfCentroids(s, dir)))
           .filter(col("arn") <= 2).select("vec_id", "c_id", "arn")
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val nTruth = truth.agg(count(lit(1)).as("n_truth"))
         // one bucket join feeds BOTH lsh rows: home-bucket equality
         // (sim_ann_lsh's generator) and the ≤1-bit multiprobe surface
@@ -1487,7 +1487,7 @@ object Similarity {
             col("bucket").as("bd")), "dup")
           .join(buck.select(col("vec_id").as("src"),
             col("bucket").as("bs")), "src")
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val lshHit = bucketPairs
           .filter(col("bd") === col("bs"))
           .agg(count(lit(1)).as("n_hit"))
@@ -1505,7 +1505,7 @@ object Similarity {
               1L).otherwise(0L)).as("h1"),
             max(when(col("probe") === col("src_list"), 1L).otherwise(0L))
               .as("h2"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         def row(m: String, hits: DataFrame) =
           nTruth.crossJoin(broadcast(hits))
             .select(lit(m).as("method"), col("n_truth"), col("n_hit"),
@@ -1683,18 +1683,6 @@ object Similarity {
       embParallel(s, dir).filter(col("vec_id") < NumQueries)
         .select("vec_id", "embedding"))
 
-  /** The IVF search against the static corpus index for an ARBITRARY
-    * query frame (vec_id, embedding): centroid assignment runs the
-    * identical scoring expressions on the query side, so the searched
-    * lists match what corpus-side assignment would produce — the batch
-    * registry entries pass a corpus slice, the streaming probe
-    * (StreamOps.streamAnnProbe) passes each micro-batch. Queries
-    * broadcast; the corpus is touched once per call through the
-    * list-keyed equi-join. */
-  /** The scanned (query, candidate, cos) relation at the given probe
-    * count — everything ivfSearchFor does except the closing top-k, so
-    * the tradeoff scorecard can count the TRUE cost (candidates scanned)
-    * of each nprobe setting from the identical plan. */
   /** Centroid assignment with rank: every caller (inline build, saved-
     * index build, query routing at serve time) runs THESE expressions,
     * so an index built-and-saved is bit-identical to the inline
@@ -1741,7 +1729,7 @@ object Similarity {
       // and join planning otherwise re-execute the N·√N scoring subtree
       // 2–3× inside one query (measured 264 s vs 83 s for the aggregate
       // itself at the clustered sf10)
-      .localCheckpoint()
+      .transform(Tables.materialize)
     thin.join(df.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), col("list_id"))
   }
@@ -1772,6 +1760,10 @@ object Similarity {
         CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos"))
   }
 
+  /** The scanned (query, candidate, cos) relation at the given probe
+    * count — everything ivfSearchFor does except the closing top-k, so
+    * the tradeoff scorecard can count the TRUE cost (candidates scanned)
+    * of each nprobe setting from the identical plan. */
   private[graft] def ivfCandidatesFor(s: SparkSession, dir: String,
       nprobe: Int, queries: DataFrame): DataFrame = {
     val centroids = ivfCentroids(s, dir)
@@ -1839,6 +1831,14 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
+  /** The IVF search against the static corpus index for an ARBITRARY
+    * query frame (vec_id, embedding): centroid assignment runs the
+    * identical scoring expressions on the query side, so the searched
+    * lists match what corpus-side assignment would produce — the batch
+    * registry entries pass a corpus slice, the streaming probe
+    * (StreamOps.streamAnnProbe) passes each micro-batch. Queries
+    * broadcast; the corpus is touched once per call through the
+    * list-keyed equi-join. */
   private[graft] def ivfSearchFor(s: SparkSession, dir: String,
       nprobe: Int, queries: DataFrame): DataFrame =
     ivfTopKOf(ivfCandidatesFor(s, dir, nprobe, queries))
@@ -1910,7 +1910,7 @@ object Similarity {
     // sides. Results unchanged; at scale the checkpointed relation is
     // (vec_id, band, band_val) — 16 slim rows per vector, no payload.
     val bands = bandKeys(embParallel(s, dir))
-      .repartition(col("band"), col("band_val")).localCheckpoint()
+      .repartition(col("band"), col("band_val")).transform(Tables.materialize)
     // kept stays lazy: it is a broadcast anti-join PROJECTION of the
     // materialized bands — recomputing it per self-join side is a block
     // read, cheaper than a second eager barrier (r14 measured)
@@ -2095,7 +2095,7 @@ object Similarity {
         .orderBy(col("cos").desc, col("cand"))
       beam = scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= BeamWidth).select("q_id", "cand")
-        .coalesce(1).localCheckpoint()
+        .coalesce(1).transform(Tables.materialize)
     }
     // top-k of the final round's candidate set = top-k of the final
     // beam (BeamWidth > TopK + 1 leaves room for the self-match cut)

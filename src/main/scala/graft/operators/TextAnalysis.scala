@@ -480,7 +480,7 @@ object TextAnalysis {
         // side, doc_id completion) — checkpoint it once so the shingle
         // expression runs one pass over the corpus
         val sh = docs.select(col("doc_id"), shingles(col("text"), 3).as("sh"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val benchSet = sh.filter(col("doc_id") % 97 === 0)
           .select(explode(col("sh")).as("shingle")).distinct()
         val overlap = sh.filter(col("doc_id") % 97 =!= 0)
@@ -688,7 +688,7 @@ object TextAnalysis {
         // and re-explode the corpus) — one localCheckpoint materializes
         // the (doc, term, tf) frame so the corpus is tokenized ONCE
         val tf = terms.groupBy("doc_id", "dl", "term")
-          .agg(count(lit(1)).as("tf")).localCheckpoint()
+          .agg(count(lit(1)).as("tf")).transform(Tables.materialize)
         val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
         val scored = tf.join(df, "term")
           .crossJoin(broadcast(stats))
@@ -1003,7 +1003,7 @@ object TextAnalysis {
       (s, dir) => {
         val terms = Tables.load(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
         val ctf = terms.groupBy("term").agg(count(lit(1)).as("ctf"))
         terms.join(ctf, "term")
           .groupBy("doc_id")
@@ -1085,7 +1085,7 @@ object TextAnalysis {
         val terms = Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
-          .localCheckpoint() // feeds vocab count and the id join once
+          .transform(Tables.materialize) // feeds vocab count and the id join once
         // global rank over the VOCABULARY (the aggregated distinct-term
         // set, ≪ corpus) — the one place a single-partition window is
         // the right call; the corpus itself never funnels
@@ -1225,7 +1225,7 @@ object TextAnalysis {
                 "cast(array() as array<struct<w1:string,w2:string>>)")))
               .as("b"))
           .select(col("doc_id"), col("b.w1"), col("b.w2"))
-          .localCheckpoint() // feeds the bigram model AND the scoring join
+          .transform(Tables.materialize) // feeds the bigram model AND the scoring join
         val cUni = d.select(explode(ts).as("w1"))
           .groupBy("w1").agg(count(lit(1)).as("cu"))
         val cBi = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
@@ -1666,7 +1666,7 @@ object TextAnalysis {
           .select(col("doc_id"), col("lang"),
             (hash31(concat(lit("dsir|"), col("b.w1"), lit(" "), col("b.w2")))
               % DsirB).as("bucket"))
-          .localCheckpoint() // feeds raw counts, target counts, scoring
+          .transform(Tables.materialize) // feeds raw counts, target counts, scoring
         val raw = bg.groupBy("bucket").agg(count(lit(1)).as("r_b"))
         val tgt = bg.filter(col("lang") === "en")
           .groupBy("bucket").agg(count(lit(1)).as("t_b"))
@@ -1759,7 +1759,7 @@ object TextAnalysis {
         val postings = Tables.loadParallel(s, dir, "documents")
           .select(col("doc_id"), tokens(col("text")).as("ts"))
           .select(col("doc_id"), explode(array_distinct(wins)).as("w"))
-          .localCheckpoint() // windows feed the DF cap and both join sides
+          .transform(Tables.materialize) // windows feed the DF cap and both join sides
         val viral = postings.groupBy("w")
           .agg(count(lit(1)).as("df")).filter(col("df") > 10000)
           .select("w")
@@ -1809,7 +1809,7 @@ object TextAnalysis {
       (s, dir) => {
         val postings = Tables.loadParallel(s, dir, "documents")
           .select(col("doc_id"), explode(shingles(col("text"), 3)).as("sh"))
-          .localCheckpoint() // feeds the first-seen agg AND the probe side
+          .transform(Tables.materialize) // feeds the first-seen agg AND the probe side
         val firstSeen = postings.groupBy("sh")
           .agg(min(col("doc_id")).as("first_doc"))
         postings.join(firstSeen, Seq("sh"))
@@ -2080,7 +2080,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("text"))
       val p = s.sparkContext.defaultParallelism
       (if (d.rdd.getNumPartitions >= p) d else d.repartition(p))
-        .localCheckpoint()
+        .transform(Tables.materialize)
     }
     val learned = Seq.newBuilder[(Long, String, String, Long)]
     // empty corpus: no pairs to count, nothing to learn or rewrite —
@@ -2112,7 +2112,7 @@ object TextAnalysis {
         docs = docs.select(col("doc_id"),
             expr(s"trim(replace(replace(concat('  ', replace(text, ' ', '  '), '  '), " +
               s"' $a  $b ', ' $a~$b '), '  ', ' '))").as("text"))
-          .localCheckpoint()
+          .transform(Tables.materialize)
       }
     }
     (docs, learned.result())

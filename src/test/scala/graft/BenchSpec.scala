@@ -97,4 +97,17 @@ class BenchSpec extends AnyFunSuite {
       PlanDump.normalize(before.replace("hashpartitioning(u#12L, 4)",
         "hashpartitioning(v#13L, 4)")))
   }
+
+  test("a gate-log line parses back to the values written") {
+    val tricky = "a \"quoted\" \\ path\nnext\tcol\u0001end"
+    val fields = Seq("ts" -> "2026-01-01T00:00:00Z", "sql" -> tricky,
+      tricky -> "key")
+    val line = Verify.gateLine(fields)
+    assert(!line.contains("\n"))
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    import scala.jdk.CollectionConverters._
+    assert(node.properties().asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asText) === fields)
+    assert(node.properties().asScala.forall(_.getValue.isTextual))
+  }
 }

@@ -31,10 +31,17 @@ class RegistrySpec extends AnyFunSuite {
   Registry.all.foreach { d =>
     test(s"${d.name} executes on sf0.001") {
       val before = spark.conf.getAll
-      val df = d.run(spark, TestSpark.sf)
-      assert(df.columns.nonEmpty)
-      val n = df.count()
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val n = Tables.scoped {
+        val df = d.run(spark, TestSpark.sf)
+        assert(df.columns.nonEmpty)
+        df.count()
+      }
       if (!mayBeEmpty(d.name)) assert(n > 0, s"${d.name} returned no rows")
+      // every block the query materialized (on its own thread or a
+      // streaming query's) is released when its scope closes
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+      assert(left.isEmpty, s"${d.name} left persisted RDDs $left")
       val residue = (spark.conf.getAll.toSet -- before.toSet)
         .filterNot { case (k, _) => allowedResidue(k) }
       assert(residue.isEmpty,
@@ -69,11 +76,14 @@ class RegistrySpec extends AnyFunSuite {
       }
     }.collectFirst { case Some(n) => n }.getOrElse("")
 
-  /** Non-comment lines of the operator sources containing any `needles`. */
-  private def operatorSourceHits(needles: Seq[String]): Seq[SourceHit] = {
+  /** Non-comment lines of the operator sources (or of the `dirs` under
+    * src/main/scala/graft, "" for all of it) containing any `needles`. */
+  private def operatorSourceHits(needles: Seq[String],
+      dirs: Seq[String] = Seq("operators", "sources", "functions",
+        "streaming")): Seq[SourceHit] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val roots = Seq("operators", "sources", "functions", "streaming")
+    val roots = dirs
       .map(d => Paths.get("src/main/scala/graft", d))
       .filter(Files.isDirectory(_))
     roots.flatMap { root =>
@@ -196,5 +206,28 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "near-dup edge list built outside Dedup.jaccardEdges (call it, or " +
         "allowlist a query that needs the scores):\n" + hits.mkString("\n"))
+  }
+
+  // Materialization has one primitive, Tables.materialize: it keeps the
+  // operator's call site and registers the blocks with the caller's
+  // Tables.scoped, so a query's intermediates are released when it ends.
+  // A raw localCheckpoint() would hold its blocks until the GC notices.
+  test("operator sources materialize only through Tables.materialize") {
+    val hits = operatorSourceHits(Seq("localCheckpoint("))
+    assert(hits.isEmpty,
+      "raw localCheckpoint in operator code (call Tables.materialize):\n" +
+        hits.mkString("\n"))
+  }
+
+  // Tables.scoped releases what its body materialized and nothing else.
+  // A sweep over the context's persisted RDDs frees other queries' blocks
+  // under a concurrent Verify and has no place in a long-lived server.
+  test("only Tables releases persisted blocks") {
+    val hits = operatorSourceHits(Seq("getPersistentRDDs", "unpersist("),
+      dirs = Seq(""))
+      .filterNot(h => h.path.endsWith("/Tables.scala"))
+    assert(hits.isEmpty,
+      "persisted-RDD release outside Tables (run the query in " +
+        "Tables.scoped):\n" + hits.mkString("\n"))
   }
 }

@@ -1,18 +1,27 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.JobCount
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, count, lit, sum, udf, when}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Signals that a task of the cancelled action in TablesSpec has started;
+  * a top-level object, so the task reaches this instance, not a copy. */
+private object SlowTask {
+  @volatile var started = new CountDownLatch(1)
+}
+
 /** Tables' corpus-metadata memo: a schema, split count or row count must
   * follow the frame, the files and the session confs it was measured
-  * on, never a shared or stale key. */
+  * on, never a shared or stale key. Its materialization: a checkpoint
+  * keeps its caller's call site and lives as long as its scope. */
 class TablesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -157,5 +166,122 @@ class TablesSpec extends AnyFunSuite {
     assert(measured._2 === Seq(100L, 50L, 0L))
     assert(measured._1.count() === 100L)
     assert(Tables.observeFallbacks - f0 === 0L)
+  }
+
+  private def rddId(df: DataFrame): Int =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+
+  private def persisted(id: Int): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(id)
+
+  test("a scope frees what its body materialized, on return and on a throw") {
+    var id = -1
+    val n = Tables.scoped {
+      val m = Tables.materialize(spark.range(100).toDF())
+      id = rddId(m)
+      assert(persisted(id))
+      m.count()
+    }
+    assert(n === 100L)
+    assert(!persisted(id))
+    val e = intercept[IllegalStateException] {
+      Tables.scoped {
+        id = rddId(Tables.materialize(spark.range(10).toDF()))
+        assert(persisted(id))
+        throw new IllegalStateException("planted")
+      }
+    }
+    assert(e.getMessage === "planted")
+    assert(!persisted(id))
+  }
+
+  test("a scope whose action is cancelled by job tag frees its checkpoint") {
+    val sc = spark.sparkContext
+    val tag = "tables-spec-cancel"
+    SlowTask.started = new CountDownLatch(1)
+    val slow = udf { (x: Long) =>
+      SlowTask.started.countDown(); Thread.sleep(50); x
+    }
+    @volatile var id = -1
+    @volatile var thrown: Throwable = null
+    val worker = new Thread(() => {
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true)
+      try Tables.scoped {
+        val m = Tables.materialize(spark.range(0, 400, 1, 4).toDF())
+        id = rddId(m)
+        m.select(slow(col("id"))).write.format("noop").mode("overwrite").save()
+      } catch { case t: Throwable => thrown = t }
+      finally sc.clearJobTags()
+    })
+    worker.start()
+    assert(SlowTask.started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    sc.cancelJobsWithTag(tag)
+    worker.join(60000)
+    assert(!worker.isAlive)
+    assert(thrown != null, "the action ran to completion, not cancelled")
+    assert(id >= 0 && !persisted(id))
+  }
+
+  test("concurrent scopes on two threads each free only their own RDDs") {
+    val ids = new ConcurrentHashMap[String, Int]()
+    val seen = new ConcurrentHashMap[String, Boolean]()
+    val errors = new ConcurrentHashMap[String, Throwable]()
+    val bothMaterialized = new CountDownLatch(2)
+    val firstClosed = new CountDownLatch(1)
+    def worker(name: String)(body: => Unit): Thread = {
+      val t = new Thread(() =>
+        try body catch { case e: Throwable => errors.put(name, e) })
+      t.start(); t
+    }
+    val first = worker("first") {
+      Tables.scoped {
+        ids.put("first", rddId(Tables.materialize(spark.range(50).toDF())))
+        bothMaterialized.countDown()
+        bothMaterialized.await()
+      }
+      firstClosed.countDown()
+    }
+    val second = worker("second") {
+      Tables.scoped {
+        val m = Tables.materialize(spark.range(60).toDF())
+        ids.put("second", rddId(m))
+        bothMaterialized.countDown()
+        bothMaterialized.await()
+        firstClosed.await()
+        seen.put("first after its scope", persisted(ids.get("first")))
+        seen.put("second in its scope", persisted(ids.get("second")))
+        seen.put("second readable", m.count() == 60L)
+      }
+    }
+    Seq(first, second).foreach(_.join(60000))
+    assert(errors.isEmpty, errors)
+    assert(seen.get("first after its scope") === false)
+    assert(seen.get("second in its scope") === true)
+    assert(seen.get("second readable") === true)
+    assert(!persisted(ids.get("first")) && !persisted(ids.get("second")))
+  }
+
+  test("materialize keeps the calling file as the checkpoint's call site") {
+    val sc = spark.sparkContext
+    // an RDD prints as `<class>[<id>] at <creation site>`
+    def site(df: DataFrame): String =
+      df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.toString
+        .split("] at ", 2)(1)
+    Tables.scoped {
+      val direct = Tables.materialize(spark.range(5).toDF())
+      assert(site(direct).startsWith("localCheckpoint at TablesSpec.scala:"),
+        site(direct))
+      val chained = spark.range(5).toDF().transform(Tables.materialize)
+      assert(site(chained).startsWith("localCheckpoint at TablesSpec.scala:"),
+        site(chained))
+      // the caller's own call-site properties are back as they were
+      assert(sc.getLocalProperty("callSite.short") === null)
+      assert(sc.getLocalProperty("callSite.long") === null)
+      // an already-materialized frame is returned as it is, with no job
+      var again: DataFrame = null
+      assert(JobCount(sc) { again = Tables.materialize(direct) } === 0)
+      assert(again eq direct)
+    }
   }
 }
