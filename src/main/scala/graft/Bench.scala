@@ -116,15 +116,16 @@ object Bench {
     * rounds, so a per-query delta against last round's BENCH_LAST may
     * be measuring a different corpus, not a code change; the regression
     * report compares fingerprints first and suppresses per-query deltas
-    * when they differ. Row counts come from parquet footers (metadata
-    * count — no data scan), sizes from the filesystem. */
+    * when they differ. Row counts come from the memoized
+    * `Tables.rowCount` (a missing table reads -1), sizes from the
+    * filesystem. */
   private def corpusFingerprint(spark: SparkSession, sfDir: String): String = {
     val parts = Tables.names.map { n =>
       val p = java.nio.file.Paths.get(s"$sfDir/$n.parquet")
       val bytes =
         if (java.nio.file.Files.exists(p)) java.nio.file.Files.size(p) else -1L
       val rows =
-        try Tables.load(spark, sfDir, n).count()
+        try Tables.rowCount(spark, sfDir, n)
         catch { case _: Throwable => -1L }
       s"$n:$rows:$bytes"
     }

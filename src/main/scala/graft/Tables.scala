@@ -171,10 +171,19 @@ object Tables {
     * every later consumer to read: the one way operator code materializes
     * an intermediate. A frame that already scans a checkpoint is returned
     * as it is. The checkpoint's RDD, job and SQL execution carry the call
-    * site of the line that called `materialize` (`localCheckpoint at
-    * Dedup.scala:457`), so a barrier stays attributed to its operator.
-    * Its blocks are released when the enclosing `scoped` closes; with no
-    * scope open, when Spark's `ContextCleaner` drops the unreachable RDD. */
+    * site of the operator line that called `materialize`, directly or
+    * through `checkpointMeasured` (`localCheckpoint at Dedup.scala:457`),
+    * so a barrier stays attributed to its operator. Its blocks are
+    * released when the enclosing `scoped` closes; with no scope open,
+    * when Spark's `ContextCleaner` drops the unreachable RDD.
+    *
+    * The materialized frame carries no partitioning: under adaptive
+    * query execution (Spark's default, which `GraftSession.local`
+    * keeps), the checkpoint's `LogicalRDD` reports
+    * `UnknownPartitioning`, so a consumer that needs
+    * the rows on a key exchanges them whatever shuffle fed the
+    * checkpoint. A keyed `repartition` in front of `materialize` is one
+    * shuffle more for nothing (TablesSpec pins the Spark behaviour). */
   def materialize(df: DataFrame): DataFrame = df.queryExecution.logical match {
     case r: LogicalRDD if r.rdd.isCheckpointed => df
     case _ =>
@@ -192,13 +201,12 @@ object Tables {
 
   /** The short and long call-site forms Spark would record for a
     * checkpoint taken where `materialize` was called: from the first
-    * frame past `materialize` outside Spark and Scala. */
+    * frame past `materialize` outside Spark, Scala and `Tables`. */
   private def callerSite(): Seq[String] = {
     val user = Thread.currentThread.getStackTrace.toSeq
       .dropWhile(_.getMethodName != "materialize")
-      .dropWhile(_.getMethodName == "materialize")
-      .dropWhile(f => f.getClassName.startsWith("org.apache.spark.") ||
-        f.getClassName.startsWith("scala."))
+      .dropWhile(f => Seq("org.apache.spark.", "scala.", "graft.Tables$")
+        .exists(f.getClassName.startsWith))
     Seq(s"localCheckpoint at ${user.head.getFileName}:${user.head.getLineNumber}",
       user.take(20).mkString("\n"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -2166,11 +2166,9 @@ object Dedup {
         val sh = Tables.materialize(shingled(s, dir))
         val (truth, Seq(nTruth)) =
           Tables.checkpointMeasured(jaccardEdges(sh), count(lit(1)))
-        // bands materialized once, partitioned on the self-join key
-        // (r14, §2.4): the signature pipeline otherwise ran twice —
-        // once per join side — and both sides re-exchanged
-        val bands = bandsOf(signaturesFrom(sh))
-          .repartition(col("band_id"), col("band_key")).transform(Tables.materialize)
+        // bands materialized once (r14): the signature pipeline
+        // otherwise ran twice — once per join side
+        val bands = bandsOf(signaturesFrom(sh)).transform(Tables.materialize)
         val mhCand = bands.as("x").join(bands.as("y"),
             col("x.band_id") === col("y.band_id") &&
               col("x.band_key") === col("y.band_key") &&
@@ -2838,18 +2836,15 @@ object Dedup {
       sh: DataFrame, cap: Option[Int] = None): DataFrame =
     bandCandidatesFromRows(bandRowsChk(sh), cap)
 
-  /** The banded relation materialized ONCE, hash-partitioned on the
-    * self-join key (r14, §2.4): it feeds both self-join sides (plus the
-    * viral aggregate + anti-join in the capped form), so the
-    * un-checkpointed signature pipeline ran 2–4x per call and both
-    * join sides re-exchanged; the slim (doc_id, band_id, band_key)
-    * checkpoint feeds every consumer exchange-free. Exposed separately
-    * so scorecards that run the exact AND capped generators side by
-    * side (dedup_planted_recall, dedup_recall_curve) share ONE
-    * checkpoint instead of rebuilding the signature pipeline per leg. */
+  /** The banded relation materialized ONCE (r14): it feeds both
+    * self-join sides (plus the viral aggregate + anti-join in the capped
+    * form), so the un-checkpointed signature pipeline ran 2–4x per call.
+    * Exposed separately so scorecards that run the exact AND capped
+    * generators side by side (dedup_planted_recall, dedup_recall_curve)
+    * share ONE checkpoint instead of rebuilding the signature pipeline
+    * per leg. */
   private[graft] def bandRowsChk(sh: DataFrame): DataFrame =
-    bandRows(sh)
-      .repartition(col("band_id"), col("band_key")).transform(Tables.materialize)
+    Tables.materialize(bandRows(sh))
 
   private[graft] def bandCandidatesFromRows(
       bands0: DataFrame, cap: Option[Int]): DataFrame = {
@@ -2911,9 +2906,7 @@ object Dedup {
     // materialized ONCE (r14): stat feeds the small-bucket self-join
     // (both sides) and the star leg — un-checkpointed, the whole
     // signature pipeline (shingle explode → md5 → 16 min-aggregates →
-    // band explode) ran three times. The window already shuffled the
-    // relation onto (band_id, band_key), so the checkpoint keeps that
-    // partitioning and the self-join below runs exchange-free (§2.4).
+    // band explode) ran three times.
     val stat = bandRows(sh)
       .withColumn("bdf", count(lit(1)).over(wB))
       .withColumn("anchor", min("doc_id").over(wB))
@@ -2934,8 +2927,9 @@ object Dedup {
   /** The pipeline_viral_clean stage driver — ONE implementation shared
     * by the registry operator and the stage-wall harness
     * (graft.PipelineBench), so the benched walls measure exactly the
-    * operator the oracle checks. Each stage is materialized with a
-    * localCheckpoint and its row count reported through the callback
+    * operator the oracle checks. Each stage that a later one reads is
+    * materialized; the last, the token-budget sample, is only counted.
+    * Every stage's row count is reported through the callback
     * (stage, rowsOut, wallSeconds); every count is a bounded driver
     * scalar (the same class as the manifest itself — this is the run
     * record a pipeline orchestrator keeps, not row data). Returns the
@@ -2943,14 +2937,17 @@ object Dedup {
   private[graft] def viralCleanRun(
       s: SparkSession, dir: String,
       onStage: (String, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
-    import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
-    def stage(name: String, more: Column*)(f: => DataFrame)
-        : (DataFrame, Seq[Long]) = {
+    import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenBudget, tokenCount}
+    def timed[T](name: String, rowsOut: T => Long)(run: => T): T = {
       val t0 = System.nanoTime()
-      val (frame, ms) = Tables.checkpointMeasured(f, count(lit(1)) +: more: _*)
-      onStage(name, ms.head, (System.nanoTime() - t0) / 1e9)
-      (frame, ms)
+      val out = run
+      onStage(name, rowsOut(out), (System.nanoTime() - t0) / 1e9)
+      out
     }
+    def stage(name: String, more: Column*)(f: => DataFrame)
+        : (DataFrame, Seq[Long]) =
+      timed[(DataFrame, Seq[Long])](name, _._2.head)(
+        Tables.checkpointMeasured(f, count(lit(1)) +: more: _*))
     val nDocs = Tables.rowCount(s, dir, "documents")
     // read → quality gate → shingle is map-only after the read's
     // repartition: one barrier for the frame every later stage reuses
@@ -2979,30 +2976,11 @@ object Dedup {
     val (reps, Seq(nReps)) = stage("cluster_collapse")(
       connectedComponents(kept.select("doc_id"), verified)
         .filter(col("doc_id") === col("rep_id")).select("doc_id"))
-    val d38 = "decimal(38,0)"
-    val (_, Seq(nSampled, nToks)) = stage("token_budget_sample", sum("n_toks")) {
-      val docs = kept.join(reps, Seq("doc_id"), "left_semi")
-        .withColumn("n_toks", size(split(col("text"), " ")).cast("long"))
-      val st = docs.groupBy("source")
-        .agg(sum(col("n_toks").cast(d38)).as("tok_s"))
-        .withColumn("wq",
-          floor(sqrt(col("tok_s").cast("double"))).cast("long"))
-      val tot = st.agg(sum(col("wq").cast(d38)).as("wtot"),
-        sum(col("tok_s")).as("btot"))
-      val budget = st.crossJoin(broadcast(tot))
-        .select(col("source"), expr(
-          """CAST(((btot div 5) * CAST(wq AS DECIMAL(38,0)))
-               div nullif(wtot, 0) AS BIGINT)""").as("budget_toks"))
-      val u = hash31(
-        concat_ws("|", lit("pclean"), col("doc_id").cast("string")))
-      val w = Window.partitionBy("source").orderBy(u.asc, col("doc_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs
-        .withColumn("cum_toks", sum(col("n_toks")).over(w))
-        .join(broadcast(budget), Seq("source"))
-        .filter(col("cum_toks") - col("n_toks") < col("budget_toks"))
-        .select("doc_id", "n_toks")
+    val sampled = timed[Row]("token_budget_sample", _.getLong(0)) {
+      tokenBudget(kept.join(reps, Seq("doc_id"), "left_semi"), "pclean")
+        .agg(count(lit(1)), coalesce(sum("n_toks"), lit(0L))).head()
     }
+    val (nSampled, nToks) = (sampled.getLong(0), sampled.getLong(1))
     import s.implicits._
     Seq((nDocs, nKept, nCand, nPairs, nReps, nSampled, nToks))
       .toDF("n_docs", "n_kept", "n_cand", "n_pairs", "n_reps",
@@ -3367,13 +3345,7 @@ object Dedup {
     // are the right scale choice too: one extra generation of blocks,
     // no HDFS round-trip; a 100 TB deployment with preemptible
     // executors would switch to reliable checkpoint() on the same loop.
-    // edges hash-partitioned ON THE ITERATION JOIN KEY before the
-    // checkpoint (r14, §2.4): every iteration equi-joins edges on v,
-    // and a checkpointed frame keeps its physical partitioning, so the
-    // edge side of that join never re-exchanges — one edge shuffle
-    // total across all iterations instead of one per iteration.
-    val edges = undirected(pairs).repartition(col("v"))
-      .transform(Tables.materialize)
+    val edges = Tables.materialize(undirected(pairs))
     // iterate ONLY over vertices that appear in an edge: every other
     // document is trivially its own representative and joins back in at
     // the end. At 100 TB the near-dup set is a small fraction of the
@@ -3393,10 +3365,7 @@ object Dedup {
       // the two computes run IN PARALLEL inside the one checkpoint job
       // (r14 note: materializing stepped separately was measured as a
       // net wall loss — an extra eager barrier per iteration costs more
-      // than the parallel recompute at any corpus this loop has seen;
-      // the edges side is already exchange-free via the pre-partitioned
-      // checkpoint above, which is where the per-iteration shuffle
-      // actually went)
+      // than the parallel recompute at any corpus this loop has seen)
       val stepped = labels.join(neighborMin, Seq("u"), "left")
         .select(col("u"), col("rep_id").as("old_rep"),
           least(col("rep_id"), coalesce(col("n_rep"), col("rep_id"))).as("rep_id"))

@@ -328,8 +328,7 @@ object Graph {
     QueryDef(
       "graph_labelprop",
       (s, dir) => {
-        // lpaLabels materializes the edges partitioned on its round
-        // join key
+        // lpaLabels materializes the edges
         val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val lbl = lpaLabels(docs, edges)
@@ -466,16 +465,12 @@ object Graph {
     // against the edge list on the current node plus one per-node argmin
     // window — the textbook distributed walk step, shuffle ∝ frontier
     // edges, never materializing more than (starts × 1) rows between
-    // steps. At 100 TB frontiers stay hash-partitioned on the current
-    // node so each step co-locates with the edge list's partitioning.
+    // steps.
     QueryDef(
       "graph_random_walk",
       (s, dir) => {
-        // edges hash-partitioned on the step join key u so every step's
-        // join reuses one exchange (r14, §2.4 — the rename to "cur"
-        // keeps the checkpointed partitioning)
         val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .repartition(col("u")).transform(Tables.materialize)
+          .transform(Tables.materialize)
         val starts = edges.select(col("u").as("doc_id")).distinct()
         var walk = starts.select(col("doc_id"), col("doc_id").as("cur"))
         for (k <- 1 to WalkSteps) {
@@ -568,9 +563,9 @@ object Graph {
         // (r14): a plain temp view is re-planned at every reference, so
         // each recursion level re-ran the entire posting-join pair
         // generator; the checkpointed view makes every frontier join a
-        // block read, pre-partitioned on the join key u (§2.4)
+        // block read
         Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
-          .repartition(col("u")).transform(Tables.materialize)
+          .transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_edges")
         // DISTINCT in the recursive member: the frontier is a SET of
         // (src, node) per hop, not a bag of paths — on a dense family
@@ -634,14 +629,14 @@ object Graph {
         // (r14): a plain temp view is re-planned at every reference, so
         // each recursion level re-ran the pair generator AND the
         // per-u cap window; the checkpointed view makes every frontier
-        // join a block read, pre-partitioned on the join key u (§2.4).
+        // join a block read.
         // Same relation: symmetric edges → row_number per u ordered by
         // v → rn <= F, exactly the former cap CTE.
         val capW = Window.partitionBy("u").orderBy("v")
         Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
           .withColumn("rn", row_number().over(capW))
           .filter(col("rn") <= BfsCapF).select("u", "v")
-          .repartition(col("u")).transform(Tables.materialize)
+          .transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_cap")
         s2.sql(s"""
           WITH RECURSIVE
@@ -841,10 +836,8 @@ object Graph {
       restart: Column, out: String): DataFrame = {
     val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
     val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-    // (u, v, deg_u) is re-read every round: materialize once,
-    // hash-partitioned ON THE ROUND JOIN KEY u so the edge side of every
-    // round's join reuses this one exchange (§2.4)
-    val eD = Tables.materialize(edges.join(deg, "u").repartition(col("u")))
+    // (u, v, deg_u) is re-read every round: materialize once
+    val eD = Tables.materialize(edges.join(deg, "u"))
     val touched = eD.select(col("u").as("doc_id")).distinct()
       .transform(Tables.materialize)
     var r = touched.select(col("doc_id"), init.as("r"))
@@ -1037,9 +1030,8 @@ object Graph {
 
   private def lpaLabels(docs: DataFrame, edges: DataFrame): DataFrame = {
     // r14 restructure, results identical:
-    //  - edges hash-partitioned ON THE ROUND JOIN KEY u and materialized
-    //    once, so the edge side of every round's join reuses one
-    //    exchange (§2.4);
+    //  - edges materialized once, so no round recomputes the pair
+    //    generator;
     //  - rounds iterate ONLY over edge-bearing vertices (the
     //    connectedComponents treatment): a vertex with no edges never
     //    receives a winner, so its label stays its own id — attached
@@ -1055,7 +1047,7 @@ object Graph {
     //    duplicated round carries its own window EXCHANGE, so the
     //    recompute doubles shuffled bytes rather than soaking idle
     //    cores. Per-round barriers are the measured optimum here.
-    val e = Tables.materialize(edges.repartition(col("u")))
+    val e = Tables.materialize(edges)
     var lbl = e.select(col("v").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("label"))
     for (_ <- 0 until Iters) {

@@ -361,16 +361,14 @@ object Multimodal {
   private def phashChunkPairs(sig: DataFrame, nChunks: Int, chunkBits: Int,
       minHam: Int, maxHam: Int): DataFrame = {
     val mask = (1L << chunkBits) - 1
-    // chunk keys materialized ONCE, hash-partitioned on the self-join
-    // key (r14, §2.4): the signature pipeline (payload decode + hash
-    // votes) otherwise runs twice — once per join side — and both sides
-    // re-exchange; the checkpointed slim (doc_id, format, phash, k, ck)
-    // relation feeds both sides exchange-free. Results unchanged.
+    // chunk keys materialized ONCE (r14): the signature pipeline
+    // (payload decode + hash votes) otherwise runs twice — once per join
+    // side; the checkpointed slim (doc_id, format, phash, k, ck)
+    // relation feeds both sides.
     val chunks = sig
       .select(col("doc_id"), col("format"), col("phash"),
         explode(expr(s"sequence(0, ${nChunks - 1})")).as("k"))
       .withColumn("ck", expr(s"shiftright(phash, $chunkBits*k) & $mask"))
-      .repartition(col("format"), col("k"), col("ck"))
       .transform(Tables.materialize)
     val a = chunks.select(col("format"), col("k"), col("ck"),
       col("doc_id").as("a_id"), col("phash").as("pa"))

@@ -1901,16 +1901,13 @@ object Similarity {
   }
 
   private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    // band keys materialized ONCE, hash-partitioned on the self-join
-    // key (r14, §2.4): the banded frame feeds the viral-bucket
-    // aggregate, the anti-join, and BOTH self-join sides — without the
-    // checkpoints the N×1024-row plane aggregation ran ~4x per query
-    // (sim_embed_neardup, emb_dbscan, dedup_cluster_multi all ride
-    // this generator), and the capped self-join re-exchanged both
-    // sides. Results unchanged; at scale the checkpointed relation is
+    // band keys materialized ONCE (r14): the banded frame feeds the
+    // viral-bucket aggregate, the anti-join, and BOTH self-join sides —
+    // without the checkpoint the N×1024-row plane aggregation ran ~4x
+    // per query (sim_embed_neardup, emb_dbscan, dedup_cluster_multi all
+    // ride this generator). At scale the checkpointed relation is
     // (vec_id, band, band_val) — 16 slim rows per vector, no payload.
-    val bands = bandKeys(embParallel(s, dir))
-      .repartition(col("band"), col("band_val")).transform(Tables.materialize)
+    val bands = Tables.materialize(bandKeys(embParallel(s, dir)))
     // kept stays lazy: it is a broadcast anti-join PROJECTION of the
     // materialized bands — recomputing it per self-join side is a block
     // read, cheaper than a second eager barrier (r14 measured)

@@ -110,6 +110,37 @@ object TextAnalysis {
            t -> t IN ('the','a','and','of','to','is','in'))) AS BIGINT)
        - CAST(len(string_split(text, ' ')) AS BIGINT))"""
 
+  /** The token-budget allocator over `docs` (doc_id, source, text),
+    * shared by sample_token_budget and pipeline_viral_clean: B =
+    * ⌊Σtok/5⌋ split across sources ∝ ⌊√tok_s⌋ (`budget_toks`), and
+    * each source's documents, ordered by the md5 uniform salted with
+    * `salt`, kept while the running token sum before them is under
+    * their source's budget. Returns (doc_id, source, n_toks, cum_toks,
+    * budget_toks). */
+  private[graft] def tokenBudget(docs: DataFrame, salt: String): DataFrame = {
+    val d38 = "decimal(38,0)"
+    val toks = docs.withColumn("n_toks", tokenCount(col("text")))
+    val st = toks.groupBy("source")
+      .agg(sum(col("n_toks").cast(d38)).as("tok_s"))
+      .withColumn("wq",
+        floor(sqrt(col("tok_s").cast("double"))).cast("long"))
+    val tot = st.agg(sum(col("wq").cast(d38)).as("wtot"),
+      sum(col("tok_s")).as("btot"))
+    val budget = st.crossJoin(broadcast(tot))
+      .select(col("source"), expr(
+        """CAST(((btot div 5) * CAST(wq AS DECIMAL(38,0)))
+             div nullif(wtot, 0) AS BIGINT)""").as("budget_toks"))
+    val u = hash31(concat_ws("|", lit(salt), col("doc_id").cast("string")))
+    val w = Window.partitionBy("source").orderBy(u.asc, col("doc_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    toks
+      .withColumn("cum_toks", sum(col("n_toks")).over(w))
+      .join(broadcast(budget), Seq("source"))
+      .filter(col("cum_toks") - col("n_toks") < col("budget_toks"))
+      .select(col("doc_id"), col("source"), col("n_toks"),
+        col("cum_toks"), col("budget_toks"))
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // Token counting: whitespace tokens + a BPE-ish sub-word regex
@@ -405,31 +436,9 @@ object TextAnalysis {
     // collect; the budget table is k rows at any corpus size.
     QueryDef(
       "sample_token_budget",
-      (s, dir) => {
-        val d38 = "decimal(38,0)"
-        val docs = Tables.load(s, dir, "documents")
-          .withColumn("n_toks", size(split(col("text"), " ")).cast("long"))
-        val st = docs.groupBy("source")
-          .agg(sum(col("n_toks").cast(d38)).as("tok_s"))
-          .withColumn("wq",
-            floor(sqrt(col("tok_s").cast("double"))).cast("long"))
-        val tot = st.agg(sum(col("wq").cast(d38)).as("wtot"),
-          sum(col("tok_s")).as("btot"))
-        val budget = st.crossJoin(broadcast(tot))
-          .select(col("source"), expr(
-            """CAST(((btot div 5) * CAST(wq AS DECIMAL(38,0)))
-                 div nullif(wtot, 0) AS BIGINT)""").as("budget_toks"))
-        val u = hash31(concat_ws("|", lit("tokb"), col("doc_id").cast("string")))
-        val w = Window.partitionBy("source").orderBy(u.asc, col("doc_id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        docs
-          .withColumn("cum_toks", sum(col("n_toks")).over(w))
-          .join(broadcast(budget), Seq("source"))
-          .filter(col("cum_toks") - col("n_toks") < col("budget_toks"))
-          .select(col("doc_id"), col("source"), col("n_toks"),
-            col("cum_toks"), col("budget_toks"))
-          .orderBy("source", "cum_toks", "doc_id")
-      },
+      (s, dir) =>
+        tokenBudget(Tables.load(s, dir, "documents"), "tokb")
+          .orderBy("source", "cum_toks", "doc_id"),
       Some("""WITH d AS (
                 SELECT doc_id, source,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
@@ -473,9 +482,7 @@ object TextAnalysis {
     QueryDef(
       "text_decontaminate",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val p = s.sparkContext.defaultParallelism
-        val docs = if (d.rdd.getNumPartitions >= p) d else d.repartition(p)
+        val docs = Tables.loadParallel(s, dir, "documents")
         // the shingle frame feeds three subtrees (benchmark set, probe
         // side, doc_id completion) — checkpoint it once so the shingle
         // expression runs one pass over the corpus
@@ -525,9 +532,7 @@ object TextAnalysis {
     QueryDef(
       "text_repetition",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val p = s.sparkContext.defaultParallelism
-        val docs = if (d.rdd.getNumPartitions >= p) d else d.repartition(p)
+        val docs = Tables.loadParallel(s, dir, "documents")
         // bigram strings from two shifted slices zipped — stays in
         // codegen; a tokens() call inside a transform() lambda would
         // run interpreted and re-tokenize per element
@@ -2075,13 +2080,8 @@ object TextAnalysis {
     // single-file corpus = one input split: without the conditional
     // repartition every pair-count and rewrite round runs on ONE
     // core (measured 1.2x parallelism); pre-split inputs skip it
-    var docs = {
-      val d = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      val p = s.sparkContext.defaultParallelism
-      (if (d.rdd.getNumPartitions >= p) d else d.repartition(p))
-        .transform(Tables.materialize)
-    }
+    var docs = Tables.materialize(
+      Tables.loadParallel(s, dir, "documents").select(col("doc_id"), col("text")))
     val learned = Seq.newBuilder[(Long, String, String, Long)]
     // empty corpus: no pairs to count, nothing to learn or rewrite —
     // skip the rounds (the argmax head() would fail) and return the

@@ -79,28 +79,34 @@ class RegistrySpec extends AnyFunSuite {
   /** Non-comment lines of the operator sources (or of the `dirs` under
     * src/main/scala/graft, "" for all of it) containing any `needles`. */
   private def operatorSourceHits(needles: Seq[String],
-      dirs: Seq[String] = Seq("operators", "sources", "functions",
-        "streaming")): Seq[SourceHit] = {
+      dirs: Seq[String] = OperatorDirs): Seq[SourceHit] =
+    operatorSources(dirs).flatMap { case (p, lines) =>
+      lines.indices.collect {
+        case i if needles.exists(lines(i).contains) &&
+          !lines(i).trim.startsWith("//") =>
+          SourceHit(p, i + 1, lines(i),
+            if (i > 0) lines(i - 1) else "", enclosingQuery(lines, i))
+      }
+    }
+
+  private val OperatorDirs = Seq("operators", "sources", "functions", "streaming")
+
+  /** (path, lines) of every Scala source under the `dirs` of
+    * src/main/scala/graft ("" for all of it). */
+  private def operatorSources(dirs: Seq[String])
+      : Seq[(String, IndexedSeq[String])] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val roots = dirs
-      .map(d => Paths.get("src/main/scala/graft", d))
+    dirs.map(d => Paths.get("src/main/scala/graft", d))
       .filter(Files.isDirectory(_))
-    roots.flatMap { root =>
-      val walk = Files.walk(root)
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val lines = Files.readAllLines(p).asScala.toIndexedSeq
-          lines.indices.collect {
-            case i if needles.exists(lines(i).contains) &&
-              !lines(i).trim.startsWith("//") =>
-              SourceHit(p.toString, i + 1, lines(i),
-                if (i > 0) lines(i - 1) else "", enclosingQuery(lines, i))
-          }
-        }.toList
-      finally walk.close()
-    }
+      .flatMap { root =>
+        val walk = Files.walk(root)
+        try walk.iterator().asScala
+          .filter(_.toString.endsWith(".scala"))
+          .map(p => (p.toString, Files.readAllLines(p).asScala.toIndexedSeq))
+          .toList
+        finally walk.close()
+      }
   }
 
   /** `h` is on, or just below, a line one of its file's `allowed`
@@ -229,5 +235,86 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "persisted-RDD release outside Tables (run the query in " +
         "Tables.scoped):\n" + hits.mkString("\n"))
+  }
+
+  // A scan is spread across cores through Tables.parallel (or
+  // loadParallel), which memoizes the split count per file set;
+  // `getNumPartitions` pays a second planning pass at every query build.
+  test("operator sources measure a scan's splits only through Tables.parallel") {
+    val hits = operatorSourceHits(Seq("getNumPartitions"))
+    assert(hits.isEmpty,
+      "split count measured in operator code (call Tables.parallel or " +
+        "Tables.loadParallel):\n" + hits.mkString("\n"))
+  }
+
+  /** A `repartition(`/`repartitionByRange(` with column arguments; a
+    * bare count such as `repartition(p)` does not match. */
+  private val KeyedRepartition = """repartition(?:ByRange)?\((?!\s*[\w.]+\s*\))""".r
+
+  /** Offsets in `src` of each keyed repartition whose frame is
+    * materialized: the innermost call around it is `materialize(`, or
+    * a call chained after it names `materialize`. */
+  private def keyedRepartitionsMaterialized(src: String): Seq[Int] = {
+    // index just past the parenthesis that closes the one at `open`
+    def close(open: Int): Int = {
+      var depth = 1
+      var i = open + 1
+      while (depth > 0 && i < src.length) {
+        if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+        i += 1
+      }
+      i
+    }
+    // the name of the innermost unclosed call before `at`
+    def enclosingCall(at: Int): String = {
+      var depth = 0
+      var i = at - 1
+      while (i >= 0 && !(src(i) == '(' && depth == 0)) {
+        if (src(i) == ')') depth += 1 else if (src(i) == '(') depth -= 1
+        i -= 1
+      }
+      src.take(math.max(i, 0)).reverse
+        .takeWhile(c => c.isLetterOrDigit || c == '.').reverse
+    }
+    val call = """\A\s*\.\s*\w+\s*\(""".r
+    // the calls chained after `from`, in source form
+    def chained(from: Int): String =
+      call.findPrefixMatchOf(src.substring(from)).fold("") { m =>
+        val end = close(from + m.end - 1)
+        src.substring(from, end) + chained(end)
+      }
+    KeyedRepartition.findAllMatchIn(src).map(_.start).filter { o =>
+      enclosingCall(o).endsWith("materialize") ||
+        chained(close(src.indexOf('(', o))).contains("materialize")
+    }.toSeq
+  }
+
+  // A checkpoint keeps no partitioning under adaptive query execution
+  // (TablesSpec pins it), so a keyed repartition in front of
+  // Tables.materialize shuffles the relation once more and no consumer
+  // sees that shuffle. A count-only repartition(p), which spreads a
+  // single-split scan across cores, stays allowed.
+  test("no keyed repartition feeds Tables.materialize in operator sources") {
+    Seq("""Tables.materialize(edges.join(deg, "u").repartition(col("u")))""",
+        "edges\n  .repartition(col(\"u\"), col(\"v\"))\n  .select(\"u\")\n" +
+          "  .transform(Tables.materialize)",
+        """x.repartitionByRange(8, col("k")).transform(Tables.materialize)""")
+      .foreach(p => assert(keyedRepartitionsMaterialized(p).size === 1, p))
+    Seq("""docs.repartition(p).transform(Tables.materialize)""",
+        """x.repartition(4, col("k")).write.parquet(out)""",
+        """Tables.materialize(x.join(y.repartition(col("k")), "k"))""")
+      .foreach(p => assert(keyedRepartitionsMaterialized(p).isEmpty, p))
+    val hits = operatorSources(OperatorDirs).flatMap { case (p, lines) =>
+      val src = lines.map(l => if (l.trim.startsWith("//")) "" else l)
+        .mkString("\n")
+      keyedRepartitionsMaterialized(src).map { o =>
+        val i = src.take(o).count(_ == '\n')
+        s"$p:${i + 1}: ${lines(i).trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "keyed repartition in front of Tables.materialize (the checkpoint " +
+        "drops its partitioning; materialize the frame as it is):\n" +
+        hits.mkString("\n"))
   }
 }
