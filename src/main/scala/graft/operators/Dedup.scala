@@ -26,6 +26,8 @@ object Dedup {
 
   private[graft] val NumPerms = 16
   private[graft] val BandRows = 2 // 8 bands x 2 rows — recall-biased for low-J corpora
+  /** The bucket key of [[bandsOf]]'s rows. */
+  private val BandKey = Seq("band_id", "band_key")
   private[graft] val JaccardThreshold = 0.015
 
   /** The prefix-filter join's similarity bar (dedup_prefix_filter):
@@ -385,23 +387,49 @@ object Dedup {
   private def signatures(s: SparkSession, dir: String): DataFrame =
     signaturesFrom(shingled(s, dir))
 
-  /** (doc_id, band_id, band_key): the 8 two-row LSH band keys of each
-    * signature, comma-joined — engine-portable (mirrors MinhashBandsCte).
-    * Shared by the batch pair generator and the incremental corpus
-    * probe. */
-  private def bandsOf(withSig: DataFrame): DataFrame =
+  /** (doc_id, band_id, band_key): the NumPerms / `rows` LSH band keys of
+    * each signature, `rows` minima comma-joined — engine-portable
+    * (mirrors MinhashBandsCte at the default 8 bands x 2 rows). The one
+    * band explode of every batch minhash candidate generator, the
+    * incremental corpus probe and dedup_lsh_tune's legs. */
+  private[graft] def bandsOf(withSig: DataFrame, rows: Int = BandRows): DataFrame =
     withSig.select(
       col("doc_id"),
       // band count is a compile-time constant: unroll to an array
       // literal of codegen'd slices instead of a transform() lambda
       // (higher-order lambdas run interpreted)
-      explode(array((0 until NumPerms / BandRows).map { b =>
+      explode(array((0 until NumPerms / rows).map { b =>
         struct(
           lit(b.toLong).as("band_id"),
-          concat_ws(",", slice(col("sig"), b * BandRows + 1, BandRows))
+          concat_ws(",", slice(col("sig"), b * rows + 1, rows))
             .as("band_key"))
       }: _*)).as("band"))
       .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
+
+  /** (a_id, b_id) with a_id < b_id: one row per bucket of `rel` (rows
+    * equal on every column of `keys`) that the two `id`s share — the
+    * self-equi-join of every bucketed candidate generator. No DISTINCT:
+    * a pair sharing k buckets comes out k times, and the caller dedups
+    * (the star-capped generator unions its star edges first). */
+  private[graft] def bucketPairs(rel: DataFrame, id: String, keys: Seq[String]): DataFrame =
+    rel.as("x").join(rel.as("y"),
+        keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+          col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as("a_id"), col(s"y.$id").as("b_id"))
+
+  /** `rel` without the rows of its viral keys, the `keys` values shared
+    * by more than `cap` rows: a stop-word cap that keeps one boilerplate
+    * key from making a bucket self-join quadratic. The viral-key set
+    * ships as a broadcast left-anti join. Its bound: each viral key
+    * covers at least cap + 1 rows of `rel`, so there are at most
+    * |rel| / (cap + 1) of them. The count behind it is map-side
+    * combined. */
+  private[graft] def dropViral(rel: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val viral = rel.groupBy(keys.head, keys.tail: _*)
+      .agg(count(lit(1)).as("df")).filter(col("df") > cap)
+      .select(keys.head, keys.tail: _*)
+    rel.join(broadcast(viral), keys, "left_anti")
+  }
 
   /** Build-once/save for dedup_minhash_served's band index: the
     * EXISTING corpus's (doc_id, band_key, band_id) relation persisted as
@@ -439,10 +467,9 @@ object Dedup {
 
   /** Exact Jaccard for pairs sharing >= 1 shingle, via inverted index.
     * Shingles with document frequency above `maxDf` are dropped from the
-    * index (stop-shingle cap — see MaxShingleDF). The viral-shingle set
-    * is tiny by construction, so it ships as a broadcast anti-join;
-    * the DF aggregation itself is map-side combined. Package-visible so
-    * DedupSpec can exercise the cap with a synthetic viral shingle. */
+    * index (stop-shingle cap — see MaxShingleDF, applied by
+    * [[dropViral]]). Package-visible so DedupSpec can exercise the cap
+    * with a synthetic viral shingle. */
   private[graft] def jaccardPairs(
       shIn: DataFrame, maxDf: Int = MaxShingleDF): DataFrame = {
     // the shingle frame feeds four subtrees (sizes, DF count, and both
@@ -456,12 +483,8 @@ object Dedup {
     // self-join; locally the three computes run in parallel inside one
     // job over the sh checkpoint blocks (r14, measured: materializing
     // it costs more wall than the redundant explode)
-    val allPostings = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val viral = allPostings.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-      .select("shingle")
-    val postings = allPostings.join(broadcast(viral), Seq("shingle"), "left_anti")
+    val postings = dropViral(
+      sh.select(col("doc_id"), explode(col("sh")).as("shingle")), Seq("shingle"), maxDf)
     val a = postings.select(col("shingle"), col("doc_id").as("a_id"))
     val b = postings.select(col("shingle"), col("doc_id").as("b_id"))
     a.join(b, Seq("shingle"))
@@ -493,6 +516,14 @@ object Dedup {
   private[graft] def undirected(pairs: DataFrame): DataFrame =
     pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
+
+  /** The SQL mirror of [[undirected]]: the MATERIALIZED CTE `name`(u,
+    * `v`) holding both orientations of every row of the oracle's `pairs`
+    * CTE. */
+  private[graft] def undirectedSql(name: String, v: String = "v"): String =
+    s"""$name AS MATERIALIZED (
+          SELECT a_id AS u, b_id AS $v FROM pairs
+          UNION ALL SELECT b_id, a_id FROM pairs)"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1240,13 +1271,7 @@ object Dedup {
         // signatures feed the band keys AND the packed form: checkpoint
         // so the 16-permutation min-aggregate runs once
         val withSig = Tables.materialize(signaturesFrom(sh))
-        val bands = bandsOf(withSig)
-        val cand = bands.as("x").join(bands.as("y"),
-            col("x.band_id") === col("y.band_id") &&
-              col("x.band_key") === col("y.band_key") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-          .distinct()
+        val cand = bucketPairs(bandsOf(withSig), "doc_id", BandKey).distinct()
         val packedExpr = (0 until NumPerms).map(p =>
           shiftleft(pmod(element_at(col("sig"), p + 1), lit(8L)), 3 * p))
           .reduce(_ + _)
@@ -1532,7 +1557,7 @@ object Dedup {
           .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
-      Some("""WITH RECURSIVE tok AS (
+      Some(s"""WITH RECURSIVE tok AS (
                 SELECT doc_id, unnest(string_split(text, ' ')) AS t
                 FROM documents),
               h AS (
@@ -1558,9 +1583,7 @@ object Dedup {
                 FROM sg a, sg b
                 WHERE a.doc_id < b.doc_id
                   AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-              edges AS MATERIALIZED (
-                SELECT a_id AS u, b_id AS w FROM pairs
-                UNION ALL SELECT b_id, a_id FROM pairs),
+              ${undirectedSql("edges", v = "w")},
               reach(u, w) AS (
                 SELECT u, w FROM edges
                 UNION
@@ -1597,9 +1620,7 @@ object Dedup {
                  WHERE a.doc_id < b.doc_id
                    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
                      / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold),
-               edges AS MATERIALIZED (
-                 SELECT a_id AS u, b_id AS v FROM pairs
-                 UNION ALL SELECT b_id, a_id FROM pairs),
+               ${undirectedSql("edges")},
                reach(u, v) AS (
                  SELECT u, v FROM edges
                  UNION
@@ -1676,9 +1697,7 @@ object Dedup {
                  SELECT a_id, b_id FROM jpairs
                  UNION SELECT a_id, b_id FROM spairs
                  UNION SELECT a_id, b_id FROM epairs),
-               edges AS MATERIALIZED (
-                 SELECT a_id AS u, b_id AS v FROM pairs
-                 UNION ALL SELECT b_id, a_id FROM pairs),
+               ${undirectedSql("edges")},
                reach(u, v) AS (
                  SELECT u, v FROM edges
                  UNION
@@ -1803,24 +1822,14 @@ object Dedup {
       "dedup_substring",
       (s, dir) => {
         val W = 8
-        // tokenize ONCE into a materialized column before the window
-        // lambda: a split inside a transform() body runs interpreted and
-        // re-tokenizes per element (the bpeRounds CPU hazard)
-        val ts = col("ts")
-        val wins = when(size(ts) >= W,
-          transform(sequence(lit(0), size(ts) - W),
-            i => concat_ws(" ", slice(ts, i + lit(1), lit(W)))))
-          .otherwise(slice(ts, lit(1), lit(0)))
         // positional postings feed the viral-DF count and both join
         // sides; checkpoint so the corpus is windowed exactly once
         val postings = docsParallel(s, dir)
           .select(col("doc_id"), split(col("text"), " ").as("ts"))
-          .select(col("doc_id"), posexplode(wins).as(Seq("pos", "w")))
+          .select(col("doc_id"),
+            posexplode(TextAnalysis.tokenWindows(col("ts"), W)).as(Seq("pos", "w")))
           .transform(Tables.materialize)
-        val viral = postings.groupBy("w")
-          .agg(count(lit(1)).as("df")).filter(col("df") > MaxShingleDF)
-          .select("w")
-        val kept = postings.join(broadcast(viral), Seq("w"), "left_anti")
+        val kept = dropViral(postings, Seq("w"), MaxShingleDF)
         val m = kept.select(col("w"), col("doc_id").as("a_id"), col("pos").as("a_pos"))
           .join(kept.select(col("w"), col("doc_id").as("b_id"), col("pos").as("b_pos")),
             Seq("w"))
@@ -2099,9 +2108,7 @@ object Dedup {
                 JOIN d db ON db.doc_id = c.b_id
                 WHERE CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
                   / CAST(len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS DOUBLE) >= $JaccardThreshold),
-              edges AS MATERIALIZED (
-                SELECT a_id AS u, b_id AS w FROM pairs
-                UNION ALL SELECT b_id, a_id FROM pairs),
+              ${undirectedSql("edges", v = "w")},
               reach(u, w) AS (
                 SELECT u, w FROM edges
                 UNION
@@ -2169,12 +2176,7 @@ object Dedup {
         // bands materialized once (r14): the signature pipeline
         // otherwise ran twice — once per join side
         val bands = bandsOf(signaturesFrom(sh)).transform(Tables.materialize)
-        val mhCand = bands.as("x").join(bands.as("y"),
-            col("x.band_id") === col("y.band_id") &&
-              col("x.band_key") === col("y.band_key") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-          .distinct()
+        val mhCand = bucketPairs(bands, "doc_id", BandKey).distinct()
         val shCand = simhashChunkPairs(
             simhashedWide(s, dir), numChunks = 4, chunkBits = 15)
           .select("a_id", "b_id")
@@ -2316,9 +2318,7 @@ object Dedup {
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE $JaccardPairsCte,
-               edges AS MATERIALIZED (
-                 SELECT a_id AS u, b_id AS v FROM pairs
-                 UNION ALL SELECT b_id, a_id FROM pairs),
+               ${undirectedSql("edges")},
                reach(u, v) AS (
                  SELECT u, v FROM edges
                  UNION
@@ -2358,9 +2358,7 @@ object Dedup {
           .orderBy("cluster_size")
       },
       Some(s"""WITH RECURSIVE $JaccardPairsCte,
-               edges AS MATERIALIZED (
-                 SELECT a_id AS u, b_id AS v FROM pairs
-                 UNION ALL SELECT b_id, a_id FROM pairs),
+               ${undirectedSql("edges")},
                reach(u, v) AS (
                  SELECT u, v FROM edges
                  UNION
@@ -2407,23 +2405,8 @@ object Dedup {
         // per-leg cand localCheckpoint (3 eager barriers serializing
         // the legs) is gone and all three legs compute in parallel
         // inside the one closing job. Same counts, same types.
-        def leg(rows: Int): DataFrame = {
-          val bands = withSig.select(
-            col("doc_id"),
-            explode(array((0 until NumPerms / rows).map { b =>
-              struct(
-                lit(b.toLong).as("band_id"),
-                concat_ws(",", slice(col("sig"), b * rows + 1, rows))
-                  .as("band_key"))
-            }: _*)).as("band"))
-            .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
-          val cand = bands.as("x").join(bands.as("y"),
-              col("x.band_id") === col("y.band_id") &&
-                col("x.band_key") === col("y.band_key") &&
-                col("x.doc_id") < col("y.doc_id"))
-            .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-            .distinct()
-          cand
+        def leg(rows: Int): DataFrame =
+          bucketPairs(bandsOf(withSig, rows), "doc_id", BandKey).distinct()
             .join(broadcast(truth.withColumn("t", lit(1))),
               Seq("a_id", "b_id"), "left")
             .agg(count(lit(1)).as("n_candidates"),
@@ -2439,7 +2422,6 @@ object Dedup {
               (if (nTruth == 0) lit(0.0)
                else col("hit").cast("double") / lit(nTruth.toDouble))
                 .as("recall"))
-        }
         LshTuneRows.map(leg).reduce(_ union _).orderBy("band_rows")
       },
       Some(LshTuneOracleSql)),
@@ -2844,39 +2826,12 @@ object Dedup {
     * share ONE checkpoint instead of rebuilding the signature pipeline
     * per leg. */
   private[graft] def bandRowsChk(sh: DataFrame): DataFrame =
-    Tables.materialize(bandRows(sh))
+    Tables.materialize(bandsOf(signaturesFrom(sh)))
 
   private[graft] def bandCandidatesFromRows(
-      bands0: DataFrame, cap: Option[Int]): DataFrame = {
-    val bands = cap match {
-      case None => bands0
-      case Some(c) =>
-        val viral = bands0.groupBy("band_id", "band_key")
-          .agg(count(lit(1)).as("df")).filter(col("df") > c)
-          .select("band_id", "band_key")
-        bands0.join(broadcast(viral), Seq("band_id", "band_key"),
-          "left_anti")
-    }
-    bands.as("x").join(bands.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+      bands0: DataFrame, cap: Option[Int]): DataFrame =
+    bucketPairs(cap.fold(bands0)(dropViral(bands0, BandKey, _)), "doc_id", BandKey)
       .distinct()
-  }
-
-  /** The (doc_id, band_id, band_key) posting relation — the one banding
-    * layout every minhash candidate generator derives from. */
-  private def bandRows(sh: DataFrame): DataFrame =
-    signaturesFrom(sh).select(
-      col("doc_id"),
-      explode(array((0 until NumPerms / BandRows).map { b =>
-        struct(
-          lit(b.toLong).as("band_id"),
-          concat_ws(",", slice(col("sig"), b * BandRows + 1, BandRows))
-            .as("band_key"))
-      }: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
 
   /** STAR-capped banding candidates — the third viral posture (r13),
     * for CLUSTER-collapse consumers. The wholesale-drop cap
@@ -2907,17 +2862,13 @@ object Dedup {
     // (both sides) and the star leg — un-checkpointed, the whole
     // signature pipeline (shingle explode → md5 → 16 min-aggregates →
     // band explode) ran three times.
-    val stat = bandRows(sh)
+    val stat = bandsOf(signaturesFrom(sh))
       .withColumn("bdf", count(lit(1)).over(wB))
       .withColumn("anchor", min("doc_id").over(wB))
       .transform(Tables.materialize)
-    val small = stat.filter(col("bdf") <= cap)
-      .select("doc_id", "band_id", "band_key")
-    val smallPairs = small.as("x").join(small.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+    val smallPairs = bucketPairs(
+      stat.filter(col("bdf") <= cap).select("doc_id", "band_id", "band_key"),
+      "doc_id", BandKey)
     val starPairs = stat.filter(col("bdf") > cap &&
         col("doc_id") =!= col("anchor"))
       .select(col("anchor").as("a_id"), col("doc_id").as("b_id"))

@@ -376,9 +376,7 @@ object Graph {
           .orderBy("a_id", "b_id")
       },
       Some(s"""WITH ${Dedup.JaccardPairsCte},
-                 e AS MATERIALIZED (
-                   SELECT a_id AS u, b_id AS v FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
+                 ${Dedup.undirectedSql("e")},
                  deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
                  w AS (
                    SELECT e1.v AS a, e2.v AS b, d.deg AS deg_z
@@ -428,9 +426,7 @@ object Graph {
         neighborSimCapped(edges)
       },
       Some(s"""WITH ${Dedup.JaccardPairsCte},
-                 e AS MATERIALIZED (
-                   SELECT a_id AS u, b_id AS v FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
+                 ${Dedup.undirectedSql("e")},
                  deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
                  cap AS (
                    SELECT u, v FROM (
@@ -867,9 +863,7 @@ object Graph {
     * PagerankOracleSql so round count and tie-break can never drift. */
   private lazy val LabelPropOracleSql: String =
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           $LpaRoundsCte
         SELECT f.doc_id, f.label AS community,
           sz.community_size
@@ -885,9 +879,7 @@ object Graph {
     * the score matches bit-for-bit. */
   private lazy val ModularityOracleSql: String =
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           $LpaRoundsCte,
           deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
           mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs),
@@ -917,9 +909,7 @@ object Graph {
     * in the identical operand order. */
   private lazy val ConductanceOracleSql: String =
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           $LpaRoundsCte,
           lab AS (
             SELECT p.a_id, p.b_id, x.label AS la, y.label AS lb
@@ -966,9 +956,7 @@ object Graph {
               GROUP BY e.v) c ON c.v = doc.doc_id)"""
     }.mkString(",\n")
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
           r0 AS MATERIALIZED (
             SELECT doc_id,
@@ -980,14 +968,6 @@ object Graph {
         FROM r$Iters ORDER BY doc_id"""
   }
 
-  /** The synchronous label-propagation rounds — shared by
-    * graph_labelprop and graph_modularity so the communities scored are
-    * exactly the communities reported. One edges×labels equi-join, one
-    * (v,label) count, one per-v argmax window per round. */
-  /** Core of graph_neighbor_sim_capped over an undirected (u,v) edge
-    * frame — extracted so fixture tests can drive it on hand-built dense
-    * graphs where the cap actually bites. See the QueryDef comment for
-    * the reverse-cap Jaccard semantics and the [0,1] argument. */
   /** One synchronous k-core peel round over an undirected (u, v) edge
     * frame: degree count + two node-id semi-joins — never cartesian.
     * Extracted (r14) so the QueryDef can materialize each round
@@ -1002,6 +982,10 @@ object Graph {
       .select("u", "v")
   }
 
+  /** Core of graph_neighbor_sim_capped over an undirected (u,v) edge
+    * frame — extracted so fixture tests can drive it on hand-built dense
+    * graphs where the cap actually bites. See the QueryDef comment for
+    * the reverse-cap Jaccard semantics and the [0,1] argument. */
   private[graft] def neighborSimCapped(edges: DataFrame): DataFrame = {
     val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
     val capW = Window.partitionBy("u").orderBy("v")
@@ -1028,6 +1012,10 @@ object Graph {
       .orderBy("a_id", "b_id")
   }
 
+  /** The synchronous label-propagation rounds — shared by
+    * graph_labelprop and graph_modularity so the communities scored are
+    * exactly the communities reported. One edges×labels equi-join, one
+    * (v,label) count, one per-v argmax window per round. */
   private def lpaLabels(docs: DataFrame, edges: DataFrame): DataFrame = {
     // r14 restructure, results identical:
     //  - edges materialized once, so no round recomputes the pair
@@ -1118,9 +1106,7 @@ object Graph {
               GROUP BY e.v) c ON c.v = doc.doc_id)"""
     }.mkString(",\n")
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
           r0 AS MATERIALIZED (
             SELECT doc_id,
@@ -1151,9 +1137,7 @@ object Graph {
             WHERE rn = 1)"""
     }.mkString(",\n")
     s"""WITH ${Dedup.JaccardPairsCte},
-          e AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e")},
           w0 AS MATERIALIZED (SELECT DISTINCT u AS doc_id, u AS cur FROM e),
           $steps
         SELECT doc_id, ${(1 to WalkSteps).map(j => s"step$j").mkString(", ")}
@@ -1171,9 +1155,7 @@ object Graph {
               AND e.v IN (SELECT u FROM k$i))"""
     }.mkString(",\n")
     s"""WITH ${Dedup.JaccardPairsCte},
-          e0 AS MATERIALIZED (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION ALL SELECT b_id, a_id FROM pairs),
+          ${Dedup.undirectedSql("e0")},
           $rounds
         SELECT u AS doc_id, count(*) AS core_degree
         FROM e$KcoreRounds GROUP BY u ORDER BY doc_id"""

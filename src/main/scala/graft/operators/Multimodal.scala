@@ -1174,10 +1174,8 @@ object Multimodal {
     QueryDef(
       "mm_cdc_match",
       (s, dir) => {
-        val hs = Tables.materialize(cdcChunks(s, dir))
-        val viral = hs.groupBy("ch").agg(count(lit(1)).as("df"))
-          .filter(col("df") > CdcMaxChunkDf).select("ch")
-        val kept = hs.join(broadcast(viral), Seq("ch"), "left_anti")
+        val kept = Dedup.dropViral(
+          Tables.materialize(cdcChunks(s, dir)), Seq("ch"), CdcMaxChunkDf)
         kept.select(col("ch"), col("doc_id").as("a_id"))
           .join(kept.select(col("ch"), col("doc_id").as("b_id")), Seq("ch"))
           .filter(col("a_id") < col("b_id"))
@@ -1240,28 +1238,19 @@ object Multimodal {
     QueryDef(
       "mm_contamination",
       (s, dir) => {
-        val W = 8
-        val ts = col("ts")
-        val wins = when(size(ts) >= W,
-          transform(sequence(lit(0), size(ts) - W),
-            i => concat_ws(" ", slice(ts, i + lit(1), lit(W)))))
-          .otherwise(slice(ts, lit(1), lit(0)))
         val postings = docs(s, dir)
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
-          .select(col("doc_id"), explode(array_distinct(wins)).as("w"))
+          .select(col("doc_id"),
+            explode(array_distinct(TextAnalysis.tokenWindows(col("ts"), 8))).as("w"))
           .transform(Tables.materialize) // feeds the DF cap and both split sides
-        val viralW = postings.groupBy("w").agg(count(lit(1)).as("df"))
-          .filter(col("df") > 10000).select("w")
-        val keptW = postings.join(broadcast(viralW), Seq("w"), "left_anti")
+        val keptW = Dedup.dropViral(postings, Seq("w"), 10000)
         val txt = keptW.filter(col("doc_id") % 11 =!= 0)
           .join(keptW.filter(col("doc_id") % 11 === 0)
             .select(col("w"), col("doc_id").as("bench_id")), Seq("w"))
           .groupBy("doc_id", "bench_id")
           .agg(count(lit(1)).as("n_shared_windows"))
-        val hs = Tables.materialize(cdcChunks(s, dir, wavOnly = false))
-        val viralC = hs.groupBy("ch").agg(count(lit(1)).as("df"))
-          .filter(col("df") > CdcMaxChunkDf).select("ch")
-        val keptC = hs.join(broadcast(viralC), Seq("ch"), "left_anti")
+        val keptC = Dedup.dropViral(
+          Tables.materialize(cdcChunks(s, dir, wavOnly = false)), Seq("ch"), CdcMaxChunkDf)
         val med = keptC.filter(col("doc_id") % 11 =!= 0)
           .join(keptC.filter(col("doc_id") % 11 === 0)
             .select(col("ch"), col("doc_id").as("bench_id")), Seq("ch"))

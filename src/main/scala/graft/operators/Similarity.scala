@@ -1239,28 +1239,10 @@ object Similarity {
     // graph is oracle-checked bit-for-bit.
     QueryDef(
       "sim_knn_graph",
-      (s, dir) => {
-        val bands = cappedBands(bandKeys(embParallel(s, dir)))
-        val cand = bands.as("x").join(bands.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.band_val") === col("y.band_val") &&
-              col("x.vec_id") =!= col("y.vec_id"))
-          .select(col("x.vec_id").as("src_id"), col("y.vec_id").as("nbr_id"))
-          .distinct()
-        val e = emb(s, dir)
-        val w = Window.partitionBy(col("src_id"))
-          .orderBy(col("cos").desc, col("nbr_id"))
-        cand
-          .join(e.select(col("vec_id").as("src_id"), col("embedding").as("s_emb")),
-            Seq("src_id"))
-          .join(e.select(col("vec_id").as("nbr_id"), col("embedding").as("n_emb")),
-            Seq("nbr_id"))
-          .select(col("src_id"), col("nbr_id"),
-            CosineSimilarity(s, col("s_emb"), col("n_emb")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= KnnGraphK)
-          .orderBy("src_id", "rank")
-      },
+      (s, dir) =>
+        knnGraphEdges(s, embParallel(s, dir), emb(s, dir))
+          .withColumn("rank", col("rank").cast("long"))
+          .orderBy("src_id", "rank"),
       Some(s"""WITH ${bandKeysSql()},
                cand AS (
                  SELECT DISTINCT x.vec_id AS src_id, y.vec_id AS nbr_id
@@ -1305,9 +1287,11 @@ object Similarity {
     // build AND every beam round bit-for-bit.
     QueryDef(
       "sim_ann_graph_search",
-      (s, dir) => graphBeamSearch(s, dir,
-        knnGraphEdges(s, embParallel(s, dir))
-          .transform(Tables.materialize)), // all rounds expand against ONE build
+      (s, dir) => {
+        val e = embParallel(s, dir)
+        graphBeamSearch(s, dir, knnGraphEdges(s, e, e).select("src_id", "nbr_id")
+          .transform(Tables.materialize)) // all rounds expand against ONE build
+      },
       Some(graphSearchSql())),
 
     // The graph family's SERVED form (r12, adjudication #5 follow-up):
@@ -1869,11 +1853,6 @@ object Similarity {
           CAST(rank AS BIGINT) AS rank
         FROM r WHERE rank <= $TopK ORDER BY q_id, rank"""
 
-  /** (a_id, b_id, cos): embedding-cosine near-duplicate pairs above
-    * NearDupThreshold via banded LSH candidates + exact-cosine
-    * verification — the body of sim_embed_neardup, exposed so the
-    * multi-generator cluster collapse (Dedup.dedup_cluster_multi) can
-    * union these pairs with the text-based candidate generators. */
   /** Viral-bucket cap for the banded-LSH SELF-join paths (near-dup
     * candidates, knn graph). The r8 sf1 growth run measured the uncapped
     * band join at e≈2.0: with 4-bit bands (16 bucket values) a uniform
@@ -1893,13 +1872,14 @@ object Similarity {
     * it — the round-7 "lazy val below defs" gotcha, Int edition. */
   private[graft] final val BandBucketCap = 1000
 
-  private def cappedBands(bands: DataFrame): DataFrame = {
-    val viral = bands.groupBy("band", "band_val")
-      .agg(count(lit(1)).as("df")).filter(col("df") > BandBucketCap)
-      .select("band", "band_val")
-    bands.join(broadcast(viral), Seq("band", "band_val"), "left_anti")
-  }
+  /** The bucket key of [[bandKeys]]' rows. */
+  private val BandKey = Seq("band", "band_val")
 
+  /** (a_id, b_id, cos): embedding-cosine near-duplicate pairs above
+    * NearDupThreshold via banded LSH candidates + exact-cosine
+    * verification — the body of sim_embed_neardup, exposed so the
+    * multi-generator cluster collapse (Dedup.dedup_cluster_multi) can
+    * union these pairs with the text-based candidate generators. */
   private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     // band keys materialized ONCE (r14): the banded frame feeds the
     // viral-bucket aggregate, the anti-join, and BOTH self-join sides —
@@ -1911,13 +1891,8 @@ object Similarity {
     // kept stays lazy: it is a broadcast anti-join PROJECTION of the
     // materialized bands — recomputing it per self-join side is a block
     // read, cheaper than a second eager barrier (r14 measured)
-    val kept = cappedBands(bands)
-    val cand = kept.as("x").join(kept.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
+    val kept = Dedup.dropViral(bands, BandKey, BandBucketCap)
+    val cand = Dedup.bucketPairs(kept, "vec_id", BandKey).distinct()
     val e = emb(s, dir)
     cand
       .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), Seq("a_id"))
@@ -2013,17 +1988,15 @@ object Similarity {
             ON w.band = v.band AND w.band_val = v.band_val
           WHERE w.band IS NULL)"""
 
-  /** DuckDB replay of sim_ann_graph_search: the sim_knn_graph edge CTEs
-    * (MATERIALIZED — the knn relation is probed by every beam round and
-    * an inlined copy would re-run the band build per round), then each
-    * beam round as a cand/scored/beam CTE triple, built programmatically
-    * so the Spark loop and the oracle can never disagree on round count
-    * (the graph_pagerank oracle discipline). */
-  /** The sim_knn_graph edge relation (src_id, nbr_id), rank-capped to
-    * KnnGraphK per source — ONE definition feeding the inline search,
-    * the served index build, and (via the same shape) sim_knn_graph. */
-  private def knnGraphEdges(s: SparkSession, e: DataFrame): DataFrame = {
-    val bands = cappedBands(bandKeys(e))
+  /** The k-NN graph (src_id, nbr_id, cos, rank): for each vector of
+    * `e`, its top KnnGraphK band-colliding neighbors by exact cosine, the
+    * embeddings read from `vecs`; rank is an int from 1. ONE definition
+    * feeding sim_knn_graph, the inline search and the served index
+    * build. The candidates are directed (x != y, both orientations),
+    * unlike [[Dedup.bucketPairs]]' a_id < b_id: "a is b's neighbor" is
+    * not symmetric once ranked. */
+  private def knnGraphEdges(s: SparkSession, e: DataFrame, vecs: DataFrame): DataFrame = {
+    val bands = Dedup.dropViral(bandKeys(e), BandKey, BandBucketCap)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_val") === col("y.band_val") &&
@@ -2033,15 +2006,14 @@ object Similarity {
     val w = Window.partitionBy(col("src_id"))
       .orderBy(col("cos").desc, col("nbr_id"))
     cand
-      .join(e.select(col("vec_id").as("src_id"),
+      .join(vecs.select(col("vec_id").as("src_id"),
         col("embedding").as("s_emb")), Seq("src_id"))
-      .join(e.select(col("vec_id").as("nbr_id"),
+      .join(vecs.select(col("vec_id").as("nbr_id"),
         col("embedding").as("n_emb")), Seq("nbr_id"))
       .select(col("src_id"), col("nbr_id"),
         CosineSimilarity(s, col("s_emb"), col("n_emb")).as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= KnnGraphK)
-      .select("src_id", "nbr_id")
   }
 
   /** Build-once/save/load for the k-NN graph index — the ivfIndexDir
@@ -2049,7 +2021,8 @@ object Similarity {
   private[graft] def knnIndexDir(s: SparkSession, dir: String): String =
     Tables.memo(dir, "embeddings", "knn_index") {
       val p = graft.jvmScratchDir("graft_knn_index")
-      knnGraphEdges(s, embParallel(s, dir))
+      val e = embParallel(s, dir)
+      knnGraphEdges(s, e, e).select("src_id", "nbr_id")
         .write.mode("overwrite").parquet(s"$p/edges")
       p.toString
     }
@@ -2106,6 +2079,12 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
+  /** DuckDB replay of sim_ann_graph_search: the sim_knn_graph edge CTEs
+    * (MATERIALIZED — the knn relation is probed by every beam round and
+    * an inlined copy would re-run the band build per round), then each
+    * beam round as a cand/scored/beam CTE triple, built programmatically
+    * so the Spark loop and the oracle can never disagree on round count
+    * (the graph_pagerank oracle discipline). */
   private def graphSearchSql(): String = {
     val rounds = (1 to GraphSearchRounds).map { t =>
       val prev = if (t == 1) "beam0" else s"beam${t - 1}"

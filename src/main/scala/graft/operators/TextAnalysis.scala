@@ -43,6 +43,16 @@ object TextAnalysis {
 
   def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
 
+  /** The `w`-token windows of a token-array column, each space-joined,
+    * in position order; empty when `ts` has fewer than `w` tokens. The
+    * lambda runs interpreted, so `ts` should be a materialized column,
+    * not a split inside the lambda (the bpeRounds CPU hazard). */
+  def tokenWindows(ts: Column, w: Int): Column =
+    when(size(ts) >= w,
+      transform(sequence(lit(0), size(ts) - w),
+        i => concat_ws(" ", slice(ts, i + lit(1), lit(w)))))
+      .otherwise(slice(ts, lit(1), lit(0)))
+
   private val stopwords = Seq("the", "a", "and", "of", "to", "is", "in")
 
   // Temperature sampling (sample_temperature): keep-probability
@@ -1755,20 +1765,11 @@ object TextAnalysis {
     QueryDef(
       "text_contamination",
       (s, dir) => {
-        val W = 8
-        val ts = col("ts")
-        val wins = when(size(ts) >= W,
-          transform(sequence(lit(0), size(ts) - W),
-            i => concat_ws(" ", slice(ts, i + lit(1), lit(W)))))
-          .otherwise(slice(ts, lit(1), lit(0)))
         val postings = Tables.loadParallel(s, dir, "documents")
           .select(col("doc_id"), tokens(col("text")).as("ts"))
-          .select(col("doc_id"), explode(array_distinct(wins)).as("w"))
+          .select(col("doc_id"), explode(array_distinct(tokenWindows(col("ts"), 8))).as("w"))
           .transform(Tables.materialize) // windows feed the DF cap and both join sides
-        val viral = postings.groupBy("w")
-          .agg(count(lit(1)).as("df")).filter(col("df") > 10000)
-          .select("w")
-        val kept = postings.join(broadcast(viral), Seq("w"), "left_anti")
+        val kept = Dedup.dropViral(postings, Seq("w"), 10000)
         val bench = kept.filter(col("doc_id") % 11 === 0)
           .select(col("w"), col("doc_id").as("bench_id"))
         kept.filter(col("doc_id") % 11 =!= 0)

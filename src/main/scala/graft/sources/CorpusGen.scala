@@ -177,6 +177,11 @@ object CorpusGen {
       "documents" -> documents, "embeddings" -> embeddings)
   }
 
+  /** Template doc id of the `clique` mode's viral family. 57 ≡ 17
+    * (mod 20), so clique ids (≡ 57 mod 100) are arithmetically disjoint
+    * from the regular planted-dup ids (≡ 19 mod 20). */
+  val CliqueTemplate = 57L
+
   /** Heaps-law corpus (round-11 verdict task #1): the fixed 31-word
     * vocabulary saturates at scale — by sf10 every one of the 29,791
     * possible trigram shingles exists with df ≈ 880+ (Σdf² ≈ 2.3×10¹⁰
@@ -206,11 +211,6 @@ object CorpusGen {
     * the planted pair set (dup_id, dup_id − off) is recoverable by any
     * evaluator from doc_id arithmetic alone. All non-document tables
     * stay healthy. */
-  /** Template doc id of the `clique` mode's viral family. 57 ≡ 17
-    * (mod 20), so clique ids (≡ 57 mod 100) are arithmetically disjoint
-    * from the regular planted-dup ids (≡ 19 mod 20). */
-  val CliqueTemplate = 57L
-
   def heapsDocuments(spark: SparkSession, nDocs: Long, seed: Long,
       clique: Boolean = false): DataFrame = {
     val meanWords = (10 + 99) / 2.0

@@ -435,7 +435,6 @@ object StreamOps {
       .orderBy("user_id")
   }
 
-  /** Raw event stream with a µs timestamp column. */
   /** Typed rows for the transformWithState per-user stats processor. */
   final case class TwsIn(user_id: Long, us: Long, value: Double)
   final case class TwsOut(user_id: Long, n_events: Long, max_value: Double,
@@ -634,6 +633,7 @@ object StreamOps {
       .orderBy("user_id", "event_type")
   }
 
+  /** Raw event stream with a µs timestamp column. */
   private def rawEventStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = graft.Tables.fileSchema(s, dir, "events")
@@ -682,26 +682,6 @@ object StreamOps {
       .orderBy("purchase_id")
   }
 
-  /** Stream-stream LEFT OUTER interval join — the null-padding-on-
-    * watermark-expiry shape CDC enrichment pipelines hit first: every
-    * purchase emits, clicks attached when they exist, null-padded
-    * otherwise — but the null-padded row may only be emitted once the
-    * watermark has passed the purchase's join window (no earlier click
-    * can still arrive). State stays bounded exactly as in the inner
-    * form: one hour of clicks per user plus unresolved purchases, both
-    * evicted at the watermark.
-    *
-    * To make the finite-corpus run equal the batch LEFT JOIN oracle,
-    * the source is staged into a scratch dir and, after the corpus is
-    * consumed, a sentinel click+purchase pair far past the corpus max
-    * event time lands as a second file: it advances BOTH sides'
-    * watermarks (the query watermark is the min) past every real
-    * purchase, so every real unmatched purchase null-pads. The sentinel
-    * purchase itself stays unresolved in state (nothing is ever later
-    * than it) and the sentinel click matches no purchase — neither
-    * reaches the output, and both carry user_id -1 which is filtered
-    * defensively anyway. The per-batch emission order (padded rows only
-    * after the watermark passes) is proven in StreamCancelSpec. */
   /** Staged file-source dir for watermark-closure runs: the corpus
     * parquet is copied in as the first file; `addSentinel()` later
     * drops a file with one sentinel event per requested type, 10 hours
@@ -769,6 +749,26 @@ object StreamOps {
       }
   }
 
+  /** Stream-stream LEFT OUTER interval join — the null-padding-on-
+    * watermark-expiry shape CDC enrichment pipelines hit first: every
+    * purchase emits, clicks attached when they exist, null-padded
+    * otherwise — but the null-padded row may only be emitted once the
+    * watermark has passed the purchase's join window (no earlier click
+    * can still arrive). State stays bounded exactly as in the inner
+    * form: one hour of clicks per user plus unresolved purchases, both
+    * evicted at the watermark.
+    *
+    * To make the finite-corpus run equal the batch LEFT JOIN oracle,
+    * the source is staged into a scratch dir and, after the corpus is
+    * consumed, a sentinel click+purchase pair far past the corpus max
+    * event time lands as a second file: it advances BOTH sides'
+    * watermarks (the query watermark is the min) past every real
+    * purchase, so every real unmatched purchase null-pads. The sentinel
+    * purchase itself stays unresolved in state (nothing is ever later
+    * than it) and the sentinel click matches no purchase — neither
+    * reaches the output, and both carry user_id -1 which is filtered
+    * defensively anyway. The per-batch emission order (padded rows only
+    * after the watermark passes) is proven in StreamCancelSpec. */
   def intervalJoinLeftOuter(s: SparkSession, dir: String): DataFrame = {
     val staged = new SentinelStage(s, dir)
     val schema = staged.schema
@@ -1264,6 +1264,31 @@ object StreamOps {
     out.iterator
   }
 
+  /** (band_id, band_key, doc_id) streamed from the documents file: each
+    * row's 16-perm MinHash signature computed map-side (the per-row HOF
+    * form — no streaming aggregation needed), exploded into the 8
+    * two-row LSH band keys of the batch [[graft.operators.Dedup.bandsOf]]
+    * with an int band_id. The band source of both streaming near-dup
+    * forms. */
+  private def bandStream(s: SparkSession, dir: String): DataFrame = {
+    import graft.functions.EngineFns.{minhashSig, shingles}
+    import graft.operators.Dedup.{BandRows, NumPerms}
+    val schema = graft.Tables.fileSchema(s, dir, "documents")
+    s.readStream
+      .schema(schema)
+      .option("pathGlobFilter", "documents.parquet")
+      .parquet(dir)
+      .select(col("doc_id"),
+        minhashSig(shingles(col("text"), 3), NumPerms).as("sig"))
+      .select(col("doc_id"),
+        explode(transform(sequence(lit(0), lit(NumPerms / BandRows - 1)), b =>
+          struct(
+            b.cast("int").as("band_id"),
+            concat_ws(",", slice(col("sig"), b * BandRows + lit(1), lit(BandRows)))
+              .as("band_key")))).as("band"))
+      .select(col("band.band_id"), col("band.band_key"), col("doc_id"))
+  }
+
   /** Streaming MinHash near-dup — the streaming half of the pipeline's
     * flagship dedup operator: documents stream in, each row computes its
     * 16-perm MinHash signature map-side (the per-row HOF form — no
@@ -1279,24 +1304,8 @@ object StreamOps {
     * the ingest-time watermark. */
   def streamingNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.EngineFns.{minhashSig, shingles}
-    import graft.operators.Dedup.{BandRows, NumPerms}
-    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_neardup_${nameCounter.incrementAndGet()}"
-    val bands = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"),
-        minhashSig(shingles(col("text"), 3), NumPerms).as("sig"))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(NumPerms / BandRows - 1)), b =>
-          struct(
-            b.cast("int").as("band_id"),
-            concat_ws(",", slice(col("sig"), b * BandRows + lit(1), lit(BandRows)))
-              .as("band_key")))).as("band"))
-      .select(col("band.band_id"), col("band.band_key"), col("doc_id"))
-      .as[BandDoc]
+    val bands = bandStream(s, dir).as[BandDoc]
     val q = bands
       .groupByKey(b => (b.band_id, b.band_key))
       .flatMapGroupsWithState[Seq[Long], CandPair](
@@ -1383,23 +1392,8 @@ object StreamOps {
     * exact-Jaccard verification; oracle adds the ingest-gap predicate. */
   def streamingNearDupTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.EngineFns.{minhashSig, shingles}
-    import graft.operators.Dedup.{BandRows, NumPerms}
-    val schema = graft.Tables.fileSchema(s, dir, "documents")
     val sink = s"graft_stream_neardup_ttl_${nameCounter.incrementAndGet()}"
-    val bands = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"),
-        minhashSig(shingles(col("text"), 3), NumPerms).as("sig"))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(NumPerms / BandRows - 1)), b =>
-          struct(
-            b.cast("int").as("band_id"),
-            concat_ws(",", slice(col("sig"), b * BandRows + lit(1), lit(BandRows)))
-              .as("band_key")))).as("band"))
-      .select(col("band.band_id"), col("band.band_key"), col("doc_id"))
+    val bands = bandStream(s, dir)
       .withColumn("ts", docEventTime)
       .withWatermark("ts", "1 minute")
       .as[BandDocT]

@@ -98,6 +98,17 @@ class BenchSpec extends AnyFunSuite {
         "hashpartitioning(v#13L, 4)")))
   }
 
+  test("PlanDump shows a query's construction checkpoints before its final plan") {
+    val txt = PlanDump.dump(spark, Registry.byName("dedup_minhash_pairs"), TestSpark.sf)
+    val checkpoint = "(?m)^== execution \\d+: localCheckpoint at Dedup\\.scala:\\d+ ==$".r
+      .findFirstMatchIn(txt)
+    val last = txt.indexOf("== final plan ==")
+    assert(checkpoint.isDefined, txt.take(2000))
+    assert(last > checkpoint.get.start, txt.take(2000))
+    assert(!txt.substring(last).contains("== execution"))
+    assert(!txt.matches("(?s).*#\\d.*"), "expression ids are normalized")
+  }
+
   test("a gate-log line parses back to the values written") {
     val tricky = "a \"quoted\" \\ path\nnext\tcol\u0001end"
     val fields = Seq("ts" -> "2026-01-01T00:00:00Z", "sql" -> tricky,

@@ -228,6 +228,27 @@ class DedupTextSpec extends AnyFunSuite {
     assert(uncapped === 66)
   }
 
+  test("bucketPairs: one row per shared bucket, a_id < b_id, no self-pairs") {
+    // docs 3 and 7 share buckets (0, "x") and (1, "y"); doc 5 shares
+    // (1, "y") only; doc 9 is alone in its bucket
+    val rel = Seq((7L, 0L, "x"), (3L, 0L, "x"), (7L, 1L, "y"), (3L, 1L, "y"),
+      (5L, 1L, "y"), (9L, 2L, "z")).toDF("doc_id", "band_id", "band_key")
+    val pairs = operators.Dedup.bucketPairs(rel, "doc_id", Seq("band_id", "band_key"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.sorted === Seq((3L, 5L), (3L, 7L), (3L, 7L), (5L, 7L)))
+    assert(pairs.forall { case (a, b) => a < b })
+  }
+
+  test("dropViral keeps a key with df == cap and drops one with df == cap + 1") {
+    val cap = 3
+    val rel = ((0L until cap.toLong).map(_ -> "at_cap") ++
+      (0L to cap.toLong).map(_ -> "past_cap") :+ (0L -> "rare"))
+      .toDF("doc_id", "w")
+    val kept = operators.Dedup.dropViral(rel, Seq("w"), cap)
+      .groupBy("w").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(kept === Map("at_cap" -> cap.toLong, "rare" -> 1L))
+  }
+
   test("jaccardPairs reads an already-checkpointed shingle frame as it is") {
     // dedup_eval and dedup_lsh_tune checkpoint the shingle frame they
     // share; checkpointing it again inside jaccardPairs would be one more

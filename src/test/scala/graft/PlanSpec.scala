@@ -139,6 +139,24 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"cartesian product shipped:\n$p")
   }
 
+  test("dropViral plans a broadcast anti-join; bucketPairs an equi-join on its keys") {
+    import spark.implicits._
+    val rel = Seq((1L, 0L, "x"), (2L, 0L, "x"), (3L, 1L, "y"))
+      .toDF("doc_id", "band_id", "band_key")
+    val keys = Seq("band_id", "band_key")
+    val anti = operators.Dedup.dropViral(rel, keys, 1).queryExecution.executedPlan.toString
+    assert("BroadcastHashJoin \\[[^\\]]*\\], \\[[^\\]]*\\], LeftAnti".r.findFirstIn(anti).isDefined,
+      s"viral keys not a broadcast anti-join:\n$anti")
+    val pairs = operators.Dedup.bucketPairs(rel, "doc_id", keys)
+      .queryExecution.executedPlan.toString
+    val onKeys = ("(BroadcastHash|SortMerge|ShuffledHash)Join " +
+      "\\[band_id#\\d+L, band_key#\\d+\\], \\[band_id#\\d+L, band_key#\\d+\\], Inner").r
+    assert(onKeys.findFirstIn(pairs).isDefined,
+      s"bucket self-join not an equi-join on the keys:\n$pairs")
+    assert(!pairs.contains("BroadcastNestedLoopJoin"), s"O(n^2) join shipped:\n$pairs")
+    assert(!pairs.contains("CartesianProduct"), s"cartesian product shipped:\n$pairs")
+  }
+
   test("text_pack is one window shuffle plus the presentation sort") {
     val p = plan("text_pack")
     assert("Exchange".r.findAllIn(p).size === 2,

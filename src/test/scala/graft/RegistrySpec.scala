@@ -55,14 +55,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  /** A non-comment operator-source line, with the line above it and the
-    * name of the registry query whose body holds it ("" outside one). */
+  /** A non-comment operator-source line, with the lines above and below
+    * it, the name of the registry query whose body holds it ("" outside
+    * one) and the name of the nearest `def` above it. */
   private case class SourceHit(path: String, lineNo: Int, line: String,
-      above: String, query: String) {
+      above: String, below: String, query: String, definition: String) {
     override def toString: String = s"$path:$lineNo: ${line.trim}"
   }
 
   private val QueryName = "\"([a-z0-9_]+)\",".r
+  private val DefName = """\s*(?:(?:private|protected)(?:\[\w+\])?\s+)?def (\w+).*""".r
+
+  /** The name of the nearest `def` at or above line `i`. */
+  private def enclosingDef(lines: IndexedSeq[String], i: Int): String =
+    (i to 0 by -1).iterator.map(lines(_)).collectFirst { case DefName(n) => n }
+      .getOrElse("")
+
+  /** `h` is in the body of a def that `allowed` names for its file. */
+  private def inDef(allowed: Set[(String, String)])(h: SourceHit): Boolean =
+    allowed(java.nio.file.Paths.get(h.path).getFileName.toString -> h.definition)
 
   /** The registry query whose body holds line `i`: the nearest
     * `QueryDef(` + `"name",` above it, unless a top-level member of the
@@ -84,8 +95,9 @@ class RegistrySpec extends AnyFunSuite {
       lines.indices.collect {
         case i if needles.exists(lines(i).contains) &&
           !lines(i).trim.startsWith("//") =>
-          SourceHit(p, i + 1, lines(i),
-            if (i > 0) lines(i - 1) else "", enclosingQuery(lines, i))
+          SourceHit(p, i + 1, lines(i), lines.lift(i - 1).getOrElse(""),
+            lines.lift(i + 1).getOrElse(""), enclosingQuery(lines, i),
+            enclosingDef(lines, i))
       }
     }
 
@@ -245,6 +257,46 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "split count measured in operator code (call Tables.parallel or " +
         "Tables.loadParallel):\n" + hits.mkString("\n"))
+  }
+
+  // The stop-key cap of every bucketed candidate join is Dedup.dropViral,
+  // whose scaladoc states the broadcast's bound: at most |rel| / (cap + 1)
+  // viral keys. A broadcast left-anti join written elsewhere is a second
+  // copy of the cap whose bound nobody stated.
+  test("the viral-key cap's broadcast anti-join lives only in Dedup.dropViral") {
+    val hits = operatorSourceHits(Seq("broadcast("))
+      .filter(h => (h.line + h.below).contains("\"left_anti\""))
+      .filterNot(inDef(Set("Dedup.scala" -> "dropViral")))
+    assert(hits.isEmpty,
+      "broadcast left-anti join outside Dedup.dropViral (call it):\n" +
+        hits.mkString("\n"))
+  }
+
+  // The MinHash band layout is decided once: Dedup.bandsOf for every
+  // batch generator and StreamOps.bandStream for the two streaming
+  // near-dup forms, whose int band_id feeds the state schema.
+  test("the MinHash band explode lives only in Dedup.bandsOf and StreamOps.bandStream") {
+    val hits = operatorSourceHits(Seq("slice(col(\"sig\")"))
+      .filterNot(inDef(Set("Dedup.scala" -> "bandsOf", "StreamOps.scala" -> "bandStream")))
+    assert(hits.isEmpty,
+      "MinHash band explode outside Dedup.bandsOf (call it):\n" +
+        hits.mkString("\n"))
+  }
+
+  // Scaladoc attaches to the definition right below it; a block directly
+  // above another block documents nothing and has lost its definition.
+  test("no scaladoc block sits directly above another in src/main") {
+    val hits = operatorSources(Seq("")).flatMap { case (p, lines) =>
+      lines.indices.drop(1).collect {
+        case i if lines(i - 1).trim.endsWith("*/") && lines(i).trim.startsWith("/**") =>
+          // name the orphan: the block that ends on line i - 1
+          val j = lines.lastIndexWhere(_.trim.startsWith("/**"), i - 1)
+          s"$p:${j + 1}: ${lines(j).trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "orphaned scaladoc (move it onto its definition, or delete it):\n" +
+        hits.mkString("\n"))
   }
 
   /** A `repartition(`/`repartitionByRange(` with column arguments; a
