@@ -3,6 +3,10 @@ package graft
 import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicLong
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{DecimalNode, DoubleNode, IntNode,
+  NullNode, ObjectNode, TextNode}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -43,10 +47,8 @@ object Bench {
       corpus: Option[String])
 
   /** Parse a BENCH_LAST.json line; a missing or unreadable file reads as
-    * empty. */
+    * empty, and a query whose time is null has no entry. */
   private[graft] def readLast(path: java.nio.file.Path): LastRun = {
-    import scala.jdk.CollectionConverters._
-    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
     def fields(o: JsonNode): Map[String, JsonNode] =
       o.properties().asScala.map(e => e.getKey -> e.getValue).toMap
     try {
@@ -54,7 +56,7 @@ object Bench {
       LastRun(
         fields(root.path("passes")).map { case (k, v) =>
           k -> v.elements().asScala.map(_.asDouble).toList },
-        fields(root.path("queries")).map { case (k, v) => k -> v.asDouble },
+        fields(root.path("queries")).collect { case (k, v) if v.isNumber => k -> v.asDouble },
         Option(root.get("corpus")).map(_.asText))
     } catch {
       case _: Exception => LastRun(Map.empty, Map.empty, None)
@@ -159,25 +161,117 @@ object Bench {
     * enough that the whole per-query line survives a 2000-char stdout
     * tail window (round 2's 4 KB line was truncated mid-JSON and the
     * official per-query numbers were lost). */
-  private def fmt(v: Double): String =
-    if (v.isNaN) "null"
-    else {
-      val s = f"$v%.2f"
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-      else s
-    }
+  private def fmt(v: Double): String = {
+    val s = f"$v%.2f"
+    if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
+    else s
+  }
+
+  private val json = new ObjectMapper()
+
+  /** `v` in the compact texts: [[fmt]]'s digits, NaN as null. */
+  private def compact(v: Double): JsonNode =
+    if (v.isNaN) NullNode.instance
+    else DecimalNode.valueOf(new java.math.BigDecimal(fmt(v)))
+
+  /** `v` at full precision, NaN as null. */
+  private def exact(v: Double): JsonNode =
+    if (v.isNaN) NullNode.instance else DoubleNode.valueOf(v)
+
+  /** A JSON object of `fields`, in order. */
+  private def obj(fields: (String, JsonNode)*): ObjectNode = {
+    val o = json.createObjectNode()
+    fields.foreach { case (k, v) => o.set[JsonNode](k, v) }
+    o
+  }
+
+  private def text(s: String): JsonNode = TextNode.valueOf(s)
+
+  private def arr(vs: Seq[JsonNode]): JsonNode = json.createArrayNode().addAll(vs.asJava)
+
+  private def int(n: Int): JsonNode = IntNode.valueOf(n)
+
+  private def numbers(kvs: Seq[(String, Double)], num: Double => JsonNode): ObjectNode =
+    obj(kvs.map { case (k, v) => k -> num(v) }: _*)
+
+  private def render(node: JsonNode): String = json.writeValueAsString(node)
+
+  /** The queries that took time, slowest first. */
+  private def slowest(best: Seq[(String, Double)]): Seq[(String, Double)] =
+    best.filterNot(_._2.isNaN).sortBy(-_._2)
 
   /** `"name":secs` entries of the slowest queries, slowest first, whose
     * comma-joined length fits `budget` chars. Stops at the first entry
     * that does not fit, so a cheaper query with a shorter name never
     * takes the place of a heavier one. */
   private[graft] def topFitting(best: Seq[(String, Double)], budget: Int): Seq[String] = {
-    val entries = best.filterNot(_._2.isNaN).sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val entries = slowest(best).map(e => render(numbers(Seq(e), compact)).drop(1).dropRight(1))
     // joined length after each entry: the first adds its own length,
     // every later one a comma too
     val joined = entries.scanLeft(-1)(_ + 1 + _.length).tail
     entries.take(joined.takeWhile(_ <= budget).size)
+  }
+
+  /** One measured sweep and its JSON texts. `best` is each query's
+    * reported seconds and `passes` its pass times in run order, both in
+    * registry order; `failed` names the queries with no successful
+    * pass. */
+  private[graft] final case class Sweep(best: Seq[(String, Double)],
+      passes: Seq[(String, List[Double])], failed: Seq[String], bestOf: Int,
+      sfDir: String, corpus: String) {
+    val total: Double = best.map(_._2).sum
+
+    /** Per-query pass variance, max/min over the measured passes, for
+      * the queries with two or more positive passes. Best-of-N masks
+      * swings like 10.1/13.4/4.0 s: a "regression" computed from two
+      * noisy bests is noise, not a plan change. */
+    val variance: Seq[(String, Double)] = passes.collect {
+      case (n, ps) if ps.size >= 2 && ps.min > 0 => n -> ps.max / ps.min
+    }
+
+    /** Per-family subtotals (dedup/sim/graph/mm/text/stream/q/...): with
+      * 200+ queries a per-area regression is invisible in the total;
+      * family = the operator-name prefix, the registry's own grouping. */
+    val families: Seq[(String, Double)] = best
+      .filterNot(_._2.isNaN)
+      .groupBy { case (n, _) => n.takeWhile(_ != '_') }
+      .map { case (f, qs) => f -> qs.map(_._2).sum }
+      .toSeq.sortBy(_._1)
+
+    def queriesJson: String = render(numbers(best, compact))
+    def familiesJson: String = render(numbers(families, compact))
+    def failedJson: String = render(arr(failed.map(text)))
+
+    /** The BENCH_LAST.json line: full precision, with pass history. */
+    def lastJson: String = render(obj(
+      "metric" -> text("total"), "value" -> exact(total), "unit" -> text("sec"),
+      "queries" -> numbers(best, exact),
+      "passes" -> obj(passes.map { case (n, ps) => n -> arr(ps.map(exact)) }: _*),
+      "variance" -> numbers(variance, compact),
+      "families" -> numbers(families, compact),
+      "failures" -> int(failed.size), "failed" -> arr(failed.map(text)),
+      "best_of" -> int(bestOf), "sf" -> text(sfDir), "corpus" -> text(corpus)))
+
+    /** The BENCH_HISTORY.jsonl line: totals and the compact per-query map. */
+    def historyJson: String = render(obj(
+      "total" -> compact(total), "n_queries" -> int(best.size),
+      "failures" -> int(failed.size), "best_of" -> int(bestOf),
+      "sf" -> text(sfDir), "corpus" -> text(corpus),
+      "queries" -> numbers(best, compact)))
+
+    /** The slowest queries whose entries fit `budget` chars. */
+    def queriesTopJson(budget: Int): String = {
+      val top = slowest(best).take(topFitting(best, budget).size)
+      render(obj("metric" -> text("queries_top"), "unit" -> text("sec"),
+        "n_top" -> int(top.size), "queries" -> numbers(top, compact)))
+    }
+
+    /** The short last stdout line the driver parses. */
+    def summaryJson: String = render(obj(
+      "metric" -> text("total"), "value" -> compact(total), "unit" -> text("sec"),
+      "n_queries" -> int(best.size), "failures" -> int(failed.size),
+      "best_of" -> int(bestOf), "sf" -> text(sfDir.split('/').last),
+      "corpus" -> text(corpus)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -268,59 +362,14 @@ object Bench {
 
     // per-query reported value: best successful pass; failed-pass time
     // only when the query never succeeded
-    val best = defs.map { d =>
-      d.name -> bestOk.getOrElse(d.name, bestFail(d.name))
-    }
-    val failed = defs.map(_.name).filterNot(bestOk.contains)
-    val failures = failed.size
-    val total = best.map(_._2).sum
-
-    // per-query pass variance (max/min over the measured passes):
-    // best-of-N masks swings like 10.1/13.4/4.0 s — a "regression"
-    // computed from two noisy bests is noise, not a plan change, and
-    // the report below must say so (round-5 task #5)
-    val varRatio: Map[String, Double] = defs.map { d =>
-      val ps = passes(d.name)
-      d.name -> (if (ps.size >= 2 && ps.min > 0) ps.max / ps.min
-                 else Double.NaN)
-    }.toMap
-    // per-family subtotals (dedup/sim/graph/mm/text/stream/q/...): with
-    // 200+ queries a per-area regression is invisible in the total;
-    // family = the operator-name prefix, the registry's own grouping
-    def family(n: String): String = n.takeWhile(_ != '_')
-    val famTotals: Seq[(String, Double)] = best
-      .filterNot(_._2.isNaN)
-      .groupBy { case (n, _) => family(n) }
-      .map { case (f, qs) => f -> qs.map(_._2).sum }
-      .toSeq.sortBy(_._1)
-
-    val qs = best.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val sweep = Sweep(
+      best = defs.map(d => d.name -> bestOk.getOrElse(d.name, bestFail(d.name))),
+      passes = defs.map(d => d.name -> passes(d.name).reverse),
+      failed = defs.map(_.name).filterNot(bestOk.contains),
+      bestOf = bestOf, sfDir = sfDir, corpus = corpusFingerprint(spark, sfDir))
+    val varRatio = sweep.variance.toMap.withDefaultValue(Double.NaN)
     val sfShort = sfDir.split('/').last
 
-    // capture-proof artifacts: the full-precision result (with per-pass
-    // history) goes to a repo file the driver's tail window can never
-    // truncate, and the totals line is appended to a trend file so
-    // round-over-round regressions stay visible without driver artifacts
-    val fullQs = best.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val passesJson = defs.map { d =>
-      "\"" + d.name + "\":" + passes(d.name).reverse.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val varianceJson = defs
-      .filterNot(d => varRatio(d.name).isNaN)
-      .map(d => "\"" + d.name + "\":" + fmt(varRatio(d.name)))
-      .mkString("{", ",", "}")
-    val familiesJson = famTotals
-      .map { case (f, t) => "\"" + f + "\":" + fmt(t) }
-      .mkString("{", ",", "}")
-    val fp = corpusFingerprint(spark, sfDir)
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,""" +
-        s""""passes":$passesJson,"variance":$varianceJson,""" +
-        s""""families":$familiesJson,"failures":$failures,"failed":$failedJson,""" +
-        s""""best_of":$bestOf,"sf":"$sfDir","corpus":"$fp"}"""
     // artifacts + regression report only for OFFICIAL full sweeps (the
     // driver's config: full registry at sf0.1) — a partial or small-sf
     // dev run must neither overwrite the committed sf0.1 per-query
@@ -337,13 +386,13 @@ object Bench {
       // incomparable (round-4 postmortem: x0.4-x2.0 swings on untouched
       // code tracked corpus regeneration, not code changes)
       val prevFp = last.corpus
-      if (prev.nonEmpty && !prevFp.contains(fp)) {
+      if (prev.nonEmpty && !prevFp.contains(sweep.corpus)) {
         System.err.println(
           s"[bench] corpus fingerprint changed (${prevFp.getOrElse("none")} " +
-            s"-> $fp): per-query deltas measure a DIFFERENT corpus — " +
+            s"-> ${sweep.corpus}): per-query deltas measure a DIFFERENT corpus — " +
             "regression report suppressed")
       } else if (prev.nonEmpty) {
-        val regressions = best
+        val regressions = sweep.best
           .collect { case (name, v) if !v.isNaN && prev.contains(name) &&
               v > prev(name) + 0.25 => // ignore sub-noise-floor jitter
             (name, prev(name), v, v / prev(name))
@@ -356,7 +405,7 @@ object Bench {
           // a query whose own passes swing >1.5x this run is noise, not
           // a plan change — label it so a noisy best-vs-best delta is
           // never read as a regression (round-5 task #5)
-          val vr = varRatio.getOrElse(name, Double.NaN)
+          val vr = varRatio(name)
           if (!vr.isNaN && vr > 1.5)
             System.err.println(
               f"[bench] HIGH-VARIANCE $name: $old%.2f -> $now%.2f s " +
@@ -365,18 +414,16 @@ object Bench {
             f"[bench] REGRESSION $name: $old%.2f -> $now%.2f s (${ratio}%.2fx)")
         }
       }
-      famTotals.foreach { case (f, t) =>
+      sweep.families.foreach { case (f, t) =>
         System.err.println(f"[bench] family $f%-8s $t%8.1f s")
       }
-      java.nio.file.Files.writeString(lastPath, full + "\n")
+      java.nio.file.Files.writeString(lastPath, sweep.lastJson + "\n")
       // the trend file carries the per-query map too (round-3 task #5):
       // one compact-precision line per run, so any two rounds diff
       // per-query without needing the driver's artifacts
       java.nio.file.Files.writeString(
         benchLastPath.resolveSibling("BENCH_HISTORY.jsonl"),
-        s"""{"total":${fmt(total)},"n_queries":${best.size},""" +
-          s""""failures":$failures,"best_of":$bestOf,"sf":"$sfDir",""" +
-          s""""corpus":"$fp","queries":$qs}""" + "\n",
+        sweep.historyJson + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch {
@@ -388,7 +435,7 @@ object Bench {
     // the tail-window block below so the 6+ KB line can never crowd the
     // driver-visible last-2000-chars window (and so its truncated head
     // is never the window's only "queries":{ match).
-    System.err.println(s"[bench] queries: $qs")
+    System.err.println(s"[bench] queries: ${sweep.queriesJson}")
 
     // Driver-visible per-query data (r13 verdict task #5): the driver
     // keeps only the LAST ~2000 chars of output, so the full 297-query
@@ -399,12 +446,9 @@ object Bench {
     // queries ≈ half the total wall, enough for a real geomean. The
     // FULL map still goes to BENCH_LAST.json, BENCH_HISTORY.jsonl and
     // stderr above; this line only ADDS driver-visible entries.
-    val topBudget = 2000 -
-      (s"[bench] families: $familiesJson failed: $failedJson".length + 250)
-    val top = topFitting(best, topBudget - 60)
-    val queriesTop =
-      s"""{"metric":"queries_top","unit":"sec","n_top":${top.size},""" +
-        s""""queries":{${top.mkString(",")}}}"""
+    val familiesLine =
+      s"[bench] families: ${sweep.familiesJson} failed: ${sweep.failedJson}"
+    val topBudget = 2000 - (familiesLine.length + 250)
 
     // The driver json-parses the LAST stdout line. Three rounds of
     // "parsed": null taught: (a) the line must be SHORT (~150 bytes —
@@ -414,14 +458,10 @@ object Bench {
     // (c) it must be LAST — printed after spark.stop(), whose shutdown
     // logging otherwise lands after it. Everything dropped here
     // (families, failed list, per-query map) lives in BENCH_LAST.json.
-    val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""n_queries":${best.size},"failures":$failures,""" +
-        s""""best_of":$bestOf,"sf":"$sfShort","corpus":"$fp"}"""
-    System.err.println(s"[bench] families: $familiesJson failed: $failedJson")
+    System.err.println(familiesLine)
     spark.stop()
-    println(queriesTop)
-    println(summary)
-    if (failures > 0) sys.exit(1)
+    println(sweep.queriesTopJson(topBudget - 60))
+    println(sweep.summaryJson)
+    if (sweep.failed.nonEmpty) sys.exit(1)
   }
 }

@@ -112,9 +112,36 @@ object StreamBench {
     times(times.size / 2)
   }
 
-  private case class Row(name: String, wallS: Double, nBatches: Int,
+  private[graft] case class Row(name: String, wallS: Double, nBatches: Int,
     p50: Long, p95: Long, max: Long, rows: Long,
     stateRows: Long, stateBytes: Long)
+
+  /** A STREAM_BENCH.md growth section headed `heading`: for each
+    * (base, grown) pair of one operator's runs, the grown run's wall,
+    * input rows and state with their growth over the base. An operator
+    * whose state grows more than `slack` times faster than its input is
+    * flagged `label`. */
+  private[graft] def growthTable(heading: String, blurb: String,
+      pairs: Seq[(Row, Row)], slack: Double, label: String): String = {
+    val sb = new StringBuilder
+    sb ++= s"\n## $heading\n\n$blurb\n\n"
+    sb ++= "| operator | wall s | wall x | input rows | rows x " +
+      "| state rows | state x | state MB | verdict |\n"
+    sb ++= "|---|---|---|---|---|---|---|---|---|\n"
+    pairs.foreach { case (b, g) =>
+      val wallX = if (b.wallS > 0) g.wallS / b.wallS else 0.0
+      val rowsX =
+        if (b.rows > 0) g.rows.toDouble / b.rows.toDouble else 0.0
+      val stateX = if (b.stateRows > 0)
+        g.stateRows.toDouble / b.stateRows.toDouble else 0.0
+      val verdict =
+        if (rowsX > 0 && stateX > rowsX * slack) s"**$label**" else "ok"
+      sb ++= f"| ${g.name} | ${g.wallS}%.2f | $wallX%.1f | ${g.rows} " +
+        f"| $rowsX%.1f | ${g.stateRows} | $stateX%.1f " +
+        f"| ${g.stateBytes / 1e6}%.2f | $verdict |\n"
+    }
+    sb.toString
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -201,58 +228,28 @@ object StreamBench {
     }
     sb ++= f"\nTotal pass-2 wall: ${report.map(_.wallS).sum}%.1f s over " +
       f"${report.size} operators.\n"
-    if (decade.nonEmpty) {
-      sb ++= s"\n## Decade: stateful operators at `$x10Dir`\n\n"
-      sb ++= "Every op with state at base scale, re-run one decade up " +
-        "(same config, pass 2 of 2). `rows x` is input-row growth, " +
-        "`state x` state-row growth; state growing FASTER than input " +
-        "is the 100 TB state-store alarm and is flagged.\n\n"
-      sb ++= "| operator | wall s | wall x | input rows | rows x " +
-        "| state rows | state x | state MB | verdict |\n"
-      sb ++= "|---|---|---|---|---|---|---|---|---|\n"
-      report.filter(r => decadeBy.contains(r.name)).foreach { b =>
-        val d = decadeBy(b.name)
-        val wallX = if (b.wallS > 0) d.wallS / b.wallS else 0.0
-        val rowsX =
-          if (b.rows > 0) d.rows.toDouble / b.rows.toDouble else 0.0
-        val stateX = if (b.stateRows > 0)
-          d.stateRows.toDouble / b.stateRows.toDouble else 0.0
-        // sublinear-vs-input state is healthy; allow 1.15x slack for
-        // fixed-size state components before alarming
-        val verdict =
-          if (rowsX > 0 && stateX > rowsX * 1.15) "**SUPERLINEAR**"
-          else "ok"
-        sb ++= f"| ${b.name} | ${d.wallS}%.2f | $wallX%.1f | ${d.rows} " +
-          f"| $rowsX%.1f | ${d.stateRows} | $stateX%.1f " +
-          f"| ${d.stateBytes / 1e6}%.2f | $verdict |\n"
-      }
-    }
+    // sublinear-vs-input state is healthy; allow 1.15x slack for
+    // fixed-size state components before alarming
+    if (decade.nonEmpty)
+      sb ++= growthTable(s"Decade: stateful operators at `$x10Dir`",
+        "Every op with state at base scale, re-run one decade up " +
+          "(same config, pass 2 of 2). `rows x` is input-row growth, " +
+          "`state x` state-row growth; state growing FASTER than input " +
+          "is the 100 TB state-store alarm and is flagged.",
+        report.filter(r => decadeBy.contains(r.name)).map(b => b -> decadeBy(b.name)),
+        1.15, "SUPERLINEAR")
+    // at equal input scale, state growing past ~2x the input ratio
+    // means the adversarial structure is accumulating in the store
     val baseBy = report.map(r => r.name -> r).toMap
     advLegs.filter(_._3.nonEmpty).foreach { case (tag, dir, rows) =>
-      sb ++= s"\n## Adversarial corpus `$tag`: dedup/ANN state carriers at `$dir`\n\n"
-      sb ++= "Same scale as base (input-row x ≈ 1 expected) — the " +
-        "column that matters is STATE rows/bytes vs the healthy " +
-        "corpus: bounded state under a viral template / clustered " +
-        "vectors is the 100 TB streaming claim.\n\n"
-      sb ++= "| operator | wall s | wall x | input rows | rows x " +
-        "| state rows | state x | state MB | verdict |\n"
-      sb ++= "|---|---|---|---|---|---|---|---|---|\n"
-      rows.filter(r => baseBy.contains(r.name)).foreach { a =>
-        val b = baseBy(a.name)
-        val wallX = if (b.wallS > 0) a.wallS / b.wallS else 0.0
-        val rowsX =
-          if (b.rows > 0) a.rows.toDouble / b.rows.toDouble else 0.0
-        val stateX = if (b.stateRows > 0)
-          a.stateRows.toDouble / b.stateRows.toDouble else 0.0
-        // at equal input scale, state growing past ~2x the input ratio
-        // means the adversarial structure is accumulating in the store
-        val verdict =
-          if (rowsX > 0 && stateX > rowsX * 2.0) "**STATE-HEAVY**"
-          else "ok"
-        sb ++= f"| ${a.name} | ${a.wallS}%.2f | $wallX%.1f | ${a.rows} " +
-          f"| $rowsX%.1f | ${a.stateRows} | $stateX%.1f " +
-          f"| ${a.stateBytes / 1e6}%.2f | $verdict |\n"
-      }
+      sb ++= growthTable(
+        s"Adversarial corpus `$tag`: dedup/ANN state carriers at `$dir`",
+        "Same scale as base (input-row x ≈ 1 expected) — the " +
+          "column that matters is STATE rows/bytes vs the healthy " +
+          "corpus: bounded state under a viral template / clustered " +
+          "vectors is the 100 TB streaming claim.",
+        rows.filter(r => baseBy.contains(r.name)).map(a => baseBy(a.name) -> a),
+        2.0, "STATE-HEAVY")
     }
     val out = repoRoot.resolve("STREAM_BENCH.md")
     java.nio.file.Files.writeString(out, sb.toString)

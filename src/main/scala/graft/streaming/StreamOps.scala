@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import graft.QueryDef
 import graft.operators.Analytics.{Ev, SessionRow}
 
@@ -13,6 +14,13 @@ import graft.operators.Analytics.{Ev, SessionRow}
   * parquet file (file source → memory sink) so the result is a plain,
   * deterministic DataFrame the oracle can check against the equivalent
   * batch aggregation.
+  *
+  * Every operator reads its corpus table through one source,
+  * [[tableStream]] (the sentinel-closed operators through
+  * [[SentinelStage]]'s staged copy), and runs its query to completion
+  * through one driver, [[drain]]: start on the calling thread, process
+  * everything available, stop. [[toMemory]] is that driver into a memory
+  * sink, returning the sink table.
   *
   * The reference has no event streaming (SURVEY.md §2c) — this is part of
   * the north-star pipeline surface. At scale the same plan runs
@@ -23,38 +31,59 @@ object StreamOps {
 
   private val nameCounter = new AtomicInteger(0)
 
+  /** The raw file schema of a corpus table. `events` ts is read as raw
+    * nanos (a long) when the corpus ships it as parquet timestamp[ns];
+    * `Tables.normTsCol(schema)` turns it into a µs timestamp in-plan. */
+  private def streamSchema(s: SparkSession, dir: String, table: String): StructType = {
+    if (table == "events")
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.fileSchema(s, dir, table)
+  }
+
+  /** A corpus table as a file stream. The file source wants a
+    * directory: the sf dir is streamed with a glob that selects just
+    * `<table>.parquet`. `events` comes with ts normalized to a µs
+    * timestamp. */
+  private def tableStream(s: SparkSession, dir: String, table: String): DataFrame = {
+    val schema = streamSchema(s, dir, table)
+    val src = s.readStream
+      .schema(schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
+    if (table == "events") src.withColumn("ts", graft.Tables.normTsCol(schema))
+    else src
+  }
+
+  /** Start `writer`'s query, process everything its sources hold, and
+    * stop it, also when a batch throws. The query starts on the calling
+    * thread, so its stream thread inherits the caller's `Tables.scoped`
+    * (stream_ann_probe's batches materialize into it). */
+  private def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** `stream` run into a fresh memory sink `graft_stream_<name>_<n>` in
+    * output `mode` by `run` ([[drain]] unless the query needs a second
+    * phase, see [[SentinelStage.drainClosing]]); returns the sink
+    * table. */
+  private[graft] def toMemory(s: SparkSession, name: String, mode: String,
+      run: DataStreamWriter[_] => Unit = drain)(stream: Dataset[_]): DataFrame = {
+    val sink = s"graft_stream_${name}_${nameCounter.incrementAndGet()}"
+    run(stream.writeStream.outputMode(mode).format("memory").queryName(sink))
+    s.table(sink)
+  }
+
   /** Run the windowed aggregation as a real streaming query to completion
     * and return the final (complete-mode) result as a batch DataFrame. */
-  def hourlyByType(s: SparkSession, dir: String): DataFrame = {
-    // ts is parquet timestamp[ns]: stream it as raw nanos (long) and
-    // convert to a microsecond timestamp in-plan (see Tables.loadEvents).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_hourly_${nameCounter.incrementAndGet()}"
-    // The file stream source wants a directory: stream the sf dir with a
-    // glob that selects just the events table.
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+  def hourlyByType(s: SparkSession, dir: String): DataFrame =
+    toMemory(s, "hourly", "complete")(tableStream(s, dir, "events")
       .withWatermark("ts", "1 hour")
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("total_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink).orderBy("hour", "event_type")
-  }
+        sum(col("value").cast("decimal(12,2)")).cast("double").as("total_value")))
+      .orderBy("hour", "event_type")
 
   /** Streaming drift monitor: q_hist_drift's bucketed purchase-value
     * histogram runs INCREMENTALLY — the (bucket, arm) counting state is
@@ -65,28 +94,15 @@ object StreamOps {
     * split. Converges to the SAME table as the batch operator: the
     * oracle is Numerics.HistDriftOracleSql verbatim. */
   def tvDriftStreaming(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_tv_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val hist = toMemory(s, "tv", "complete")(tableStream(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(
         least(expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) div 5000"),
           lit(9L)).cast("long").as("bucket"),
         pmod(col("user_id"), lit(2L)).as("arm"))
       .groupBy("bucket", "arm")
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val b = s.table(sink).groupBy("bucket").agg(
+      .agg(count(lit(1)).as("n")))
+    val b = hist.groupBy("bucket").agg(
       sum(when(col("arm") === 0, col("n")).otherwise(0L)).as("c_a"),
       sum(when(col("arm") === 1, col("n")).otherwise(0L)).as("c_b"))
     val tot = b.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
@@ -108,41 +124,20 @@ object StreamOps {
     * the SAME Numerics.changepointFinish the batch operator uses — one
     * detector, two execution modes. */
   def changepointStreaming(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_cp_${nameCounter.incrementAndGet()}"
     val DayUs = 86400000000L
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
-      .filter(col("event_type") === "purchase")
-      .select(expr(s"unix_micros(ts) div $DayUs").as("day"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    graft.operators.Numerics.changepointFinish(s.table(sink))
+    graft.operators.Numerics.changepointFinish(
+      toMemory(s, "cp", "complete")(tableStream(s, dir, "events")
+        .filter(col("event_type") === "purchase")
+        .select(expr(s"unix_micros(ts) div $DayUs").as("day"))
+        .groupBy("day")
+        .agg(count(lit(1)).as("n"))))
   }
 
   /** Streaming 6-hour OHLC: q_ohlc's one-pass min_by/max_by aggregate as
     * an incremental streaming aggregation (see the stream_ohlc def). */
   def ohlcStreaming(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_ohlc_${nameCounter.incrementAndGet()}"
     val BucketUs = 21600000000L // 6 hours — same constant as q_ohlc
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    toMemory(s, "ohlc", "complete")(tableStream(s, dir, "events")
       .withColumn("bucket_us",
         expr(s"unix_micros(ts) div $BucketUs") * BucketUs)
       .withColumn("ok",
@@ -156,18 +151,8 @@ object StreamOps {
         expr("max_by(value, ok)").as("close"),
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(12,2)")).cast("double")
-          .as("total_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink).orderBy("event_type", "bucket_us")
+          .as("total_value")))
+      .orderBy("event_type", "bucket_us")
   }
 
   /** Streaming hopping (sliding) windows: the same 1h/30min overlapping
@@ -176,33 +161,14 @@ object StreamOps {
     * (window, type) bounded by the 1-hour watermark, and the complete-
     * mode sink holds only the aggregated table (∝ windows x types,
     * never ∝ events). */
-  def hoppingByType(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_hopping_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+  def hoppingByType(s: SparkSession, dir: String): DataFrame =
+    toMemory(s, "hopping", "complete")(tableStream(s, dir, "events")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink)
+      .agg(count(lit(1)).as("n")))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"))
       .orderBy("win_start", "event_type")
-  }
 
   /** foreachBatch merge-writer: the custom-sink escape hatch. Each
     * micro-batch is first reduced to its per-key argmax (map-side
@@ -216,21 +182,15 @@ object StreamOps {
     * 100 TB the snapshot is a real table format and the merge is its
     * MERGE INTO, but the per-batch plan is exactly this one. */
   def foreachBatchMerge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val tableRoot = java.nio.file.Files
-      .createTempDirectory("graft_fb_merge").toString
+    // read lazily by the returned frame: deleted at JVM exit, not here
+    val tableRoot = graft.jvmScratchDir("graft_fb_merge").toString
     @volatile var current: Option[String] = None
     def argmax(df: DataFrame): DataFrame =
       df.groupBy("user_id")
         .agg(max(struct(col("ts_us"), col("event_id"))).as("m"))
         .select(col("user_id"), col("m.ts_us").as("ts_us"),
           col("m.event_id").as("event_id"))
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    drain(tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"))
       .writeStream
@@ -244,13 +204,7 @@ object StreamOps {
         merged.write.mode("overwrite").parquet(s"$tableRoot/v$batchId")
         current = Some(s"$tableRoot/v$batchId")
         ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
+      })
     s.read.parquet(current.get)
       .select(col("user_id"), col("event_id").as("latest_event_id"),
         col("ts_us").as("latest_ts_us"))
@@ -261,32 +215,13 @@ object StreamOps {
     * per-key state in the state store (bounded by the watermark at 100 TB
     * rates); the deduped append stream lands in a memory sink and is
     * summarized batch-side. */
-  def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_dedup_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+  def streamingDedup(s: SparkSession, dir: String): DataFrame =
+    toMemory(s, "dedup", "append")(tableStream(s, dir, "events")
       .withWatermark("ts", "1 hour")
-      .dropDuplicates("event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink)
+      .dropDuplicates("event_id"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type")
-  }
 
   /** The production variant of streaming dedup:
     * dropDuplicatesWithinWatermark guarantees state EVICTION — a key's
@@ -298,32 +233,13 @@ object StreamOps {
     * first copy — exactly the at-least-once-delivery retry window the
     * operator exists to absorb. Bounded replay here fits in one
     * micro-batch, so the batch DISTINCT oracle is exact. */
-  def streamingDedupWm(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    val sink = s"graft_stream_dedup_wm_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+  def streamingDedupWm(s: SparkSession, dir: String): DataFrame =
+    toMemory(s, "dedup_wm", "append")(tableStream(s, dir, "events")
       .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink)
+      .dropDuplicatesWithinWatermark("event_id"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type")
-  }
 
   /** Carried session state per user: last event time and current
     * session index. */
@@ -352,13 +268,7 @@ object StreamOps {
   /** Typed streaming events (raw ns long → µs) for stateful operators. */
   def eventStream(s: SparkSession, dir: String): Dataset[Ev] = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    tableStream(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"))
       .as[Ev]
@@ -371,22 +281,10 @@ object StreamOps {
     * is exactly what the oracle checks. */
   def sessionizeStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sink = s"graft_stream_sessionize_${nameCounter.incrementAndGet()}"
-    val q = eventStream(s, dir)
+    toMemory(s, "sessionize", "update")(eventStream(s, dir)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessState, SessionRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout)(sessionizeGroup)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink)
+        OutputMode.Update, GroupStateTimeout.NoTimeout)(sessionizeGroup))
       .select(col("event_id"), col("user_id"), col("session_idx"))
       .orderBy("event_id")
   }
@@ -404,8 +302,7 @@ object StreamOps {
 
   def latestByKey(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sink = s"graft_stream_latest_${nameCounter.incrementAndGet()}"
-    val q = eventStream(s, dir)
+    val latest = toMemory(s, "latest", "update")(eventStream(s, dir)
       .groupByKey(_.user_id)
       .mapGroupsWithState[LatestState, (Long, Long, Long)](
         GroupStateTimeout.NoTimeout) { (uid, it, state) =>
@@ -418,16 +315,10 @@ object StreamOps {
         state.update(cur)
         (uid, cur.eventId, cur.tsUs)
       }
-      .toDF("user_id", "latest_event_id", "latest_ts_us")
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .toDF("user_id", "latest_event_id", "latest_ts_us"))
     // a key may be re-emitted across micro-batches — keep its final row
     val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-    s.table(sink)
+    latest
       .withColumn("mx", max(col("latest_ts_us")).over(w))
       .filter(col("latest_ts_us") === col("mx"))
       .select(col("user_id"), col("latest_event_id"), col("latest_ts_us"))
@@ -482,24 +373,17 @@ object StreamOps {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val sink = s"graft_stream_tws_${nameCounter.incrementAndGet()}"
-    val in = rawEventStream(s, dir)
+    val stats = toMemory(s, "tws", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
       .as[TwsIn]
-    val q = in.groupByKey(_.user_id)
+      .groupByKey(_.user_id)
       .transformWithState(new UserStatsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+        OutputMode.Update()))
     // each microbatch emits that batch's running state per touched key;
     // the final value per field is the monotone extreme, so this fold is
     // batch-split-invariant (one batch here — the corpus is one file)
-    s.table(sink).groupBy("user_id")
+    stats.groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"),
         max(col("max_value")).as("max_value"),
         min(col("first_us")).as("first_us"),
@@ -582,23 +466,16 @@ object StreamOps {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val sink = s"graft_stream_tws_topk_${nameCounter.incrementAndGet()}"
-    val q = rawEventStream(s, dir)
+    val topk = toMemory(s, "tws_topk", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"), col("event_type"))
       .as[TwsEvIn]
       .groupByKey(_.user_id)
       .transformWithState(new TopKProcessor(3),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+        OutputMode.Update()))
     // per (user, rank) the final emission is the lexicographic max of
     // (value, -event_id) — see TopKProcessor's invariance note
-    s.table(sink)
+    topk
       .groupBy("user_id", "rank")
       .agg(max(struct(col("value"), (-col("event_id")).as("nid"))).as("m"))
       .select(col("user_id"), col("rank"),
@@ -613,35 +490,16 @@ object StreamOps {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val sink = s"graft_stream_tws_map_${nameCounter.incrementAndGet()}"
-    val q = rawEventStream(s, dir)
+    toMemory(s, "tws_map", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"), col("event_type"))
       .as[TwsEvIn]
       .groupByKey(_.user_id)
       .transformWithState(new TypeCountProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
+        OutputMode.Update()))
       .groupBy("user_id", "event_type")
       .agg(max(col("n")).as("n_events"))
       .orderBy("user_id", "event_type")
-  }
-
-  /** Raw event stream with a µs timestamp column. */
-  private def rawEventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables.fileSchema(s, dir, "events")
-    s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
   }
 
   /** Stream-stream interval join: each purchase joined to the same
@@ -652,38 +510,26 @@ object StreamOps {
     * is aggregated batch-side into clicks-per-purchase for the
     * deterministic oracle comparison (the batch join is the oracle). */
   def intervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val clicks = rawEventStream(s, dir)
+    val clicks = tableStream(s, dir, "events")
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
       .withWatermark("c_ts", "1 hour")
-    val purchases = rawEventStream(s, dir)
+    val purchases = tableStream(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "2 hours")
-    val sink = s"graft_stream_ivj_${nameCounter.incrementAndGet()}"
-    val q = purchases.join(clicks,
+    toMemory(s, "ivj", "append")(purchases.join(clicks,
         expr("""p_user = c_user AND
-                c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"""))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    s.table(sink)
+                c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts""")))
       .groupBy(col("p_id").as("purchase_id"))
       .agg(count(lit(1)).as("n_clicks_1h"))
       .orderBy("purchase_id")
   }
 
   /** Staged file-source dir for watermark-closure runs: the corpus
-    * parquet is copied in as the first file; `addSentinel()` later
+    * parquet is copied in as the first file; `drainClosing` later
     * drops a file with one sentinel event per requested type, 10 hours
     * past the corpus max event time (user_id -1, event_ids -1, -2, …),
     * advancing every event-time watermark derived from this source
@@ -691,16 +537,37 @@ object StreamOps {
     * flushes. Finite-corpus closure only — a continuous deployment
     * simply never closes. */
   private final class SentinelStage(s: SparkSession, dir: String) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: org.apache.spark.sql.types.StructType =
-      graft.Tables.fileSchema(s, dir, "events")
-    val stage: String = java.nio.file.Files
-      .createTempDirectory("graft_sentinel_stage").toString
+    private val schema = streamSchema(s, dir, "events")
+    private val stage: String = graft.jvmScratchDir("graft_sentinel_stage").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       java.nio.file.Paths.get(s"$stage/00_events.parquet"))
 
-    def addSentinel(eventTypes: String*): Unit = {
+    /** The staged events as a file stream, ts normalized as in
+      * [[tableStream]]. */
+    def stream: DataFrame =
+      s.readStream
+        .schema(schema)
+        .parquet(stage)
+        .withColumn("ts", graft.Tables.normTsCol(schema))
+
+    /** Run `writer`'s query over the corpus, drop the sentinel events
+      * of `eventTypes`, and run it again, so the watermarks pass every
+      * real event and held state flushes; then stop the query and
+      * delete the stage, also when a batch throws. */
+    def drainClosing(eventTypes: String*)(writer: DataStreamWriter[_]): Unit = {
+      val q = writer.start()
+      try {
+        q.processAllAvailable() // phase 1: the real corpus
+        addSentinel(eventTypes: _*) // phase 2: the sentinels close the tail
+        q.processAllAvailable()
+      } finally {
+        q.stop()
+        cleanup()
+      }
+    }
+
+    private def addSentinel(eventTypes: String*): Unit = {
       val maxRow = graft.Tables.load(s, dir, "events")
         .agg(max(unix_micros(col("ts")))).head()
       // empty corpus: max(ts) is NULL — any base works, the sentinel
@@ -736,7 +603,7 @@ object StreamOps {
     /** Delete the stage (and sentinel scratch) dirs — repeated
       * correctness sweeps in one JVM must not leak a corpus-sized copy
       * per invocation. */
-    def cleanup(): Unit =
+    private def cleanup(): Unit =
       Seq(stage, s"${stage}_sent").foreach { d =>
         val p = java.nio.file.Paths.get(d)
         if (java.nio.file.Files.exists(p)) {
@@ -771,11 +638,7 @@ object StreamOps {
     * after the watermark passes) is proven in StreamCancelSpec. */
   def intervalJoinLeftOuter(s: SparkSession, dir: String): DataFrame = {
     val staged = new SentinelStage(s, dir)
-    val schema = staged.schema
-    val ev = s.readStream
-      .schema(schema)
-      .parquet(staged.stage)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    val ev = staged.stream
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
@@ -784,28 +647,15 @@ object StreamOps {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "2 hours")
-    val sink = s"graft_stream_loj_${nameCounter.incrementAndGet()}"
-    val q = purchases.join(clicks,
+    // sentinels of both sides close the tail: both watermarks advance
+    val joined = toMemory(s, "loj", "append", staged.drainClosing("click", "purchase"))(
+      purchases.join(clicks,
         expr("""p_user = c_user AND
                 c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"""),
-        "leftOuter")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable() // phase 1: the real corpus
-      // phase 2: sentinels close the tail (both sides' watermarks)
-      staged.addSentinel("click", "purchase")
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      staged.cleanup()
-    }
+        "leftOuter"))
     // count(c_id) counts matches only — a null-padded purchase scores 0,
     // exactly the batch LEFT JOIN + count(c.event_id) oracle
-    s.table(sink)
+    joined
       .filter(col("p_user") >= 0)
       .groupBy(col("p_id").as("purchase_id"))
       .agg(count(col("c_id")).as("n_clicks_1h"))
@@ -824,11 +674,7 @@ object StreamOps {
     * orphaned clicks that belonged to no purchase window. */
   def intervalJoinFullOuter(s: SparkSession, dir: String): DataFrame = {
     val staged = new SentinelStage(s, dir)
-    val schema = staged.schema
-    val ev = s.readStream
-      .schema(schema)
-      .parquet(staged.stage)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    val ev = staged.stream
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
@@ -837,25 +683,11 @@ object StreamOps {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "2 hours")
-    val sink = s"graft_stream_foj_${nameCounter.incrementAndGet()}"
-    val q = purchases.join(clicks,
+    val t = toMemory(s, "foj", "append", staged.drainClosing("click", "purchase"))(
+      purchases.join(clicks,
         expr("""p_user = c_user AND
                 c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"""),
-        "fullOuter")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-      staged.addSentinel("click", "purchase")
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      staged.cleanup()
-    }
-    val t = s.table(sink)
+        "fullOuter"))
       .filter(coalesce(col("p_user"), col("c_user")) >= 0) // drop sentinels
     val perPurchase = t.filter(col("p_id").isNotNull)
       .groupBy(col("p_id").as("event_id"))
@@ -923,33 +755,16 @@ object StreamOps {
   def sessionizeTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val staged = new SentinelStage(s, dir)
-    val schema = staged.schema
-    val sink = s"graft_stream_sess_ttl_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .parquet(staged.stage)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    // gap-closed sessions emit on the corpus; the sentinel moves the
+    // watermark past every open session, whose timeouts then fire
+    toMemory(s, "sess_ttl", "append", staged.drainClosing("click"))(staged.stream
       .withWatermark("ts", "1 hour")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[EvWithTime]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionTtlGroup)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable() // real corpus: gap-closed sessions emit
-      staged.addSentinel("click") // watermark past every open session
-      q.processAllAvailable() // timeouts fire, trailing sessions emit
-    } finally {
-      q.stop()
-      staged.cleanup()
-    }
-    s.table(sink)
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionTtlGroup))
       .filter(col("user_id") >= 0) // drop the sentinel's own session
       .select(col("user_id"),
         timestamp_micros(col("start_us")).as("session_start"),
@@ -1032,12 +847,8 @@ object StreamOps {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
     val staged = new SentinelStage(s, dir)
-    val schema = staged.schema
-    val sink = s"graft_stream_tws_sess_${nameCounter.incrementAndGet()}"
-    val q = s.readStream
-      .schema(schema)
-      .parquet(staged.stage)
-      .withColumn("ts", graft.Tables.normTsCol(schema))
+    // as sessionizeTtl, with timers in place of the timeouts
+    toMemory(s, "tws_sess", "append", staged.drainClosing("click"))(staged.stream
       .withWatermark("ts", "1 hour")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("ts"))
@@ -1045,21 +856,7 @@ object StreamOps {
       .groupByKey(_.user_id)
       .transformWithState(new SessionTimerProcessor,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable() // real corpus: gap-closed sessions emit
-      staged.addSentinel("click") // watermark past every open session
-      q.processAllAvailable() // timers fire, trailing sessions emit
-    } finally {
-      q.stop()
-      staged.cleanup()
-    }
-    s.table(sink)
+        OutputMode.Append()))
       .filter(col("user_id") >= 0) // drop the sentinel's own session
       .select(col("user_id"),
         timestamp_micros(col("start_us")).as("session_start"),
@@ -1078,13 +875,9 @@ object StreamOps {
     * store, and results append to a keyed sink. Identical output to
     * sim_ann_ivf — shared oracle. */
   def streamAnnProbe(s: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.fileSchema(s, dir, "embeddings")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_ann_probe").toString + "/out"
-    val q = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    // read lazily by the returned frame: deleted at JVM exit, not here
+    val outDir = graft.jvmScratchDir("graft_ann_probe").toString + "/out"
+    drain(tableStream(s, dir, "embeddings")
       .filter(col("vec_id") < graft.operators.Similarity.NumQueries)
       .select("vec_id", "embedding")
       .writeStream
@@ -1093,13 +886,7 @@ object StreamOps {
           .ivfSearchFor(batch.sparkSession, dir, 1, batch)
           .write.mode("append").parquet(outDir)
         ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
+      })
     s.read.parquet(outDir).orderBy("q_id", "rank")
   }
 
@@ -1132,29 +919,14 @@ object StreamOps {
     * occurrences are reassembled batch-side into cleaned documents. */
   def streamParagraphDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = graft.Tables.fileSchema(s, dir, "documents")
-    val sink = s"graft_stream_paradedup_${nameCounter.incrementAndGet()}"
-    val q = graft.operators.Dedup.paragraphs(
-        s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir))
-      .as[ParaOcc]
-      .groupByKey(_.para)
-      .flatMapGroupsWithState[Long, ParaOcc](
-        OutputMode.Update, GroupStateTimeout.NoTimeout)(paraGateState)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
+    val kept = toMemory(s, "paradedup", "update")(
+      graft.operators.Dedup.paragraphs(tableStream(s, dir, "documents"))
+        .as[ParaOcc]
+        .groupByKey(_.para)
+        .flatMapGroupsWithState[Long, ParaOcc](
+          OutputMode.Update, GroupStateTimeout.NoTimeout)(paraGateState))
     graft.operators.Dedup.rebuildFromKept(
-      graft.Tables.load(s, dir, "documents"), s.table(sink))
+      graft.Tables.load(s, dir, "documents"), kept)
   }
 
   /** Synthetic ingest event-time of a streamed document: documents
@@ -1213,31 +985,16 @@ object StreamOps {
     * Oracle: the lag-window TTL rule in doc_id arithmetic. */
   def streamParagraphDedupTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = graft.Tables.fileSchema(s, dir, "documents")
-    val sink = s"graft_stream_paradedup_ttl_${nameCounter.incrementAndGet()}"
-    val q = graft.operators.Dedup.paragraphs(
-        s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir))
-      .withColumn("ts", docEventTime)
-      .withWatermark("ts", "1 minute")
-      .as[ParaOccT]
-      .groupByKey(_.para)
-      .flatMapGroupsWithState[Long, ParaOccT](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(paraGateTtl)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
+    val kept = toMemory(s, "paradedup_ttl", "update")(
+      graft.operators.Dedup.paragraphs(tableStream(s, dir, "documents"))
+        .withColumn("ts", docEventTime)
+        .withWatermark("ts", "1 minute")
+        .as[ParaOccT]
+        .groupByKey(_.para)
+        .flatMapGroupsWithState[Long, ParaOccT](
+          OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(paraGateTtl))
     graft.operators.Dedup.rebuildFromKept(
-      graft.Tables.load(s, dir, "documents"), s.table(sink).drop("ts"))
+      graft.Tables.load(s, dir, "documents"), kept.drop("ts"))
   }
 
   /** One LSH band assignment of a streamed document. */
@@ -1273,11 +1030,7 @@ object StreamOps {
   private def bandStream(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.EngineFns.{minhashSig, shingles}
     import graft.operators.Dedup.{BandRows, NumPerms}
-    val schema = graft.Tables.fileSchema(s, dir, "documents")
-    s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    tableStream(s, dir, "documents")
       .select(col("doc_id"),
         minhashSig(shingles(col("text"), 3), NumPerms).as("sig"))
       .select(col("doc_id"),
@@ -1304,26 +1057,14 @@ object StreamOps {
     * the ingest-time watermark. */
   def streamingNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sink = s"graft_stream_neardup_${nameCounter.incrementAndGet()}"
-    val bands = bandStream(s, dir).as[BandDoc]
-    val q = bands
+    val pairs = toMemory(s, "neardup", "update")(bandStream(s, dir).as[BandDoc]
       .groupByKey(b => (b.band_id, b.band_key))
       .flatMapGroupsWithState[Seq[Long], CandPair](
-        OutputMode.Update, GroupStateTimeout.NoTimeout)(bandBucketState)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
+        OutputMode.Update, GroupStateTimeout.NoTimeout)(bandBucketState))
     // batch-side exact-Jaccard verification of the streamed candidates
     // (a pair can surface from several bands and several micro-batches —
     // distinct first)
-    jaccardVerify(s, dir, s.table(sink))
+    jaccardVerify(s, dir, pairs)
   }
 
   /** Batch-side exact-Jaccard verification of streamed candidate pairs:
@@ -1392,26 +1133,13 @@ object StreamOps {
     * exact-Jaccard verification; oracle adds the ingest-gap predicate. */
   def streamingNearDupTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sink = s"graft_stream_neardup_ttl_${nameCounter.incrementAndGet()}"
-    val bands = bandStream(s, dir)
+    jaccardVerify(s, dir, toMemory(s, "neardup_ttl", "update")(bandStream(s, dir)
       .withColumn("ts", docEventTime)
       .withWatermark("ts", "1 minute")
       .as[BandDocT]
-    val q = bands
       .groupByKey(b => (b.band_id, b.band_key))
       .flatMapGroupsWithState[Seq[(Long, Long)], CandPair](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(bandBucketTtl)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-    }
-    jaccardVerify(s, dir, s.table(sink))
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(bandBucketTtl)))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -1557,12 +1285,10 @@ object StreamOps {
         // state-store files (r9 advice)
         val ckpt = graft.jvmScratchDir("graft_state_rd").toString
         val sink = s"graft_stream_strd_${nameCounter.incrementAndGet()}"
-        val q = rawEventStream(s, dir)
+        drain(tableStream(s, dir, "events")
           .groupBy("event_type").agg(count(lit(1)).as("n"))
           .writeStream.outputMode("complete").format("memory")
-          .queryName(sink).option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          .queryName(sink).option("checkpointLocation", ckpt))
         val st = s.read.format("statestore").load(ckpt)
         // the value struct's buffer field name is engine-internal
         // (count(1) today) — resolve it from the schema, not a literal,
@@ -1615,14 +1341,10 @@ object StreamOps {
         else {
           val hist = batch.filter(col("ts") < lit(cut))
             .groupBy("event_type").agg(count(lit(1)).as("n_hist"))
-          val sink = s"graft_stream_bfm_${nameCounter.incrementAndGet()}"
-          val q = rawEventStream(s, dir)
+          val live = toMemory(s, "bfm", "complete")(tableStream(s, dir, "events")
             .filter(col("ts") >= lit(cut))
-            .groupBy("event_type").agg(count(lit(1)).as("n_live"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(sink).start()
-          try q.processAllAvailable() finally q.stop()
-          hist.join(s.table(sink), Seq("event_type"), "full_outer")
+            .groupBy("event_type").agg(count(lit(1)).as("n_live")))
+          hist.join(live, Seq("event_type"), "full_outer")
             .select(col("event_type"),
               (coalesce(col("n_hist"), lit(0L)) +
                 coalesce(col("n_live"), lit(0L))).as("n"))
@@ -1701,31 +1423,16 @@ object StreamOps {
     // closed sessions instead.
     QueryDef(
       "stream_session_window",
-      (s, dir) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.Tables.fileSchema(s, dir, "events")
-        val sink = s"graft_stream_sesswin_${nameCounter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-          .withColumn("ts", graft.Tables.normTsCol(schema))
+      (s, dir) =>
+        toMemory(s, "sesswin", "complete")(tableStream(s, dir, "events")
           .groupBy(col("user_id"),
             session_window(col("ts"), "30 minutes").as("sw"))
-          .agg(count(lit(1)).as("n_events"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink)
+          .agg(count(lit(1)).as("n_events")))
           .select(col("user_id"),
             col("sw.start").as("session_start"),
             col("sw.end").as("session_end"),
             col("n_events"))
-          .orderBy("user_id", "session_start")
-      },
+          .orderBy("user_id", "session_start"),
       Some(graft.operators.Analytics.SessionWindowOracleSql),
       bench = false),
 
@@ -1843,27 +1550,15 @@ object StreamOps {
     QueryDef(
       "stream_static_enrich",
       (s, dir) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.Tables.fileSchema(s, dir, "events")
-        val sink = s"graft_stream_enrich_${nameCounter.incrementAndGet()}"
         val cust = broadcast(graft.Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment")))
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
+        toMemory(s, "enrich", "complete")(tableStream(s, dir, "events")
           .join(cust, col("user_id") === col("c_custkey"))
           .groupBy("c_mktsegment", "event_type")
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(12,2)")).cast("double")
-              .as("total_value"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink).orderBy("c_mktsegment", "event_type")
+              .as("total_value")))
+          .orderBy("c_mktsegment", "event_type")
       },
       Some("""SELECT c_mktsegment, event_type, count(*) AS n,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
@@ -1887,30 +1582,19 @@ object StreamOps {
     QueryDef(
       "stream_ingest_dedup",
       (s, dir) => {
-        val schema = graft.Tables.fileSchema(s, dir, "documents")
-        val sink = s"graft_stream_ingest_${nameCounter.incrementAndGet()}"
         val standing = broadcast(
           graft.Tables.load(s, dir, "documents")
             .filter(col("doc_id") % 7 === 0)
             .select(md5(col("text").cast("binary")).as("fp"))
             .distinct()
             .withColumn("seen", lit(1)))
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        toMemory(s, "ingest", "append")(tableStream(s, dir, "documents")
           .filter(col("doc_id") % 7 =!= 0)
           .withColumn("fp", md5(col("text").cast("binary")))
           .join(standing, Seq("fp"), "left_outer")
           .filter(col("seen").isNull)
-          .select(col("doc_id"), col("fp"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink).orderBy("doc_id")
+          .select(col("doc_id"), col("fp")))
+          .orderBy("doc_id")
       },
       Some("""SELECT d.doc_id, md5(d.text) AS fp
               FROM documents d
@@ -1929,25 +1613,13 @@ object StreamOps {
     // the shape of every stateless ingest transform at 100 TB rates.
     QueryDef(
       "stream_quality_gate",
-      (s, dir) => {
-        val schema = graft.Tables.fileSchema(s, dir, "documents")
-        val sink = s"graft_stream_qgate_${nameCounter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      (s, dir) =>
+        toMemory(s, "qgate", "append")(tableStream(s, dir, "documents")
           .withColumn("margin",
             graft.operators.TextAnalysis.qualityMargin(col("text")))
           .filter(col("margin") >= 0L)
-          .select("doc_id", "margin")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink).orderBy("doc_id")
-      },
+          .select("doc_id", "margin"))
+          .orderBy("doc_id"),
       Some(s"""WITH f AS (
                  SELECT doc_id,
                    ${graft.operators.TextAnalysis.QualityMarginSql} AS margin
@@ -1977,12 +1649,7 @@ object StreamOps {
       (s, dir) => {
         import s.implicits._
         import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
-        val schema = graft.Tables.fileSchema(s, dir, "documents")
-        val sink = s"graft_stream_pipeclean_${nameCounter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val kept = toMemory(s, "pipeclean", "update")(tableStream(s, dir, "documents")
           .filter(tokenCount(col("text")) >= 8 &&
             stopwordRatio(col("text")) <= 0.35 &&
             noiseRatio(col("text")) <= 0.25 &&
@@ -1991,16 +1658,10 @@ object StreamOps {
           .as[CleanDoc]
           .groupByKey(_.text)
           .flatMapGroupsWithState[Long, CleanDoc](
-            OutputMode.Update, GroupStateTimeout.NoTimeout)(docGateState)
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+            OutputMode.Update, GroupStateTimeout.NoTimeout)(docGateState))
         val bucket = graft.functions.EngineFns.hash31(
           concat_ws("|", lit("split"), col("doc_id").cast("string"))) % 100L
-        s.table(sink)
+        kept
           .withColumn("split",
             when(bucket < 90, "train").when(bucket < 95, "valid")
               .otherwise("test"))
@@ -2063,14 +1724,7 @@ object StreamOps {
       "stream_rate_limit",
       (s, dir) => {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.Tables.fileSchema(s, dir, "events")
-        val sink = s"graft_stream_rlimit_${nameCounter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-          .withColumn("ts", graft.Tables.normTsCol(schema))
+        toMemory(s, "rlimit", "update")(tableStream(s, dir, "events")
           .select(col("event_id").cast("long").as("event_id"),
             col("user_id").cast("long").as("user_id"),
             unix_micros(date_trunc("day", col("ts"))).as("day_us"),
@@ -2078,14 +1732,7 @@ object StreamOps {
           .as[RlEv]
           .groupByKey(e => (e.user_id, e.day_us))
           .flatMapGroupsWithState[Long, RlAdmit](
-            OutputMode.Update, GroupStateTimeout.NoTimeout)(rateLimitState)
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(sink)
+            OutputMode.Update, GroupStateTimeout.NoTimeout)(rateLimitState))
           .select(col("user_id"), timestamp_micros(col("day_us")).as("day"),
             col("event_id"), col("rk"))
           .orderBy("user_id", "day", "rk")
@@ -2122,14 +1769,7 @@ object StreamOps {
       "stream_scd2_apply",
       (s, dir) => {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.Tables.fileSchema(s, dir, "events")
-        val sink = s"graft_stream_scd2_${nameCounter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-          .withColumn("ts", graft.Tables.normTsCol(schema))
+        val versions = toMemory(s, "scd2", "update")(tableStream(s, dir, "events")
           .filter(col("event_type").isin("signup", "purchase"))
           .select(col("user_id").cast("long").as("user_id"),
             unix_micros(col("ts")).as("ts_us"),
@@ -2139,13 +1779,7 @@ object StreamOps {
           .as[ScdEv]
           .groupByKey(_.user_id)
           .flatMapGroupsWithState[(Long, Long), ScdVer](
-            OutputMode.Update, GroupStateTimeout.NoTimeout)(scd2State)
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+            OutputMode.Update, GroupStateTimeout.NoTimeout)(scd2State))
         // the memory sink APPENDS update-mode emissions: across 2+
         // micro-batches the open version (valid_to_us NULL) emitted in
         // batch k is not retracted when batch k+1 closes it, so the
@@ -2153,7 +1787,7 @@ object StreamOps {
         // Collapse to the latest: max(valid_to_us) ignores NULL and
         // keeps the close when one exists; band is identical across
         // the pair (a version's value never changes, only its close).
-        s.table(sink)
+        versions
           .groupBy(col("user_id"), col("valid_from_us"))
           .agg(max(col("band")).as("band"),
             max(col("valid_to_us")).as("valid_to_us"))

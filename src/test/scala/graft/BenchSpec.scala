@@ -65,6 +65,71 @@ class BenchSpec extends AnyFunSuite {
       missing.corpus.isEmpty)
   }
 
+  // The driver parses the last stdout line; its text, and the
+  // queries_top line above it, must not change with how it is built.
+  private val sweep = Bench.Sweep(
+    best = Seq("q_a" -> 1.254, "dedup_b" -> 100.0, "failed_q" -> Double.NaN,
+      "q_c" -> 0.30000000000000004),
+    passes = Seq("q_a" -> List(1.5, 1.254), "dedup_b" -> List(100.0, 121.0),
+      "failed_q" -> Nil, "q_c" -> List(0.30000000000000004)),
+    failed = Seq("failed_q"), bestOf = 2, sfDir = "/data/sf0.1",
+    corpus = "0a1b2c3d4e5f6071")
+
+  test("the summary and queries_top lines keep their text, a failed query included") {
+    assert(sweep.summaryJson ===
+      """{"metric":"total","value":null,"unit":"sec","n_queries":4,""" +
+        """"failures":1,"best_of":2,"sf":"sf0.1","corpus":"0a1b2c3d4e5f6071"}""")
+    assert(sweep.queriesTopJson(1000) ===
+      """{"metric":"queries_top","unit":"sec","n_top":3,""" +
+        """"queries":{"dedup_b":100,"q_a":1.25,"q_c":0.3}}""")
+    // "dedup_b":100 fits in 20 chars, ,"q_a":1.25 after it does not
+    assert(sweep.queriesTopJson(20) ===
+      """{"metric":"queries_top","unit":"sec","n_top":1,"queries":{"dedup_b":100}}""")
+    assert(sweep.historyJson ===
+      """{"total":null,"n_queries":4,"failures":1,"best_of":2,"sf":"/data/sf0.1",""" +
+        """"corpus":"0a1b2c3d4e5f6071",""" +
+        """"queries":{"q_a":1.25,"dedup_b":100,"failed_q":null,"q_c":0.3}}""")
+  }
+
+  test("readLast reads a written BENCH_LAST line back") {
+    val f = java.nio.file.Files.createTempFile("bench_last", ".json")
+    try {
+      java.nio.file.Files.writeString(f, sweep.lastJson + "\n")
+      val last = Bench.readLast(f)
+      assert(last.passes === Map("q_a" -> List(1.5, 1.254),
+        "dedup_b" -> List(100.0, 121.0), "failed_q" -> Nil,
+        "q_c" -> List(0.30000000000000004)))
+      // a query with no time has none to compare against
+      assert(last.queries ===
+        Map("q_a" -> 1.254, "dedup_b" -> 100.0, "q_c" -> 0.30000000000000004))
+      assert(last.corpus === Some("0a1b2c3d4e5f6071"))
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  test("a STREAM_BENCH growth table flags state outgrowing its input") {
+    def row(name: String, wall: Double, rows: Long, state: Long, bytes: Long) =
+      StreamBench.Row(name, wall, 3, 10L, 20L, 30L, rows, state, bytes)
+    val pairs = Seq(
+      row("stream_a", 2.0, 1000L, 100L, 2500000L) ->
+        row("stream_a", 7.0, 10000L, 1500L, 31000000L),
+      row("stream_b", 0.5, 1000L, 0L, 0L) -> row("stream_b", 1.234, 2000L, 40L, 1000L))
+    assert(StreamBench.growthTable("Decade: stateful operators at `/d`",
+      "Blurb.", pairs, 1.15, "SUPERLINEAR") ===
+      """
+        |## Decade: stateful operators at `/d`
+        |
+        |Blurb.
+        |
+        || operator | wall s | wall x | input rows | rows x | state rows | state x | state MB | verdict |
+        ||---|---|---|---|---|---|---|---|---|
+        || stream_a | 7.00 | 3.5 | 10000 | 10.0 | 1500 | 15.0 | 31.00 | **SUPERLINEAR** |
+        || stream_b | 1.23 | 2.5 | 2000 | 2.0 | 40 | 0.0 | 0.00 | ok |
+        |""".stripMargin)
+    // 15x state on 10x input is inside a 2x slack
+    assert(StreamBench.growthTable("h", "b", pairs.take(1), 2.0, "STATE-HEAVY")
+      .contains("| 31.00 | ok |"))
+  }
+
   test("PlanDump refuses to pick a plans round on its own") {
     val e = intercept[IllegalArgumentException](PlanDump.outDir(Map.empty))
     assert(e.getMessage.contains("SPARK_GRAFT_ROUND"), e.getMessage)

@@ -283,6 +283,46 @@ class RegistrySpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  // A stream runs to completion through one driver, StreamOps.drain
+  // (start on the calling thread, process, stop in a finally), or
+  // through the two-phase SentinelStage.drainClosing. A copy elsewhere is
+  // one more place a streaming fix has to be made again.
+  test("a stream is drained only by StreamOps.drain and SentinelStage.drainClosing") {
+    val hits = operatorSourceHits(Seq("processAllAvailable("), dirs = Seq(""))
+      .filterNot(inDef(Set("StreamOps.scala" -> "drain", "StreamOps.scala" -> "drainClosing")))
+    assert(hits.isEmpty,
+      "stream run to completion outside StreamOps.drain (call it, or " +
+        "StreamOps.toMemory):\n" + hits.mkString("\n"))
+  }
+
+  test("a memory sink is written only by StreamOps.toMemory") {
+    val allowed = Map(
+      // reads the state store back from an explicit checkpoint location
+      "StreamOps.scala" -> "stream_state_read")
+    val hits = operatorSourceHits(Seq(".format(\"memory\")"), dirs = Seq(""))
+      .filterNot(inDef(Set("StreamOps.scala" -> "toMemory")))
+      .filterNot(allowlisted(allowed))
+    assert(hits.isEmpty,
+      "memory sink outside StreamOps.toMemory (call it):\n" + hits.mkString("\n"))
+  }
+
+  test("a corpus table is streamed only by StreamOps.tableStream and SentinelStage") {
+    val hits = operatorSourceHits(Seq(".readStream"), dirs = Seq(""))
+      .filterNot(inDef(Set("StreamOps.scala" -> "tableStream", "StreamOps.scala" -> "stream")))
+    assert(hits.isEmpty,
+      "corpus readStream outside StreamOps.tableStream (call it):\n" +
+        hits.mkString("\n"))
+  }
+
+  // Operator scratch directories come from graft.jvmScratchDir, which
+  // deletes them at JVM exit; a bare temp directory outlives the run.
+  test("operator sources make scratch directories only through jvmScratchDir") {
+    val hits = operatorSourceHits(Seq("createTempDirectory"))
+    assert(hits.isEmpty,
+      "bare temp directory in operator code (call graft.jvmScratchDir):\n" +
+        hits.mkString("\n"))
+  }
+
   // Scaladoc attaches to the definition right below it; a block directly
   // above another block documents nothing and has lost its definition.
   test("no scaladoc block sits directly above another in src/main") {

@@ -481,6 +481,26 @@ class StreamCancelSpec extends AnyFunSuite {
     assert(rows.toSet === Set((2L, 9.0, 50L, 100L), (3L, 9.0, 50L, 200L)))
   }
 
+  test("a failing stream run through toMemory throws, stops and frees its scope") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, -1L)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Tables.scoped {
+        Tables.materialize(spark.range(10).toDF()).count()
+        StreamOps.toMemory(spark, "failing", "append")(input.toDS()
+          .map(x => if (x < 0) throw new IllegalStateException("bad row") else x))
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("bad row")), e)
+    assert(spark.streams.active.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
+  }
+
   test("stream_tv_drift converges to the batch histogram bit-for-bit") {
     val st = Registry.byName("stream_tv_drift")
       .run(spark, TestSpark.sf).collect().map(_.toSeq).toSeq
