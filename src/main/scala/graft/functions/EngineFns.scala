@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * DuckDB SQL formulation:
   *
   *  - `hash31` uses md5 (same bytes in any engine) → first 15 hex chars →
-  *    bigint → mod 2^31-1. DuckDB: CAST(concat('0x', substr(md5(s),1,15))
-  *    AS BIGINT) % 2147483647.
+  *    bigint → mod 2^31-1; `hash31Sql` is its DuckDB text and
+  *    `hash31Value` the same function on a Scala string.
   *  - `cosine` folds products left-to-right in double, so the result is
   *    bit-identical to DuckDB's list_reduce over list_zip.
   */
@@ -22,13 +22,27 @@ object EngineFns {
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10)
       .cast("long") % 2147483647L
 
-  /** Whitespace tokens. */
-  def toks(c: Column): Column = split(c, " ")
+  /** The DuckDB mirror of [[hash31]] over the SQL expression `x`,
+    * parenthesized so it composes under `*`, `%` and `>>`. */
+  def hash31Sql(x: String): String =
+    s"(CAST(concat('0x', substr(md5($x), 1, 15)) AS BIGINT) % 2147483647)"
+
+  /** [[hash31]] of a Scala string (its UTF-8 bytes), for values computed
+    * outside a query plan: plan-build-time constants and GenSource rows. */
+  def hash31Value(s: String): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.substring(0, 15)
+    java.lang.Long.parseLong(hex, 16) % 2147483647L
+  }
+
+  /** Whitespace tokens of a text column. Spark `split` keeps trailing
+    * empty strings (limit = -1), matching DuckDB `string_split`. */
+  def tokens(c: Column): Column = split(c, " ")
 
   /** Distinct n-word shingles of a text column (empty array below n
     * tokens). The shingle *set* feeds Jaccard / MinHash. */
   def shingles(c: Column, n: Int): Column = {
-    val ts = toks(c)
+    val ts = tokens(c)
     array_distinct(
       when(size(ts) >= n,
         transform(sequence(lit(0), size(ts) - n),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import graft.functions.EngineFns.tokens
+import graft.operators.Relational.dec
 
 /** Advanced analytics: pivot, exact percentiles, array scalar functions,
   * as-of join (composed from union + window — Spark has no native as-of),
@@ -20,8 +22,6 @@ object Analytics {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(12,2)")
 
   /** Typed record for the flatMapGroups sessionizer. */
   final case class Ev(event_id: Long, user_id: Long, ts_us: Long)
@@ -413,7 +413,7 @@ object Analytics {
       "q_explode_pos",
       (s, dir) =>
         t(s, dir, "documents")
-          .select(col("doc_id"), posexplode(split(col("text"), " ")))
+          .select(col("doc_id"), posexplode(tokens(col("text"))))
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("col").as("token"))
           .orderBy("doc_id", "pos"),

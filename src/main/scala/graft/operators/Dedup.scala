@@ -116,7 +116,7 @@ object Dedup {
     * (StreamOps.streamParagraphDedup) so the two chunkings can never
     * drift. Stateless column work; runs on batch and streaming frames. */
   private[graft] def paragraphs(d: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
+    val toks = tokens(col("text"))
     val nChunks = ((size(toks) + lit(3)) / lit(4)).cast("int")
     d.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), nChunks - 1), i =>
@@ -129,7 +129,7 @@ object Dedup {
     * (doc_id, n_paras, n_kept, clean_text), empty-text for documents
     * whose every paragraph was a repeat. */
   private[graft] def rebuildFromKept(d: DataFrame, kept: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
+    val toks = tokens(col("text"))
     val agg = kept.groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
         array_join(transform(
@@ -210,146 +210,19 @@ object Dedup {
        FROM tk LEFT JOIN kept ON tk.doc_id = kept.doc_id
        ORDER BY tk.doc_id"""
 
-  /** The shared MinHash band-key CTE prefix (shingles → signatures →
-    * 8 two-row band keys): every LSH-banding oracle — batch pairs,
-    * streaming near-dup, and incremental corpus probe — derives from this
-    * one definition so the candidate generators cannot drift apart. */
-  private[graft] val MinhashBandsCte: String =
-    """WITH d AS MATERIALIZED (
-         SELECT doc_id, list_distinct(list_transform(
-           range(1, len(string_split(text,' ')) - 1),
-           i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-         FROM documents),
-       sig AS MATERIALIZED (
-         SELECT doc_id, list_transform(range(0, 16), p ->
-           list_aggregate(list_transform(sh, s ->
-             ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-           'min')) AS sg
-         FROM d),
-       bands AS MATERIALIZED (
-         SELECT doc_id, b,
-           array_to_string(sg[2*b + 1 : 2*b + 2], ',') AS band_key
-         FROM sig, (SELECT unnest(range(0, 8)) AS b) bs)"""
-
-  /** Banding pairs oracle: pairs sharing >= 1 band key, with the exact
-    * Jaccard attached. */
-  private[graft] val MinhashPairsOracleSql: String =
-    MinhashBandsCte + """,
-       cand AS (
-         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-         FROM bands x JOIN bands y
-           ON x.b = y.b AND x.band_key = y.band_key
-            AND x.doc_id < y.doc_id)
-       SELECT c.a_id, c.b_id,
-         CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-           / CAST(len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS DOUBLE) AS jaccard
-       FROM cand c
-       JOIN d da ON da.doc_id = c.a_id
-       JOIN d db ON db.doc_id = c.b_id
-       ORDER BY a_id, b_id"""
-
-  /** TTL variant of the banding pairs oracle: a collision only counts
-    * while BOTH documents are inside the NeardupTtlDocs ingest window —
-    * the relation the watermark-evicted streaming bucket state emits. */
-  private[graft] val MinhashPairsTtlOracleSql: String =
-    MinhashBandsCte + s""",
-       cand AS (
-         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-         FROM bands x JOIN bands y
-           ON x.b = y.b AND x.band_key = y.band_key
-            AND x.doc_id < y.doc_id
-         WHERE y.doc_id - x.doc_id <= $NeardupTtlDocs)
-       SELECT c.a_id, c.b_id,
-         CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-           / CAST(len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS DOUBLE) AS jaccard
-       FROM cand c
-       JOIN d da ON da.doc_id = c.a_id
-       JOIN d db ON db.doc_id = c.b_id
-       ORDER BY a_id, b_id"""
-
-  /** Viral band-bucket cap for the TEXT banded-LSH self-join candidate
-    * generators (r13, verdict task #2 — Similarity.BandBucketCap ported
-    * to minhash banding). On a viral-template corpus (the `clique`
-    * CorpusGen mode: m near-identical family members) every band bucket
-    * of the family holds all m members, so the band self-join emits
-    * C(m,2) candidate rows PER BAND — one-key-quadratic at sf10 even
-    * where the verified OUTPUT needn't be. A bucket past the cap
-    * carries ~zero discrimination signal (the MaxShingleDF argument at
-    * the band grain): its members are either one template family —
-    * recovered wholesale by the cluster-representative forms — or a
-    * band-key coincidence that exact-Jaccard verification would reject
-    * anyway. Cap = 1000: far above every healthy/heaps bucket at the
-    * gate scales (every sf0.01 corpus bucket ≤ ~50 members, so every
-    * standing hash is unchanged), below the clique family size from
-    * sf1 up (m = 1%·N = 5 000 at sf1). Recall cost is MEASURED, not
-    * argued: dedup_planted_recall / dedup_recall_curve carry capped
-    * columns scored against planted truth on every corpus.
-    * `final val` (compile-time constant): interpolated into oracle
-    * strings below — the round-7 "val below defs" gotcha applies. */
-  private[graft] final val TextBandBucketCap = 1000
-
-  /** Capped-bands CTE suffix: compose after MinhashBandsCte. kbands is
-    * the band relation with viral buckets (df > TextBandBucketCap)
-    * dropped wholesale — the exact anti-join the Spark side performs. */
-  private[graft] val MinhashCappedBandsCte: String =
-    s""",
-       viralbands AS MATERIALIZED (
-         SELECT b, band_key FROM bands
-         GROUP BY b, band_key HAVING count(*) > $TextBandBucketCap),
-       kbands AS MATERIALIZED (
-         SELECT v.doc_id, v.b, v.band_key
-         FROM bands v LEFT JOIN viralbands w
-           ON w.b = v.b AND w.band_key = v.band_key
-         WHERE w.b IS NULL)"""
-
-  /** Capped banding pairs oracle: dedup_minhash_pairs' relation with the
-    * viral-bucket cap applied to candidate generation. */
-  private[graft] val MinhashPairsCappedOracleSql: String =
-    MinhashBandsCte + MinhashCappedBandsCte + """,
-       cand AS (
-         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-         FROM kbands x JOIN kbands y
-           ON x.b = y.b AND x.band_key = y.band_key
-            AND x.doc_id < y.doc_id)
-       SELECT c.a_id, c.b_id,
-         CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-           / CAST(len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS DOUBLE) AS jaccard
-       FROM cand c
-       JOIN d da ON da.doc_id = c.a_id
-       JOIN d db ON db.doc_id = c.b_id
-       ORDER BY a_id, b_id"""
-
-  /** The shared exact-Jaccard pair CTE (shingles -> thresholded pairs):
-    * the same relation the cluster-collapse and PageRank oracles close
-    * over, defined once so the graph consumers cannot drift from the
-    * pair generator.
-    *
-    * AS MATERIALIZED (round-10, VERDICT r9 task #2): DuckDB inlines
-    * CTEs at every reference, and the iteration-REPLAY oracles
-    * (labelprop/modularity/conductance/pagerank/ppr/hits/kcore/walk)
-    * reference each round's CTE twice — so the O(N²) all-pairs join
-    * here was re-executed an EXPONENTIAL number of times per unrolled
-    * iteration, which is why the sf0.1 oracle checks timed out. The
-    * hint pins every oracle to exactly ONE pairs pass; results are
-    * identical (materialization is an execution strategy, not a
-    * semantic change — proven by the unchanged sf0.01 hashes). */
-  private[graft] val JaccardPairsCte: String =
-    s"""d AS MATERIALIZED (
-         SELECT doc_id, list_distinct(list_transform(
-           range(1, len(string_split(text,' ')) - 1),
-           i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-         FROM documents),
-       pairs AS MATERIALIZED (
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM d a, d b
-         WHERE a.doc_id < b.doc_id
-           AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold)"""
-
   /** (doc_id, sh) with sh = distinct 3-word shingles. */
   private[graft] def shingled(s: SparkSession, dir: String): DataFrame =
     docsParallel(s, dir)
       .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
+
+  /** The SQL mirror of [[shingled]] over `src`'s (doc_id, text): the
+    * MATERIALIZED CTE d(doc_id, sh). */
+  private[graft] def shingledSql(src: String = "documents"): String =
+    s"""d AS MATERIALIZED (
+         SELECT doc_id, list_distinct(list_transform(
+           range(1, len(string_split(text,' ')) - 1),
+           i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
+         FROM $src)"""
 
   /** (doc_id, sig): MinHash signatures computed on the fully
     * whole-stage-codegen path — explode shingles to rows, hash each with
@@ -387,6 +260,17 @@ object Dedup {
   private def signatures(s: SparkSession, dir: String): DataFrame =
     signaturesFrom(shingled(s, dir))
 
+  /** The SQL mirror of [[signaturesFrom]] over [[shingledSql]]'s d: the
+    * MATERIALIZED CTE sig(doc_id, sg), NULL minima for a shingle-less
+    * document. */
+  private[graft] val SignaturesSql: String =
+    s"""sig AS MATERIALIZED (
+         SELECT doc_id, list_transform(range(0, $NumPerms), p ->
+           list_aggregate(list_transform(sh, s ->
+             ((2*p + 3) * ${hash31Sql("s")} + p) % 2147483647),
+           'min')) AS sg
+         FROM d)"""
+
   /** (doc_id, band_id, band_key): the NumPerms / `rows` LSH band keys of
     * each signature, `rows` minima comma-joined — engine-portable
     * (mirrors MinhashBandsCte at the default 8 bands x 2 rows). The one
@@ -406,6 +290,23 @@ object Dedup {
       }: _*)).as("band"))
       .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
 
+  /** The SQL mirror of [[bandsOf]] over [[SignaturesSql]]'s sig: the
+    * MATERIALIZED CTE `name`(doc_id, b, band_key). */
+  private[graft] def bandsSql(rows: Int = BandRows, name: String = "bands"): String =
+    s"""$name AS MATERIALIZED (
+         SELECT doc_id, b,
+           array_to_string(sg[$rows*b + 1 : $rows*b + $rows], ',') AS band_key
+         FROM sig, (SELECT unnest(range(0, ${NumPerms / rows})) AS b) bs)"""
+
+  /** The shared MinHash band-key CTE prefix (shingles → signatures →
+    * 8 two-row band keys): every LSH-banding oracle — batch pairs,
+    * streaming near-dup, and incremental corpus probe — derives from this
+    * one definition so the candidate generators cannot drift apart. */
+  private[graft] val MinhashBandsCte: String =
+    s"""WITH ${shingledSql()},
+       $SignaturesSql,
+       ${bandsSql()}"""
+
   /** (a_id, b_id) with a_id < b_id: one row per bucket of `rel` (rows
     * equal on every column of `keys`) that the two `id`s share — the
     * self-equi-join of every bucketed candidate generator. No DISTINCT:
@@ -416,6 +317,19 @@ object Dedup {
         keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("a_id"), col(s"y.$id").as("b_id"))
+
+  /** The SQL mirror of [[bucketPairs]] + distinct over a band relation:
+    * the MATERIALIZED CTE `name`(a_id, b_id) of the pairs sharing a
+    * bucket of `bands`, restricted by `where` when it is given. */
+  private[graft] def bandPairsSql(name: String, bands: String = "bands",
+      where: String = ""): String = {
+    val restrict = if (where.isEmpty) "" else s"\n         WHERE $where"
+    s"""$name AS MATERIALIZED (
+         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
+         FROM $bands x JOIN $bands y
+           ON x.b = y.b AND x.band_key = y.band_key
+            AND x.doc_id < y.doc_id$restrict)"""
+  }
 
   /** `rel` without the rows of its viral keys, the `keys` values shared
     * by more than `cap` rows: a stop-word cap that keeps one boilerplate
@@ -430,6 +344,80 @@ object Dedup {
       .select(keys.head, keys.tail: _*)
     rel.join(broadcast(viral), keys, "left_anti")
   }
+
+  /** Viral band-bucket cap for the TEXT banded-LSH self-join candidate
+    * generators (r13, verdict task #2 — Similarity.BandBucketCap ported
+    * to minhash banding). On a viral-template corpus (the `clique`
+    * CorpusGen mode: m near-identical family members) every band bucket
+    * of the family holds all m members, so the band self-join emits
+    * C(m,2) candidate rows PER BAND — one-key-quadratic at sf10 even
+    * where the verified OUTPUT needn't be. A bucket past the cap
+    * carries ~zero discrimination signal (the MaxShingleDF argument at
+    * the band grain): its members are either one template family —
+    * recovered wholesale by the cluster-representative forms — or a
+    * band-key coincidence that exact-Jaccard verification would reject
+    * anyway. Cap = 1000: far above every healthy/heaps bucket at the
+    * gate scales (every sf0.01 corpus bucket ≤ ~50 members, so every
+    * standing hash is unchanged), below the clique family size from
+    * sf1 up (m = 1%·N = 5 000 at sf1). Recall cost is MEASURED, not
+    * argued: dedup_planted_recall / dedup_recall_curve carry capped
+    * columns scored against planted truth on every corpus.
+    * `final val` (compile-time constant): interpolated into oracle
+    * strings below — the round-7 "val below defs" gotcha applies. */
+  private[graft] final val TextBandBucketCap = 1000
+
+  /** The SQL mirror of [[dropViral]] on the bands at TextBandBucketCap;
+    * compose after MinhashBandsCte. kbands is the band relation with
+    * viral buckets (df > TextBandBucketCap) dropped wholesale. */
+  private[graft] val MinhashCappedBandsCte: String =
+    s""",
+       viralbands AS MATERIALIZED (
+         SELECT b, band_key FROM bands
+         GROUP BY b, band_key HAVING count(*) > $TextBandBucketCap),
+       kbands AS MATERIALIZED (
+         SELECT v.doc_id, v.b, v.band_key
+         FROM bands v LEFT JOIN viralbands w
+           ON w.b = v.b AND w.band_key = v.band_key
+         WHERE w.b IS NULL)"""
+
+  /** Jaccard similarity of two distinct-shingle array columns. */
+  private[graft] def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      (size(a) + size(b) - size(array_intersect(a, b))).cast("double")
+
+  /** The SQL mirror of [[jaccard]] over two shingle lists, parenthesized. */
+  private[graft] def jaccardSql(a: String, b: String): String =
+    s"(CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
+      s"CAST(len($a) + len($b) - len(list_intersect($a, $b)) AS DOUBLE))"
+
+  /** The banding pairs oracle: the MinhashBandsCte chain, then `ctes`
+    * (ending in the candidate CTE cand), then each candidate with its
+    * exact Jaccard. */
+  private def bandPairsOracleSql(ctes: String): String =
+    MinhashBandsCte + ctes + s"""
+       SELECT c.a_id, c.b_id, ${jaccardSql("da.sh", "db.sh")} AS jaccard
+       FROM cand c
+       JOIN d da ON da.doc_id = c.a_id
+       JOIN d db ON db.doc_id = c.b_id
+       ORDER BY a_id, b_id"""
+
+  /** Banding pairs oracle: pairs sharing >= 1 band key, with the exact
+    * Jaccard attached. */
+  private[graft] val MinhashPairsOracleSql: String =
+    bandPairsOracleSql(s",\n       ${bandPairsSql("cand")}")
+
+  /** TTL variant of the banding pairs oracle: a collision only counts
+    * while BOTH documents are inside the NeardupTtlDocs ingest window —
+    * the relation the watermark-evicted streaming bucket state emits. */
+  private[graft] val MinhashPairsTtlOracleSql: String =
+    bandPairsOracleSql(s",\n       ${bandPairsSql("cand",
+      where = s"y.doc_id - x.doc_id <= $NeardupTtlDocs")}")
+
+  /** Capped banding pairs oracle: dedup_minhash_pairs' relation with the
+    * viral-bucket cap applied to candidate generation. */
+  private[graft] val MinhashPairsCappedOracleSql: String =
+    bandPairsOracleSql(MinhashCappedBandsCte +
+      s",\n       ${bandPairsSql("cand", "kbands")}")
 
   /** Build-once/save for dedup_minhash_served's band index: the
     * EXISTING corpus's (doc_id, band_key, band_id) relation persisted as
@@ -452,7 +440,7 @@ object Dedup {
     * sum over the same token multiset), ~an order of magnitude cheaper. */
   private def simhashed(s: SparkSession, dir: String): DataFrame = {
     val hashed = docsParallel(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .select(col("doc_id"), hash31(col("t")).as("h"))
     val votes = (0 until 16).map { j =>
       sum(when(expr(s"(shiftright(h, $j) & 1) = 1"), 1).otherwise(-1)).as(s"v_$j")
@@ -464,6 +452,22 @@ object Dedup {
           .map(j => when(col(s"v_$j") > 0, lit(1L << j)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
   }
+
+  /** The SQL mirror of [[simhashed]]: the MATERIALIZED CTE sg(doc_id,
+    * simhash) of each document's 16-bit SimHash. */
+  private[graft] val SimhashSql: String =
+    s"""sg AS MATERIALIZED (
+         SELECT doc_id,
+           CAST(list_sum(list_transform(range(0, 16), j ->
+             CASE WHEN bits[j + 1] = 1 THEN 1 << j ELSE 0 END)) AS BIGINT) AS simhash
+         FROM (
+           SELECT doc_id,
+             list_transform(range(0, 16), j ->
+               CASE WHEN list_sum(list_transform(string_split(text, ' '), t ->
+                 CASE WHEN (${hash31Sql("t")} >> j) & 1 = 1
+                      THEN 1 ELSE -1 END)) > 0
+               THEN 1 ELSE 0 END) AS bits
+           FROM documents) v)"""
 
   /** Exact Jaccard for pairs sharing >= 1 shingle, via inverted index.
     * Shingles with document frequency above `maxDf` are dropped from the
@@ -507,6 +511,33 @@ object Dedup {
     jaccardPairs(sh)
       .filter(col("jaccard") >= JaccardThreshold).select("a_id", "b_id")
 
+  /** The SQL mirror of [[jaccardEdges]] over [[shingledSql]]'s d: the
+    * MATERIALIZED CTE `name`(a_id, b_id), as the all-pairs form. */
+  private[graft] def jaccardEdgesSql(name: String): String =
+    s"""$name AS MATERIALIZED (
+         SELECT a.doc_id AS a_id, b.doc_id AS b_id
+         FROM d a, d b
+         WHERE a.doc_id < b.doc_id
+           AND ${jaccardSql("a.sh", "b.sh")} >= $JaccardThreshold)"""
+
+  /** The shared exact-Jaccard pair CTE (shingles -> thresholded pairs):
+    * the same relation the cluster-collapse and PageRank oracles close
+    * over, defined once so the graph consumers cannot drift from the
+    * pair generator.
+    *
+    * AS MATERIALIZED (round-10, VERDICT r9 task #2): DuckDB inlines
+    * CTEs at every reference, and the iteration-REPLAY oracles
+    * (labelprop/modularity/conductance/pagerank/ppr/hits/kcore/walk)
+    * reference each round's CTE twice — so the O(N²) all-pairs join
+    * here was re-executed an EXPONENTIAL number of times per unrolled
+    * iteration, which is why the sf0.1 oracle checks timed out. The
+    * hint pins every oracle to exactly ONE pairs pass; results are
+    * identical (materialization is an execution strategy, not a
+    * semantic change — proven by the unchanged sf0.01 hashes). */
+  private[graft] val JaccardPairsCte: String =
+    s"""${shingledSql()},
+       ${jaccardEdgesSql("pairs")}"""
+
   /** An (a_id, b_id) edge list in both orientations as (u, v). Both
     * union legs read `pairs`: each recomputes its plan unless the
     * caller checkpointed it. Locally the two legs run in parallel
@@ -524,6 +555,53 @@ object Dedup {
     s"""$name AS MATERIALIZED (
           SELECT a_id AS u, b_id AS $v FROM pairs
           UNION ALL SELECT b_id, a_id FROM pairs)"""
+
+  /** Each shingle's postings in `rel` (shingle, doc_id, ...) sampled down
+    * to `cap` rows, the smallest hash31(shingle:doc_id) first (doc_id
+    * breaks ties): deterministic, unbiased across doc ids, and replayed
+    * by [[postingSampleSql]]. */
+  private[graft] def samplePostings(rel: DataFrame, cap: Int): DataFrame = {
+    val w = Window.partitionBy("shingle").orderBy(
+      hash31(concat_ws(":", col("shingle"), col("doc_id"))).asc,
+      col("doc_id").asc)
+    rel.withColumn("prn", row_number().over(w))
+      .filter(col("prn") <= cap).drop("prn")
+  }
+
+  /** The SQL mirror of [[samplePostings]]: the MATERIALIZED CTE
+    * `name`(`cols`) of `src`'s sampled postings. */
+  private[graft] def postingSampleSql(name: String, src: String, cols: String,
+      cap: Int): String =
+    s"""$name AS MATERIALIZED (
+         SELECT $cols FROM (
+           SELECT $cols,
+             row_number() OVER (PARTITION BY shingle ORDER BY
+               ${hash31Sql("concat(shingle, ':', CAST(doc_id AS VARCHAR))")},
+               doc_id) AS prn
+           FROM $src) t
+         WHERE prn <= $cap)"""
+
+  /** The planted near-duplicate pairs (a_id < b_id) of a heaps corpus: a
+    * planted document's `source` is 'dupof<src_id>'. Empty on corpora
+    * without planted duplicates. */
+  private def plantedTruth(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents")
+      .filter(col("source").startsWith("dupof"))
+      .select(
+        least(col("doc_id"),
+          substring(col("source"), 6, 30).cast("long")).as("a_id"),
+        greatest(col("doc_id"),
+          substring(col("source"), 6, 30).cast("long")).as("b_id"))
+
+  /** The SQL mirror of [[plantedTruth]]: the MATERIALIZED CTE
+    * truth(a_id, b_id). */
+  private val PlantedTruthSql: String =
+    """truth AS MATERIALIZED (
+         SELECT least(doc_id,
+             CAST(substr(source, 6) AS BIGINT)) AS a_id,
+           greatest(doc_id,
+             CAST(substr(source, 6) AS BIGINT)) AS b_id
+         FROM documents WHERE source LIKE 'dupof%')"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -634,153 +712,8 @@ object Dedup {
     // and drop out — deterministic on both engines.
     QueryDef(
       "dedup_tfidf_nn",
-      (s, dir) => {
-        val d = docsParallel(s, dir)
-        val toks = split(col("text"), " ")
-        // Pre-flight weight-magnitude guard (round-5 task): norm/dot
-        // sums accumulate in DECIMAL(38,0), and idf grows with the
-        // corpus (df=1 ceiling: 1000*(2N-1) div 3), so at some corpus
-        // size the accumulation overflows — ANSI makes that a THROW
-        // (loud, never wrong), but a stack trace is a poor diagnosis.
-        // Bound the worst case up front: per-doc Σw <= maxW * maxTokens,
-        // and both n2 and dot are <= (Σw)² by Cauchy-Schwarz, so
-        // requiring maxW * maxTokens < sqrt(10^37) guarantees every
-        // DECIMAL(38,0) accumulator fits. (This bound does NOT keep the
-        // factors inside the < 2^64 correctly-rounded int→double cast
-        // range — that tighter, per-VALUE bound is enforced loudly by
-        // the DECIMAL(19,0) routing at the cos2 step below; r12 advice.)
-        // Two bounded driver scalars, same discipline as
-        // requireAllPairsSmall.
-        val pre = d.agg(count(lit(1)).as("n"),
-          max(size(toks)).cast("long").as("mt")).head()
-        val nDocs = pre.getLong(0)
-        // max over an empty corpus is NULL (degenerate sweep, r8)
-        val maxToks = if (pre.isNullAt(1)) 0L else pre.getLong(1)
-        val maxW = BigInt(1000) * (2 * BigInt(nDocs) - 1) / 3
-        require(maxW * maxToks < BigInt("3162277660168379331"),
-          s"dedup_tfidf_nn: idf-weight bound maxW*maxTokens = " +
-            s"${maxW * maxToks} (n_docs=$nDocs, max_tokens=$maxToks) " +
-            "exceeds the sqrt(10^37) DECIMAL(38,0) accumulation range — " +
-            "lower the idf scale factor")
-        val sh = d.filter(size(toks) >= 3).select(col("doc_id"),
-          explode(transform(sequence(lit(0), size(toks) - lit(3)), i =>
-            array_join(slice(toks, i + 1, lit(3)), " "))).as("shingle"))
-        // reuse the pre-flight count; materialize only w and dots — the
-        // same two-barrier treatment as dedup_tfidf_nn_capped (r14)
-        val tf = sh.groupBy("doc_id", "shingle").agg(count(lit(1)).as("tf"))
-        val dfr = tf.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= MaxShingleDF)
-        val w = tf.join(dfr, "shingle")
-          .select(col("doc_id"), col("shingle"),
-            (col("tf") *
-              expr(s"(1000 * (2*${nDocs}L - 2*df + 1)) div (2*df + 1)")).as("w"))
-        // norm/dot sums in DECIMAL(38,0) (oracle: HUGEINT): weights
-        // scale with 1000*2N/df, so at corpus sizes far beyond this
-        // suite a 64-bit sum could exceed Long range — Spark would wrap
-        // silently while DuckDB's HUGEINT errors on the downcast, a
-        // divergence rather than a clean mismatch. 128-bit accumulation
-        // on BOTH engines keeps the arithmetic exact to ~1e38, and past
-        // that Spark's ANSI decimal overflow THROWS — loud, never wrong.
-        val w19 = col("w").cast("decimal(19,0)")
-        val wm = Tables.materialize(w) // feeds norms + both dot-join sides
-        val norms = wm.groupBy("doc_id")
-          .agg(sum(w19 * w19).as("n2"))
-        val dots = wm.as("a").join(wm.as("b"), Seq("shingle"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .agg(sum(col("a.w").cast("decimal(19,0)") *
-            col("b.w").cast("decimal(19,0)")).as("dot"))
-          .transform(Tables.materialize)
-        val directed = dots
-          .select(col("a_id").as("src"), col("b_id").as("dst"), col("dot"))
-          .unionAll(dots
-            .select(col("b_id").as("src"), col("a_id").as("dst"), col("dot")))
-        val wv = Window.partitionBy("src")
-          .orderBy(col("cos2").desc, col("dst").asc)
-        directed
-          .join(norms.select(col("doc_id").as("src"), col("n2").as("s_n2")),
-            "src")
-          .join(norms.select(col("doc_id").as("dst"), col("n2").as("d_n2")),
-            "dst")
-          // nullif: an all-duplicate corpus drives every idf weight to
-          // 0 (df = n_docs makes the quantized idf 1000 div (2n+1) = 0),
-          // zeroing the norms — Spark-4 ANSI throws on double /0 where
-          // DuckDB returns NULL; ranks then fall to the dst tie-break
-          // on BOTH engines (degenerate-corpus sweep, r8)
-          // cos2 is formed FACTOR-FIRST, each factor ROUTED THROUGH
-          // DECIMAL(19,0) before the double cast: values < 1e19 < 2^64
-          // sit in the range where int->double casts are correctly
-          // rounded in BOTH engines (DuckDB's HUGEINT half-splitting is
-          // exact when the upper 64-bit limb is 0), so dbl(dot)*dbl(dot)
-          // / (dbl(s_n2)*dbl(d_n2)) is one identical IEEE op sequence
-          // cross-engine — and a factor >= 1e19 overflows the
-          // DECIMAL(19,0) cast LOUDLY on both engines (Spark ANSI throw,
-          // DuckDB conversion error) instead of silently re-entering the
-          // half-splitting range (r12 advice: the sqrt(10^37) pre-flight
-          // bounds the 38-digit accumulators, not these factors).
-          // The previous product-first form converted the 38-digit
-          // products (dot^2 up to 1e38) via DuckDB's HUGEINT
-          // half-splitting cast, which is NOT correctly rounded there —
-          // a 1-ULP cos2 divergence surfaced on the round-11 Heaps
-          // corpus (and could silently flip the rank-1 tie-break).
-          .withColumn("cos2",
-            expr("""(CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE) *
-                     CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE)) /
-                    nullif(CAST(CAST(s_n2 AS DECIMAL(19,0)) AS DOUBLE) *
-                         CAST(CAST(d_n2 AS DECIMAL(19,0)) AS DOUBLE), 0.0D)"""))
-          .withColumn("rk", row_number().over(wv))
-          .filter(col("rk") === 1)
-          .select(col("src").as("doc_id"), col("dst").as("nn_id"),
-            col("cos2"))
-          .orderBy("doc_id")
-      },
-      Some(s"""WITH tk AS (
-                 SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents WHERE len(string_split(text, ' ')) >= 3),
-               sh AS (
-                 SELECT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-                 FROM tk, LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) ix),
-               tf AS (
-                 SELECT doc_id, shingle, CAST(count(*) AS BIGINT) AS tf
-                 FROM sh GROUP BY 1, 2),
-               dfr AS (
-                 SELECT shingle, CAST(count(*) AS BIGINT) AS df
-                 FROM tf GROUP BY 1 HAVING count(*) <= $MaxShingleDF),
-               n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-               wt AS (
-                 SELECT doc_id, shingle,
-                   tf * ((1000 * (2*n.n_docs - 2*df + 1)) // (2*df + 1)) AS w
-                 FROM tf JOIN dfr USING (shingle), n),
-               norms AS (
-                 SELECT doc_id, sum(CAST(w AS HUGEINT) * w) AS n2
-                 FROM wt GROUP BY doc_id),
-               dots AS (
-                 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                   sum(CAST(a.w AS HUGEINT) * b.w) AS dot
-                 FROM wt a JOIN wt b ON a.shingle = b.shingle
-                  AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-               directed AS (
-                 SELECT a_id AS src, b_id AS dst, dot FROM dots
-                 UNION ALL
-                 SELECT b_id, a_id, dot FROM dots),
-               scored AS (
-                 SELECT d.src, d.dst,
-                   (CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE) *
-                    CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE)) /
-                     nullif(CAST(CAST(sa.n2 AS DECIMAL(19,0)) AS DOUBLE) *
-                       CAST(CAST(sb.n2 AS DECIMAL(19,0)) AS DOUBLE),
-                       0.0) AS cos2
-                 FROM directed d
-                 JOIN norms sa ON d.src = sa.doc_id
-                 JOIN norms sb ON d.dst = sb.doc_id),
-               r AS (
-                 SELECT src, dst, cos2,
-                   row_number() OVER (PARTITION BY src
-                     ORDER BY cos2 DESC, dst ASC) AS rk
-                 FROM scored)
-               SELECT src AS doc_id, dst AS nn_id, cos2
-               FROM r WHERE rk = 1 ORDER BY doc_id"""),
+      (s, dir) => tfidfNn(s, dir, "dedup_tfidf_nn", None),
+      Some(tfidfNnOracleSql(None)),
       // bench=false (r9, VERDICT task 2): the posting self-join is
       // Σdf² and df ∝ N/V on this vocabulary — measured e(0.1→1)=1.42,
       // 119 s at sf1, superlinear BEYOND the overhead floor. Stays
@@ -806,147 +739,9 @@ object Dedup {
     // md5 sample order, so results stay bit-exact.
     QueryDef(
       "dedup_tfidf_nn_capped",
-      (s, dir) => {
-        val d = docsParallel(s, dir)
-        val toks = split(col("text"), " ")
-        // same sqrt(10^37) DECIMAL(38,0)-accumulation pre-flight as the
-        // exact form — the sampled norms/dots are dominated by the
-        // uncapped worst case; the per-factor < 1e19 double-cast range
-        // is enforced by the DECIMAL(19,0) routing at the cos2 step
-        val pre = d.agg(count(lit(1)).as("n"),
-          max(size(toks)).cast("long").as("mt")).head()
-        val nDocs = pre.getLong(0)
-        val maxToks = if (pre.isNullAt(1)) 0L else pre.getLong(1)
-        val maxW = BigInt(1000) * (2 * BigInt(nDocs) - 1) / 3
-        require(maxW * maxToks < BigInt("3162277660168379331"),
-          s"dedup_tfidf_nn_capped: idf-weight bound maxW*maxTokens = " +
-            s"${maxW * maxToks} (n_docs=$nDocs, max_tokens=$maxToks) " +
-            "exceeds the sqrt(10^37) DECIMAL(38,0) accumulation range")
-        val sh = d.filter(size(toks) >= 3).select(col("doc_id"),
-          explode(transform(sequence(lit(0), size(toks) - lit(3)), i =>
-            array_join(slice(toks, i + 1, lit(3)), " "))).as("shingle"))
-        // materialize wc and dots ONCE (r14): without it, every
-        // downstream consumer re-runs the scan + shingle explode +
-        // aggregates — the r13 before-plan of this query is 1,580 lines
-        // with 36 parquet scans and 140 exchanges because wc feeds
-        // norms + both dot-join sides and dots feeds both directed
-        // legs: the shared subtrees multiply out (§2/§5; driver-
-        // measured taskCpu 40.7 s → 24.8 s). Only TWO eager barriers:
-        // tf/norms recomputes over materialized blocks are cheap, and
-        // each extra localCheckpoint is a serialized job (measured —
-        // the 4-checkpoint variant was wall-slower).
-        val tf = sh.groupBy("doc_id", "shingle").agg(count(lit(1)).as("tf"))
-        val dfr = tf.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= MaxShingleDF)
-        // n_docs is already in hand from the pre-flight aggregate —
-        // interpolate it instead of a second full-corpus count subtree
-        val w = tf.join(dfr, "shingle")
-          .select(col("doc_id"), col("shingle"),
-            (col("tf") *
-              expr(s"(1000 * (2*${nDocs}L - 2*df + 1)) div (2*df + 1)")).as("w"))
-        // the posting sample: one window over the linear posting
-        // relation, partitioned on the shingle (the same key the dot
-        // join shuffles on, so at scale the sample and the join share
-        // a partitioning — no extra exchange)
-        val ws = Window.partitionBy("shingle").orderBy(
-          hash31(concat_ws(":", col("shingle"), col("doc_id"))).asc,
-          col("doc_id").asc)
-        val wc = w.withColumn("prn", row_number().over(ws))
-          .filter(col("prn") <= TfidfPostingCap).drop("prn")
-          .transform(Tables.materialize)
-        val w19 = col("w").cast("decimal(19,0)")
-        val norms = wc.groupBy("doc_id")
-          .agg(sum(w19 * w19).as("n2"))
-        val dots = wc.as("a").join(wc.as("b"), Seq("shingle"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .agg(sum(col("a.w").cast("decimal(19,0)") *
-            col("b.w").cast("decimal(19,0)")).as("dot"))
-          .transform(Tables.materialize)
-        val directed = dots
-          .select(col("a_id").as("src"), col("b_id").as("dst"), col("dot"))
-          .unionAll(dots
-            .select(col("b_id").as("src"), col("a_id").as("dst"), col("dot")))
-        val wv = Window.partitionBy("src")
-          .orderBy(col("cos2").desc, col("dst").asc)
-        directed
-          .join(norms.select(col("doc_id").as("src"), col("n2").as("s_n2")),
-            "src")
-          .join(norms.select(col("doc_id").as("dst"), col("n2").as("d_n2")),
-            "dst")
-          // cos2 factor-first with DECIMAL(19,0) routing — see
-          // dedup_tfidf_nn: keeps every int->double cast input < 2^64
-          // (correctly rounded on both engines) and overflows LOUDLY
-          // past 1e19 instead of silently re-entering DuckDB's
-          // half-splitting range (r12 advice)
-          .withColumn("cos2",
-            expr("""(CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE) *
-                     CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE)) /
-                    nullif(CAST(CAST(s_n2 AS DECIMAL(19,0)) AS DOUBLE) *
-                         CAST(CAST(d_n2 AS DECIMAL(19,0)) AS DOUBLE), 0.0D)"""))
-          .withColumn("rk", row_number().over(wv))
-          .filter(col("rk") === 1)
-          .select(col("src").as("doc_id"), col("dst").as("nn_id"),
-            col("cos2"))
-          .orderBy("doc_id")
-      },
-      Some(s"""WITH tk AS (
-                 SELECT doc_id, string_split(text, ' ') AS w
-                 FROM documents WHERE len(string_split(text, ' ')) >= 3),
-               sh AS (
-                 SELECT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
-                 FROM tk, LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) ix),
-               tf AS (
-                 SELECT doc_id, shingle, CAST(count(*) AS BIGINT) AS tf
-                 FROM sh GROUP BY 1, 2),
-               dfr AS (
-                 SELECT shingle, CAST(count(*) AS BIGINT) AS df
-                 FROM tf GROUP BY 1 HAVING count(*) <= $MaxShingleDF),
-               n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-               wt AS (
-                 SELECT doc_id, shingle,
-                   tf * ((1000 * (2*n.n_docs - 2*df + 1)) // (2*df + 1)) AS w
-                 FROM tf JOIN dfr USING (shingle), n),
-               wc AS (
-                 SELECT doc_id, shingle, w FROM (
-                   SELECT doc_id, shingle, w,
-                     row_number() OVER (PARTITION BY shingle ORDER BY
-                       CAST(concat('0x', substr(md5(concat(shingle, ':',
-                         CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                         % 2147483647,
-                       doc_id) AS prn
-                   FROM wt) t
-                 WHERE prn <= $TfidfPostingCap),
-               norms AS (
-                 SELECT doc_id, sum(CAST(w AS HUGEINT) * w) AS n2
-                 FROM wc GROUP BY doc_id),
-               dots AS (
-                 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                   sum(CAST(a.w AS HUGEINT) * b.w) AS dot
-                 FROM wc a JOIN wc b ON a.shingle = b.shingle
-                  AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-               directed AS (
-                 SELECT a_id AS src, b_id AS dst, dot FROM dots
-                 UNION ALL
-                 SELECT b_id, a_id, dot FROM dots),
-               scored AS (
-                 SELECT d.src, d.dst,
-                   (CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE) *
-                    CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE)) /
-                     nullif(CAST(CAST(sa.n2 AS DECIMAL(19,0)) AS DOUBLE) *
-                       CAST(CAST(sb.n2 AS DECIMAL(19,0)) AS DOUBLE),
-                       0.0) AS cos2
-                 FROM directed d
-                 JOIN norms sa ON d.src = sa.doc_id
-                 JOIN norms sb ON d.dst = sb.doc_id),
-               r AS (
-                 SELECT src, dst, cos2,
-                   row_number() OVER (PARTITION BY src
-                     ORDER BY cos2 DESC, dst ASC) AS rk
-                 FROM scored)
-               SELECT src AS doc_id, dst AS nn_id, cos2
-               FROM r WHERE rk = 1 ORDER BY doc_id""")),
+      (s, dir) =>
+        tfidfNn(s, dir, "dedup_tfidf_nn_capped", Some(TfidfPostingCap)),
+      Some(tfidfNnOracleSql(Some(TfidfPostingCap)))),
 
     // N-gram Jaccard near-dup pairs. Spark side: inverted-index join
     // (scale path); oracle: cross-join over distinct shingle lists —
@@ -958,19 +753,13 @@ object Dedup {
           .filter(col("jaccard") >= JaccardThreshold)
           .select("a_id", "b_id", "n_common", "jaccard")
           .orderBy("a_id", "b_id"),
-      Some(s"""WITH d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents)
-               SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+      Some(s"""WITH $JaccardPairsCte
+               SELECT p.a_id, p.b_id,
                  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_common,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS jaccard
-               FROM d a, d b
-               WHERE a.doc_id < b.doc_id
-                 AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold
+                 ${jaccardSql("a.sh", "b.sh")} AS jaccard
+               FROM pairs p
+               JOIN d a ON a.doc_id = p.a_id
+               JOIN d b ON b.doc_id = p.b_id
                ORDER BY a_id, b_id""")),
 
     // Prefix-filtered set-similarity join (the SSJoin/PPJoin family,
@@ -1014,53 +803,7 @@ object Dedup {
       (s, dir) =>
         prefixPairsFrom(shingled(s, dir).transform(Tables.materialize), None)
           .orderBy("a_id", "b_id"),
-      Some(s"""WITH d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents),
-               sz AS (SELECT doc_id, len(sh) AS n_sh FROM d),
-               p AS (SELECT doc_id, unnest(sh) AS shingle FROM d),
-               f AS (SELECT shingle, count(*) AS df FROM p GROUP BY shingle),
-               r AS (
-                 SELECT p.doc_id, p.shingle,
-                   row_number() OVER (PARTITION BY p.doc_id
-                     ORDER BY f.df ASC, p.shingle ASC) AS r,
-                   sz.n_sh
-                 FROM p JOIN f USING (shingle) JOIN sz USING (doc_id)),
-               pre AS (
-                 SELECT r.doc_id, r.shingle FROM r JOIN f USING (shingle)
-                 WHERE r.r <= r.n_sh
-                     - CAST(CEIL(r.n_sh * $PrefixJaccardT) AS BIGINT) + 1
-                   AND f.df >= 2),
-               cand AS (
-                 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM pre a JOIN pre b USING (shingle)
-                 WHERE a.doc_id < b.doc_id),
-               candl AS (
-                 SELECT c.a_id, c.b_id, sa.n_sh AS n_a, sb.n_sh AS n_b
-                 FROM cand c
-                 JOIN sz sa ON sa.doc_id = c.a_id
-                 JOIN sz sb ON sb.doc_id = c.b_id
-                 WHERE CAST(sb.n_sh AS DOUBLE)
-                     >= CAST(sa.n_sh AS DOUBLE) * $PrefixJaccardT
-                   AND CAST(sa.n_sh AS DOUBLE)
-                     >= CAST(sb.n_sh AS DOUBLE) * $PrefixJaccardT),
-               com AS (
-                 SELECT cl.a_id, cl.b_id, cl.n_a, cl.n_b,
-                   count(*) AS n_common
-                 FROM candl cl
-                 JOIN p pa ON pa.doc_id = cl.a_id
-                 JOIN p pb ON pb.doc_id = cl.b_id
-                   AND pb.shingle = pa.shingle
-                 GROUP BY cl.a_id, cl.b_id, cl.n_a, cl.n_b)
-               SELECT a_id, b_id, CAST(n_common AS BIGINT) AS n_common,
-                 CAST(n_common AS DOUBLE)
-                   / CAST(n_a + n_b - n_common AS DOUBLE) AS jaccard
-               FROM com
-               WHERE CAST(n_common AS DOUBLE)
-                   / CAST(n_a + n_b - n_common AS DOUBLE) >= $PrefixJaccardT
-               ORDER BY a_id, b_id"""),
+      Some(prefixFilterOracleSql(None)),
       // bench=false (r10, the sf1→sf10 decade): the prefix self-join is
       // Σ prefix-df² and this vocabulary SATURATES at scale — at sf10
       // all 29,791 possible trigrams carry df ≈ 880+, the join input is
@@ -1101,63 +844,7 @@ object Dedup {
         prefixPairsFrom(shingled(s, dir).transform(Tables.materialize),
             Some(PrefixPostingCap))
           .orderBy("a_id", "b_id"),
-      Some(s"""WITH d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents),
-               sz AS (SELECT doc_id, len(sh) AS n_sh FROM d),
-               p AS (SELECT doc_id, unnest(sh) AS shingle FROM d),
-               f AS (SELECT shingle, count(*) AS df FROM p GROUP BY shingle),
-               r AS (
-                 SELECT p.doc_id, p.shingle,
-                   row_number() OVER (PARTITION BY p.doc_id
-                     ORDER BY f.df ASC, p.shingle ASC) AS r,
-                   sz.n_sh
-                 FROM p JOIN f USING (shingle) JOIN sz USING (doc_id)),
-               pre0 AS (
-                 SELECT r.doc_id, r.shingle FROM r JOIN f USING (shingle)
-                 WHERE r.r <= r.n_sh
-                     - CAST(CEIL(r.n_sh * $PrefixJaccardT) AS BIGINT) + 1
-                   AND f.df >= 2),
-               pre AS (
-                 SELECT doc_id, shingle FROM (
-                   SELECT doc_id, shingle,
-                     row_number() OVER (PARTITION BY shingle ORDER BY
-                       CAST(concat('0x', substr(md5(concat(shingle, ':',
-                         CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                         % 2147483647,
-                       doc_id) AS prn
-                   FROM pre0) t
-                 WHERE prn <= $PrefixPostingCap),
-               cand AS (
-                 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM pre a JOIN pre b USING (shingle)
-                 WHERE a.doc_id < b.doc_id),
-               candl AS (
-                 SELECT c.a_id, c.b_id, sa.n_sh AS n_a, sb.n_sh AS n_b
-                 FROM cand c
-                 JOIN sz sa ON sa.doc_id = c.a_id
-                 JOIN sz sb ON sb.doc_id = c.b_id
-                 WHERE CAST(sb.n_sh AS DOUBLE)
-                     >= CAST(sa.n_sh AS DOUBLE) * $PrefixJaccardT
-                   AND CAST(sa.n_sh AS DOUBLE)
-                     >= CAST(sb.n_sh AS DOUBLE) * $PrefixJaccardT),
-               com AS (
-                 SELECT cl.a_id, cl.b_id, cl.n_a, cl.n_b,
-                   count(*) AS n_common
-                 FROM candl cl
-                 JOIN p pa ON pa.doc_id = cl.a_id
-                 JOIN p pb ON pb.doc_id = cl.b_id
-                   AND pb.shingle = pa.shingle
-                 GROUP BY cl.a_id, cl.b_id, cl.n_a, cl.n_b)
-               SELECT a_id, b_id, CAST(n_common AS BIGINT) AS n_common,
-                 CAST(n_common AS DOUBLE)
-                   / CAST(n_a + n_b - n_common AS DOUBLE) AS jaccard
-               FROM com
-               WHERE CAST(n_common AS DOUBLE)
-                   / CAST(n_a + n_b - n_common AS DOUBLE) >= $PrefixJaccardT
-               ORDER BY a_id, b_id""")),
+      Some(prefixFilterOracleSql(Some(PrefixPostingCap)))),
 
     // MinHash signatures, flattened to (doc_id, perm_id, sig_val) for the
     // oracle hash-compare. md5-based permutation hashes are engine-portable.
@@ -1176,19 +863,10 @@ object Dedup {
           // repartition(1) single-task funnel (a scale-killer: all rows
           // through one task) is not needed to avoid double execution.
           .orderBy("doc_id", "perm_id"),
-      Some("""WITH d AS (
-                SELECT doc_id, list_distinct(list_transform(
-                  range(1, len(string_split(text,' ')) - 1),
-                  i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                FROM documents),
-              sig AS (
-                SELECT doc_id, list_transform(range(0, 16), p ->
-                  list_aggregate(list_transform(sh, s ->
-                    ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-                  'min')) AS sg
-                FROM d)
+      Some(s"""WITH ${shingledSql()},
+              $SignaturesSql
               SELECT doc_id, CAST(i - 1 AS BIGINT) AS perm_id, sg[i] AS sig_val
-              FROM sig, (SELECT unnest(generate_series(1, 16)) AS i) idx
+              FROM sig, (SELECT unnest(generate_series(1, $NumPerms)) AS i) idx
               ORDER BY doc_id, perm_id""")),
 
     // MinHash + LSH banding: candidate pairs from band-bucket collisions,
@@ -1198,25 +876,7 @@ object Dedup {
     // whole candidate relation is oracle-checked in DuckDB.
     QueryDef(
       "dedup_minhash_pairs",
-      (s, dir) => {
-        // shingles feed two genuinely distinct consumers here (the
-        // signature pipeline and the exact-Jaccard verification of
-        // candidates): one disk-backed localCheckpoint materializes the
-        // shingle frame so neither recomputes the shingle expression
-        val sh = Tables.materialize(shingled(s, dir))
-        val cand = bandCandidatesFrom(sh)
-        val withSh = cand
-          .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
-          .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
-        withSh
-          .select(
-            col("a_id"), col("b_id"),
-            (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) -
-                size(array_intersect(col("sh_a"), col("sh_b")))).cast("double"))
-              .as("jaccard"))
-          .orderBy("a_id", "b_id")
-      },
+      (s, dir) => minhashPairs(s, dir, None),
       Some(MinhashPairsOracleSql)),
 
     // The CAPPED banding pair generator (r13 — the embedding family's
@@ -1233,21 +893,7 @@ object Dedup {
     // dedup_recall_curve's capped columns against planted truth.
     QueryDef(
       "dedup_minhash_pairs_capped",
-      (s, dir) => {
-        val sh = Tables.materialize(shingled(s, dir))
-        val cand = bandCandidatesFrom(sh, Some(TextBandBucketCap))
-        val withSh = cand
-          .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
-          .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
-        withSh
-          .select(
-            col("a_id"), col("b_id"),
-            (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) -
-                size(array_intersect(col("sh_a"), col("sh_b")))).cast("double"))
-              .as("jaccard"))
-          .orderBy("a_id", "b_id")
-      },
+      (s, dir) => minhashPairs(s, dir, Some(TextBandBucketCap)),
       Some(MinhashPairsCappedOracleSql)),
 
     // b-bit MinHash (Li & König, CACM 2011): keep only the low b=3 bits
@@ -1294,18 +940,14 @@ object Dedup {
             (col("agree") * 8L - 16L).cast("double") / lit(112.0))
           .orderBy("a_id", "b_id")
       },
-      Some(MinhashBandsCte + """,
+      Some(MinhashBandsCte + s""",
          pk AS (
            SELECT doc_id,
              CAST(list_sum(list_transform(range(0, 16), p ->
                (sg[CAST(p AS INTEGER) + 1] % 8) << CAST(3*p AS INTEGER)))
                AS BIGINT) AS packed
            FROM sig),
-         cand AS (
-           SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           FROM bands x JOIN bands y
-             ON x.b = y.b AND x.band_key = y.band_key
-              AND x.doc_id < y.doc_id),
+         ${bandPairsSql("cand")},
          ag AS (
            SELECT c.a_id, c.b_id,
              pa.packed AS packed_a, pb.packed AS packed_b,
@@ -1339,21 +981,12 @@ object Dedup {
             col("col").as("sig_val"))
           .orderBy("source", "perm_id")
       },
-      Some("""WITH d AS (
-                SELECT doc_id, list_distinct(list_transform(
-                  range(1, len(string_split(text,' ')) - 1),
-                  i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                FROM documents),
-              sig AS (
-                SELECT doc_id, list_transform(range(0, 16), p ->
-                  list_aggregate(list_transform(sh, s ->
-                    ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-                  'min')) AS sg
-                FROM d)
+      Some(s"""WITH ${shingledSql()},
+              $SignaturesSql
               SELECT doc.source, CAST(i - 1 AS BIGINT) AS perm_id, min(sig.sg[i]) AS sig_val
               FROM sig
               JOIN documents doc USING (doc_id),
-                   (SELECT unnest(generate_series(1, 16)) AS i) idx
+                   (SELECT unnest(generate_series(1, $NumPerms)) AS i) idx
               GROUP BY doc.source, i
               ORDER BY source, perm_id""")),
 
@@ -1362,18 +995,8 @@ object Dedup {
       "dedup_simhash",
       (s, dir) =>
         simhashed(s, dir).orderBy("doc_id"),
-      Some("""WITH v AS (
-                SELECT doc_id,
-                  list_transform(range(0, 16), j ->
-                    CASE WHEN list_sum(list_transform(string_split(text, ' '), t ->
-                      CASE WHEN ((CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647) >> j) & 1 = 1
-                           THEN 1 ELSE -1 END)) > 0
-                    THEN 1 ELSE 0 END) AS bits
-                FROM documents)
-              SELECT doc_id,
-                CAST(list_sum(list_transform(range(0, 16), j ->
-                  CASE WHEN bits[j + 1] = 1 THEN 1 << j ELSE 0 END)) AS BIGINT) AS simhash
-              FROM v ORDER BY doc_id""")),
+      Some(s"""WITH $SimhashSql
+              SELECT doc_id, simhash FROM sg ORDER BY doc_id""")),
 
     // SimHash near-dup pairs by Hamming distance <= 3, via 4-bit chunk
     // blocking (pigeonhole): split each 16-bit signature into 4 chunks;
@@ -1404,51 +1027,17 @@ object Dedup {
       // (oracle-checked + chunk-vs-naive equivalence in DedupTextSpec);
       // the production 60-bit dedup_simhash_wide_pairs is benched.
       bench = false,
-      oracle = Some("""WITH v AS (
-                SELECT doc_id,
-                  list_transform(range(0, 16), j ->
-                    CASE WHEN list_sum(list_transform(string_split(text, ' '), t ->
-                      CASE WHEN ((CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647) >> j) & 1 = 1
-                           THEN 1 ELSE -1 END)) > 0
-                    THEN 1 ELSE 0 END) AS bits
-                FROM documents),
-              s AS (
-                SELECT doc_id,
-                  CAST(list_sum(list_transform(range(0, 16), j ->
-                    CASE WHEN bits[j + 1] = 1 THEN 1 << j ELSE 0 END)) AS BIGINT) AS simhash
-                FROM v)
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-              FROM s a, s b
-              WHERE a.doc_id < b.doc_id
-                AND bit_count(xor(a.simhash, b.simhash)) <= 3
-              ORDER BY a_id, b_id""")),
+      oracle = Some(s"""WITH $SimhashSql,
+              ${hammingPairsSql("pairs")}
+              SELECT a_id, b_id, hamming FROM pairs ORDER BY a_id, b_id""")),
 
     // Wide (60-bit) SimHash signature per document — the scale variant;
     // see simhashedWide. Oracle mirrors the two md5-derived hashes.
     QueryDef(
       "dedup_simhash_wide",
       (s, dir) => simhashedWide(s, dir).orderBy("doc_id"),
-      Some("""WITH tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j)
-              SELECT doc_id,
-                CAST(sum(CASE WHEN vote > 0
-                              THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                              ELSE 0 END) AS BIGINT) AS simhash
-              FROM v GROUP BY doc_id ORDER BY doc_id""")),
+      Some(s"""WITH ${simhashWideSql()}
+              SELECT doc_id, simhash FROM sg ORDER BY doc_id""")),
 
     // Wide-SimHash near-dup pairs: 4 x 15-bit chunk pigeonhole equi-join
     // (Hamming <= 3 => one 15-bit chunk identical). 32768 bucket values
@@ -1459,33 +1048,9 @@ object Dedup {
       "dedup_simhash_wide_pairs",
       (s, dir) =>
         simhashChunkPairs(simhashedWide(s, dir), numChunks = 4, chunkBits = 15),
-      Some("""WITH tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j),
-              sg AS (
-                SELECT doc_id,
-                  CAST(sum(CASE WHEN vote > 0
-                                THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                ELSE 0 END) AS BIGINT) AS simhash
-                FROM v GROUP BY doc_id)
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-              FROM sg a, sg b
-              WHERE a.doc_id < b.doc_id
-                AND bit_count(xor(a.simhash, b.simhash)) <= 3
-              ORDER BY a_id, b_id""")),
+      Some(s"""WITH ${simhashWideSql()},
+              ${hammingPairsSql("pairs")}
+              SELECT a_id, b_id, hamming FROM pairs ORDER BY a_id, b_id""")),
 
     // The DECLARATIVE Hamming join: the same wide-SimHash pair relation
     // as dedup_simhash_wide_pairs, but written the way a user naturally
@@ -1509,33 +1074,9 @@ object Dedup {
             expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
           .orderBy("a_id", "b_id")
       },
-      Some("""WITH tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j),
-              sg AS (
-                SELECT doc_id,
-                  CAST(sum(CASE WHEN vote > 0
-                                THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                ELSE 0 END) AS BIGINT) AS simhash
-                FROM v GROUP BY doc_id)
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-              FROM sg a, sg b
-              WHERE a.doc_id < b.doc_id
-                AND bit_count(xor(a.simhash, b.simhash)) <= 3
-              ORDER BY a_id, b_id""")),
+      Some(s"""WITH ${simhashWideSql()},
+              ${hammingPairsSql("pairs")}
+              SELECT a_id, b_id, hamming FROM pairs ORDER BY a_id, b_id""")),
 
     // The declarative Hamming join promoted to a full DEDUP PIPELINE
     // (r13, verdict task #7): user-shaped code end to end — write the
@@ -1557,32 +1098,8 @@ object Dedup {
           .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j),
-              sg AS (
-                SELECT doc_id,
-                  CAST(sum(CASE WHEN vote > 0
-                                THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                ELSE 0 END) AS BIGINT) AS simhash
-                FROM v GROUP BY doc_id),
-              pairs AS (
-                SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM sg a, sg b
-                WHERE a.doc_id < b.doc_id
-                  AND bit_count(xor(a.simhash, b.simhash)) <= 3),
+      Some(s"""WITH RECURSIVE ${simhashWideSql()},
+              ${hammingPairsSql("pairs")},
               ${undirectedSql("edges", v = "w")},
               reach(u, w) AS (
                 SELECT u, w FROM edges
@@ -1609,17 +1126,7 @@ object Dedup {
           .orderBy("doc_id")
       },
       // transitive closure via recursive CTE: rep = min reachable id
-      Some(s"""WITH RECURSIVE d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents),
-               pairs AS (
-                 SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM d a, d b
-                 WHERE a.doc_id < b.doc_id
-                   AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                     / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold),
+      Some(s"""WITH RECURSIVE $JaccardPairsCte,
                ${undirectedSql("edges")},
                reach(u, v) AS (
                  SELECT u, v FROM edges
@@ -1655,43 +1162,10 @@ object Dedup {
           .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents),
-               jpairs AS (
-                 SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM d a, d b
-                 WHERE a.doc_id < b.doc_id
-                   AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                     / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold),
-               tok AS (
-                 SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                 FROM documents),
-               h AS (
-                 SELECT doc_id,
-                   CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                   CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                 FROM tok),
-               v AS (
-                 SELECT doc_id, j,
-                   sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                        ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                            THEN 1 ELSE -1 END) AS vote
-                 FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                 GROUP BY doc_id, j),
-               sg AS (
-                 SELECT doc_id,
-                   CAST(sum(CASE WHEN vote > 0
-                                 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                 ELSE 0 END) AS BIGINT) AS simhash
-                 FROM v GROUP BY doc_id),
-               spairs AS (
-                 SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM sg a, sg b
-                 WHERE a.doc_id < b.doc_id
-                   AND bit_count(xor(a.simhash, b.simhash)) <= 3),
+      Some(s"""WITH RECURSIVE ${shingledSql()},
+               ${jaccardEdgesSql("jpairs")},
+               ${simhashWideSql()},
+               ${hammingPairsSql("spairs")},
                ${Similarity.nearDupPairsSql()},
                pairs AS (
                  SELECT a_id, b_id FROM jpairs
@@ -1782,10 +1256,7 @@ object Dedup {
           .join(sh.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
             Seq("corpus_id"))
           .select(col("batch_id"), col("corpus_id").as("dup_of"),
-            (size(array_intersect(col("sh_b"), col("sh_c"))).cast("double") /
-              (size(col("sh_b")) + size(col("sh_c")) -
-                size(array_intersect(col("sh_b"), col("sh_c"))))
-                .cast("double")).as("jaccard"))
+            jaccard(col("sh_b"), col("sh_c")).as("jaccard"))
           .filter(col("jaccard") >= JaccardThreshold)
           .orderBy("batch_id", "dup_of")
       },
@@ -1795,17 +1266,11 @@ object Dedup {
            FROM bands x JOIN bands y
              ON x.b = y.b AND x.band_key = y.band_key
            WHERE x.doc_id % 13 = 0 AND y.doc_id % 13 <> 0)
-         SELECT p.batch_id, p.dup_of,
-           CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-             / CAST(len(da.sh) + len(db.sh)
-                    - len(list_intersect(da.sh, db.sh)) AS DOUBLE) AS jaccard
+         SELECT p.batch_id, p.dup_of, ${jaccardSql("da.sh", "db.sh")} AS jaccard
          FROM probe p
          JOIN d da ON da.doc_id = p.batch_id
          JOIN d db ON db.doc_id = p.dup_of
-         WHERE CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-             / CAST(len(da.sh) + len(db.sh)
-                    - len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-             >= $JaccardThreshold
+         WHERE ${jaccardSql("da.sh", "db.sh")} >= $JaccardThreshold
          ORDER BY batch_id, dup_of""")),
 
     // Verbatim-substring dedup (the Lee-et-al. "duplicated training
@@ -1825,7 +1290,7 @@ object Dedup {
         // positional postings feed the viral-DF count and both join
         // sides; checkpoint so the corpus is windowed exactly once
         val postings = docsParallel(s, dir)
-          .select(col("doc_id"), split(col("text"), " ").as("ts"))
+          .select(col("doc_id"), tokens(col("text")).as("ts"))
           .select(col("doc_id"),
             posexplode(TextAnalysis.tokenWindows(col("ts"), W)).as(Seq("pos", "w")))
           .transform(Tables.materialize)
@@ -1904,35 +1369,14 @@ object Dedup {
           .select("a_id", "b_id", "hamming", "edit_dist")
           .orderBy("a_id", "b_id")
       },
-      Some(s"""WITH tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j),
-              sg AS (
-                SELECT doc_id,
-                  CAST(sum(CASE WHEN vote > 0
-                                THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                ELSE 0 END) AS BIGINT) AS simhash
-                FROM v GROUP BY doc_id)
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming,
+      Some(s"""WITH ${simhashWideSql()},
+              ${hammingPairsSql("pairs")}
+              SELECT p.a_id, p.b_id, p.hamming,
                 CAST(levenshtein(da.text, db.text) AS BIGINT) AS edit_dist
-              FROM sg a, sg b, documents da, documents db
-              WHERE a.doc_id < b.doc_id
-                AND bit_count(xor(a.simhash, b.simhash)) <= 3
-                AND da.doc_id = a.doc_id AND db.doc_id = b.doc_id
-                AND levenshtein(da.text, db.text) <= $MaxEditDist
+              FROM pairs p
+              JOIN documents da ON da.doc_id = p.a_id
+              JOIN documents db ON db.doc_id = p.b_id
+              WHERE levenshtein(da.text, db.text) <= $MaxEditDist
               ORDER BY a_id, b_id""")),
 
     // The capstone: the full corpus-cleaning pipeline composed END-TO-END
@@ -1948,12 +1392,8 @@ object Dedup {
     QueryDef(
       "pipeline_corpus_clean",
       (s, dir) => {
-        import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
-        val kept = docsParallel(s, dir)
-          .filter(tokenCount(col("text")) >= 8 &&
-            stopwordRatio(col("text")) <= 0.35 &&
-            noiseRatio(col("text")) <= 0.25 &&
-            avgWordLen(col("text")) >= 3.0)
+        import graft.operators.TextAnalysis.{qualityGate, splitBucket, splitOf}
+        val kept = docsParallel(s, dir).filter(qualityGate(col("text")))
         val deduped = kept
           .withColumn("rep",
             min(col("doc_id")).over(Window.partitionBy("text")))
@@ -1962,73 +1402,26 @@ object Dedup {
         val drops = simhashChunkPairs(
             simhashWideOf(deduped), numChunks = 4, chunkBits = 15)
           .select(col("b_id").as("doc_id")).distinct()
-        val bucket = hash31(
-          concat_ws("|", lit("split"), col("doc_id").cast("string"))) % 100L
         deduped.join(drops, Seq("doc_id"), "left_anti")
-          .withColumn("split",
-            when(bucket < 90, "train").when(bucket < 95, "valid")
-              .otherwise("test"))
+          .withColumn("split", splitOf(splitBucket(col("doc_id"))))
           .groupBy("split", "lang")
           .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"))
+            sum(size(tokens(col("text"))).cast("long")).as("n_tokens"))
           .orderBy("split", "lang")
       },
-      Some("""WITH q AS (
-                SELECT doc_id, text, lang,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-                  CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
-                  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-                    / CAST(length(text) AS DOUBLE) AS noise_ratio
-                FROM documents),
-              kept AS (
-                SELECT doc_id, text, lang FROM q
-                WHERE n_tokens >= 8 AND stop_ratio <= 0.35
-                  AND noise_ratio <= 0.25 AND avg_word_len >= 3.0),
+      Some(s"""WITH ${TextAnalysis.qualityGateSql("doc_id, text, lang")},
               dd AS (
                 SELECT doc_id, text, lang FROM (
                   SELECT k.*, min(doc_id) OVER (PARTITION BY text) AS rep
                   FROM kept k)
                 WHERE doc_id = rep),
-              tok AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM dd),
-              h AS (
-                SELECT doc_id,
-                  CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-                  CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-                FROM tok),
-              v AS (
-                SELECT doc_id, j,
-                  sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                       ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                           THEN 1 ELSE -1 END) AS vote
-                FROM h, (SELECT unnest(range(0, 60)) AS j) js
-                GROUP BY doc_id, j),
-              sg AS (
-                SELECT doc_id,
-                  CAST(sum(CASE WHEN vote > 0
-                                THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                                ELSE 0 END) AS BIGINT) AS simhash
-                FROM v GROUP BY doc_id),
-              drops AS (
-                SELECT DISTINCT b.doc_id
-                FROM sg a, sg b
-                WHERE a.doc_id < b.doc_id
-                  AND bit_count(xor(a.simhash, b.simhash)) <= 3),
+              ${simhashWideSql("dd")},
+              ${hammingPairsSql("drops")},
               surv AS (
                 SELECT * FROM dd
-                WHERE doc_id NOT IN (SELECT doc_id FROM drops)),
+                WHERE doc_id NOT IN (SELECT b_id FROM drops)),
               sp AS (
-                SELECT lang, text,
-                  CASE WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                          CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                        % 2147483647) % 100 < 90 THEN 'train'
-                    WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                          CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                        % 2147483647) % 100 < 95 THEN 'valid'
-                    ELSE 'test' END AS split
+                SELECT lang, text, ${TextAnalysis.splitSql("doc_id")} AS split
                 FROM surv)
               SELECT split, lang, count(*) AS n_docs,
                 CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -2057,35 +1450,10 @@ object Dedup {
     QueryDef(
       "pipeline_viral_clean",
       (s, dir) => viralCleanRun(s, dir),
-      Some(s"""WITH RECURSIVE q AS (
-                SELECT doc_id, text, source,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-                  CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
-                  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-                    / CAST(length(text) AS DOUBLE) AS noise_ratio
-                FROM documents),
-              kept AS MATERIALIZED (
-                SELECT doc_id, text, source FROM q
-                WHERE n_tokens >= 8 AND stop_ratio <= 0.35
-                  AND noise_ratio <= 0.25 AND avg_word_len >= 3.0),
-              d AS MATERIALIZED (
-                SELECT doc_id, list_distinct(list_transform(
-                  range(1, len(string_split(text,' ')) - 1),
-                  i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                FROM kept),
-              sig AS MATERIALIZED (
-                SELECT doc_id, list_transform(range(0, 16), p ->
-                  list_aggregate(list_transform(sh, s ->
-                    ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-                  'min')) AS sg
-                FROM d),
-              bands AS MATERIALIZED (
-                SELECT doc_id, b,
-                  array_to_string(sg[2*b + 1 : 2*b + 2], ',') AS band_key
-                FROM sig, (SELECT unnest(range(0, 8)) AS b) bs),
+      Some(s"""WITH RECURSIVE ${TextAnalysis.qualityGateSql("doc_id, text, source")},
+              ${shingledSql("kept")},
+              $SignaturesSql,
+              ${bandsSql()},
               bstat AS MATERIALIZED (
                 SELECT doc_id, b, band_key,
                   count(*) OVER (PARTITION BY b, band_key) AS bdf,
@@ -2106,8 +1474,7 @@ object Dedup {
                 FROM cand c
                 JOIN d da ON da.doc_id = c.a_id
                 JOIN d db ON db.doc_id = c.b_id
-                WHERE CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-                  / CAST(len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS DOUBLE) >= $JaccardThreshold),
+                WHERE ${jaccardSql("da.sh", "db.sh")} >= $JaccardThreshold),
               ${undirectedSql("edges", v = "w")},
               reach(u, w) AS (
                 SELECT u, w FROM edges
@@ -2139,9 +1506,7 @@ object Dedup {
               cum AS (
                 SELECT doc_id, source, n_toks,
                   sum(n_toks) OVER (PARTITION BY source ORDER BY
-                    (CAST(concat('0x', substr(md5(concat('pclean', '|',
-                        CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) ASC, doc_id ASC
+                    ${hash31Sql("concat('pclean', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS cum_toks
                 FROM dd),
@@ -2245,8 +1610,7 @@ object Dedup {
       },
       Some(s"""WITH pos AS (
                  SELECT DISTINCT doc_id,
-                   (CAST(concat('0x', substr(md5(concat('bf', CAST(i AS VARCHAR), '_', text)), 1, 15)) AS BIGINT)
-                     % 2147483647) % $BloomBits AS pos
+                   ${hash31Sql("concat('bf', CAST(i AS VARCHAR), '_', text)")} % $BloomBits AS pos
                  FROM documents, (SELECT unnest(range(0, $BloomK)) AS i) ks),
                bits AS (
                  SELECT DISTINCT pos FROM pos WHERE doc_id % 5 <> 0),
@@ -2281,11 +1645,7 @@ object Dedup {
         ab.union(ba).filter(col("containment") >= ContainmentThreshold)
           .orderBy("src_id", "dst_id")
       },
-      Some(s"""WITH d AS (
-                 SELECT doc_id, list_distinct(list_transform(
-                   range(1, len(string_split(text,' ')) - 1),
-                   i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                 FROM documents)
+      Some(s"""WITH ${shingledSql()}
                SELECT a.doc_id AS src_id, b.doc_id AS dst_id,
                  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
                    / CAST(len(a.sh) AS DOUBLE) AS containment
@@ -2509,14 +1869,7 @@ object Dedup {
         // TextBandBucketCap cost against planted truth? On unplanted or
         // sub-cap corpora the two columns are identical by construction.
         val candC = bandCandidatesFromRows(bands0, Some(TextBandBucketCap))
-        val truth = Tables.load(s, dir, "documents")
-          .filter(col("source").startsWith("dupof"))
-          .select(
-            least(col("doc_id"),
-              substring(col("source"), 6, 30).cast("long")).as("a_id"),
-            greatest(col("doc_id"),
-              substring(col("source"), 6, 30).cast("long")).as("b_id"))
-          .transform(Tables.materialize)
+        val truth = plantedTruth(s, dir).transform(Tables.materialize)
         val nCand = cand.agg(count(lit(1)).as("n_candidates"))
         val nTruth = truth.agg(count(lit(1)).as("n_truth"))
         val nHit = truth.join(cand, Seq("a_id", "b_id"), "left_semi")
@@ -2535,46 +1888,10 @@ object Dedup {
               .otherwise(col("n_hit_capped").cast("double") /
                 col("n_truth").cast("double")).as("recall_capped"))
       },
-      Some(s"""WITH d AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(string_split(text,' ')) - 1),
-               i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-             FROM documents),
-           sig AS (
-             SELECT doc_id, list_transform(range(0, $NumPerms), p ->
-               list_aggregate(list_transform(sh, s ->
-                 ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-               'min')) AS sg
-             FROM d),
-           bands AS MATERIALIZED (
-             SELECT doc_id, b,
-               array_to_string(sg[$BandRows*b + 1 : $BandRows*b + $BandRows],
-                 ',') AS band_key
-             FROM sig, (SELECT unnest(range(0, ${NumPerms / BandRows})) AS b) bs),
-           cand AS MATERIALIZED (
-             SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-             FROM bands x JOIN bands y
-               ON x.b = y.b AND x.band_key = y.band_key
-                AND x.doc_id < y.doc_id),
-           viralbands AS MATERIALIZED (
-             SELECT b, band_key FROM bands
-             GROUP BY b, band_key HAVING count(*) > $TextBandBucketCap),
-           kbands AS MATERIALIZED (
-             SELECT v.doc_id, v.b, v.band_key
-             FROM bands v LEFT JOIN viralbands w
-               ON w.b = v.b AND w.band_key = v.band_key
-             WHERE w.b IS NULL),
-           candc AS MATERIALIZED (
-             SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-             FROM kbands x JOIN kbands y
-               ON x.b = y.b AND x.band_key = y.band_key
-                AND x.doc_id < y.doc_id),
-           truth AS (
-             SELECT least(doc_id,
-                 CAST(substr(source, 6) AS BIGINT)) AS a_id,
-               greatest(doc_id,
-                 CAST(substr(source, 6) AS BIGINT)) AS b_id
-             FROM documents WHERE source LIKE 'dupof%'),
+      Some(MinhashBandsCte + MinhashCappedBandsCte + s""",
+           ${bandPairsSql("cand")},
+           ${bandPairsSql("candc", "kbands")},
+           $PlantedTruthSql,
            c AS (
              SELECT
                (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
@@ -2627,14 +1944,7 @@ object Dedup {
         // (r13): WHERE on the J axis does the viral-bucket cap cost
         // recall? Identical to cand wherever no bucket exceeds the cap.
         val candC = bandCandidatesFromRows(bands0, Some(TextBandBucketCap))
-        val truth = Tables.load(s, dir, "documents")
-          .filter(col("source").startsWith("dupof"))
-          .select(
-            least(col("doc_id"),
-              substring(col("source"), 6, 30).cast("long")).as("a_id"),
-            greatest(col("doc_id"),
-              substring(col("source"), 6, 30).cast("long")).as("b_id"))
-          .transform(Tables.materialize)
+        val truth = plantedTruth(s, dir).transform(Tables.materialize)
         val posts = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
         val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
         val common = truth
@@ -2696,46 +2006,10 @@ object Dedup {
             lit(0.0).as("recall_capped"), lit(0.0).as("expected"))
         curve.unionAll(fallback).orderBy("j_lo")
       },
-      Some(s"""WITH d AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(string_split(text,' ')) - 1),
-               i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-             FROM documents),
-           sig AS (
-             SELECT doc_id, list_transform(range(0, $NumPerms), p ->
-               list_aggregate(list_transform(sh, s ->
-                 ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-               'min')) AS sg
-             FROM d),
-           bands AS MATERIALIZED (
-             SELECT doc_id, b,
-               array_to_string(sg[$BandRows*b + 1 : $BandRows*b + $BandRows],
-                 ',') AS band_key
-             FROM sig, (SELECT unnest(range(0, ${NumPerms / BandRows})) AS b) bs),
-           cand AS MATERIALIZED (
-             SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-             FROM bands x JOIN bands y
-               ON x.b = y.b AND x.band_key = y.band_key
-                AND x.doc_id < y.doc_id),
-           viralbands AS MATERIALIZED (
-             SELECT b, band_key FROM bands
-             GROUP BY b, band_key HAVING count(*) > $TextBandBucketCap),
-           kbands AS MATERIALIZED (
-             SELECT v.doc_id, v.b, v.band_key
-             FROM bands v LEFT JOIN viralbands w
-               ON w.b = v.b AND w.band_key = v.band_key
-             WHERE w.b IS NULL),
-           candc AS MATERIALIZED (
-             SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-             FROM kbands x JOIN kbands y
-               ON x.b = y.b AND x.band_key = y.band_key
-                AND x.doc_id < y.doc_id),
-           truth AS (
-             SELECT least(doc_id,
-                 CAST(substr(source, 6) AS BIGINT)) AS a_id,
-               greatest(doc_id,
-                 CAST(substr(source, 6) AS BIGINT)) AS b_id
-             FROM documents WHERE source LIKE 'dupof%'),
+      Some(MinhashBandsCte + MinhashCappedBandsCte + s""",
+           ${bandPairsSql("cand")},
+           ${bandPairsSql("candc", "kbands")},
+           $PlantedTruthSql,
            sz AS (SELECT doc_id, len(sh) AS n_sh FROM d),
            p AS (SELECT doc_id, unnest(sh) AS shingle FROM d),
            com AS (
@@ -2804,6 +2078,190 @@ object Dedup {
     val y = sig.select(col("doc_id").as("b_id"), col("simhash").as("hb"))
     x.join(y, expr("bit_count(ha ^ hb) <= 3") && col("a_id") < col("b_id"))
       .select("a_id", "b_id")
+  }
+
+  /** The TF-IDF nearest-neighbour body of dedup_tfidf_nn (cap = None,
+    * the exact form) and dedup_tfidf_nn_capped (cap = Some(k): each
+    * shingle's postings sampled to k by [[samplePostings]] before the
+    * norms and the dot self-join). */
+  private def tfidfNn(s: SparkSession, dir: String, name: String,
+      cap: Option[Int]): DataFrame = {
+    val d = docsParallel(s, dir)
+    val toks = tokens(col("text"))
+    // Pre-flight weight-magnitude guard (round-5 task): norm/dot
+    // sums accumulate in DECIMAL(38,0), and idf grows with the
+    // corpus (df=1 ceiling: 1000*(2N-1) div 3), so at some corpus
+    // size the accumulation overflows — ANSI makes that a THROW
+    // (loud, never wrong), but a stack trace is a poor diagnosis.
+    // Bound the worst case up front: per-doc Σw <= maxW * maxTokens,
+    // and both n2 and dot are <= (Σw)² by Cauchy-Schwarz, so
+    // requiring maxW * maxTokens < sqrt(10^37) guarantees every
+    // DECIMAL(38,0) accumulator fits. (This bound does NOT keep the
+    // factors inside the < 2^64 correctly-rounded int→double cast
+    // range — that tighter, per-VALUE bound is enforced loudly by
+    // the DECIMAL(19,0) routing at the cos2 step below; r12 advice.)
+    // Two bounded driver scalars, same discipline as
+    // requireAllPairsSmall.
+    val pre = d.agg(count(lit(1)).as("n"),
+      max(size(toks)).cast("long").as("mt")).head()
+    val nDocs = pre.getLong(0)
+    // max over an empty corpus is NULL (degenerate sweep, r8)
+    val maxToks = if (pre.isNullAt(1)) 0L else pre.getLong(1)
+    val maxW = BigInt(1000) * (2 * BigInt(nDocs) - 1) / 3
+    require(maxW * maxToks < BigInt("3162277660168379331"),
+      s"$name: idf-weight bound maxW*maxTokens = " +
+        s"${maxW * maxToks} (n_docs=$nDocs, max_tokens=$maxToks) " +
+        "exceeds the sqrt(10^37) DECIMAL(38,0) accumulation range — " +
+        "lower the idf scale factor")
+    val sh = d.filter(size(toks) >= 3).select(col("doc_id"),
+      explode(transform(sequence(lit(0), size(toks) - lit(3)), i =>
+        array_join(slice(toks, i + 1, lit(3)), " "))).as("shingle"))
+    // materialize the posting relation and dots ONCE (r14): without
+    // it every downstream consumer re-runs the scan + shingle explode
+    // + aggregates — the r13 before-plan of the capped form was 1,580
+    // lines with 36 parquet scans and 140 exchanges, because the
+    // postings feed norms + both dot-join sides and dots feeds both
+    // directed legs (driver-measured taskCpu 40.7 s → 24.8 s). Only
+    // TWO eager barriers: each extra localCheckpoint is a serialized
+    // job (measured — the 4-checkpoint variant was wall-slower).
+    val tf = sh.groupBy("doc_id", "shingle").agg(count(lit(1)).as("tf"))
+    val dfr = tf.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= MaxShingleDF)
+    val w = tf.join(dfr, "shingle")
+      .select(col("doc_id"), col("shingle"),
+        (col("tf") *
+          expr(s"(1000 * (2*${nDocs}L - 2*df + 1)) div (2*df + 1)")).as("w"))
+    // norm/dot sums in DECIMAL(38,0) (oracle: HUGEINT): weights
+    // scale with 1000*2N/df, so at corpus sizes far beyond this
+    // suite a 64-bit sum could exceed Long range — Spark would wrap
+    // silently while DuckDB's HUGEINT errors on the downcast, a
+    // divergence rather than a clean mismatch. 128-bit accumulation
+    // on BOTH engines keeps the arithmetic exact to ~1e38, and past
+    // that Spark's ANSI decimal overflow THROWS — loud, never wrong.
+    val w19 = col("w").cast("decimal(19,0)")
+    // the exact form's postings are w itself; the capped form's are
+    // each shingle's sample, which shares the dot join's shingle
+    // partitioning (no extra exchange at scale)
+    val wc = cap.fold(w)(samplePostings(w, _)).transform(Tables.materialize)
+    val norms = wc.groupBy("doc_id")
+      .agg(sum(w19 * w19).as("n2"))
+    val dots = wc.as("a").join(wc.as("b"), Seq("shingle"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .agg(sum(col("a.w").cast("decimal(19,0)") *
+        col("b.w").cast("decimal(19,0)")).as("dot"))
+      .transform(Tables.materialize)
+    val directed = dots
+      .select(col("a_id").as("src"), col("b_id").as("dst"), col("dot"))
+      .unionAll(dots
+        .select(col("b_id").as("src"), col("a_id").as("dst"), col("dot")))
+    val wv = Window.partitionBy("src")
+      .orderBy(col("cos2").desc, col("dst").asc)
+    directed
+      .join(norms.select(col("doc_id").as("src"), col("n2").as("s_n2")),
+        "src")
+      .join(norms.select(col("doc_id").as("dst"), col("n2").as("d_n2")),
+        "dst")
+      // nullif: an all-duplicate corpus drives every idf weight to
+      // 0 (df = n_docs makes the quantized idf 1000 div (2n+1) = 0),
+      // zeroing the norms — Spark-4 ANSI throws on double /0 where
+      // DuckDB returns NULL; ranks then fall to the dst tie-break
+      // on BOTH engines (degenerate-corpus sweep, r8)
+      // cos2 is formed FACTOR-FIRST, each factor ROUTED THROUGH
+      // DECIMAL(19,0) before the double cast: values < 1e19 < 2^64
+      // sit in the range where int->double casts are correctly
+      // rounded in BOTH engines (DuckDB's HUGEINT half-splitting is
+      // exact when the upper 64-bit limb is 0), so dbl(dot)*dbl(dot)
+      // / (dbl(s_n2)*dbl(d_n2)) is one identical IEEE op sequence
+      // cross-engine — and a factor >= 1e19 overflows the
+      // DECIMAL(19,0) cast LOUDLY on both engines (Spark ANSI throw,
+      // DuckDB conversion error) instead of silently re-entering the
+      // half-splitting range (r12 advice: the sqrt(10^37) pre-flight
+      // bounds the 38-digit accumulators, not these factors).
+      // The previous product-first form converted the 38-digit
+      // products (dot^2 up to 1e38) via DuckDB's HUGEINT
+      // half-splitting cast, which is NOT correctly rounded there —
+      // a 1-ULP cos2 divergence surfaced on the round-11 Heaps
+      // corpus (and could silently flip the rank-1 tie-break).
+      .withColumn("cos2",
+        expr("""(CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE) *
+                 CAST(CAST(dot AS DECIMAL(19,0)) AS DOUBLE)) /
+                nullif(CAST(CAST(s_n2 AS DECIMAL(19,0)) AS DOUBLE) *
+                     CAST(CAST(d_n2 AS DECIMAL(19,0)) AS DOUBLE), 0.0D)"""))
+      .withColumn("rk", row_number().over(wv))
+      .filter(col("rk") === 1)
+      .select(col("src").as("doc_id"), col("dst").as("nn_id"),
+        col("cos2"))
+      .orderBy("doc_id")
+  }
+
+  /** The DuckDB replay of [[tfidfNn]] at the same `cap`. */
+  private def tfidfNnOracleSql(cap: Option[Int]): String = {
+    val wc = cap.fold("wt")(_ => "wc")
+    val sample = cap.fold("")(k =>
+      s"\n               ${postingSampleSql("wc", "wt", "doc_id, shingle, w", k)},")
+    s"""WITH tk AS (
+         SELECT doc_id, string_split(text, ' ') AS w
+         FROM documents WHERE len(string_split(text, ' ')) >= 3),
+       sh AS (
+         SELECT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
+         FROM tk, LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) ix),
+       tf AS (
+         SELECT doc_id, shingle, CAST(count(*) AS BIGINT) AS tf
+         FROM sh GROUP BY 1, 2),
+       dfr AS (
+         SELECT shingle, CAST(count(*) AS BIGINT) AS df
+         FROM tf GROUP BY 1 HAVING count(*) <= $MaxShingleDF),
+       n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+       wt AS (
+         SELECT doc_id, shingle,
+           tf * ((1000 * (2*n.n_docs - 2*df + 1)) // (2*df + 1)) AS w
+         FROM tf JOIN dfr USING (shingle), n),$sample
+       norms AS (
+         SELECT doc_id, sum(CAST(w AS HUGEINT) * w) AS n2
+         FROM $wc GROUP BY doc_id),
+       dots AS (
+         SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+           sum(CAST(a.w AS HUGEINT) * b.w) AS dot
+         FROM $wc a JOIN $wc b ON a.shingle = b.shingle
+          AND a.doc_id < b.doc_id
+         GROUP BY 1, 2),
+       directed AS (
+         SELECT a_id AS src, b_id AS dst, dot FROM dots
+         UNION ALL
+         SELECT b_id, a_id, dot FROM dots),
+       scored AS (
+         SELECT d.src, d.dst,
+           (CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE) *
+            CAST(CAST(d.dot AS DECIMAL(19,0)) AS DOUBLE)) /
+             nullif(CAST(CAST(sa.n2 AS DECIMAL(19,0)) AS DOUBLE) *
+               CAST(CAST(sb.n2 AS DECIMAL(19,0)) AS DOUBLE),
+               0.0) AS cos2
+         FROM directed d
+         JOIN norms sa ON d.src = sa.doc_id
+         JOIN norms sb ON d.dst = sb.doc_id),
+       r AS (
+         SELECT src, dst, cos2,
+           row_number() OVER (PARTITION BY src
+             ORDER BY cos2 DESC, dst ASC) AS rk
+         FROM scored)
+       SELECT src AS doc_id, dst AS nn_id, cos2
+       FROM r WHERE rk = 1 ORDER BY doc_id"""
+  }
+
+  /** The banding pairs of dedup_minhash_pairs (cap = None) and
+    * dedup_minhash_pairs_capped (cap = Some(TextBandBucketCap)), each
+    * verified by its exact Jaccard. The shingles feed two consumers
+    * (the signature pipeline and the verification), so they are
+    * materialized once. */
+  private def minhashPairs(s: SparkSession, dir: String, cap: Option[Int]): DataFrame = {
+    val sh = Tables.materialize(shingled(s, dir))
+    bandCandidatesFrom(sh, cap)
+      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
+      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
+      .select(col("a_id"), col("b_id"),
+        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .orderBy("a_id", "b_id")
   }
 
   /** The 8-band × 2-row minhash banding candidate generator over a
@@ -2888,7 +2346,7 @@ object Dedup {
   private[graft] def viralCleanRun(
       s: SparkSession, dir: String,
       onStage: (String, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
-    import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenBudget, tokenCount}
+    import graft.operators.TextAnalysis.{qualityGate, tokenBudget}
     def timed[T](name: String, rowsOut: T => Long)(run: => T): T = {
       val t0 = System.nanoTime()
       val out = run
@@ -2904,25 +2362,20 @@ object Dedup {
     // repartition: one barrier for the frame every later stage reuses
     val (gated, Seq(nKept)) = stage("read_gate_shingle")(
       docsParallel(s, dir)
-        .filter(tokenCount(col("text")) >= 8 &&
-          stopwordRatio(col("text")) <= 0.35 &&
-          noiseRatio(col("text")) <= 0.25 &&
-          avgWordLen(col("text")) >= 3.0)
+        .filter(qualityGate(col("text")))
         .select(col("doc_id"), col("text"), col("source"),
           shingles(col("text"), 3).as("sh")))
     val kept = gated.select("doc_id", "text", "source")
     val sh = gated.select("doc_id", "sh")
     // the Jaccard test rides the candidate checkpoint as a column, so
     // n_cand and n_pairs come from one job
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val (cand, Seq(nCand, nPairs)) = stage("band_candidates_verify",
         sum(when(col("ok"), 1L).otherwise(0L)))(
       bandCandidatesStarCapped(sh, TextBandBucketCap)
         .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
         .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
-        .select(col("a_id"), col("b_id"), (inter.cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double")
-          >= JaccardThreshold).as("ok")))
+        .select(col("a_id"), col("b_id"),
+          (jaccard(col("sh_a"), col("sh_b")) >= JaccardThreshold).as("ok")))
     val verified = cand.filter(col("ok")).select("a_id", "b_id")
     val (reps, Seq(nReps)) = stage("cluster_collapse")(
       connectedComponents(kept.select("doc_id"), verified)
@@ -2963,13 +2416,7 @@ object Dedup {
         - ceil(col("n_sh") * lit(PrefixJaccardT)) + 1)
       .filter(col("df") >= 2)
       .select("shingle", "doc_id")
-    val wSamp = Window.partitionBy("shingle").orderBy(
-      hash31(concat_ws(":", col("shingle"), col("doc_id"))).asc,
-      col("doc_id").asc)
-    val prefix = cap.fold(pre0) { k =>
-      pre0.withColumn("prn", row_number().over(wSamp))
-        .filter(col("prn") <= k).drop("prn")
-    }.transform(Tables.materialize)
+    val prefix = cap.fold(pre0)(samplePostings(pre0, _)).transform(Tables.materialize)
     val cand = prefix.select(col("shingle"), col("doc_id").as("a_id"))
       .join(prefix.select(col("shingle"), col("doc_id").as("b_id")),
         Seq("shingle"))
@@ -3000,40 +2447,11 @@ object Dedup {
       .filter(col("jaccard") >= PrefixJaccardT)
   }
 
-  /** DuckDB replay of the scorecard: ONE shared shingle/posting/rank
-    * chain, the exact and capped prefix relations diverging only at
-    * the sample window (as in the Spark legs), each verified on the
-    * full posting relation, then the three counts. MATERIALIZED on the
-    * heavy CTEs per the bench-scale oracle discipline. */
-  private lazy val CapRecallOracleSql: String = {
-    def leg(tag: String, pre: String) =
-      s"""cand$tag AS (
-           SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM $pre a JOIN $pre b USING (shingle)
-           WHERE a.doc_id < b.doc_id),
-         candl$tag AS MATERIALIZED (
-           SELECT c.a_id, c.b_id, sa.n_sh AS n_a, sb.n_sh AS n_b
-           FROM cand$tag c
-           JOIN sz sa ON sa.doc_id = c.a_id
-           JOIN sz sb ON sb.doc_id = c.b_id
-           WHERE CAST(sb.n_sh AS DOUBLE)
-               >= CAST(sa.n_sh AS DOUBLE) * $PrefixJaccardT
-             AND CAST(sa.n_sh AS DOUBLE)
-               >= CAST(sb.n_sh AS DOUBLE) * $PrefixJaccardT),
-         pairs$tag AS MATERIALIZED (
-           SELECT cl.a_id, cl.b_id
-           FROM candl$tag cl
-           JOIN p pa ON pa.doc_id = cl.a_id
-           JOIN p pb ON pb.doc_id = cl.b_id AND pb.shingle = pa.shingle
-           GROUP BY cl.a_id, cl.b_id, cl.n_a, cl.n_b
-           HAVING CAST(count(*) AS DOUBLE)
-             / CAST(cl.n_a + cl.n_b - count(*) AS DOUBLE)
-             >= $PrefixJaccardT)"""
-    s"""WITH d AS MATERIALIZED (
-         SELECT doc_id, list_distinct(list_transform(
-           range(1, len(string_split(text,' ')) - 1),
-           i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-         FROM documents),
+  /** The SQL mirror of [[prefixPairsFrom]]'s shared stages: the
+    * shingles d, sizes sz, postings p, document frequencies f, the
+    * rarest-first rank r and preE, the exact prefix postings. */
+  private def prefixPostingsSql: String =
+    s"""${shingledSql()},
        sz AS (SELECT doc_id, len(sh) AS n_sh FROM d),
        p AS MATERIALIZED (
          SELECT doc_id, unnest(sh) AS shingle FROM d),
@@ -3048,19 +2466,56 @@ object Dedup {
          SELECT r.doc_id, r.shingle FROM r JOIN f USING (shingle)
          WHERE r.r <= r.n_sh
              - CAST(CEIL(r.n_sh * $PrefixJaccardT) AS BIGINT) + 1
-           AND f.df >= 2),
-       preC AS MATERIALIZED (
-         SELECT doc_id, shingle FROM (
-           SELECT doc_id, shingle,
-             row_number() OVER (PARTITION BY shingle ORDER BY
-               CAST(concat('0x', substr(md5(concat(shingle, ':',
-                 CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                 % 2147483647,
-               doc_id) AS prn
-           FROM preE) t
-         WHERE prn <= $PrefixPostingCap),
-       ${leg("E", "preE")},
-       ${leg("C", "preC")},
+           AND f.df >= 2)"""
+
+  /** The SQL mirror of [[prefixPairsFrom]]'s collision join, length
+    * filter and verification over the prefix postings `pre`: the CTE
+    * pairs`tag`(a_id, b_id, n_common, jaccard). */
+  private def prefixVerifySql(tag: String, pre: String): String =
+    s"""cand$tag AS (
+         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+         FROM $pre a JOIN $pre b USING (shingle)
+         WHERE a.doc_id < b.doc_id),
+       candl$tag AS MATERIALIZED (
+         SELECT c.a_id, c.b_id, sa.n_sh AS n_a, sb.n_sh AS n_b
+         FROM cand$tag c
+         JOIN sz sa ON sa.doc_id = c.a_id
+         JOIN sz sb ON sb.doc_id = c.b_id
+         WHERE CAST(sb.n_sh AS DOUBLE)
+             >= CAST(sa.n_sh AS DOUBLE) * $PrefixJaccardT
+           AND CAST(sa.n_sh AS DOUBLE)
+             >= CAST(sb.n_sh AS DOUBLE) * $PrefixJaccardT),
+       pairs$tag AS MATERIALIZED (
+         SELECT cl.a_id, cl.b_id, count(*) AS n_common,
+           CAST(count(*) AS DOUBLE)
+             / CAST(cl.n_a + cl.n_b - count(*) AS DOUBLE) AS jaccard
+         FROM candl$tag cl
+         JOIN p pa ON pa.doc_id = cl.a_id
+         JOIN p pb ON pb.doc_id = cl.b_id AND pb.shingle = pa.shingle
+         GROUP BY cl.a_id, cl.b_id, cl.n_a, cl.n_b
+         HAVING CAST(count(*) AS DOUBLE)
+           / CAST(cl.n_a + cl.n_b - count(*) AS DOUBLE)
+           >= $PrefixJaccardT)"""
+
+  /** DuckDB replay of [[prefixPairsFrom]] at the same `cap`. */
+  private def prefixFilterOracleSql(cap: Option[Int]): String = {
+    val sample = cap.fold("")(k =>
+      s"\n       ${postingSampleSql("preC", "preE", "doc_id, shingle", k)},")
+    s"""WITH $prefixPostingsSql,$sample
+       ${prefixVerifySql("", cap.fold("preE")(_ => "preC"))}
+       SELECT a_id, b_id, n_common, jaccard FROM pairs
+       ORDER BY a_id, b_id"""
+  }
+
+  /** DuckDB replay of the scorecard: ONE shared shingle/posting/rank
+    * chain, the exact and capped prefix relations diverging only at
+    * the sample window (as in the Spark legs), each verified on the
+    * full posting relation, then the three counts. */
+  private lazy val CapRecallOracleSql: String =
+    s"""WITH $prefixPostingsSql,
+       ${postingSampleSql("preC", "preE", "doc_id, shingle", PrefixPostingCap)},
+       ${prefixVerifySql("E", "preE")},
+       ${prefixVerifySql("C", "preC")},
        hit AS (
          SELECT CAST(count(*) AS BIGINT) AS n_hit
          FROM pairsC c JOIN pairsE e
@@ -3076,7 +2531,6 @@ object Dedup {
            ELSE CAST(hit.n_hit AS DOUBLE)
              / (SELECT CAST(count(*) AS DOUBLE) FROM pairsE) END AS recall
        FROM hit"""
-  }
 
   /** The rows-per-band settings the tuning curve sweeps — ONE list
     * shared by the Spark legs and the oracle generator (the Nprobes
@@ -3091,15 +2545,8 @@ object Dedup {
   private lazy val LshTuneOracleSql: String = {
     val legs = LshTuneRows.map { r =>
       val nb = NumPerms / r
-      s"""bands$r AS (
-           SELECT doc_id, b,
-             array_to_string(sg[$r*b + 1 : $r*b + $r], ',') AS band_key
-           FROM sig, (SELECT unnest(range(0, $nb)) AS b) bs),
-         cand$r AS (
-           SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-           FROM bands$r x JOIN bands$r y
-             ON x.b = y.b AND x.band_key = y.band_key
-              AND x.doc_id < y.doc_id),
+      s"""${bandsSql(r, s"bands$r")},
+         ${bandPairsSql(s"cand$r", s"bands$r")},
          leg$r AS (
            SELECT CAST($r AS BIGINT) AS band_rows,
              CAST($nb AS BIGINT) AS n_bands,
@@ -3109,23 +2556,9 @@ object Dedup {
                 JOIN truth t ON t.a_id = c.a_id AND t.b_id = c.b_id)
                AS n_hit)"""
     }.mkString(",\n")
-    s"""WITH d AS (
-         SELECT doc_id, list_distinct(list_transform(
-           range(1, len(string_split(text,' ')) - 1),
-           i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-         FROM documents),
-       sig AS (
-         SELECT doc_id, list_transform(range(0, 16), p ->
-           list_aggregate(list_transform(sh, s ->
-             ((2*p + 3) * (CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) + p) % 2147483647),
-           'min')) AS sg
-         FROM d),
-       truth AS (
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM d a, d b
-         WHERE a.doc_id < b.doc_id
-           AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold),
+    s"""WITH ${shingledSql()},
+       $SignaturesSql,
+       ${jaccardEdgesSql("truth")},
        $legs,
        u AS (${LshTuneRows.map(r => s"SELECT * FROM leg$r")
          .mkString(" UNION ALL ")})
@@ -3144,42 +2577,10 @@ object Dedup {
     * operators are checked with. */
   private lazy val DedupEvalOracleSql: String =
     MinhashBandsCte + s""",
-       tp AS (
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM d a, d b
-         WHERE a.doc_id < b.doc_id
-           AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= $JaccardThreshold),
-       mcand AS (
-         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-         FROM bands x JOIN bands y
-           ON x.b = y.b AND x.band_key = y.band_key
-            AND x.doc_id < y.doc_id),
-       tok AS (
-         SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-       h AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647 AS h1,
-           CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT) % 2147483647 AS h2
-         FROM tok),
-       v AS (
-         SELECT doc_id, j,
-           sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
-                                ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
-                    THEN 1 ELSE -1 END) AS vote
-         FROM h, (SELECT unnest(range(0, 60)) AS j) js
-         GROUP BY doc_id, j),
-       sg AS (
-         SELECT doc_id,
-           CAST(sum(CASE WHEN vote > 0
-                         THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
-                         ELSE 0 END) AS BIGINT) AS simhash
-         FROM v GROUP BY doc_id),
-       scand AS (
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM sg a, sg b
-         WHERE a.doc_id < b.doc_id
-           AND bit_count(xor(a.simhash, b.simhash)) <= 3),
+       ${jaccardEdgesSql("tp")},
+       ${bandPairsSql("mcand")},
+       ${simhashWideSql()},
+       ${hammingPairsSql("scand")},
        stats AS (
          SELECT 'minhash_lsh' AS generator,
            (SELECT count(*) FROM mcand) AS n_cand,
@@ -3214,7 +2615,7 @@ object Dedup {
     * this over its quality-gated, exact-deduped survivor set. */
   private[graft] def simhashWideOf(docs: DataFrame): DataFrame = {
     val hashed = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .select(col("doc_id"),
         hash31(col("t")).as("h1"),
         hash31(concat(lit("x"), col("t"))).as("h2"))
@@ -3229,6 +2630,28 @@ object Dedup {
           .map(j => when(col(s"v_$j") > 0, lit(1L << j)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
   }
+
+  /** The SQL mirror of [[simhashWideOf]] over `src`'s (doc_id, text):
+    * the MATERIALIZED CTE sg(doc_id, simhash). */
+  private[graft] def simhashWideSql(src: String = "documents"): String =
+    s"""sg AS MATERIALIZED (
+         SELECT doc_id,
+           CAST(sum(CASE WHEN vote > 0
+                         THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER))
+                         ELSE 0 END) AS BIGINT) AS simhash
+         FROM (
+           SELECT doc_id, j,
+             sum(CASE WHEN ((CASE WHEN j < 30 THEN h1 >> CAST(j AS INTEGER)
+                                  ELSE h2 >> CAST(j - 30 AS INTEGER) END) & 1) = 1
+                      THEN 1 ELSE -1 END) AS vote
+           FROM (
+             SELECT doc_id, ${hash31Sql("t")} AS h1,
+               ${hash31Sql("concat('x', t)")} AS h2
+             FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
+                   FROM $src) tok) h,
+             (SELECT unnest(range(0, 60)) AS j) js
+           GROUP BY doc_id, j) v
+         GROUP BY doc_id)"""
 
   /** SimHash Hamming-<=3 pairs by pigeonhole chunk blocking; see the
     * dedup_simhash_pairs QueryDef. Package-visible for the DedupSpec
@@ -3263,6 +2686,17 @@ object Dedup {
       .distinct()
       .orderBy("a_id", "b_id")
   }
+
+  /** The SQL mirror of [[simhashChunkPairs]] over the CTE sg(doc_id,
+    * simhash), as the all-pairs form: the MATERIALIZED CTE
+    * `name`(a_id, b_id, hamming). */
+  private[graft] def hammingPairsSql(name: String): String =
+    s"""$name AS MATERIALIZED (
+         SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+         FROM sg a, sg b
+         WHERE a.doc_id < b.doc_id
+           AND bit_count(xor(a.simhash, b.simhash)) <= 3)"""
 
   /** Connected components by min-label propagation WITH pointer doubling,
     * entirely in DataFrames (no driver-side graph state; the driver only

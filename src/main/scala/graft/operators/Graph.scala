@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.EngineFns.hash31Sql
 
 /** Graph analytics over the near-duplicate graph — PageRank centrality on
   * the exact-Jaccard pair relation (nodes = documents, undirected edges =
@@ -1123,15 +1124,13 @@ object Graph {
     * pagerank/LPA oracles so step count and the md5 step-draw can never
     * drift from the Spark loop. */
   private lazy val RandomWalkOracleSql: String = {
-    def h31(x: String): String =
-      s"CAST(concat('0x', substr(md5($x), 1, 15)) AS BIGINT) % 2147483647"
     val steps = (1 to WalkSteps).map { k =>
       val prev = (1 until k).map(j => s"step$j, ").mkString
       s"""w$k AS MATERIALIZED (
             SELECT doc_id, ${prev}v AS step$k, v AS cur FROM (
               SELECT s.doc_id, ${(1 until k).map(j => s"s.step$j, ").mkString}e.v,
                 row_number() OVER (PARTITION BY s.doc_id ORDER BY
-                  ${h31(s"concat('$k:', CAST(s.cur AS VARCHAR), ':', CAST(e.v AS VARCHAR))")},
+                  ${hash31Sql(s"concat('$k:', CAST(s.cur AS VARCHAR), ':', CAST(e.v AS VARCHAR))")},
                   e.v) AS rn
               FROM w${k - 1} s JOIN e ON e.u = s.cur) t
             WHERE rn = 1)"""

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.functions.EngineFns.hash31
+import graft.functions.EngineFns.{hash31, hash31Sql, tokens}
 
 /** Multimodal-column plumbing: media payloads as opaque `binary` columns
   * with typed metadata, decode / feature-extraction via `mapPartitions`
@@ -323,7 +323,7 @@ object Multimodal {
     * grams): CTEs `g`/`h`/`v`/`sig`, shared by the wide signature and
     * wide near-dup oracles so the gram arithmetic can never drift. */
   private val PhashWideSigCte: String =
-    """g AS (
+    s"""g AS (
          SELECT doc_id,
            CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'wav' END AS format,
            substr(text, CAST(i AS INTEGER), 4) AS t
@@ -331,10 +331,8 @@ object Multimodal {
            (SELECT unnest(range(1, length(text) - 2)) AS i) ix),
        h AS (
          SELECT doc_id, format,
-           CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT)
-             % 2147483647 AS h1,
-           CAST(concat('0x', substr(md5(concat('x', t)), 1, 15)) AS BIGINT)
-             % 2147483647 AS h2
+           ${hash31Sql("t")} AS h1,
+           ${hash31Sql("concat('x', t)")} AS h2
          FROM g),
        v AS (
          SELECT doc_id, format, j,
@@ -1015,7 +1013,7 @@ object Multimodal {
             col("doc_id").as("sample_id"),
             col("lang"), col("source"),
             col("n_chars"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens"),
+            size(tokens(col("text"))).cast("long").as("n_tokens"),
             when(col("doc_id") % 2 === 0, lit("png")).otherwise(lit("wav"))
               .as("media_format"),
             (col("n_chars") + lit(16L)).as("n_payload_bytes"),
@@ -1065,10 +1063,7 @@ object Multimodal {
                  FROM documents),
                en AS (
                  SELECT doc_id, frame_idx,
-                   (CAST(concat('0x', substr(md5(concat('scene|',
-                       CAST(doc_id AS VARCHAR), ':',
-                       CAST(frame_idx AS VARCHAR))), 1, 15)) AS BIGINT)
-                     % 2147483647) % 1000 AS energy
+                   ${hash31Sql("concat('scene|', CAST(doc_id AS VARCHAR), ':', CAST(frame_idx AS VARCHAR))")} % 1000 AS energy
                  FROM fr),
                lg AS (
                  SELECT doc_id, frame_idx, energy,
@@ -1122,10 +1117,7 @@ object Multimodal {
                  FROM documents),
                en AS (
                  SELECT doc_id, frame_idx,
-                   (CAST(concat('0x', substr(md5(concat('scene|',
-                       CAST(doc_id AS VARCHAR), ':',
-                       CAST(frame_idx AS VARCHAR))), 1, 15)) AS BIGINT)
-                     % 2147483647) % 1000 AS energy
+                   ${hash31Sql("concat('scene|', CAST(doc_id AS VARCHAR), ':', CAST(frame_idx AS VARCHAR))")} % 1000 AS energy
                  FROM fr),
                lg AS (
                  SELECT doc_id, frame_idx, energy,
@@ -1186,9 +1178,7 @@ object Multimodal {
       },
       Some(s"""WITH pos AS (
                  SELECT doc_id, i,
-                   CAST(concat('0x', substr(md5(substr(text,
-                       CAST(i AS INTEGER), 4)), 1, 15)) AS BIGINT)
-                     % 2147483647 % $CdcBoundaryMod = 0 AS bnd
+                   ${hash31Sql("substr(text, CAST(i AS INTEGER), 4)")} % $CdcBoundaryMod = 0 AS bnd
                  FROM documents, LATERAL
                    (SELECT unnest(range(1, length(text) - 2)) AS i) ix
                  WHERE doc_id % 2 = 1),
@@ -1239,7 +1229,7 @@ object Multimodal {
       "mm_contamination",
       (s, dir) => {
         val postings = docs(s, dir)
-          .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
+          .select(col("doc_id"), tokens(col("text")).as("ts"))
           .select(col("doc_id"),
             explode(array_distinct(TextAnalysis.tokenWindows(col("ts"), 8))).as("w"))
           .transform(Tables.materialize) // feeds the DF cap and both split sides
@@ -1280,9 +1270,7 @@ object Multimodal {
                  GROUP BY t.doc_id, b.doc_id),
                pos AS (
                  SELECT doc_id, i,
-                   CAST(concat('0x', substr(md5(substr(text,
-                       CAST(i AS INTEGER), 4)), 1, 15)) AS BIGINT)
-                     % 2147483647 % $CdcBoundaryMod = 0 AS bnd
+                   ${hash31Sql("substr(text, CAST(i AS INTEGER), 4)")} % $CdcBoundaryMod = 0 AS bnd
                  FROM documents, LATERAL
                    (SELECT unnest(range(1, length(text) - 2)) AS i) ix),
                bnds AS (

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.EngineFns.hash31Sql
+import graft.operators.Relational.dec
 
 /** The numeric-aggregate surface a warehouse user expects beyond plain
   * sum/avg — regression aggregates, bitwise/boolean reductions, ordered
@@ -34,8 +36,6 @@ object Numerics {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  private def dec(c: Column): Column = c.cast("decimal(12,2)")
 
   /** l_extendedprice in exact integer cents. */
   private def cents(c: Column): Column = (dec(c) * 100).cast("long")
@@ -137,10 +137,7 @@ object Numerics {
                  WHERE event_type IN ('purchase', 'signup', 'click')),
                x AS (
                  SELECT e.event_type, e.cents, b.b,
-                   (CAST(concat('0x', substr(md5(concat('boot', '|',
-                       CAST(b.b AS VARCHAR), '|',
-                       CAST(e.event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                     % 2147483647) % $BootGrid AS u
+                   ${hash31Sql("concat('boot', '|', CAST(b.b AS VARCHAR), '|', CAST(e.event_id AS VARCHAR))")} % $BootGrid AS u
                  FROM e CROSS JOIN
                    (SELECT unnest(range(0, $BootB)) AS b) b),
                sums AS (

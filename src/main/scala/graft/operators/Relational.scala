@@ -34,8 +34,8 @@ import graft.{QueryDef, Tables}
 object Relational {
 
   /** Exact-decimal cast for money/quantity columns (see class doc). */
-  private def dec(c: Column): Column = c.cast("decimal(12,2)")
-  private val one = lit(1).cast("decimal(12,2)")
+  private[operators] def dec(c: Column): Column = c.cast("decimal(12,2)")
+  private[operators] val one = lit(1).cast("decimal(12,2)")
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -65,14 +65,6 @@ object Similarity {
   private def embParallel(s: SparkSession, dir: String): DataFrame =
     Tables.parallel(s, emb(s, dir))
 
-  /** Scala-side md5 hash31 — the same arithmetic as EngineFns.hash31 /
-    * the DuckDB oracle, evaluated once at plan-build time. */
-  private def hash31Scala(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16) % 2147483647L
-  }
-
   /** Corpus-scaled hyperplane count (r13, the IVF-√N treatment for the
     * hash-bucket LSH family): p = max(8, ⌊log₂ N⌋ − 6), i.e. 2^p
     * buckets ≈ N/64 — expected bucket occupancy pinned near 64 as the
@@ -120,7 +112,7 @@ object Similarity {
   private def planeConstsFor(p: Int): IndexedSeq[IndexedSeq[Double]] =
     planeConstCache.getOrElseUpdate(p,
       IndexedSeq.tabulate(p, 64) { (j, k) =>
-        (hash31Scala(s"${j}_$k") % 2001 - 1000).toDouble / 1000.0
+        (hash31Value(s"${j}_$k") % 2001 - 1000).toDouble / 1000.0
       })
 
   /** The 64→RandProjDims projection family (emb_rand_proj): a FIXED
@@ -149,7 +141,7 @@ object Similarity {
   private val bucketSql =
     s"""CAST(list_sum(list_transform(range(0, $PlanesSql), j ->
           CASE WHEN list_reduce(list_transform(list_zip(embedding, range(0, 64)), p ->
-                 CAST(p[1] AS DOUBLE) * ((((CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), '_', CAST(p[2] AS VARCHAR))), 1, 15)) AS BIGINT) % 2147483647) % 2001) - 1000) / 1000.0)),
+                 CAST(p[1] AS DOUBLE) * (((${hash31Sql("concat(CAST(j AS VARCHAR), '_', CAST(p[2] AS VARCHAR))")} % 2001) - 1000) / 1000.0)),
                  (x, y) -> x + y) > 0
                THEN (1 << CAST(j AS INTEGER)) ELSE 0 END)) AS BIGINT)"""
 
@@ -1220,7 +1212,7 @@ object Similarity {
       },
       Some(s"""SELECT vec_id, CAST(j AS BIGINT) AS j,
                  list_reduce(list_transform(list_zip(embedding, range(0, 64)), p ->
-                   CAST(p[1] AS DOUBLE) * ((((CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), '_', CAST(p[2] AS VARCHAR))), 1, 15)) AS BIGINT) % 2147483647) % 2001) - 1000) / 1000.0)),
+                   CAST(p[1] AS DOUBLE) * (((${hash31Sql("concat(CAST(j AS VARCHAR), '_', CAST(p[2] AS VARCHAR))")} % 2001) - 1000) / 1000.0)),
                    (x, y) -> x + y) AS proj
                FROM embeddings, (SELECT unnest(range(0, $RandProjDims)) AS j) js
                ORDER BY vec_id, j""")),
@@ -1963,8 +1955,7 @@ object Similarity {
   private[graft] def bandKeysSql(numPlanes: Int = 16, bitsPerBand: Int = 4): String =
     s"""grid AS (
           SELECT j, k,
-            CAST((CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), '_', CAST(k AS VARCHAR))), 1, 15)) AS BIGINT)
-                  % 2147483647) % 2001 - 1000 AS DECIMAL(4,0)) AS n
+            CAST(${hash31Sql("concat(CAST(j AS VARCHAR), '_', CAST(k AS VARCHAR))")} % 2001 - 1000 AS DECIMAL(4,0)) AS n
           FROM (SELECT unnest(range(0, $numPlanes)) AS j) js,
                (SELECT unnest(range(0, 64)) AS k) ks),
         dims AS (

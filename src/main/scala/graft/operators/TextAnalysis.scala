@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.functions.EngineFns.{hash31, shingles}
+import graft.functions.EngineFns.{hash31, hash31Sql, shingles, tokens}
 
 /** Text-analysis operators for LLM training-data pipelines over the
   * `documents` table: token counting, quality scoring, language
@@ -36,10 +36,6 @@ object TextAnalysis {
       "offline, not inline")
   private[graft] def maxBpeMergeRounds: Int = MaxBpeMergeRounds
 
-
-  /** Whitespace tokens of a text column. Spark `split` keeps trailing
-    * empty strings (limit = -1), matching DuckDB `string_split`. */
-  def tokens(c: Column): Column = split(c, " ")
 
   def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
 
@@ -86,6 +82,53 @@ object TextAnalysis {
     length(regexp_replace(c, "[a-z ]", "")).cast("double") /
       length(c).cast("double")
 
+  /** The DuckDB mirror of tokenCount, stopwordRatio, avgWordLen and
+    * noiseRatio over a bare `text` column: the select-list items
+    * n_tokens, stop_ratio, avg_word_len and noise_ratio. */
+  private[graft] val QualitySignalsSql: String =
+    """CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+       CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
+         / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
+       CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
+         / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
+       CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+         / CAST(length(text) AS DOUBLE) AS noise_ratio"""
+
+  /** The cleaning pipelines' quality gate over a text column: at least 8
+    * tokens, stopword ratio ≤ 0.35, noise ratio ≤ 0.25, mean word
+    * length ≥ 3. */
+  def qualityGate(c: Column): Column =
+    tokenCount(c) >= 8 && stopwordRatio(c) <= 0.35 &&
+      noiseRatio(c) <= 0.25 && avgWordLen(c) >= 3.0
+
+  /** The SQL mirror of [[qualityGate]]: the MATERIALIZED CTE kept(`cols`)
+    * of the documents whose text passes it. */
+  private[graft] def qualityGateSql(cols: String): String =
+    s"""kept AS MATERIALIZED (
+         SELECT $cols FROM (
+           SELECT $cols, $QualitySignalsSql
+           FROM documents) q
+         WHERE n_tokens >= 8 AND stop_ratio <= 0.35
+           AND noise_ratio <= 0.25 AND avg_word_len >= 3.0)"""
+
+  /** A document's md5 split draw in [0, 100). */
+  def splitBucket(docId: Column): Column =
+    hash31(concat_ws("|", lit("split"), docId.cast("string"))) % 100L
+
+  /** The 90/5/5 train/valid/test label of a split draw. */
+  def splitOf(bucket: Column): Column =
+    when(bucket < 90, "train").when(bucket < 95, "valid").otherwise("test")
+
+  /** The SQL mirror of [[splitBucket]] over the id expression `docId`. */
+  private[graft] def splitBucketSql(docId: String): String =
+    s"${hash31Sql(s"concat('split', '|', CAST($docId AS VARCHAR))")} % 100"
+
+  /** The SQL mirror of [[splitOf]]([[splitBucket]](`docId`)). */
+  private[graft] def splitSql(docId: String): String = {
+    val b = splitBucketSql(docId)
+    s"CASE WHEN $b < 90 THEN 'train' WHEN $b < 95 THEN 'valid' ELSE 'test' END"
+  }
+
   /** Language marker word lists (word-gram heuristic). Order matters for
     * deterministic tie-breaking: en > de > fr > es. */
   val langMarkers: Seq[(String, Seq[String])] = Seq(
@@ -113,9 +156,8 @@ object TextAnalysis {
 
   /** DuckDB mirror of qualityMargin over a bare `text` column. */
   private[graft] val QualityMarginSql: String =
-    """(CAST(list_sum(list_transform(string_split(text, ' '),
-         t -> (CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT)
-               % 2147483647) % 201 - 100)) AS BIGINT)
+    s"""(CAST(list_sum(list_transform(string_split(text, ' '),
+         t -> ${hash31Sql("t")} % 201 - 100)) AS BIGINT)
        + 8 * CAST(len(list_filter(string_split(text, ' '),
            t -> t IN ('the','a','and','of','to','is','in'))) AS BIGINT)
        - CAST(len(string_split(text, ' ')) AS BIGINT))"""
@@ -184,14 +226,7 @@ object TextAnalysis {
             avgWordLen(col("text")).as("avg_word_len"),
             noiseRatio(col("text")).as("noise_ratio"))
           .orderBy("doc_id"),
-      Some("""SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-                  / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-                CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-                  / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
-                CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-                  / CAST(length(text) AS DOUBLE) AS noise_ratio
+      Some(s"""SELECT doc_id, $QualitySignalsSql
               FROM documents ORDER BY doc_id""")),
 
     QueryDef(
@@ -250,15 +285,15 @@ object TextAnalysis {
               md5(concat_ws(" ", array_sort(split(lower(col("text")), " ")))
                 .cast("binary")), 1, 8).as("fp_short"),
             aggregate(
-              transform(split(col("text"), " "), t => hash31(t)),
+              transform(tokens(col("text")), t => hash31(t)),
               lit(0L),
               (acc, h) => (acc * 65599L + h) % 2147483647L).as("rolling_fp"))
           .orderBy("doc_id"),
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
                 md5(array_to_string(list_sort(string_split(lower(text), ' ')), ' ')) AS fp,
                 substr(md5(array_to_string(list_sort(string_split(lower(text), ' ')), ' ')), 1, 8) AS fp_short,
                 list_reduce(list_transform(string_split(text, ' '),
-                  t -> CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) % 2147483647),
+                  t -> ${hash31Sql("t")}),
                   (acc, h) -> (acc * 65599 + h) % 2147483647) AS rolling_fp
               FROM documents ORDER BY doc_id""")),
 
@@ -319,10 +354,9 @@ object TextAnalysis {
           .select(col("doc_id"), col("lang"), col("source"), col("bucket"))
           .orderBy("doc_id")
       },
-      Some("""WITH b AS (
+      Some(s"""WITH b AS (
                 SELECT doc_id, lang, source,
-                  (CAST(concat('0x', substr(md5(concat(source, '|', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % 100 AS bucket
+                  ${hash31Sql("concat(source, '|', CAST(doc_id AS VARCHAR))")} % 100 AS bucket
                 FROM documents)
               SELECT doc_id, lang, source, bucket
               FROM b
@@ -394,7 +428,7 @@ object TextAnalysis {
           .select(col("doc_id"), col("lang"), col("rk"), col("quota"))
           .orderBy("lang", "rk")
       },
-      Some("""WITH st AS (
+      Some(s"""WITH st AS (
                 SELECT lang, CAST(count(*) AS BIGINT) AS n_h,
                   sum(n_chars) AS s_h, sum(n_chars * n_chars) AS q_h
                 FROM documents GROUP BY lang),
@@ -418,9 +452,7 @@ object TextAnalysis {
               r AS (
                 SELECT doc_id, lang,
                   row_number() OVER (PARTITION BY lang ORDER BY
-                    (CAST(concat('0x', substr(md5(concat('ney', '|',
-                        CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) ASC, doc_id ASC) AS rk
+                    ${hash31Sql("concat('ney', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC) AS rk
                 FROM documents)
               SELECT r.doc_id, r.lang, CAST(r.rk AS BIGINT) AS rk, q.quota
               FROM r JOIN quota q ON q.lang = r.lang
@@ -449,7 +481,7 @@ object TextAnalysis {
       (s, dir) =>
         tokenBudget(Tables.load(s, dir, "documents"), "tokb")
           .orderBy("source", "cum_toks", "doc_id"),
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
                 SELECT doc_id, source,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
                 FROM documents),
@@ -468,9 +500,7 @@ object TextAnalysis {
               c AS (
                 SELECT doc_id, source, n_toks,
                   sum(n_toks) OVER (PARTITION BY source ORDER BY
-                    (CAST(concat('0x', substr(md5(concat('tokb', '|',
-                        CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) ASC, doc_id ASC
+                    ${hash31Sql("concat('tokb', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS cum_toks
                 FROM d)
@@ -511,11 +541,7 @@ object TextAnalysis {
             (coalesce(col("n_overlap"), lit(0L)) >= 3).as("contaminated"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (
-                SELECT doc_id, list_distinct(list_transform(
-                  range(1, len(string_split(text,' ')) - 1),
-                  i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-                FROM documents),
+      Some(s"""WITH ${Dedup.shingledSql()},
               bset AS (
                 SELECT DISTINCT unnest(sh) AS shingle FROM d WHERE doc_id % 97 = 0),
               ov AS (
@@ -604,16 +630,8 @@ object TextAnalysis {
             (reason === "keep").as("kept"))
           .orderBy("doc_id")
       },
-      Some("""WITH q AS (
-                SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-                  CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
-                  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-                    / CAST(length(text) AS DOUBLE) AS noise_ratio
-                FROM documents)
+      Some(s"""WITH q AS (
+                SELECT doc_id, $QualitySignalsSql FROM documents)
               SELECT doc_id,
                 CASE WHEN n_tokens < 8 THEN 'too_short'
                      WHEN stop_ratio > 0.35 THEN 'too_stoppy'
@@ -693,10 +711,10 @@ object TextAnalysis {
         val docs = Tables.loadParallel(s, dir, "documents")
         val stats = docs.agg(
           count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ")).cast("long")).as("s_tokens"))
+          sum(size(tokens(col("text"))).cast("long")).as("s_tokens"))
         val terms = docs.select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl"),
-          explode(split(col("text"), " ")).as("term"))
+          size(tokens(col("text"))).cast("long").as("dl"),
+          explode(tokens(col("text"))).as("term"))
         // tf feeds both the scored join and the df aggregation; column
         // pruning strips the df branch to keys-only, which defeats
         // exchange reuse (two non-identical subtrees would each rescan
@@ -763,12 +781,10 @@ object TextAnalysis {
           .select(col("doc_id"), col("lang"), col("n_chars"), col("weight"))
           .orderBy("doc_id")
       },
-      Some("""WITH w AS (
+      Some(s"""WITH w AS (
                 SELECT doc_id, lang, n_chars,
                   CAST(least(n_chars, 500) AS DOUBLE) / 500.0 AS weight,
-                  CAST((CAST(concat('0x', substr(md5(concat('wsamp', '|',
-                      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % 1000000 AS DOUBLE) / 1000000.0 AS u
+                  CAST(${hash31Sql("concat('wsamp', '|', CAST(doc_id AS VARCHAR))")} % 1000000 AS DOUBLE) / 1000000.0 AS u
                 FROM documents)
               SELECT doc_id, lang, n_chars, weight
               FROM w WHERE u < weight ORDER BY doc_id""")),
@@ -783,7 +799,7 @@ object TextAnalysis {
       "text_vocab_stats",
       (s, dir) => {
         val tc = Tables.load(s, dir, "documents")
-          .select(col("lang"), explode(split(col("text"), " ")).as("term"))
+          .select(col("lang"), explode(tokens(col("text"))).as("term"))
           .groupBy("lang", "term").agg(count(lit(1)).as("cnt"))
         val wl = Window.partitionBy("lang")
         val wr = Window.partitionBy("lang")
@@ -821,29 +837,14 @@ object TextAnalysis {
     // keeps this draw independent of sample_weighted's.
     QueryDef(
       "split_train_test",
-      (s, dir) => {
-        val bucket = hash31(
-          concat_ws("|", lit("split"), col("doc_id").cast("string"))) % 100L
+      (s, dir) =>
         Tables.load(s, dir, "documents")
-          .withColumn("bucket", bucket)
-          .withColumn("split",
-            when(col("bucket") < 90, "train")
-              .when(col("bucket") < 95, "valid").otherwise("test"))
+          .withColumn("bucket", splitBucket(col("doc_id")))
+          .withColumn("split", splitOf(col("bucket")))
           .select(col("doc_id"), col("bucket"), col("split"), col("n_chars"))
-          .orderBy("doc_id")
-      },
-      Some("""SELECT doc_id,
-                (CAST(concat('0x', substr(md5(concat('split', '|',
-                    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                  % 2147483647) % 100 AS bucket,
-                CASE WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % 100 < 90 THEN 'train'
-                  WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % 100 < 95 THEN 'valid'
-                  ELSE 'test' END AS split,
-                n_chars
+          .orderBy("doc_id"),
+      Some(s"""SELECT doc_id, ${splitBucketSql("doc_id")} AS bucket,
+                ${splitSql("doc_id")} AS split, n_chars
               FROM documents ORDER BY doc_id""")),
 
     // Fixed-size context-window chunking WITH overlap — the step that
@@ -858,7 +859,7 @@ object TextAnalysis {
       "text_chunk_overlap",
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
-          .select(col("doc_id"), split(col("text"), " ").as("toks"))
+          .select(col("doc_id"), tokens(col("text")).as("toks"))
           .withColumn("n", size(col("toks")).cast("long"))
         d.select(col("doc_id"), col("toks"), col("n"),
             posexplode(sequence(lit(0L), expr("(n - 1) div 30"))))
@@ -899,12 +900,10 @@ object TextAnalysis {
           .select(col("doc_id"), col("lang"), col("rk"))
           .orderBy("lang", "rk")
       },
-      Some("""WITH r AS (
+      Some(s"""WITH r AS (
                 SELECT doc_id, lang,
                   row_number() OVER (PARTITION BY lang ORDER BY
-                    (CAST(concat('0x', substr(md5(concat('fixk', '|',
-                        CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) ASC, doc_id ASC) AS rk
+                    ${hash31Sql("concat('fixk', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC) AS rk
                 FROM documents)
               SELECT doc_id, lang, CAST(rk AS BIGINT) AS rk
               FROM r WHERE rk <= 50 ORDER BY lang, rk""")),
@@ -952,13 +951,11 @@ object TextAnalysis {
               .as("est_weight"))
           .orderBy("rk")
       },
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
                 SELECT doc_id, lang,
                   CAST(least(n_chars, 500) AS DOUBLE) AS weight,
                   CAST(least(n_chars, 500) AS DOUBLE) /
-                    (CAST((CAST(concat('0x', substr(md5(concat('prio', '|',
-                        CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) % 1000000 + 1 AS DOUBLE) / 1000000.0)
+                    (CAST(${hash31Sql("concat('prio', '|', CAST(doc_id AS VARCHAR))")} % 1000000 + 1 AS DOUBLE) / 1000000.0)
                     AS priority
                 FROM documents),
               r AS (SELECT *, row_number() OVER
@@ -990,15 +987,13 @@ object TextAnalysis {
           .select(col("vec_id"), col("label"), col("rk"), col("k_target"))
           .orderBy("label", "rk")
       },
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
                 SELECT CAST(min(n) AS BIGINT) AS k_target FROM (
                   SELECT label, count(*) AS n FROM embeddings GROUP BY label)),
               r AS (
                 SELECT vec_id, CAST(label AS BIGINT) AS label,
                   row_number() OVER (PARTITION BY label ORDER BY
-                    (CAST(concat('0x', substr(md5(concat('bal', '|',
-                        CAST(vec_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                      % 2147483647) ASC, vec_id ASC) AS rk
+                    ${hash31Sql("concat('bal', '|', CAST(vec_id AS VARCHAR))")} ASC, vec_id ASC) AS rk
                 FROM embeddings)
               SELECT vec_id, label, CAST(rk AS BIGINT) AS rk, t.k_target
               FROM r CROSS JOIN t WHERE rk <= t.k_target
@@ -1017,7 +1012,7 @@ object TextAnalysis {
       "text_rarity",
       (s, dir) => {
         val terms = Tables.load(s, dir, "documents")
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+          .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
           .transform(Tables.materialize)
         val ctf = terms.groupBy("term").agg(count(lit(1)).as("ctf"))
         terms.join(ctf, "term")
@@ -1099,7 +1094,7 @@ object TextAnalysis {
         // the added round-robin exchange before the checkpoint
         val terms = Tables.load(s, dir, "documents")
           .select(col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
+            posexplode(tokens(col("text"))).as(Seq("pos", "term")))
           .transform(Tables.materialize) // feeds vocab count and the id join once
         // global rank over the VOCABULARY (the aggregated distinct-term
         // set, ≪ corpus) — the one place a single-partition window is
@@ -1169,7 +1164,7 @@ object TextAnalysis {
       (s, dir) =>
         bpeRounds(s, dir)._1
           .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens"),
+            size(tokens(col("text"))).cast("long").as("n_tokens"),
             col("text").as("text_bpe"))
           .orderBy("doc_id"),
       Some(BpeEncodeOracleSql)),
@@ -1202,9 +1197,7 @@ object TextAnalysis {
                  GROUP BY source),
                u AS (
                  SELECT doc_id, source,
-                   (CAST(concat('0x', substr(md5(concat('tsamp', '|',
-                       CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                     % 2147483647) % $TempM AS u
+                   ${hash31Sql("concat('tsamp', '|', CAST(doc_id AS VARCHAR))")} % $TempM AS u
                  FROM documents)
                SELECT u.doc_id, u.source, c.n_source
                FROM u JOIN c USING (source)
@@ -1227,7 +1220,7 @@ object TextAnalysis {
         // plain load (r14): the r13 repartition regressed this 0.73x —
         // the bigram slice work is light relative to the extra exchange
         val d = Tables.load(s, dir, "documents")
-        val ts = split(col("text"), " ")
+        val ts = tokens(col("text"))
         // slice+arrays_zip, NOT a transform() lambda: higher-order
         // lambdas run interpreted and re-evaluate the split per element
         // (the same hazard measured at 300 s CPU in bpeRounds)
@@ -1327,14 +1320,13 @@ object TextAnalysis {
           .withColumn("keep", col("margin") >= 0L)
           .orderBy("doc_id")
       },
-      Some("""WITH f AS (
+      Some(s"""WITH f AS (
                 SELECT doc_id,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
                   CAST(len(list_filter(string_split(text, ' '),
                     t -> t IN ('the','a','and','of','to','is','in'))) AS BIGINT) AS n_stop,
                   CAST(list_sum(list_transform(string_split(text, ' '),
-                    t -> (CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT)
-                          % 2147483647) % 201 - 100)) AS BIGINT) AS lex_score
+                    t -> ${hash31Sql("t")} % 201 - 100)) AS BIGINT) AS lex_score
                 FROM documents)
               SELECT doc_id, n_tokens, n_stop, lex_score,
                 lex_score + 8 * n_stop - n_tokens AS margin,
@@ -1440,7 +1432,7 @@ object TextAnalysis {
             col("quota"), col("rk"))
           .orderBy("doc_id")
       },
-      Some("""WITH c AS (
+      Some(s"""WITH c AS (
                  SELECT source, count(*) AS n FROM documents GROUP BY source),
                t AS (SELECT sum(n) // 2 AS budget, count(*) AS k FROM c),
                sorted AS (
@@ -1464,9 +1456,7 @@ object TextAnalysis {
                r AS (
                  SELECT d.doc_id, d.source, q.n_source, q.quota,
                    row_number() OVER (PARTITION BY d.source ORDER BY
-                     (CAST(concat('0x', substr(md5(concat('mix', '|',
-                         CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                       % 2147483647) ASC, d.doc_id ASC) AS rk
+                     ${hash31Sql("concat('mix', '|', CAST(d.doc_id AS VARCHAR))")} ASC, d.doc_id ASC) AS rk
                  FROM documents d JOIN q USING (source))
                SELECT doc_id, source, n_source, quota, CAST(rk AS BIGINT) AS rk
                FROM r WHERE rk <= quota ORDER BY doc_id""")),
@@ -1505,17 +1495,13 @@ object TextAnalysis {
             ((col("rk") - 1L + goff) % 8L).as("shard"))
           .orderBy("doc_id")
       },
-      Some("""WITH s AS (
+      Some(s"""WITH s AS (
                 SELECT greatest(1, count(*) // 2048) AS n_salt FROM documents),
               t AS (
                 SELECT doc_id,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-                  (CAST(concat('0x', substr(md5(concat('spack', '|',
-                      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) AS u,
-                  (CAST(concat('0x', substr(md5(concat('ssalt', '|',
-                      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % (SELECT n_salt FROM s) AS salt
+                  ${hash31Sql("concat('spack', '|', CAST(doc_id AS VARCHAR))")} AS u,
+                  ${hash31Sql("concat('ssalt', '|', CAST(doc_id AS VARCHAR))")} % (SELECT n_salt FROM s) AS salt
                 FROM documents),
               b AS (
                 SELECT doc_id, n_tok, u, salt, n_tok // 8 AS band FROM t),
@@ -1523,10 +1509,7 @@ object TextAnalysis {
                 SELECT doc_id, n_tok, band, salt,
                   row_number() OVER (PARTITION BY band, salt
                     ORDER BY u ASC, doc_id ASC) AS rk,
-                  (CAST(concat('0x', substr(md5(concat('soff', '|',
-                      CAST(band AS VARCHAR), '|',
-                      CAST(salt AS VARCHAR))), 1, 15)) AS BIGINT)
-                    % 2147483647) % 8 AS goff
+                  ${hash31Sql("concat('soff', '|', CAST(band AS VARCHAR), '|', CAST(salt AS VARCHAR))")} % 8 AS goff
                 FROM b)
               SELECT doc_id, n_tok,
                 CAST((rk - 1 + goff) % 8 AS BIGINT) AS shard
@@ -1717,9 +1700,7 @@ object TextAnalysis {
                  FROM documents),
                bg AS (
                  SELECT doc_id, lang,
-                   ((CAST(concat('0x', substr(md5(concat('dsir|', w[i],
-                       ' ', w[i+1])), 1, 15)) AS BIGINT)
-                     % 2147483647) % $DsirB) AS bucket
+                   (${hash31Sql("concat('dsir|', w[i], ' ', w[i+1])")} % $DsirB) AS bucket
                  FROM tk, LATERAL
                    (SELECT unnest(range(1, len(w))) AS i) ix),
                rawc AS (SELECT bucket, count(*) AS r_b FROM bg
@@ -1739,9 +1720,7 @@ object TextAnalysis {
                  FROM sc)
                SELECT d.doc_id, d.lang, sc.score_q
                FROM documents d JOIN sc USING (doc_id), st
-               WHERE CAST((CAST(concat('0x', substr(md5(concat('dsir|',
-                       CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                     % 2147483647) % $DsirM AS HUGEINT)
+               WHERE CAST(${hash31Sql("concat('dsir|', CAST(d.doc_id AS VARCHAR))")} % $DsirM AS HUGEINT)
                    * CAST(st.s_sum AS HUGEINT)
                  < CAST(sc.score_q AS HUGEINT) * CAST(st.nb AS HUGEINT)
                ORDER BY d.doc_id""")),
@@ -1879,11 +1858,9 @@ object TextAnalysis {
           .select("doc_id", "pos", "h").distinct()
           .orderBy("doc_id", "pos")
       },
-      Some("""WITH g AS (
+      Some(s"""WITH g AS (
                 SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                  CAST(concat('0x', substr(md5(array_to_string(
-                    string_split(text,' ')[i:i+2], ' ')), 1, 15)) AS BIGINT)
-                    % 2147483647 AS h,
+                  ${hash31Sql("array_to_string(string_split(text,' ')[i:i+2], ' ')")} AS h,
                   CAST(len(string_split(text,' ')) - 2 AS BIGINT) AS n_grams
                 FROM documents, LATERAL (SELECT unnest(range(1,
                   len(string_split(text,' ')) - 1)) AS i) ix
@@ -1911,7 +1888,7 @@ object TextAnalysis {
     QueryDef(
       "text_seqlen_hist",
       (s, dir) => {
-        val toks = size(split(col("text"), " ")).cast("long")
+        val toks = size(tokens(col("text"))).cast("long")
         Tables.load(s, dir, "documents")
           .select(toks.as("len"))
           .select(col("len"), expr("len div 64").as("bucket"),
@@ -1964,7 +1941,7 @@ object TextAnalysis {
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
           .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("n_toks"))
+            size(tokens(col("text"))).cast("long").as("n_toks"))
         val stats = d.agg(min(col("doc_id")).as("lo"),
           max(col("doc_id")).as("hi"))
         // k = 1..8 → prefix of ceil(n / 2^(8-k)) docs (sizes n/128 … n)
@@ -1974,9 +1951,9 @@ object TextAnalysis {
             (col("lo") + ceil((col("hi") - col("lo") + 1).cast("double") /
               pow(lit(2.0), (lit(8) - col("k")).cast("double")))
               .cast("long") - 1).as("bound"))
-        val tokens = Tables.load(s, dir, "documents")
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        val firstDoc = tokens.groupBy("w")
+        val words = Tables.load(s, dir, "documents")
+          .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
+        val firstDoc = words.groupBy("w")
           .agg(min(col("doc_id")).as("first_doc"))
         val perPrefixDocs = d.crossJoin(broadcast(spine))
           .filter(col("doc_id") <= col("bound"))
@@ -2042,7 +2019,7 @@ object TextAnalysis {
       "text_zipf_curve",
       (s, dir) => {
         val freq = Tables.load(s, dir, "documents")
-          .select(explode(split(col("text"), " ")).as("w"))
+          .select(explode(tokens(col("text"))).as("w"))
           .groupBy("w").agg(count(lit(1)).as("freq"))
         val top = freq
           .orderBy(col("freq").desc, col("w").asc).limit(4096)
@@ -2093,7 +2070,7 @@ object TextAnalysis {
       // slice+arrays_zip are codegen'd collection expressions, unlike a
       // transform() lambda (interpreted, and it re-evaluates the split
       // per element — measured ~300 s CPU per sweep at sf0.1 before)
-      val toks = split(col("text"), " ")
+      val toks = tokens(col("text"))
       val pairCol = when(size(toks) >= 2,
         arrays_zip(
           slice(toks, lit(1), size(toks) - 1).as("a"),

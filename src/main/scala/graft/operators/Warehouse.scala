@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.EngineFns.{hash31Sql, tokens}
+import graft.operators.Relational.{dec, one}
 
 /** Warehouse-grade analytics flagships: multi-fact TPC-H join plans (Q5,
   * Q18), recursive-CTE hierarchy traversal (SQL:1999 WITH RECURSIVE —
@@ -41,10 +43,6 @@ import graft.{QueryDef, Tables}
   *    result. No second scan, no double summation anywhere.
   */
 object Warehouse {
-
-  /** Exact-decimal cast (same policy as Relational.dec). */
-  private def dec(c: Column): Column = c.cast("decimal(12,2)")
-  private val one = lit(1).cast("decimal(12,2)")
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
@@ -1450,7 +1448,7 @@ object Warehouse {
     QueryDef(
       "q_higher_order",
       (s, dir) => {
-        val toks = split(col("text"), " ")
+        val toks = tokens(col("text"))
         val lens = transform(toks, t => length(t))
         t(s, dir, "documents")
           .select(
@@ -1669,9 +1667,7 @@ object Warehouse {
                   epoch_us(day) AS day_us
                 FROM e GROUP BY 1, 2),
               h AS (
-                SELECT *, (CAST(concat('0x', substr(md5(concat('dp', '|',
-                    event_type, '|', CAST(day_us AS VARCHAR))), 1, 15))
-                    AS BIGINT) % 2147483647) % $DpGrid AS u
+                SELECT *, ${hash31Sql("concat('dp', '|', event_type, '|', CAST(day_us AS VARCHAR))")} % $DpGrid AS u
                 FROM daily),
               z AS (SELECT *, CAST($DpCaseSql AS BIGINT) AS noise FROM h)
               SELECT event_type, day, n, noise,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.{QueryDef, Tables}
+import graft.functions.EngineFns.hash31Sql
 
 /** Source/sink coverage beyond parquet: CSV, JSON-lines, ORC, Avro and
   * XML file round-trips. Each operator writes a lineitem projection to a scratch
@@ -320,10 +321,9 @@ object Formats {
             min(col("id")).as("min_id"),
             max(col("id")).as("max_id"))
           .orderBy("cat"),
-      Some("""WITH g AS (
+      Some(s"""WITH g AS (
                 SELECT i AS id,
-                  CAST((CAST(concat('0x', substr(md5(CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)
-                    % 2147483647) % 1000000 AS DOUBLE) / 1000000.0 AS val,
+                  CAST(${hash31Sql("CAST(i AS VARCHAR)")} % 1000000 AS DOUBLE) / 1000000.0 AS val,
                   concat('c', CAST(i % 7 AS VARCHAR)) AS cat
                 FROM (SELECT unnest(range(1000, 60000)) AS i) ix)
               SELECT cat, count(*) AS n,

@@ -47,13 +47,6 @@ object GenSource {
     StructField("id", LongType, nullable = false),
     StructField("val", DoubleType, nullable = false),
     StructField("cat", StringType, nullable = false)))
-
-  /** Same arithmetic as EngineFns.hash31 / the DuckDB oracle. */
-  def hash31(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16) % 2147483647L
-  }
 }
 
 final class GenTable(rows: Long, partitions: Int) extends Table with SupportsRead {
@@ -129,7 +122,7 @@ final class GenScan(lo: Long, hi: Long, partitions: Int, required: StructType)
         private var id = p.lo - 1
         override def next(): Boolean = { id += 1; id < p.hi }
         override def get(): InternalRow = {
-          val h = GenSource.hash31(id.toString)
+          val h = graft.functions.EngineFns.hash31Value(id.toString)
           InternalRow.fromSeq(req.fieldNames.toSeq.map {
             case "id" => id
             case "val" => (h % 1000000L).toDouble / 1000000.0

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 import graft.QueryDef
+import graft.functions.EngineFns.tokens
 import graft.operators.Analytics.{Ev, SessionRow}
 
 /** Structured Streaming surface: event-time windowed aggregation with a
@@ -1079,12 +1080,8 @@ object StreamOps {
     pairs.distinct()
       .join(sh.select(col("doc_id").as("a_id"), col("sh").as("sh_a")), Seq("a_id"))
       .join(sh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), Seq("b_id"))
-      .select(
-        col("a_id"), col("b_id"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) -
-            size(array_intersect(col("sh_a"), col("sh_b")))).cast("double"))
-          .as("jaccard"))
+      .select(col("a_id"), col("b_id"),
+        graft.operators.Dedup.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .orderBy("a_id", "b_id")
   }
 
@@ -1648,56 +1645,29 @@ object StreamOps {
       "stream_pipeline_clean",
       (s, dir) => {
         import s.implicits._
-        import graft.operators.TextAnalysis.{avgWordLen, noiseRatio, stopwordRatio, tokenCount}
+        import graft.operators.TextAnalysis.{qualityGate, splitBucket, splitOf}
         val kept = toMemory(s, "pipeclean", "update")(tableStream(s, dir, "documents")
-          .filter(tokenCount(col("text")) >= 8 &&
-            stopwordRatio(col("text")) <= 0.35 &&
-            noiseRatio(col("text")) <= 0.25 &&
-            avgWordLen(col("text")) >= 3.0)
+          .filter(qualityGate(col("text")))
           .select(col("doc_id"), col("text"), col("lang"))
           .as[CleanDoc]
           .groupByKey(_.text)
           .flatMapGroupsWithState[Long, CleanDoc](
             OutputMode.Update, GroupStateTimeout.NoTimeout)(docGateState))
-        val bucket = graft.functions.EngineFns.hash31(
-          concat_ws("|", lit("split"), col("doc_id").cast("string"))) % 100L
         kept
-          .withColumn("split",
-            when(bucket < 90, "train").when(bucket < 95, "valid")
-              .otherwise("test"))
+          .withColumn("split", splitOf(splitBucket(col("doc_id"))))
           .groupBy("split", "lang")
           .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"))
+            sum(size(tokens(col("text"))).cast("long")).as("n_tokens"))
           .orderBy("split", "lang")
       },
-      Some("""WITH q AS (
-                SELECT doc_id, text, lang,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-                  CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE)
-                    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_word_len,
-                  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-                    / CAST(length(text) AS DOUBLE) AS noise_ratio
-                FROM documents),
-              kept AS (
-                SELECT doc_id, text, lang FROM q
-                WHERE n_tokens >= 8 AND stop_ratio <= 0.35
-                  AND noise_ratio <= 0.25 AND avg_word_len >= 3.0),
+      Some(s"""WITH ${graft.operators.TextAnalysis.qualityGateSql("doc_id, text, lang")},
               dd AS (
                 SELECT doc_id, text, lang FROM (
                   SELECT k.*, min(doc_id) OVER (PARTITION BY text) AS rep
                   FROM kept k)
                 WHERE doc_id = rep),
               sp AS (
-                SELECT lang, text,
-                  CASE WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                          CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                        % 2147483647) % 100 < 90 THEN 'train'
-                    WHEN (CAST(concat('0x', substr(md5(concat('split', '|',
-                          CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-                        % 2147483647) % 100 < 95 THEN 'valid'
-                    ELSE 'test' END AS split
+                SELECT lang, text, ${graft.operators.TextAnalysis.splitSql("doc_id")} AS split
                 FROM dd)
               SELECT split, lang, count(*) AS n_docs,
                 CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens

@@ -330,6 +330,15 @@ class DedupTextSpec extends AnyFunSuite {
     assert(vals.forall(v => v >= 0 && v < 2147483647L))
   }
 
+  test("hash31Value agrees with the hash31 column on fixed strings") {
+    val strs = Seq("", "a", "the cat sat", "split|42", "naïve café 日本語")
+    val byCol = strs.toDF("s").select(col("s"), hash31(col("s")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    strs.foreach(x => assert(hash31Value(x) === byCol(x), x))
+    // md5("") = d41d8cd98f00b204..., 0xd41d8cd98f00b20 mod 2^31 - 1
+    assert(hash31Value("") === 863222971L)
+  }
+
   test("language id picks the marker-heavy language") {
     val docs = Seq(
       (0L, "der hund und die katze das haus und der baum", "x", "s", 1L),

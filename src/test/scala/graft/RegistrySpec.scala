@@ -57,14 +57,30 @@ class RegistrySpec extends AnyFunSuite {
 
   /** A non-comment operator-source line, with the lines above and below
     * it, the name of the registry query whose body holds it ("" outside
-    * one) and the name of the nearest `def` above it. */
+    * one), the name of the nearest `def` above it and the name of the
+    * object member (`def` or `val`) whose body holds it. */
   private case class SourceHit(path: String, lineNo: Int, line: String,
-      above: String, below: String, query: String, definition: String) {
+      above: String, below: String, query: String, definition: String,
+      member: String) {
     override def toString: String = s"$path:$lineNo: ${line.trim}"
   }
 
   private val QueryName = "\"([a-z0-9_]+)\",".r
   private val DefName = """\s*(?:(?:private|protected)(?:\[\w+\])?\s+)?def (\w+).*""".r
+
+  private val MemberName =
+    """  (?:(?:private|protected)(?:\[\w+\])?\s+)?(?:final\s+)?(?:lazy\s+)?(?:def|val) (\w+).*""".r
+
+  /** The name of the object member (a two-space-indented `def` or `val`)
+    * at or above line `i`. */
+  private def enclosingMember(lines: IndexedSeq[String], i: Int): String =
+    (i to 0 by -1).iterator.map(lines(_)).collectFirst { case MemberName(n) => n }
+      .getOrElse("")
+
+  /** `h` is in the body of an object member that `allowed` names for its
+    * file. */
+  private def inMember(allowed: Set[(String, String)])(h: SourceHit): Boolean =
+    allowed(java.nio.file.Paths.get(h.path).getFileName.toString -> h.member)
 
   /** The name of the nearest `def` at or above line `i`. */
   private def enclosingDef(lines: IndexedSeq[String], i: Int): String =
@@ -97,7 +113,7 @@ class RegistrySpec extends AnyFunSuite {
           !lines(i).trim.startsWith("//") =>
           SourceHit(p, i + 1, lines(i), lines.lift(i - 1).getOrElse(""),
             lines.lift(i + 1).getOrElse(""), enclosingQuery(lines, i),
-            enclosingDef(lines, i))
+            enclosingDef(lines, i), enclosingMember(lines, i))
       }
     }
 
@@ -321,6 +337,58 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "bare temp directory in operator code (call graft.jvmScratchDir):\n" +
         hits.mkString("\n"))
+  }
+
+  // Each rule the Spark plan and its DuckDB oracle share has its SQL
+  // written by one function, next to the Spark helper it mirrors. A
+  // hand-written copy of the rule's SQL is one more place the two
+  // engines can drift apart.
+  test("the DuckDB hash31 is written only by EngineFns.hash31Sql") {
+    val allowed = Map(
+      // an 8-hex md5 prefix reported as a fingerprint, not hash31
+      "TextAnalysis.scala" -> "AS fp_short",
+      // Spark SQL text (conv/pmod), planned by Spark, not DuckDB
+      "Similarity.scala" -> "pmod(cast(conv(substr(md5(")
+    val hits = operatorSourceHits(Seq("substr(md5("), dirs = Seq(""))
+      .filterNot(inMember(Set("EngineFns.scala" -> "hash31Sql")))
+      .filterNot(allowlisted(allowed))
+    assert(hits.isEmpty,
+      "hand-written DuckDB hash31 (call EngineFns.hash31Sql):\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the oracle's 3-shingle CTE is written only by Dedup.shingledSql") {
+    val hits = operatorSourceHits(
+        Seq("range(1, len(string_split(text,' ')) - 1)"), dirs = Seq(""))
+      .filterNot(inMember(Set("Dedup.scala" -> "shingledSql")))
+    assert(hits.isEmpty,
+      "hand-written shingle CTE (call Dedup.shingledSql):\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the oracle's 60-bit SimHash is written only by Dedup.simhashWideSql") {
+    val hits = operatorSourceHits(Seq("unnest(range(0, 60))"), dirs = Seq(""))
+      .filterNot(inMember(Set(
+        "Dedup.scala" -> "simhashWideSql",
+        // a different signature: 4-char byte grams, keyed by format
+        "Multimodal.scala" -> "PhashWideSigCte")))
+    assert(hits.isEmpty,
+      "hand-written 60-bit SimHash CTE (call Dedup.simhashWideSql):\n" +
+        hits.mkString("\n"))
+  }
+
+  test("hash31Sql is one parenthesized operand") {
+    val h = graft.functions.EngineFns.hash31Sql("x")
+    val e = s"2 * $h"
+    assert(e === "2 * (CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) % 2147483647)")
+    // the parenthesis opened after `2 * ` closes at the very end
+    val open = e.indexOf('(')
+    val depths = e.drop(open).scanLeft(0) {
+      case (d, '(') => d + 1
+      case (d, ')') => d - 1
+      case (d, _) => d
+    }.tail
+    assert(depths.indexOf(0) === e.length - open - 1)
   }
 
   // Scaladoc attaches to the definition right below it; a block directly
