@@ -8,26 +8,24 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Plan evidence tool: `runMain graft.PlanDump <tag> [query...]` writes
-  * each named query's [[dump]] to plans/<round>/<query>_<tag>.txt (tag =
+/** Plan evidence tool: `runMain graft.PlanDump <outDir> <tag> [query...]`
+  * writes each named query's [[dump]] to <outDir>/<query>_<tag>.txt (tag =
   * "before" / "after"); with no query names it dumps the whole registry.
   * Plans are written [[normalize]]d, so `diff -r` between a before dump
   * and an after dump shows only real plan changes, construction-time
   * checkpoints included.
-  * Env: SPARK_GRAFT_ROUND (required unless SPARK_GRAFT_PLANS_DIR names
-  * the output dir), SPARK_GRAFT_REPO, SPARK_GRAFT_SF_DIR.
+  * Env: SPARK_GRAFT_SF_DIR.
   * Dev/evidence tooling only — never on the bench or verify path. */
 object PlanDump {
 
-  /** SPARK_GRAFT_PLANS_DIR, else `<repo>/plans/<SPARK_GRAFT_ROUND>`. The
-    * round has no default: a fixed one silently overwrote that round's
-    * committed evidence whenever a later round forgot the variable. */
-  private[graft] def outDir(env: Map[String, String]): Path =
-    env.get("SPARK_GRAFT_PLANS_DIR").map(Paths.get(_)).getOrElse {
-      val round = env.getOrElse("SPARK_GRAFT_ROUND", throw new IllegalArgumentException(
-        "PlanDump: set SPARK_GRAFT_ROUND (e.g. r15) to choose plans/<round>/"))
-      repoRoot.resolve("plans").resolve(round)
-    }
+  /** (outDir, tag, query names) of the command line. The directory has
+    * no default: a fixed one silently overwrote a past run's committed
+    * evidence whenever a later run forgot to name its own. */
+  private[graft] def parseArgs(args: Seq[String]): (Path, String, Seq[String]) = {
+    if (args.length < 2)
+      throw new IllegalArgumentException("usage: PlanDump <outDir> <tag> [query...]")
+    (Paths.get(args(0)), args(1), args.drop(2))
+  }
 
   /** `plan` with the ids that differ between two runs of the same plan
     * replaced: expression ids (`doc_id#123L` → `doc_id#NL`), AQE
@@ -89,12 +87,10 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: PlanDump <tag> [query...]")
-    val tag = args.head
-    val outDir = this.outDir(sys.env)
+    val (outDir, tag, names) = parseArgs(args.toSeq)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val defs = if (args.length == 1) Registry.all else args.tail.toSeq.map(Registry.byName)
+    val defs = if (names.isEmpty) Registry.all else names.map(Registry.byName)
     val spark = GraftSession.local("graft-plandump")
     val failed = defs.filterNot { d =>
       try {

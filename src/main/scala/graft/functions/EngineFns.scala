@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * DuckDB SQL formulation:
   *
   *  - `hash31` uses md5 (same bytes in any engine) → first 15 hex chars →
-  *    bigint → mod 2^31-1; `hash31Sql` is its DuckDB text and
-  *    `hash31Value` the same function on a Scala string.
+  *    bigint → mod 2^31-1; `hash31Sql` is its DuckDB text, and
+  *    `hash31Value` and `hash31Digest` the same function on a Scala
+  *    string and on an md5 digest.
   *  - `cosine` folds products left-to-right in double, so the result is
   *    bit-identical to DuckDB's list_reduce over list_zip.
   */
@@ -29,10 +30,18 @@ object EngineFns {
 
   /** [[hash31]] of a Scala string (its UTF-8 bytes), for values computed
     * outside a query plan: plan-build-time constants and GenSource rows. */
-  def hash31Value(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16) % 2147483647L
+  def hash31Value(s: String): Long =
+    hash31Digest(java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")))
+
+  /** [[hash31]] of an md5 digest `d`: its first 15 hex digits (the first
+    * 7 bytes and the high nibble of the 8th) mod 2^31-1. */
+  def hash31Digest(d: Array[Byte]): Long = {
+    var v = 0L
+    var i = 0
+    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v = (v << 4) | ((d(7) & 0xf0L) >>> 4)
+    v % 2147483647L
   }
 
   /** Whitespace tokens of a text column. Spark `split` keeps trailing

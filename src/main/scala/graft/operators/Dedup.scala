@@ -1487,33 +1487,7 @@ object Dedup {
                 SELECT k.doc_id, k.text, k.source FROM kept k
                 LEFT JOIN repmap r ON r.doc_id = k.doc_id
                 WHERE COALESCE(r.rep_id, k.doc_id) = k.doc_id),
-              dd AS MATERIALIZED (
-                SELECT doc_id, source,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-                FROM reps),
-              st AS (
-                SELECT source, sum(CAST(n_toks AS HUGEINT)) AS tok_s,
-                  CAST(floor(sqrt(CAST(sum(n_toks) AS DOUBLE))) AS BIGINT)
-                    AS wq
-                FROM dd GROUP BY source),
-              t AS (SELECT sum(CAST(wq AS HUGEINT)) AS wtot,
-                           sum(tok_s) AS btot FROM st),
-              bdg AS (
-                SELECT source,
-                  CAST(((t.btot // 5) * CAST(wq AS HUGEINT))
-                    // nullif(t.wtot, 0) AS BIGINT) AS budget_toks
-                FROM st CROSS JOIN t),
-              cum AS (
-                SELECT doc_id, source, n_toks,
-                  sum(n_toks) OVER (PARTITION BY source ORDER BY
-                    ${hash31Sql("concat('pclean', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS cum_toks
-                FROM dd),
-              samp AS MATERIALIZED (
-                SELECT c.doc_id, c.n_toks
-                FROM cum c JOIN bdg b ON b.source = c.source
-                WHERE c.cum_toks - c.n_toks < b.budget_toks)
+              ${TextAnalysis.tokenBudgetSql("samp", "reps", "pclean")}
               SELECT
                 (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
                 (SELECT CAST(count(*) AS BIGINT) FROM kept) AS n_kept,

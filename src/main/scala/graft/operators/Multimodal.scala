@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.functions.EngineFns.{hash31, hash31Sql, tokens}
+import graft.functions.EngineFns.{hash31, hash31Digest, hash31Sql, tokens}
 
 /** Multimodal-column plumbing: media payloads as opaque `binary` columns
   * with typed metadata, decode / feature-extraction via `mapPartitions`
@@ -67,16 +67,9 @@ object Multimodal {
       .as[MediaIn]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        // first 15 hex chars of the md5 mod the Mersenne prime —
-        // EngineFns.hash31 exactly (see phashWideSigs)
         def h31(b: Array[Byte], off: Int, len: Int): Long = {
           md.reset(); md.update(b, off, len)
-          val d = md.digest()
-          var v = 0L
-          var i = 0
-          while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-          v = (v << 4) | ((d(7) & 0xf0L) >>> 4)
-          v % 2147483647L
+          hash31Digest(md.digest())
         }
         def hex(d: Array[Byte]): String = {
           val sb = new java.lang.StringBuilder(32)
@@ -274,17 +267,7 @@ object Multimodal {
       .as[MediaIn]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        // first 15 hex chars of the md5 = first 7 bytes + the 8th's high
-        // nibble, then mod the Mersenne prime — EngineFns.hash31 exactly
-        def h31(bytes: Array[Byte]): Long = {
-          md.reset()
-          val d = md.digest(bytes)
-          var v = 0L
-          var i = 0
-          while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-          v = (v << 4) | ((d(7) & 0xf0L) >>> 4)
-          v % 2147483647L
-        }
+        def h31(bytes: Array[Byte]): Long = { md.reset(); hash31Digest(md.digest(bytes)) }
         it.map { in =>
           val b = in.payload
           val votes = new Array[Int](60)

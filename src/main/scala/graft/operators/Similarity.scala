@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
@@ -8,14 +8,27 @@ import graft.functions.EngineFns._
 import graft.functions.CosineSimilarity
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
+  * exact and approximate cosine top-k (brute force, hyperplane LSH,
+  * IVF, binary quantization, graph beam search), their recall
+  * scorecards, embedding near-duplicate pairs and the k-NN graph, and
+  * the per-vector embedding analytics (centroids, drift, quantization,
+  * health, projection, PCA).
   *
-  *  - brute-force cosine top-k (the exact baseline): broadcast the query
-  *    set, nested-loop against every candidate partition — at 100 TB this
-  *    is a single pass over the candidates with no shuffle except the
-  *    final per-query top-k (window over q_id);
-  *  - random-hyperplane LSH bucketing (the approximate scale path): one
-  *    shuffle on bucket id, candidates only compared within a bucket;
-  *  - embedding-cosine near-duplicate pairs (threshold join).
+  * Every search is built from one skeleton, each step one Spark helper
+  * with its DuckDB mirror beside it:
+  *  - the query set: [[probeRows]], [[queriesOf]] and [[keyedQueriesOf]],
+  *    mirrored by [[queriesSql]] — the first NumQueries vectors, so no
+  *    search is ever all-pairs;
+  *  - the per-query cosine top-k: [[rankTopK]] / [[topKOf]] and
+  *    [[topKSql]]; [[ExactTopKSql]] is the exact brute-force oracle;
+  *  - the IVF lists: [[ivfCentroids]], [[ivfAssign]] / [[ivfAssignTop1]]
+  *    and [[ivfCandidatesOn]], mirrored by [[IvfRankedSql]] and
+  *    [[ivfCandidatesSql]];
+  *  - the LSH bucket: [[bucketColFor]] and [[BucketedSql]];
+  *  - the recall scorecard: [[hitsOf]] / [[recallScorecard]] and
+  *    [[hitsSql]] / [[recallSql]];
+  *  - the banded-LSH pairs and k-NN graph: [[nearDupPairs]] /
+  *    [[knnGraphEdges]] and [[nearDupPairsSql]] / [[KnnGraphSql]].
   *
   * Cosine is computed with a left-to-right double fold (EngineFns.dot), so
   * the DuckDB oracle values are bit-identical — rank order included.
@@ -23,7 +36,7 @@ import graft.functions.CosineSimilarity
 object Similarity {
 
   private val TopK = 5
-  private[graft] val NumQueries = 10
+  private val NumQueries = 10
   private val MrlDims = 16 // Matryoshka prefix length for emb_mrl_eval
   private val NearDupThreshold = 0.4
   private val RandProjDims = 8 // emb_rand_proj's fixed 64→8 JL reduction
@@ -125,7 +138,7 @@ object Similarity {
     * dot(v, r_j). The dot folds left-to-right in double (zero seed),
     * same recipe as cosine, so the bucket — and everything downstream —
     * is oracle-checkable. */
-  private def bucketColFor(p: Int): org.apache.spark.sql.Column =
+  private def bucketColFor(p: Int): Column =
     (0 until p).map { j =>
       val dot = aggregate(
         zip_with(col("embedding"),
@@ -135,15 +148,18 @@ object Similarity {
       when(dot > 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** DuckDB mirror of bucketColFor (same hash family, same fold order);
-    * the plane count is the PlanesSql scalar, evaluated by the oracle
-    * engine itself so it can never drift from the corpus. */
-  private val bucketSql =
-    s"""CAST(list_sum(list_transform(range(0, $PlanesSql), j ->
+  /** DuckDB mirror of bucketColFor (same hash family, same fold order):
+    * CTE `b` (vec_id, embedding, bucket). The plane count is the
+    * PlanesSql scalar, evaluated by the oracle engine itself so it can
+    * never drift from the corpus. */
+  private val BucketedSql =
+    s"""b AS (SELECT vec_id, embedding,
+          CAST(list_sum(list_transform(range(0, $PlanesSql), j ->
           CASE WHEN list_reduce(list_transform(list_zip(embedding, range(0, 64)), p ->
                  CAST(p[1] AS DOUBLE) * (((${hash31Sql("concat(CAST(j AS VARCHAR), '_', CAST(p[2] AS VARCHAR))")} % 2001) - 1000) / 1000.0)),
                  (x, y) -> x + y) > 0
-               THEN (1 << CAST(j AS INTEGER)) ELSE 0 END)) AS BIGINT)"""
+               THEN (1 << CAST(j AS INTEGER)) ELSE 0 END)) AS BIGINT) AS bucket
+          FROM embeddings)"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -154,29 +170,12 @@ object Similarity {
         // CosineSimilarity is a native codegen expression: one fused loop
         // per pair (dot + both norms), bit-identical to the oracle SQL.
         val e = embParallel(s, dir)
-        val q = broadcast(
-          e.filter(col("vec_id") < NumQueries)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        e.join(q, col("vec_id") =!= col("q_id"))
+        topKOf(e.join(broadcast(keyedQueriesOf(e)), col("vec_id") =!= col("q_id"))
           .select(
             col("q_id"), col("vec_id"),
-            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
-          .orderBy("q_id", "rank")
+            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos")))
       },
-      Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                          FROM embeddings WHERE vec_id < $NumQueries),
-                    c AS (SELECT q_id, vec_id,
-                            ${cosineSql("q_emb", "embedding")} AS cos
-                          FROM q, embeddings WHERE vec_id != q_id),
-                    r AS (SELECT q_id, vec_id, cos,
-                            row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-                          FROM c)
-               SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank
-               FROM r WHERE rank <= $TopK ORDER BY q_id, rank""")),
+      Some(ExactOracleSql)),
 
     // Approximate top-k via random-hyperplane LSH buckets (scale path).
     // The hash family is md5-derived, so buckets — and therefore the
@@ -187,34 +186,16 @@ object Similarity {
       (s, dir) => {
         val bucketed = embParallel(s, dir)
           .withColumn("bucket", bucketColFor(planesOf(s, dir)).cast("long"))
-        val q = bucketed.filter(col("vec_id") < NumQueries)
-          .select(
-            col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("bucket"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        bucketed.join(broadcast(q), Seq("bucket"))
+        val q = keyedQueriesOf(bucketed, col("bucket"))
+        topKOf(bucketed.join(broadcast(q), Seq("bucket"))
           .filter(col("vec_id") =!= col("q_id"))
           .select(
             col("q_id"), col("vec_id"), col("bucket"),
-            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
-          .orderBy("q_id", "rank")
+            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos")))
       },
-      Some(s"""WITH b AS (
-                 SELECT vec_id, embedding, $bucketSql AS bucket
-                 FROM embeddings),
-               q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket
-                     FROM b WHERE vec_id < $NumQueries),
-               c AS (SELECT q.q_id, b.vec_id, b.bucket,
-                       ${cosineSql("q.q_emb", "b.embedding")} AS cos
-                     FROM b JOIN q ON b.bucket = q.bucket AND b.vec_id != q.q_id),
-               r AS (SELECT q_id, vec_id, bucket, cos,
-                       row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-                     FROM c)
-               SELECT q_id, vec_id, bucket, cos, CAST(rank AS BIGINT) AS rank
-               FROM r WHERE rank <= $TopK ORDER BY q_id, rank"""),
+      Some(s"""WITH $LshCandidatesSql
+               SELECT q_id, vec_id, bucket, cos, rank
+               FROM ${topKSql("lshcand")} ORDER BY q_id, rank"""),
       ),
 
     // Custom whole-operator top-k (LogicalPlan + SparkStrategy +
@@ -225,8 +206,7 @@ object Similarity {
       "sim_topk_custom_op",
       (s, dir) => {
         val e = embParallel(s, dir)
-        val queries = e.filter(col("vec_id") < NumQueries)
-          .select("vec_id", "embedding").collect()
+        val queries = queriesOf(e).collect()
           .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
           .sortBy(_._1).toSeq
         // empty corpus -> no probe vectors: searching for nothing finds
@@ -247,16 +227,7 @@ object Similarity {
             .select(col("q_id"), col("vec_id"), col("cos"), col("rank"))
             .orderBy("q_id", "rank")
       },
-      Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-                          FROM embeddings WHERE vec_id < $NumQueries),
-                    c AS (SELECT q_id, vec_id,
-                            ${cosineSql("q_emb", "embedding")} AS cos
-                          FROM q, embeddings WHERE vec_id != q_id),
-                    r AS (SELECT q_id, vec_id, cos,
-                            row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-                          FROM c)
-               SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank
-               FROM r WHERE rank <= $TopK ORDER BY q_id, rank""")),
+      Some(ExactOracleSql)),
 
     // Approximate top-k via multi-probe LSH: each query probes its home
     // bucket PLUS all 8 Hamming-1 neighbor buckets, recovering most of
@@ -274,43 +245,30 @@ object Similarity {
         val bucketed = embParallel(s, dir)
           .withColumn("bucket", bucketColFor(p).cast("long"))
         // flip = -1 denotes the home bucket; 0..p-1 flip one plane bit
-        val probes = bucketed.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("bucket"),
+        val probes = keyedQueriesOf(bucketed, col("bucket"),
             explode(sequence(lit(-1), lit(p - 1))).as("flip"))
           .select(col("q_id"), col("q_emb"),
             when(col("flip") < 0, col("bucket"))
               .otherwise(expr("bucket ^ cast(shiftleft(1, flip) as bigint)"))
               .as("bucket"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        bucketed.join(broadcast(probes), Seq("bucket"))
+        topKOf(bucketed.join(broadcast(probes), Seq("bucket"))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id"),
-            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
-          .orderBy("q_id", "rank")
+            CosineSimilarity(s, col("q_emb"), col("embedding")).as("cos")))
       },
-      Some(s"""WITH b AS (
-                 SELECT vec_id, embedding, $bucketSql AS bucket
-                 FROM embeddings),
-               q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket
-                     FROM b WHERE vec_id < $NumQueries),
+      Some(s"""WITH $BucketedSql,
                probes AS (
                  SELECT q_id, q_emb,
                    CASE WHEN f < 0 THEN bucket
                         ELSE xor(bucket, CAST(1 << f AS BIGINT)) END AS bucket
-                 FROM q, (SELECT unnest(range(-1, $PlanesSql)) AS f) fs),
+                 FROM (${queriesSql("b", ", bucket")}) q,
+                   (SELECT unnest(range(-1, $PlanesSql)) AS f) fs),
                c AS (SELECT p.q_id, b.vec_id,
                        ${cosineSql("p.q_emb", "b.embedding")} AS cos
                      FROM b JOIN probes p
-                       ON b.bucket = p.bucket AND b.vec_id != p.q_id),
-               r AS (SELECT q_id, vec_id, cos,
-                       row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-                     FROM c)
-               SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank
-               FROM r WHERE rank <= $TopK ORDER BY q_id, rank""")),
+                       ON b.bucket = p.bucket AND b.vec_id != p.q_id)
+               SELECT q_id, vec_id, cos, rank
+               FROM ${topKSql("c")} ORDER BY q_id, rank""")),
 
     // ANN recall scorecard as a FIRST-CLASS operator (the dedup_eval
     // pattern applied to similarity search): recall@5 of the LSH path
@@ -325,57 +283,12 @@ object Similarity {
     // the closing recall division per query row.
     QueryDef(
       "sim_ann_recall",
-      (s, dir) => {
-        val exact = graft.Registry.byName("sim_topk_bruteforce")
-          .run(s, dir).select(col("q_id"), col("vec_id"))
-        val ann = graft.Registry.byName("sim_ann_lsh")
-          .run(s, dir)
-          .select(col("q_id").as("a_qid"), col("vec_id").as("a_vid"))
-        val hits = exact
-          .join(ann, col("q_id") === col("a_qid") &&
-            col("vec_id") === col("a_vid"), "left_semi")
-          .groupBy("q_id").agg(count(lit(1)).as("n_hit"))
-        exact.groupBy("q_id").agg(count(lit(1)).as("n_exact"))
-          .join(hits, Seq("q_id"), "left")
-          .select(col("q_id"), col("n_exact"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") /
-              col("n_exact").cast("double")).as("recall"))
-          .orderBy("q_id")
-      },
-      Some(s"""WITH qv AS (SELECT vec_id AS q_id, embedding AS q_emb
-                           FROM embeddings WHERE vec_id < $NumQueries),
-               ec AS (SELECT q_id, vec_id,
-                        ${cosineSql("q_emb", "embedding")} AS cos
-                      FROM qv, embeddings WHERE vec_id != q_id),
-               er AS (SELECT q_id, vec_id,
-                        row_number() OVER (PARTITION BY q_id
-                          ORDER BY cos DESC, vec_id) AS rank
-                      FROM ec),
-               exact AS (SELECT q_id, vec_id FROM er WHERE rank <= $TopK),
-               b AS (SELECT vec_id, embedding, $bucketSql AS bucket
-                     FROM embeddings),
-               bq AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket
-                      FROM b WHERE vec_id < $NumQueries),
-               ac AS (SELECT bq.q_id, b.vec_id,
-                        ${cosineSql("bq.q_emb", "b.embedding")} AS cos
-                      FROM b JOIN bq ON b.bucket = bq.bucket
-                        AND b.vec_id != bq.q_id),
-               ar AS (SELECT q_id, vec_id,
-                        row_number() OVER (PARTITION BY q_id
-                          ORDER BY cos DESC, vec_id) AS rank
-                      FROM ac),
-               ann AS (SELECT q_id, vec_id FROM ar WHERE rank <= $TopK),
-               h AS (SELECT e.q_id, CAST(count(*) AS BIGINT) AS n_hit
-                     FROM exact e JOIN ann a
-                       ON e.q_id = a.q_id AND e.vec_id = a.vec_id
-                     GROUP BY 1)
-               SELECT e.q_id, CAST(count(*) AS BIGINT) AS n_exact,
-                 COALESCE(any_value(h.n_hit), 0) AS n_hit,
-                 CAST(COALESCE(any_value(h.n_hit), 0) AS DOUBLE) /
-                   CAST(count(*) AS DOUBLE) AS recall
-               FROM exact e LEFT JOIN h ON e.q_id = h.q_id
-               GROUP BY e.q_id ORDER BY e.q_id""")),
+      (s, dir) => recallScorecard(exactTopK(s, dir),
+        graft.Registry.byName("sim_ann_lsh").run(s, dir), "n_exact", "recall"),
+      Some(s"""WITH $ExactTopKSql,
+               $LshCandidatesSql,
+               ann AS (SELECT q_id, vec_id FROM ${topKSql("lshcand")})
+               ${recallSql("exact", "ann", "n_exact", "recall")}""")),
 
     // Matryoshka-truncation evaluation: recall@k of PREFIX-dimension
     // cosine (first 16 of 64 dims) against full-dimension cosine, per
@@ -390,9 +303,7 @@ object Similarity {
       "emb_mrl_eval",
       (s, dir) => {
         val e = embParallel(s, dir)
-        val q = broadcast(
-          e.filter(col("vec_id") < NumQueries)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
+        val q = broadcast(keyedQueriesOf(e))
         val joined = e.join(q, col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id"),
             CosineSimilarity(s, col("q_emb"), col("embedding"))
@@ -407,45 +318,15 @@ object Similarity {
           .filter(col("rk") <= TopK).select("q_id", "vec_id")
         val pre = joined.withColumn("rk", row_number().over(wp))
           .filter(col("rk") <= TopK)
-          .select(col("q_id").as("p_qid"), col("vec_id").as("p_vid"))
-        val hits = full
-          .join(pre, col("q_id") === col("p_qid") &&
-            col("vec_id") === col("p_vid"), "left_semi")
-          .groupBy("q_id").agg(count(lit(1)).as("n_hit"))
-        full.groupBy("q_id").agg(count(lit(1)).as("n_full"))
-          .join(hits, Seq("q_id"), "left")
-          .select(col("q_id"), col("n_full"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") /
-              col("n_full").cast("double")).as("recall_at_k"))
-          .orderBy("q_id")
+        recallScorecard(full, pre, "n_full", "recall_at_k")
       },
-      Some(s"""WITH qv AS (SELECT vec_id AS q_id, embedding AS q_emb
-                           FROM embeddings WHERE vec_id < $NumQueries),
-               c AS (SELECT q_id, vec_id,
+      Some(s"""WITH c AS (SELECT q_id, vec_id,
                        ${cosineSql("q_emb", "embedding")} AS cos_full,
                        ${cosineSql(s"q_emb[1:$MrlDims]", s"embedding[1:$MrlDims]")} AS cos_pre
-                     FROM qv, embeddings WHERE vec_id != q_id),
-               fr AS (SELECT q_id, vec_id,
-                        row_number() OVER (PARTITION BY q_id
-                          ORDER BY cos_full DESC, vec_id) AS rk
-                      FROM c),
-               pr AS (SELECT q_id, vec_id,
-                        row_number() OVER (PARTITION BY q_id
-                          ORDER BY cos_pre DESC, vec_id) AS rk
-                      FROM c),
-               fullk AS (SELECT q_id, vec_id FROM fr WHERE rk <= $TopK),
-               prek AS (SELECT q_id, vec_id FROM pr WHERE rk <= $TopK),
-               h AS (SELECT f.q_id, CAST(count(*) AS BIGINT) AS n_hit
-                     FROM fullk f JOIN prek p
-                       ON f.q_id = p.q_id AND f.vec_id = p.vec_id
-                     GROUP BY 1)
-               SELECT f.q_id, CAST(count(*) AS BIGINT) AS n_full,
-                 COALESCE(any_value(h.n_hit), 0) AS n_hit,
-                 CAST(COALESCE(any_value(h.n_hit), 0) AS DOUBLE) /
-                   CAST(count(*) AS DOUBLE) AS recall_at_k
-               FROM fullk f LEFT JOIN h ON f.q_id = h.q_id
-               GROUP BY f.q_id ORDER BY f.q_id""")),
+                     FROM (${queriesSql()}) qv, embeddings WHERE vec_id != q_id),
+               fullk AS (SELECT q_id, vec_id FROM ${topKSql("(SELECT q_id, vec_id, cos_full AS cos FROM c)")}),
+               prek AS (SELECT q_id, vec_id FROM ${topKSql("(SELECT q_id, vec_id, cos_pre AS cos FROM c)")})
+               ${recallSql("fullk", "prek", "n_full", "recall_at_k")}""")),
 
     // Binary-quantized search with exact rerank — the modern 1-bit
     // embedding pipeline (32× memory cut): every vector packs its 64
@@ -468,10 +349,8 @@ object Similarity {
         val packed = embParallel(s, dir)
           .select(col("vec_id"), col("embedding"),
             word(1).as("w1"), word(33).as("w2"))
-        val q = broadcast(
-          packed.filter(col("vec_id") < NumQueries)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-              col("w1").as("qw1"), col("w2").as("qw2")))
+        val q = broadcast(keyedQueriesOf(packed,
+          col("w1").as("qw1"), col("w2").as("qw2")))
         val wh = Window.partitionBy("q_id")
           .orderBy(col("hamming").asc, col("vec_id").asc)
         val cand = packed.join(q, col("vec_id") =!= col("q_id"))
@@ -480,13 +359,8 @@ object Similarity {
               bit_count(col("w2").bitwiseXOR(col("qw2"))).cast("long"))
           .withColumn("hrk", row_number().over(wh))
           .filter(col("hrk") <= 20)
-        val wc = Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id").asc)
-        cand
-          .withColumn("cos",
-            CosineSimilarity(s, col("q_emb"), col("embedding")))
-          .withColumn("rank", row_number().over(wc).cast("long"))
-          .filter(col("rank") <= TopK)
+        rankTopK(cand.withColumn("cos",
+            CosineSimilarity(s, col("q_emb"), col("embedding"))))
           .select(col("q_id"), col("rank"), col("vec_id"), col("cos"),
             col("hamming"))
           .orderBy("q_id", "rank")
@@ -501,9 +375,7 @@ object Similarity {
                 ${wordSql("embedding", 1, 32)} AS w1,
                 ${wordSql("embedding", 33, 64)} AS w2
               FROM embeddings),
-            q AS (SELECT vec_id AS q_id, embedding AS q_emb,
-                    w1 AS qw1, w2 AS qw2
-                  FROM p WHERE vec_id < $NumQueries),
+            q AS (${queriesSql("p", ", w1 AS qw1, w2 AS qw2")}),
             c AS (SELECT q.q_id, p.vec_id, p.embedding, q.q_emb,
                     CAST(bit_count(xor(p.w1, q.qw1))
                        + bit_count(xor(p.w2, q.qw2)) AS BIGINT) AS hamming
@@ -514,13 +386,9 @@ object Similarity {
                   FROM c),
             r AS (SELECT q_id, vec_id, hamming,
                     ${cosineSql("q_emb", "embedding")} AS cos
-                  FROM h WHERE hrk <= 20),
-            f AS (SELECT q_id, vec_id, hamming, cos,
-                    row_number() OVER (PARTITION BY q_id
-                      ORDER BY cos DESC, vec_id) AS rank
-                  FROM r)
-            SELECT q_id, CAST(rank AS BIGINT) AS rank, vec_id, cos, hamming
-            FROM f WHERE rank <= $TopK ORDER BY q_id, rank"""
+                  FROM h WHERE hrk <= 20)
+            SELECT q_id, rank, vec_id, cos, hamming
+            FROM ${topKSql("r")} ORDER BY q_id, rank"""
       }),
 
     // IVF-style ANN (scale path #2): a deterministic centroid sample
@@ -567,36 +435,10 @@ object Similarity {
         val allowed = e
           .filter(pmod(col("label").cast("long"), lit(2L)) === 0L)
           .select(col("vec_id"))
-        val queries = e.filter(col("vec_id") < NumQueries)
-          .select("vec_id", "embedding")
-        ivfTopKOf(ivfCandidatesOn(s, nprobe = 2, queries, centroids,
+        topKOf(ivfCandidatesOn(s, nprobe = 2, queriesOf(e), centroids,
           assigned.join(allowed, Seq("vec_id"))))
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                      FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-        scored AS (SELECT e.vec_id, e.embedding, cent.c_id,
-                     ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
-                   FROM embeddings e, cent),
-        ranked AS (
-          SELECT vec_id, embedding, c_id,
-            row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS arn
-          FROM scored),
-        assigned AS (
-          SELECT r.vec_id, r.embedding, r.c_id AS list_id
-          FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
-          WHERE r.arn = 1 AND e.label % 2 = 0),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb, c_id AS list_id
-              FROM ranked WHERE arn <= 2 AND vec_id < $NumQueries),
-        c AS (SELECT q.q_id, a.vec_id, a.list_id,
-                ${cosineSql("q.q_emb", "a.embedding")} AS cos
-              FROM assigned a JOIN q
-                ON a.list_id = q.list_id AND a.vec_id != q.q_id),
-        r AS (SELECT q_id, vec_id, list_id, cos,
-                row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-              FROM c)
-        SELECT q_id, vec_id, CAST(list_id AS BIGINT) AS list_id, cos,
-          CAST(rank AS BIGINT) AS rank
-        FROM r WHERE rank <= $TopK ORDER BY q_id, rank"""),
+      Some(ivfOracleSql(nprobe = 2, keep = "e.label % 2 = 0")),
       ),
 
     // IVF SERVING path — searches the PERSISTED index (build-once /
@@ -612,8 +454,7 @@ object Similarity {
     QueryDef(
       "sim_ann_ivf_served",
       (s, dir) => ivfServedTopK(s, dir, nprobe = 1,
-        embParallel(s, dir).filter(col("vec_id") < NumQueries)
-          .select("vec_id", "embedding")),
+        queriesOf(embParallel(s, dir))),
       Some(ivfOracleSql(nprobe = 1)),
       ),
 
@@ -624,8 +465,7 @@ object Similarity {
     QueryDef(
       "sim_ann_ivf_served_nprobe2",
       (s, dir) => ivfServedTopK(s, dir, nprobe = 2,
-        embParallel(s, dir).filter(col("vec_id") < NumQueries)
-          .select("vec_id", "embedding")),
+        queriesOf(embParallel(s, dir))),
       Some(ivfOracleSql(nprobe = 2)),
       ),
 
@@ -654,16 +494,7 @@ object Similarity {
               nullif(col("total").cast("double"), lit(0.0))).as("share"))
           .orderBy("list_id")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                             FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-               scored AS (SELECT e.vec_id, cent.c_id,
-                            ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
-                          FROM embeddings e, cent),
-               ranked AS (
-                 SELECT vec_id, c_id,
-                   row_number() OVER (PARTITION BY vec_id
-                     ORDER BY c_cos DESC, c_id) AS arn
-                 FROM scored),
+      Some(s"""WITH $IvfRankedSql,
                counts AS (
                  SELECT c_id AS list_id, CAST(count(*) AS BIGINT) AS n_vectors
                  FROM ranked WHERE arn = 1 GROUP BY c_id),
@@ -706,9 +537,7 @@ object Similarity {
         require(idxFresh != idxBase,
           "sim_ann_ivf_refresh: append did not trigger an index rebuild " +
             s"(stale cache key? base=$idxBase fresh=$idxFresh)")
-        ivfServedTopK(s, tmp, nprobe = 1,
-          e.filter(col("vec_id") < NumQueries)
-            .select("vec_id", "embedding"))
+        ivfServedTopK(s, tmp, nprobe = 1, queriesOf(e))
       },
       Some(ivfOracleSql(nprobe = 1)),
       ),
@@ -727,58 +556,29 @@ object Similarity {
       (s, dir) => {
         val labels = emb(s, dir)
           .select(col("vec_id"), col("label").cast("long").as("label"))
-        val queries = embParallel(s, dir)
-          .filter(col("vec_id") < NumQueries)
-          .select("vec_id", "embedding")
-        val qLab = broadcast(labels.filter(col("vec_id") < NumQueries)
+        val queries = queriesOf(embParallel(s, dir))
+        val qLab = broadcast(probeRows(labels)
           .select(col("vec_id").as("q_id"), col("label").as("q_label")))
         val cand = ivfCandidatesFor(s, dir, nprobe = 2, queries)
           .join(labels.withColumnRenamed("label", "neg_label"), "vec_id")
           .join(qLab, "q_id")
           .filter(col("neg_label") =!= col("q_label"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        cand.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
+        rankTopK(cand)
           .select(col("q_id"), col("rank"), col("vec_id"), col("cos"),
             col("q_label"), col("neg_label"))
           .orderBy("q_id", "rank")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                             FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-               scored AS (SELECT e.vec_id, e.embedding, cent.c_id,
-                            ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
-                          FROM embeddings e, cent),
-               ranked AS (
-                 SELECT vec_id, embedding, c_id,
-                   row_number() OVER (PARTITION BY vec_id
-                     ORDER BY c_cos DESC, c_id) AS arn
-                 FROM scored),
-               assigned AS (
-                 SELECT vec_id, embedding, c_id AS list_id
-                 FROM ranked WHERE arn = 1),
-               q AS (SELECT vec_id AS q_id, embedding AS q_emb,
-                       c_id AS list_id
-                     FROM ranked WHERE arn <= 2 AND vec_id < $NumQueries),
-               c AS (SELECT q.q_id, a.vec_id,
-                       ${cosineSql("q.q_emb", "a.embedding")} AS cos
-                     FROM assigned a JOIN q
-                       ON a.list_id = q.list_id AND a.vec_id != q.q_id),
+      Some(s"""WITH ${ivfCandidatesSql(Seq(2))},
                lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label
                        FROM embeddings),
                f AS (SELECT c.q_id, c.vec_id, c.cos,
                        ql.label AS q_label, nl.label AS neg_label
-                     FROM c
+                     FROM cand2 c
                      JOIN lab ql ON ql.vec_id = c.q_id
                      JOIN lab nl ON nl.vec_id = c.vec_id
-                     WHERE ql.label != nl.label),
-               r AS (SELECT q_id, vec_id, cos, q_label, neg_label,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, vec_id) AS rank
-                     FROM f)
-               SELECT q_id, CAST(rank AS BIGINT) AS rank, vec_id, cos,
-                 q_label, neg_label
-               FROM r WHERE rank <= $TopK ORDER BY q_id, rank""")),
+                     WHERE ql.label != nl.label)
+               SELECT q_id, rank, vec_id, cos, q_label, neg_label
+               FROM ${topKSql("f")} ORDER BY q_id, rank""")),
 
     // Embedding-cosine near-duplicate pairs — exact baseline (all-pairs
     // broadcast join). Kept as the oracle-checked reference the bucketed
@@ -825,19 +625,8 @@ object Similarity {
     QueryDef(
       "sim_embed_neardup",
       (s, dir) => nearDupPairs(s, dir).orderBy("a_id", "b_id"),
-      Some(s"""WITH ${bandKeysSql()},
-               cand AS (
-                 SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
-                 FROM bandkept x JOIN bandkept y
-                   ON x.band = y.band AND x.band_val = y.band_val
-                    AND x.vec_id < y.vec_id)
-               SELECT c.a_id, c.b_id,
-                 ${cosineSql("a.embedding", "b.embedding")} AS cos
-               FROM cand c
-               JOIN embeddings a ON a.vec_id = c.a_id
-               JOIN embeddings b ON b.vec_id = c.b_id
-               WHERE ${cosineSql("a.embedding", "b.embedding")} >= $NearDupThreshold
-               ORDER BY a_id, b_id""")),
+      Some(s"""WITH ${nearDupPairsSql()}
+               SELECT a_id, b_id, cos FROM epairs ORDER BY a_id, b_id""")),
 
     // Exact per-label centroids, flattened to (label, dim, centroid, n).
     // Vector mean per group is the building block for IVF training /
@@ -1235,23 +1024,8 @@ object Similarity {
         knnGraphEdges(s, embParallel(s, dir), emb(s, dir))
           .withColumn("rank", col("rank").cast("long"))
           .orderBy("src_id", "rank"),
-      Some(s"""WITH ${bandKeysSql()},
-               cand AS (
-                 SELECT DISTINCT x.vec_id AS src_id, y.vec_id AS nbr_id
-                 FROM bandkept x JOIN bandkept y
-                   ON x.band = y.band AND x.band_val = y.band_val
-                    AND x.vec_id != y.vec_id),
-               scored AS (
-                 SELECT c.src_id, c.nbr_id,
-                   ${cosineSql("a.embedding", "b.embedding")} AS cos
-                 FROM cand c
-                 JOIN embeddings a ON a.vec_id = c.src_id
-                 JOIN embeddings b ON b.vec_id = c.nbr_id),
-               r AS (SELECT src_id, nbr_id, cos,
-                       row_number() OVER (PARTITION BY src_id ORDER BY cos DESC, nbr_id) AS rank
-                     FROM scored)
-               SELECT src_id, nbr_id, cos, CAST(rank AS BIGINT) AS rank
-               FROM r WHERE rank <= $KnnGraphK ORDER BY src_id, rank""")),
+      Some(s"""WITH $KnnGraphSql
+               SELECT src_id, nbr_id, cos, rank FROM knn ORDER BY src_id, rank""")),
 
     // Graph-based ANN serving — the THIRD index family after
     // hash-bucket LSH (sim_ann_lsh) and coarse-quantizer IVF
@@ -1364,9 +1138,8 @@ object Similarity {
     QueryDef(
       "sim_ivf_tradeoff",
       (s, dir) => {
-        val exact = graft.Registry.byName("sim_topk_bruteforce")
-          .run(s, dir).select(col("q_id"), col("vec_id")).transform(Tables.materialize)
-        val queries = embParallel(s, dir).filter(col("vec_id") < NumQueries)
+        val exact = exactTopK(s, dir).transform(Tables.materialize)
+        val queries = probeRows(embParallel(s, dir))
         // ONE corpus assignment pass shared by every nprobe leg (r13,
         // verdict task #4): ivfCandidatesFor builds the N·√N
         // ivfAssignTop1 per call, so the 2-leg sweep paid the
@@ -1379,12 +1152,7 @@ object Similarity {
         def leg(nprobe: Int): DataFrame = {
           val cand = ivfCandidatesOn(s, nprobe, queries, centroids, assigned)
             .transform(Tables.materialize) // feeds both the top-k and the cost count
-          val ann = ivfTopKOf(cand)
-            .select(col("q_id").as("a_qid"), col("vec_id").as("a_vid"))
-          val hits = exact
-            .join(ann, col("q_id") === col("a_qid") &&
-              col("vec_id") === col("a_vid"), "left_semi")
-            .agg(count(lit(1)).as("n_hit"))
+          val hits = hitsOf(exact, topKOf(cand)).agg(count(lit(1)).as("n_hit"))
           val nCand = cand.agg(count(lit(1)).as("n_candidates"))
           exact.agg(count(lit(1)).as("n_exact"))
             .crossJoin(broadcast(hits)).crossJoin(broadcast(nCand))
@@ -1496,17 +1264,8 @@ object Similarity {
           .unionAll(row("lsh_probe1", probe1Hit))
           .orderBy("method")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                      FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-        scored AS (SELECT e.vec_id, cent.c_id,
-                     ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
-                   FROM embeddings e, cent),
-        ranked AS (
-          SELECT vec_id, c_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY c_cos DESC, c_id) AS arn
-          FROM scored),
-        b AS (SELECT vec_id, $bucketSql AS bucket FROM embeddings),
+      Some(s"""WITH $IvfRankedSql,
+        $BucketedSql,
         truth AS (SELECT vec_id - $PlantBase AS src, vec_id AS dup
                   FROM embeddings WHERE vec_id >= $PlantBase),
         bp AS (SELECT t.dup, bd.bucket AS bdb, bs.bucket AS bsb
@@ -1545,67 +1304,141 @@ object Similarity {
         ORDER BY method"""))
   )
 
+  /** The fixed query set every search here probes with: the rows of `e`
+    * with vec_id < NumQueries (10 — never all-pairs). */
+  private def probeRows(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueries)
+
+  /** The query set as (vec_id, embedding): the input of ivfSearchFor,
+    * the served IVF and CosineTopKOp; StreamOps.streamAnnProbe streams
+    * it. */
+  private[graft] def queriesOf(e: DataFrame): DataFrame =
+    probeRows(e).select("vec_id", "embedding")
+
+  /** The query set keyed for a join against the corpus: (q_id, q_emb),
+    * then the `extra` columns of `e`. */
+  private def keyedQueriesOf(e: DataFrame, extra: Column*): DataFrame =
+    probeRows(e).select(
+      Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb")) ++ extra: _*)
+
+  /** DuckDB mirror of [[keyedQueriesOf]]: a SELECT of the query set of
+    * relation `from` as (q_id, q_emb) and the `extra` select items. */
+  private def queriesSql(from: String = "embeddings", extra: String = ""): String =
+    s"SELECT vec_id AS q_id, embedding AS q_emb$extra FROM $from WHERE vec_id < $NumQueries"
+
+  /** Per-query cosine top-k of a candidate relation (q_id, `id`, cos,
+    * ...): each q_id's TopK rows by (cos DESC, `id`), with their long
+    * `rank` from 1. */
+  private def rankTopK(cand: DataFrame, id: String = "vec_id"): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col(id))
+    cand.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= TopK)
+  }
+
+  /** [[rankTopK]] ordered by (q_id, rank): the result of every search. */
+  private def topKOf(cand: DataFrame): DataFrame =
+    rankTopK(cand).orderBy("q_id", "rank")
+
+  /** DuckDB mirror of [[rankTopK]] over the relation `cand`: a
+    * parenthesized relation with every column of `cand` and `rank`. */
+  private def topKSql(cand: String, id: String = "vec_id"): String =
+    s"""(SELECT * FROM (
+          SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+                                            ORDER BY cos DESC, $id) AS BIGINT) AS rank
+          FROM $cand) WHERE rank <= $TopK)"""
+
+  /** The exact side of every recall scorecard: sim_topk_bruteforce's
+    * (q_id, vec_id). */
+  private def exactTopK(s: SparkSession, dir: String): DataFrame =
+    graft.Registry.byName("sim_topk_bruteforce").run(s, dir)
+      .select(col("q_id"), col("vec_id"))
+
+  /** DuckDB mirror of sim_topk_bruteforce: CTE `exact` (q_id, vec_id,
+    * cos, rank). */
+  private lazy val ExactTopKSql: String =
+    s"""exact AS (SELECT * FROM ${topKSql(
+          s"""(SELECT q_id, vec_id, ${cosineSql("q_emb", "embedding")} AS cos
+               FROM (${queriesSql()}) qv, embeddings WHERE vec_id != q_id)""")})"""
+
+  /** The oracle of both exact top-k forms, window and custom operator. */
+  private lazy val ExactOracleSql: String =
+    s"""WITH $ExactTopKSql
+        SELECT q_id, vec_id, cos, rank FROM exact ORDER BY q_id, rank"""
+
+  /** DuckDB mirror of sim_ann_lsh's candidates: [[BucketedSql]]'s `b`,
+    * then `lshcand` (q_id, vec_id, bucket, cos), every query against
+    * its home bucket. */
+  private lazy val LshCandidatesSql: String =
+    s"""$BucketedSql,
+        lshcand AS (
+          SELECT q.q_id, b.vec_id, b.bucket,
+            ${cosineSql("q.q_emb", "b.embedding")} AS cos
+          FROM b JOIN (${queriesSql("b", ", bucket")}) q
+            ON b.bucket = q.bucket AND b.vec_id != q.q_id)"""
+
+  /** The rows of `exact` (q_id, vec_id) that `approx` also holds: the
+    * hit join of every recall scorecard. */
+  private def hitsOf(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.join(approx.select(col("q_id").as("a_qid"), col("vec_id").as("a_vid")),
+      col("q_id") === col("a_qid") && col("vec_id") === col("a_vid"), "left_semi")
+
+  /** DuckDB mirror of [[hitsOf]] over the relations `exact` and `approx`. */
+  private def hitsSql(exact: String, approx: String): String =
+    s"""SELECT e.q_id FROM $exact e JOIN $approx a
+        ON e.q_id = a.q_id AND e.vec_id = a.vec_id"""
+
+  /** Per-query recall of `approx` against `exact`, both (q_id, vec_id):
+    * (q_id, `nExact`, n_hit, `recall`), ordered by q_id. Every count is
+    * exact; the recall division is the one IEEE op. */
+  private def recallScorecard(exact: DataFrame, approx: DataFrame,
+      nExact: String, recall: String): DataFrame = {
+    val hits = hitsOf(exact, approx).groupBy("q_id").agg(count(lit(1)).as("n_hit"))
+    exact.groupBy("q_id").agg(count(lit(1)).as(nExact))
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"), col(nExact),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+        (coalesce(col("n_hit"), lit(0L)).cast("double") /
+          col(nExact).cast("double")).as(recall))
+      .orderBy("q_id")
+  }
+
+  /** DuckDB mirror of [[recallScorecard]]: the closing SELECT over the
+    * relations `exact` and `approx`. */
+  private def recallSql(exact: String, approx: String,
+      nExact: String, recall: String): String =
+    s"""SELECT e.q_id, CAST(count(*) AS BIGINT) AS $nExact,
+          COALESCE(any_value(h.n_hit), 0) AS n_hit,
+          CAST(COALESCE(any_value(h.n_hit), 0) AS DOUBLE) /
+            CAST(count(*) AS DOUBLE) AS $recall
+        FROM $exact e LEFT JOIN (
+          SELECT q_id, CAST(count(*) AS BIGINT) AS n_hit
+          FROM (${hitsSql(exact, approx)}) GROUP BY q_id) h ON e.q_id = h.q_id
+        GROUP BY e.q_id ORDER BY e.q_id"""
+
   /** The probe counts the tradeoff curve sweeps — ONE list shared by the
-    * Spark legs and the oracle generator (legs, the qa.arn bound, and
+    * Spark legs and the oracle generator (legs, the candidate CTEs and
     * the closing union are all derived from it), so extending the sweep
     * cannot silently truncate the oracle's probed lists (round-5
     * advice). */
   private lazy val Nprobes: Seq[Int] = Seq(1, 2)
 
-  /** DuckDB replay of the nprobe sweep: shared exact-top-k and IVF
-    * assignment CTEs, one candidates/ann/counts leg generated per probe
-    * count — the same construction as ivfOracleSql so the probed lists
-    * can never drift from what sim_ann_ivf itself searches. */
+  /** DuckDB replay of the nprobe sweep: the exact top-k and one
+    * candidates/ann/leg CTE triple per probe count, from the same SQL as
+    * sim_topk_bruteforce's and sim_ann_ivf's oracles, so the probed
+    * lists can never drift from what sim_ann_ivf itself searches. */
   private lazy val IvfTradeoffOracleSql: String = {
     val legs = Nprobes.map { np =>
-      s"""cand$np AS (
-            SELECT qa.q_id, a.vec_id,
-              ${cosineSql("qa.q_emb", "a.embedding")} AS cos
-            FROM assigned a JOIN qa
-              ON a.list_id = qa.list_id AND a.vec_id != qa.q_id
-            WHERE qa.arn <= $np),
-          ann$np AS (
-            SELECT q_id, vec_id FROM (
-              SELECT q_id, vec_id,
-                row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, vec_id) AS rank
-              FROM cand$np) t
-            WHERE rank <= $TopK),
+      s"""ann$np AS (SELECT q_id, vec_id FROM ${topKSql(s"cand$np")}),
           leg$np AS (
             SELECT CAST($np AS BIGINT) AS nprobe,
               (SELECT CAST(count(*) AS BIGINT) FROM exact) AS n_exact,
-              (SELECT CAST(count(*) AS BIGINT) FROM exact e
-                 JOIN ann$np a
-                 ON e.q_id = a.q_id AND e.vec_id = a.vec_id) AS n_hit,
+              (SELECT CAST(count(*) AS BIGINT) FROM (${hitsSql("exact", s"ann$np")}))
+                AS n_hit,
               (SELECT CAST(count(*) AS BIGINT) FROM cand$np)
                 AS n_candidates)"""
     }.mkString(",\n")
-    s"""WITH qv AS (SELECT vec_id AS q_id, embedding AS q_emb
-                    FROM embeddings WHERE vec_id < $NumQueries),
-          ec AS (SELECT q_id, vec_id,
-                   ${cosineSql("q_emb", "embedding")} AS cos
-                 FROM qv, embeddings WHERE vec_id != q_id),
-          er AS (SELECT q_id, vec_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cos DESC, vec_id) AS rank
-                 FROM ec),
-          exact AS (SELECT q_id, vec_id FROM er WHERE rank <= $TopK),
-          cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                   FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-          scored AS (SELECT e.vec_id, e.embedding, cent.c_id,
-                       ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
-                     FROM embeddings e, cent),
-          ranked AS (
-            SELECT vec_id, embedding, c_id,
-              row_number() OVER (PARTITION BY vec_id
-                ORDER BY c_cos DESC, c_id) AS arn
-            FROM scored),
-          assigned AS (
-            SELECT vec_id, embedding, c_id AS list_id
-            FROM ranked WHERE arn = 1),
-          qa AS (SELECT vec_id AS q_id, embedding AS q_emb,
-                   c_id AS list_id, arn
-                 FROM ranked WHERE arn <= ${Nprobes.max} AND vec_id < $NumQueries),
+    s"""WITH $ExactTopKSql,
+          ${ivfCandidatesSql(Nprobes)},
           $legs,
           u AS (${Nprobes.map(np => s"SELECT * FROM leg$np")
             .mkString(" UNION ALL ")})
@@ -1655,9 +1488,7 @@ object Similarity {
     * recall — the candidate side is still partitioned by list, so the
     * 100 TB shape (broadcast centroids + one equi-join) is unchanged. */
   private def ivfTopK(s: SparkSession, dir: String, nprobe: Int): DataFrame =
-    ivfSearchFor(s, dir, nprobe,
-      embParallel(s, dir).filter(col("vec_id") < NumQueries)
-        .select("vec_id", "embedding"))
+    ivfSearchFor(s, dir, nprobe, queriesOf(embParallel(s, dir)))
 
   /** Centroid assignment with rank: every caller (inline build, saved-
     * index build, query routing at serve time) runs THESE expressions,
@@ -1794,17 +1625,7 @@ object Similarity {
       .parquet(s"$idx/lists")
       .select(col("vec_id"), col("embedding"),
         col("list_id").cast("long").as("list_id"))
-    ivfTopKOf(ivfCandidatesOn(s, nprobe, queries, centroids, assigned))
-  }
-
-  /** Per-query cosine top-k over a candidate relation. */
-  private[graft] def ivfTopKOf(cand: DataFrame): DataFrame = {
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TopK)
-      .orderBy("q_id", "rank")
+    topKOf(ivfCandidatesOn(s, nprobe, queries, centroids, assigned))
   }
 
   /** The IVF search against the static corpus index for an ARBITRARY
@@ -1817,33 +1638,53 @@ object Similarity {
     * list-keyed equi-join. */
   private[graft] def ivfSearchFor(s: SparkSession, dir: String,
       nprobe: Int, queries: DataFrame): DataFrame =
-    ivfTopKOf(ivfCandidatesFor(s, dir, nprobe, queries))
+    topKOf(ivfCandidatesFor(s, dir, nprobe, queries))
 
-  /** DuckDB mirror of ivfTopK at the given probe count. */
-  private[graft] def ivfOracleSql(nprobe: Int): String =
-    s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb
-                      FROM embeddings WHERE vec_id % $CentStrideSql = 0),
-        scored AS (SELECT e.vec_id, e.embedding, cent.c_id,
+  /** DuckDB mirror of ivfCentroids + ivfAssign over the corpus: CTEs
+    * `cent` (c_id, c_emb), `scored` and the thin `ranked` (vec_id, c_id,
+    * arn), every vector's centroids ranked by (c_cos DESC, c_id) — the
+    * order ivfAssignTop1's argmax replays. */
+  private lazy val IvfRankedSql: String =
+    s"""cent AS (SELECT vec_id AS c_id, embedding AS c_emb
+                 FROM embeddings WHERE vec_id % $CentStrideSql = 0),
+        scored AS (SELECT e.vec_id, cent.c_id,
                      ${cosineSql("e.embedding", "cent.c_emb")} AS c_cos
                    FROM embeddings e, cent),
         ranked AS (
-          SELECT vec_id, embedding, c_id,
+          SELECT vec_id, c_id,
             row_number() OVER (PARTITION BY vec_id ORDER BY c_cos DESC, c_id) AS arn
-          FROM scored),
+          FROM scored)"""
+
+  /** DuckDB mirror of ivfCandidatesFor: [[IvfRankedSql]]'s CTEs, then
+    * `assigned` (vec_id, embedding, list_id), every corpus row `e` that
+    * satisfies `keep` in its nearest list, and for each probe count np
+    * `cand<np>` (q_id, vec_id, list_id, cos): every query against the
+    * lists of its np nearest centroids. */
+  private def ivfCandidatesSql(nprobes: Seq[Int], keep: String = "TRUE"): String = {
+    val cands = nprobes.map { np =>
+      s"""cand$np AS (
+            SELECT q.q_id, a.vec_id, a.list_id,
+              ${cosineSql("q.q_emb", "a.embedding")} AS cos
+            FROM assigned a JOIN (
+              SELECT qv.q_id, qv.q_emb, r.c_id AS list_id
+              FROM (${queriesSql()}) qv JOIN ranked r ON r.vec_id = qv.q_id
+              WHERE r.arn <= $np) q
+              ON a.list_id = q.list_id AND a.vec_id != q.q_id)"""
+    }
+    s"""$IvfRankedSql,
         assigned AS (
-          SELECT vec_id, embedding, c_id AS list_id FROM ranked WHERE arn = 1),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb, c_id AS list_id
-              FROM ranked WHERE arn <= $nprobe AND vec_id < $NumQueries),
-        c AS (SELECT q.q_id, a.vec_id, a.list_id,
-                ${cosineSql("q.q_emb", "a.embedding")} AS cos
-              FROM assigned a JOIN q
-                ON a.list_id = q.list_id AND a.vec_id != q.q_id),
-        r AS (SELECT q_id, vec_id, list_id, cos,
-                row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-              FROM c)
-        SELECT q_id, vec_id, CAST(list_id AS BIGINT) AS list_id, cos,
-          CAST(rank AS BIGINT) AS rank
-        FROM r WHERE rank <= $TopK ORDER BY q_id, rank"""
+          SELECT r.vec_id, e.embedding, r.c_id AS list_id
+          FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
+          WHERE r.arn = 1 AND $keep),
+        ${cands.mkString(",\n")}"""
+  }
+
+  /** DuckDB mirror of ivfTopK at the given probe count, over the corpus
+    * rows `e` that satisfy `keep`. */
+  private[graft] def ivfOracleSql(nprobe: Int, keep: String = "TRUE"): String =
+    s"""WITH ${ivfCandidatesSql(Seq(nprobe), keep)}
+        SELECT q_id, vec_id, CAST(list_id AS BIGINT) AS list_id, cos, rank
+        FROM ${topKSql(s"cand$nprobe")} ORDER BY q_id, rank"""
 
   /** Viral-bucket cap for the banded-LSH SELF-join paths (near-dup
     * candidates, knn graph). The r8 sf1 growth run measured the uncapped
@@ -1895,7 +1736,7 @@ object Similarity {
   }
 
   /** DuckDB mirror of nearDupPairs: CTE list producing epairs(a_id,
-    * b_id) — the same banded-LSH candidates + exact-cosine verification.
+    * b_id, cos) — the same banded-LSH candidates + exact-cosine verification.
     * Compose after bandKeysSql's CTEs. */
   private[graft] def nearDupPairsSql(): String =
     s"""${bandKeysSql()},
@@ -1905,11 +1746,13 @@ object Similarity {
             ON x.band = y.band AND x.band_val = y.band_val
              AND x.vec_id < y.vec_id),
         epairs AS (
-          SELECT c.a_id, c.b_id
-          FROM ecand c
-          JOIN embeddings a ON a.vec_id = c.a_id
-          JOIN embeddings b ON b.vec_id = c.b_id
-          WHERE ${cosineSql("a.embedding", "b.embedding")} >= $NearDupThreshold)"""
+          SELECT * FROM (
+            SELECT c.a_id, c.b_id,
+              ${cosineSql("a.embedding", "b.embedding")} AS cos
+            FROM ecand c
+            JOIN embeddings a ON a.vec_id = c.a_id
+            JOIN embeddings b ON b.vec_id = c.b_id)
+          WHERE cos >= $NearDupThreshold)"""
 
   /** (vec_id, band, band_val): banded sign-bit LSH keys on the whole-
     * stage-codegen path — explode dimensions, broadcast-join the
@@ -2007,6 +1850,29 @@ object Similarity {
       .filter(col("rank") <= KnnGraphK)
   }
 
+  /** DuckDB mirror of knnGraphEdges: [[bandKeysSql]]'s CTEs, then `knn`
+    * (src_id, nbr_id, cos, rank), MATERIALIZED because every beam round
+    * of graphSearchSql probes it. */
+  private lazy val KnnGraphSql: String =
+    s"""${bandKeysSql()},
+        kcand AS (
+          SELECT DISTINCT x.vec_id AS src_id, y.vec_id AS nbr_id
+          FROM bandkept x JOIN bandkept y
+            ON x.band = y.band AND x.band_val = y.band_val
+             AND x.vec_id != y.vec_id),
+        kscored AS (
+          SELECT c.src_id, c.nbr_id,
+            ${cosineSql("a.embedding", "b.embedding")} AS cos
+          FROM kcand c
+          JOIN embeddings a ON a.vec_id = c.src_id
+          JOIN embeddings b ON b.vec_id = c.nbr_id),
+        knn AS MATERIALIZED (
+          SELECT * FROM (
+            SELECT src_id, nbr_id, cos,
+              CAST(row_number() OVER (PARTITION BY src_id
+                                      ORDER BY cos DESC, nbr_id) AS BIGINT) AS rank
+            FROM kscored) WHERE rank <= $KnnGraphK)"""
+
   /** Build-once/save/load for the k-NN graph index — the ivfIndexDir
     * lifecycle applied to the graph family. */
   private[graft] def knnIndexDir(s: SparkSession, dir: String): String =
@@ -2035,8 +1901,7 @@ object Similarity {
   private def graphBeamSearch(s: SparkSession, dir: String,
       knn: DataFrame): DataFrame = {
     val e = embParallel(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val q = keyedQueriesOf(e)
     val cv = e.select(col("vec_id").as("cand"),
       col("embedding").as("c_emb"))
     val entry = e.agg(min(col("vec_id")).as("cand"))
@@ -2060,19 +1925,14 @@ object Similarity {
     }
     // top-k of the final round's candidate set = top-k of the final
     // beam (BeamWidth > TopK + 1 leaves room for the self-match cut)
-    val wf = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("cand"))
-    scored.filter(col("cand") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wf).cast("long"))
-      .filter(col("rank") <= TopK)
+    rankTopK(scored.filter(col("cand") =!= col("q_id")), id = "cand")
       .select(col("q_id"), col("cand").as("vec_id"),
         col("cos"), col("rank"))
       .orderBy("q_id", "rank")
   }
 
   /** DuckDB replay of sim_ann_graph_search: the sim_knn_graph edge CTEs
-    * (MATERIALIZED — the knn relation is probed by every beam round and
-    * an inlined copy would re-run the band build per round), then each
+    * ([[KnnGraphSql]]), then each
     * beam round as a cand/scored/beam CTE triple, built programmatically
     * so the Spark loop and the oracle can never disagree on round count
     * (the graph_pagerank oracle discipline). */
@@ -2098,35 +1958,13 @@ object Similarity {
                                    ORDER BY cos DESC, cand) AS rn
               FROM scored$t) WHERE rn <= $BeamWidth)"""
     }.mkString(",\n")
-    s"""WITH ${bandKeysSql()},
-        kcand AS (
-          SELECT DISTINCT x.vec_id AS src_id, y.vec_id AS nbr_id
-          FROM bandkept x JOIN bandkept y
-            ON x.band = y.band AND x.band_val = y.band_val
-             AND x.vec_id != y.vec_id),
-        kscored AS (
-          SELECT c.src_id, c.nbr_id,
-            ${cosineSql("a.embedding", "b.embedding")} AS cos
-          FROM kcand c
-          JOIN embeddings a ON a.vec_id = c.src_id
-          JOIN embeddings b ON b.vec_id = c.nbr_id),
-        knn AS MATERIALIZED (
-          SELECT src_id, nbr_id FROM (
-            SELECT src_id, nbr_id,
-              row_number() OVER (PARTITION BY src_id
-                                 ORDER BY cos DESC, nbr_id) AS rank
-            FROM kscored) WHERE rank <= $KnnGraphK),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb
-              FROM embeddings WHERE vec_id < $NumQueries),
+    s"""WITH $KnnGraphSql,
+        q AS (${queriesSql()}),
         entry AS (SELECT min(vec_id) AS cand FROM embeddings),
         beam0 AS (SELECT q.q_id, entry.cand FROM q, entry),
         $rounds
-        SELECT q_id, cand AS vec_id, cos, CAST(rank AS BIGINT) AS rank
-        FROM (
-          SELECT q_id, cand, cos,
-            row_number() OVER (PARTITION BY q_id
-                               ORDER BY cos DESC, cand) AS rank
-          FROM scored$GraphSearchRounds WHERE cand != q_id)
-        WHERE rank <= $TopK ORDER BY q_id, rank"""
+        SELECT q_id, cand AS vec_id, cos, rank
+        FROM ${topKSql(s"(SELECT * FROM scored$GraphSearchRounds WHERE cand != q_id)", "cand")}
+        ORDER BY q_id, rank"""
   }
 }

@@ -193,6 +193,37 @@ object TextAnalysis {
         col("cum_toks"), col("budget_toks"))
   }
 
+  /** DuckDB mirror of [[tokenBudget]] over the relation `src` (doc_id,
+    * source, text): CTEs ending in `name` (doc_id, source, n_toks,
+    * cum_toks, budget_toks). */
+  private[graft] def tokenBudgetSql(name: String, src: String, salt: String): String =
+    s"""tok AS MATERIALIZED (
+          SELECT doc_id, source,
+            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+          FROM $src),
+        tokst AS (
+          SELECT source, sum(CAST(n_toks AS HUGEINT)) AS tok_s,
+            CAST(floor(sqrt(CAST(sum(n_toks) AS DOUBLE))) AS BIGINT) AS wq
+          FROM tok GROUP BY source),
+        toktot AS (SELECT sum(CAST(wq AS HUGEINT)) AS wtot,
+                     sum(tok_s) AS btot FROM tokst),
+        tokbdg AS (
+          SELECT source,
+            CAST(((t.btot // 5) * CAST(wq AS HUGEINT))
+              // nullif(t.wtot, 0) AS BIGINT) AS budget_toks
+          FROM tokst CROSS JOIN toktot t),
+        tokcum AS (
+          SELECT doc_id, source, n_toks,
+            sum(n_toks) OVER (PARTITION BY source ORDER BY
+              ${hash31Sql(s"concat('$salt', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_toks
+          FROM tok),
+        $name AS MATERIALIZED (
+          SELECT c.doc_id, c.source, c.n_toks,
+            CAST(c.cum_toks AS BIGINT) AS cum_toks, b.budget_toks
+          FROM tokcum c JOIN tokbdg b ON b.source = c.source
+          WHERE c.cum_toks - c.n_toks < b.budget_toks)"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // Token counting: whitespace tokens + a BPE-ish sub-word regex
@@ -481,34 +512,9 @@ object TextAnalysis {
       (s, dir) =>
         tokenBudget(Tables.load(s, dir, "documents"), "tokb")
           .orderBy("source", "cum_toks", "doc_id"),
-      Some(s"""WITH d AS (
-                SELECT doc_id, source,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-                FROM documents),
-              st AS (
-                SELECT source, sum(CAST(n_toks AS HUGEINT)) AS tok_s,
-                  CAST(floor(sqrt(CAST(sum(n_toks) AS DOUBLE))) AS BIGINT)
-                    AS wq
-                FROM d GROUP BY source),
-              t AS (SELECT sum(CAST(wq AS HUGEINT)) AS wtot,
-                           sum(tok_s) AS btot FROM st),
-              b AS (
-                SELECT source,
-                  CAST(((t.btot // 5) * CAST(wq AS HUGEINT))
-                    // nullif(t.wtot, 0) AS BIGINT) AS budget_toks
-                FROM st CROSS JOIN t),
-              c AS (
-                SELECT doc_id, source, n_toks,
-                  sum(n_toks) OVER (PARTITION BY source ORDER BY
-                    ${hash31Sql("concat('tokb', '|', CAST(doc_id AS VARCHAR))")} ASC, doc_id ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS cum_toks
-                FROM d)
-              SELECT c.doc_id, c.source, c.n_toks,
-                CAST(c.cum_toks AS BIGINT) AS cum_toks, b.budget_toks
-              FROM c JOIN b ON b.source = c.source
-              WHERE c.cum_toks - c.n_toks < b.budget_toks
-              ORDER BY c.source, c.cum_toks, c.doc_id""")),
+      Some(s"""WITH ${tokenBudgetSql("tb", "documents", "tokb")}
+              SELECT doc_id, source, n_toks, cum_toks, budget_toks
+              FROM tb ORDER BY source, cum_toks, doc_id""")),
 
     // Benchmark decontamination: flag training documents that overlap an
     // evaluation set by 3-word shingles — the standard pre-training

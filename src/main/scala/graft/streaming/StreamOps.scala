@@ -878,9 +878,7 @@ object StreamOps {
   def streamAnnProbe(s: SparkSession, dir: String): DataFrame = {
     // read lazily by the returned frame: deleted at JVM exit, not here
     val outDir = graft.jvmScratchDir("graft_ann_probe").toString + "/out"
-    drain(tableStream(s, dir, "embeddings")
-      .filter(col("vec_id") < graft.operators.Similarity.NumQueries)
-      .select("vec_id", "embedding")
+    drain(graft.operators.Similarity.queriesOf(tableStream(s, dir, "embeddings"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.Similarity

@@ -131,10 +131,10 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("PlanDump refuses to pick a plans round on its own") {
-    val e = intercept[IllegalArgumentException](PlanDump.outDir(Map.empty))
-    assert(e.getMessage.contains("SPARK_GRAFT_ROUND"), e.getMessage)
-    assert(PlanDump.outDir(Map("SPARK_GRAFT_ROUND" -> "r99")) ===
-      repoRoot.resolve("plans/r99"))
+    val e = intercept[IllegalArgumentException](PlanDump.parseArgs(Seq("after")))
+    assert(e.getMessage.contains("<outDir>"), e.getMessage)
+    assert(PlanDump.parseArgs(Seq("plans/r99", "after", "q1")) ===
+      ((java.nio.file.Paths.get("plans/r99"), "after", Seq("q1"))))
   }
 
   test("PlanDump normalizes expression, exchange and RDD ids, nothing else") {

@@ -335,6 +335,9 @@ class DedupTextSpec extends AnyFunSuite {
     val byCol = strs.toDF("s").select(col("s"), hash31(col("s")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     strs.foreach(x => assert(hash31Value(x) === byCol(x), x))
+    // the md5-digest form the byte-payload operators use
+    strs.foreach(x => assert(hash31Digest(java.security.MessageDigest
+      .getInstance("MD5").digest(x.getBytes("UTF-8"))) === byCol(x), x))
     // md5("") = d41d8cd98f00b204..., 0xd41d8cd98f00b20 mod 2^31 - 1
     assert(hash31Value("") === 863222971L)
   }

@@ -377,6 +377,35 @@ class RegistrySpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  // The similarity searches share one skeleton: one query set, one
+  // cosine top-k and one IVF assignment, each with its DuckDB mirror in
+  // Similarity. A copy elsewhere is a search whose probe set, ranking or
+  // lists can drift from the others'.
+  test("the IVF centroid sample is written only by Similarity.IvfRankedSql") {
+    val hits = operatorSourceHits(Seq("vec_id % $CentStrideSql"), dirs = Seq(""))
+      .filterNot(inMember(Set("Similarity.scala" -> "IvfRankedSql")))
+    assert(hits.isEmpty,
+      "hand-written IVF assignment CTE (call Similarity.IvfRankedSql):\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the oracle's cosine top-k is written only by Similarity.topKSql") {
+    val hits = operatorSourceHits(Seq("ORDER BY cos DESC, vec_id"), dirs = Seq(""))
+      .filterNot(inMember(Set("Similarity.scala" -> "topKSql")))
+    assert(hits.isEmpty,
+      "hand-written cosine top-k (call Similarity.topKSql):\n" + hits.mkString("\n"))
+  }
+
+  test("the similarity query set is filtered only by Similarity.probeRows") {
+    val probe = """col\("vec_id"\) < (?:[\w.]+\.)?NumQueries\b""".r
+    val hits = operatorSourceHits(Seq("NumQueries"), dirs = Seq("operators", "streaming"))
+      .filter(h => probe.findFirstIn(h.line).nonEmpty)
+      .filterNot(inMember(Set("Similarity.scala" -> "probeRows")))
+    assert(hits.isEmpty,
+      "hand-written query set (call Similarity.queriesOf or keyedQueriesOf):\n" +
+        hits.mkString("\n"))
+  }
+
   test("hash31Sql is one parenthesized operand") {
     val h = graft.functions.EngineFns.hash31Sql("x")
     val e = s"2 * $h"
