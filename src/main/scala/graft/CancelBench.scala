@@ -25,14 +25,16 @@ object CancelBench {
     val spark = GraftSession.local("graft-cancel-bench", cores = 4)
 
     DataGen.findOrGenerate(spark, dataDir, numFiles, rowsPerFile)
-    // GRAFT_NO_PERSIST=1 — the memory-pressure sweep (r9 task 8): under
-    // a starved heap the MEMORY_ONLY cache competes with the vectorized
-    // reader's batch allocations and the aggregate's execution memory
-    // (observed: scan-side OOM at 2 GiB before any cancel fired).
-    // A pressured production executor serves scans from storage, so the
-    // pressure run reads straight from parquet — the measured quantity
-    // (cancel-request → control-returned while the aggregate spills)
-    // is unchanged.
+    // The table is checkpointed once, eagerly, as rows in storage
+    // memory (MEMORY_AND_DISK: what does not fit spills to local disk).
+    // GRAFT_NO_PERSIST=1 — the memory-pressure sweep: under a starved
+    // heap the stored table competes with the vectorized reader's batch
+    // allocations and the aggregate's execution memory (observed with
+    // the earlier MEMORY_ONLY cache: scan-side OOM at 2 GiB before any
+    // cancel fired). A pressured production executor serves scans from
+    // storage, so the pressure run reads straight from parquet — the
+    // measured quantity (cancel-request → control-returned while the
+    // aggregate spills) is unchanged.
     DataGen.loadTestTable(spark, dataDir,
       persist = !sys.env.contains("GRAFT_NO_PERSIST"))
 

@@ -60,12 +60,21 @@ object Tables {
 
   /** The schema `spark.read.parquet` infers for `dir/name.parquet` under
     * the session's confs; for events that is the raw file schema (ts not
-    * normalized). Inference reads footers in a Spark job (about 100 ms at
-    * local[4]), so it runs once per file set and `schemaConfs` values,
-    * in any session of the JVM. */
+    * normalized). See `parquetSchema`. */
   def fileSchema(spark: SparkSession, dir: String, name: String): StructType =
-    memo(dir, name, confKeyed(spark, "schema", schemaConfs))(
-      spark.read.parquet(s"$dir/$name.parquet").schema)
+    parquetSchema(spark, s"$dir/$name.parquet")
+
+  /** The schema `spark.read.options(options).parquet(path)` infers under
+    * the session's confs. Inference reads footers in a Spark job (about
+    * 100 ms at local[4]), so it runs once per file set under `path`,
+    * `options` and `schemaConfs` values, in any session of the JVM; pass
+    * the result to the reader's `schema` and the load launches no job. */
+  def parquetSchema(spark: SparkSession, path: String,
+      options: Map[String, String] = Map.empty): StructType =
+    memo(path, confKeyed(spark,
+      ("schema" +: options.toSeq.sorted.map { case (k, v) => s"$k=$v" })
+        .mkString(","), schemaConfs))(
+      spark.read.options(options).parquet(path).schema)
 
   /** Spread an under-split scan across every core before heavy per-row
     * expression work (md5 ladders, shingle explosion, image decode).
@@ -134,7 +143,13 @@ object Tables {
     * directory of an index built from the corpus — never a query's
     * result. */
   def memo[T](dir: String, table: String, what: String)(compute: => T): T =
-    corpusFingerprint(dir, table).fold(compute)(memoOn(_, what)(compute))
+    memo(s"$dir/$table.parquet", what)(compute)
+
+  /** `memo` keyed on the files under `root`, any directory of Parquet
+    * files: a corpus table's `dir/table.parquet` or a flat directory
+    * such as the reference's test_table. */
+  def memo[T](root: String, what: String)(compute: => T): T =
+    filesUnder(root).fold(compute)(memoOn(_, what)(compute))
 
   private val memos = scala.collection.concurrent.TrieMap[(String, String), Any]()
 
@@ -150,10 +165,10 @@ object Tables {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private def corpusFingerprint(dir: String, table: String): Option[String] = {
+  private def filesUnder(path: String): Option[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get(s"$dir/$table.parquet")
+    val root = Paths.get(path)
     if (!Files.exists(root)) None
     else {
       val walk = Files.walk(root)
@@ -163,7 +178,7 @@ object Tables {
             Files.getLastModifiedTime(p).toMillis))
           .toList
         finally walk.close()
-      Some(s"$dir/$table#${filesFingerprint(files)}")
+      Some(s"$path#${filesFingerprint(files)}")
     }
   }
 

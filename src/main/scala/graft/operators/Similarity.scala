@@ -1595,8 +1595,9 @@ object Similarity {
     Tables.memo(dir, "embeddings", "ivf_index") {
       val p = graft.jvmScratchDir("graft_ivf_index")
       val centroids = ivfCentroids(s, dir)
-      centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$p/centroids")
+      // from the scan's own partitions: funnelling the √N rows into one
+      // file would run the whole scan and its stride filter in one task
+      centroids.write.mode("overwrite").parquet(s"$p/centroids")
       // an explicit partition count, which AQE does not coalesce: the
       // lists are written from every core, one file per list
       ivfAssignTop1(s, embParallel(s, dir), broadcast(centroids))

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Tables
 
 /** Reference-parity data generation and table registration.
   *
@@ -77,16 +78,24 @@ object DataGen {
     }
   }
 
-  /** Register dir as `test_table`, extension-filtered, served from memory
-    * (reference main.rs:131-144 + the in-memory store at main.rs:205-223:
-    * persist(MEMORY_ONLY) + materialize = bytes hot in RAM before use). */
+  /** Register dir as `test_table`, extension-filtered (reference
+    * main.rs:131-144), and, with `persist`, served from memory: the
+    * reference copies the files into an in-memory object store once,
+    * before any query runs (main.rs:205-223). Here that copy is one
+    * eager `Tables.materialize` of the scanned rows, stored as rows
+    * (MEMORY_AND_DISK: a table larger than storage memory spills to
+    * local disk instead of being re-read from Parquet). Its blocks stay
+    * stored while the view is registered; call it outside any
+    * `Tables.scoped`, which would release them when it closes. The
+    * schema is inferred once per file set
+    * (`Tables.parquetSchema`), so a second load launches no inference
+    * job. */
   def loadTestTable(spark: SparkSession, dir: String,
       persist: Boolean = true): DataFrame = {
-    var df = spark.read.option("pathGlobFilter", "*.parquet").parquet(dir)
-    if (persist) {
-      df = df.persist(StorageLevel.MEMORY_ONLY)
-      df.count() // materialize, analogous to the eager byte copy
-    }
+    val parquetOnly = Map("pathGlobFilter" -> "*.parquet")
+    val read = spark.read.options(parquetOnly)
+      .schema(Tables.parquetSchema(spark, dir, parquetOnly)).parquet(dir)
+    val df = if (persist) Tables.materialize(read) else read
     df.createOrReplaceTempView("test_table")
     df
   }

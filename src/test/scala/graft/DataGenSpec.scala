@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,6 +56,34 @@ class DataGenSpec extends AnyFunSuite {
     val df = DataGen.loadTestTable(spark, dir, persist = false)
     assert(df.count() === 1000)
     assert(DataGen.distinctQuery(spark).rdd.getNumPartitions === 1)
+  }
+
+  test("a persisted test_table is served from memory and outlives a scoped query") {
+    val dir = Files.createTempDirectory("graft_loaded").toString
+    DataGen.generate(spark, dir, numFiles = 2, rowsPerFile = 500)
+    val df = DataGen.loadTestTable(spark, dir, persist = true)
+    val rdd = df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    val q = DataGen.distinctQuery(spark)
+    val n = Tables.scoped(q.count())
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("FileScan"), plan)
+    assert(plan.contains("Scan ExistingRDD"), plan)
+    val expected = DataGen.testTableDF(spark, 1000)
+    assert(n === expected.select("A", "B", "C", "D", "E").distinct().count())
+    assert(spark.table("test_table").collect().map(_.toString).sorted.toSeq ===
+      expected.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("a second load of the same files infers no schema") {
+    val dir = Files.createTempDirectory("graft_reload").toString
+    DataGen.generate(spark, dir, numFiles = 2, rowsPerFile = 500)
+    val sc = spark.sparkContext
+    def inferences(): Int =
+      JobCount.jobs(sc)(DataGen.loadTestTable(spark, dir, persist = true))
+        .count(_._1.startsWith("parquet at"))
+    assert(inferences() >= 1)
+    assert(inferences() === 0)
   }
 
   test("distinct pipeline: |distinct| <= |input| and idempotent") {

@@ -245,12 +245,15 @@ class RegistrySpec extends AnyFunSuite {
   // Materialization has one primitive, Tables.materialize: it keeps the
   // operator's call site and registers the blocks with the caller's
   // Tables.scoped, so a query's intermediates are released when it ends.
-  // A raw localCheckpoint() would hold its blocks until the GC notices.
+  // A raw localCheckpoint() would hold its blocks until the GC notices;
+  // a persist()/cache() at a StorageLevel is a second way to do the same
+  // job, and a lazy one that builds its cache inside the first consumer.
   test("operator sources materialize only through Tables.materialize") {
-    val hits = operatorSourceHits(Seq("localCheckpoint("))
+    val hits = operatorSourceHits(
+      Seq("localCheckpoint(", ".persist(", ".cache()", "StorageLevel"))
     assert(hits.isEmpty,
-      "raw localCheckpoint in operator code (call Tables.materialize):\n" +
-        hits.mkString("\n"))
+      "raw localCheckpoint, persist or cache in operator code " +
+        "(call Tables.materialize):\n" + hits.mkString("\n"))
   }
 
   // Tables.scoped releases what its body materialized and nothing else.

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.EngineFns._
@@ -207,6 +209,27 @@ class SimilaritySpec extends AnyFunSuite {
       .run(spark, corpus).collect()
     assert(inline.nonEmpty)
     assert(refreshed.toSeq === inline.toSeq)
+  }
+
+  test("the IVF centroid write runs in the pre-split scan's own tasks") {
+    // 2 x defaultParallelism files: Tables.parallel keeps the scan as it
+    // is, so the write's task count is the scan's split count
+    val d = Files.createTempDirectory("graft_ivf_split").toString
+    val files = 2 * spark.sparkContext.defaultParallelism
+    spark.range(400)
+      .select(col("id").as("vec_id"),
+        array((0 until 64).map(i => (hash(col("id"), lit(i)) % 100).cast("float")): _*)
+          .as("embedding"))
+      .repartition(files)
+      .write.parquet(s"$d/embeddings.parquet")
+    val line = Files.readAllLines(java.nio.file.Paths.get(
+      "src/main/scala/graft/operators/Similarity.scala"))
+      .asScala.indexWhere(_.contains("parquet(s\"$p/centroids\")")) + 1
+    assert(line > 0, "the centroid write's line")
+    val jobs = org.apache.spark.JobCount.jobs(spark.sparkContext)(
+      operators.Similarity.ivfIndexDir(spark, d))
+    assert(jobs.exists { case (site, tasks) =>
+      site == s"parquet at Similarity.scala:$line" && tasks > 1 }, jobs)
   }
 
   test("IVF index stats account for every vector and shares sum to 1") {
