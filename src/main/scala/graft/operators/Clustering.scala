@@ -659,13 +659,10 @@ object Clustering {
         val corePairs = pairs
           .join(core.select(col("vec_id").as("a_id")), Seq("a_id"))
           .join(core.select(col("vec_id").as("b_id")), Seq("b_id"))
-        val cc = Dedup.connectedComponents(
+        // every core, its own cluster when no core-core edge touches it
+        val coreCluster = Dedup.connectedComponents(
             core.select(col("vec_id").as("doc_id")), corePairs)
           .select(col("doc_id").as("vec_id"), col("rep_id").as("cluster_id"))
-        // cores not touched by any core-core edge are their own cluster
-        val coreCluster = core.join(cc, Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
         // border: non-core with >= 1 core neighbor -> min core's cluster
         val adj = pairs.select(col("a_id").as("vec_id"), col("b_id").as("nb"))
           .unionAll(pairs.select(col("b_id").as("vec_id"), col("a_id").as("nb")))
@@ -695,32 +692,18 @@ object Clustering {
                    UNION ALL SELECT b_id FROM epairs) GROUP BY vec_id),
                core AS (
                  SELECT vec_id FROM deg WHERE n_neighbors >= $DbscanMinPts),
-               cedges AS MATERIALIZED (
-                 SELECT p.a_id AS u, p.b_id AS v FROM epairs p
-                 JOIN core x ON x.vec_id = p.a_id
-                 JOIN core y ON y.vec_id = p.b_id
-                 UNION ALL
-                 SELECT p.b_id, p.a_id FROM epairs p
+               cpairs AS (
+                 SELECT p.a_id, p.b_id FROM epairs p
                  JOIN core x ON x.vec_id = p.a_id
                  JOIN core y ON y.vec_id = p.b_id),
-               reach(u, v) AS (
-                 SELECT u, v FROM cedges
-                 UNION
-                 SELECT r.u, e.v FROM reach r JOIN cedges e ON r.v = e.u),
-               ccrep AS (
-                 SELECT u AS vec_id, least(u, min(v)) AS cluster_id
-                 FROM reach GROUP BY u),
-               corecl AS (
-                 SELECT c.vec_id,
-                   coalesce(r.cluster_id, c.vec_id) AS cluster_id
-                 FROM core c LEFT JOIN ccrep r ON r.vec_id = c.vec_id),
+               ${Dedup.componentsSql("cpairs", "core", "vec_id", "cluster_id")},
                adj AS (
                  SELECT a_id AS vec_id, b_id AS nb FROM epairs
                  UNION ALL SELECT b_id, a_id FROM epairs),
                border AS (
                  SELECT a.vec_id, min(k.cluster_id) AS cluster_id
                  FROM adj a
-                 JOIN corecl k ON k.vec_id = a.nb
+                 JOIN cc k ON k.vec_id = a.nb
                  WHERE a.vec_id NOT IN (SELECT vec_id FROM core)
                  GROUP BY a.vec_id)
                SELECT e.vec_id,
@@ -731,7 +714,7 @@ object Clustering {
                  coalesce(c.cluster_id, b.cluster_id) AS cluster_id
                FROM embeddings e
                LEFT JOIN deg d ON d.vec_id = e.vec_id
-               LEFT JOIN corecl c ON c.vec_id = e.vec_id
+               LEFT JOIN cc c ON c.vec_id = e.vec_id
                LEFT JOIN border b ON b.vec_id = e.vec_id
                ORDER BY e.vec_id""")))
 }

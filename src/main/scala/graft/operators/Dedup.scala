@@ -549,12 +549,12 @@ object Dedup {
       .union(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
 
   /** The SQL mirror of [[undirected]]: the MATERIALIZED CTE `name`(u,
-    * `v`) holding both orientations of every row of the oracle's `pairs`
-    * CTE. */
-  private[graft] def undirectedSql(name: String, v: String = "v"): String =
+    * v) holding both orientations of every row of the oracle's (a_id,
+    * b_id) CTE `pairs`. */
+  private[graft] def undirectedSql(name: String, pairs: String = "pairs"): String =
     s"""$name AS MATERIALIZED (
-          SELECT a_id AS u, b_id AS $v FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs)"""
+          SELECT a_id AS u, b_id AS v FROM $pairs
+          UNION ALL SELECT b_id, a_id FROM $pairs)"""
 
   /** Each shingle's postings in `rel` (shingle, doc_id, ...) sampled down
     * to `cap` rows, the smallest hash31(shingle:doc_id) first (doc_id
@@ -1095,22 +1095,12 @@ object Dedup {
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         connectedComponents(docs, declarativeHammingPairs(s, dir))
-          .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE ${simhashWideSql()},
               ${hammingPairsSql("pairs")},
-              ${undirectedSql("edges", v = "w")},
-              reach(u, w) AS (
-                SELECT u, w FROM edges
-                UNION
-                SELECT r.u, e.w FROM reach r JOIN edges e ON r.w = e.u),
-              rep AS (
-                SELECT u AS doc_id, least(u, min(w)) AS rep_id
-                FROM reach GROUP BY u)
-              SELECT doc.doc_id, COALESCE(rep.rep_id, doc.doc_id) AS rep_id
-              FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id
-              ORDER BY doc.doc_id""")),
+              ${componentsSql("pairs", "documents")}
+              SELECT doc_id, rep_id FROM cc ORDER BY doc_id""")),
 
     // Cluster collapse: near-dup candidate pairs -> connected components
     // -> one representative (min doc_id) per component -> the (doc_id,
@@ -1122,22 +1112,12 @@ object Dedup {
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         connectedComponents(docs, jaccardEdges(shingled(s, dir)))
-          .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
       // transitive closure via recursive CTE: rep = min reachable id
       Some(s"""WITH RECURSIVE $JaccardPairsCte,
-               ${undirectedSql("edges")},
-               reach(u, v) AS (
-                 SELECT u, v FROM edges
-                 UNION
-                 SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-               rep AS (
-                 SELECT u AS doc_id, least(u, min(v)) AS rep_id
-                 FROM reach GROUP BY u)
-               SELECT doc.doc_id, COALESCE(rep.rep_id, doc.doc_id) AS rep_id
-               FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id
-               ORDER BY doc.doc_id""")),
+               ${componentsSql("pairs", "documents")}
+               SELECT doc_id, rep_id FROM cc ORDER BY doc_id""")),
 
     // Multi-generator cluster collapse — the pipeline's real end product:
     // ONE representative map over the union of all three candidate
@@ -1159,7 +1139,6 @@ object Dedup {
         val embp = Similarity.nearDupPairs(s, dir).select("a_id", "b_id")
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         connectedComponents(docs, jac.union(sim).union(embp))
-          .select(col("doc_id"), col("rep_id"))
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE ${shingledSql()},
@@ -1171,17 +1150,8 @@ object Dedup {
                  SELECT a_id, b_id FROM jpairs
                  UNION SELECT a_id, b_id FROM spairs
                  UNION SELECT a_id, b_id FROM epairs),
-               ${undirectedSql("edges")},
-               reach(u, v) AS (
-                 SELECT u, v FROM edges
-                 UNION
-                 SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-               rep AS (
-                 SELECT u AS doc_id, least(u, min(v)) AS rep_id
-                 FROM reach GROUP BY u)
-               SELECT doc.doc_id, COALESCE(rep.rep_id, doc.doc_id) AS rep_id
-               FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id
-               ORDER BY doc.doc_id""")),
+               ${componentsSql("pairs", "documents")}
+               SELECT doc_id, rep_id FROM cc ORDER BY doc_id""")),
 
     // Incremental dedup: the realistic production loop is not "dedup the
     // whole corpus from scratch" but "probe a NEW BATCH against the
@@ -1475,18 +1445,11 @@ object Dedup {
                 JOIN d da ON da.doc_id = c.a_id
                 JOIN d db ON db.doc_id = c.b_id
                 WHERE ${jaccardSql("da.sh", "db.sh")} >= $JaccardThreshold),
-              ${undirectedSql("edges", v = "w")},
-              reach(u, w) AS (
-                SELECT u, w FROM edges
-                UNION
-                SELECT r.u, e.w FROM reach r JOIN edges e ON r.w = e.u),
-              repmap AS (
-                SELECT u AS doc_id, least(u, min(w)) AS rep_id
-                FROM reach GROUP BY u),
+              ${componentsSql("pairs", "kept")},
               reps AS MATERIALIZED (
-                SELECT k.doc_id, k.text, k.source FROM kept k
-                LEFT JOIN repmap r ON r.doc_id = k.doc_id
-                WHERE COALESCE(r.rep_id, k.doc_id) = k.doc_id),
+                SELECT k.doc_id, k.text, k.source
+                FROM kept k JOIN cc ON cc.doc_id = k.doc_id
+                WHERE cc.rep_id = k.doc_id),
               ${TextAnalysis.tokenBudgetSql("samp", "reps", "pclean")}
               SELECT
                 (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
@@ -1652,22 +1615,12 @@ object Dedup {
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE $JaccardPairsCte,
-               ${undirectedSql("edges")},
-               reach(u, v) AS (
-                 SELECT u, v FROM edges
-                 UNION
-                 SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-               rep AS (
-                 SELECT u AS doc_id, least(u, min(v)) AS rep_id
-                 FROM reach GROUP BY u),
-               lab AS (
-                 SELECT doc.doc_id, COALESCE(rep.rep_id, doc.doc_id) AS rep_id
-                 FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id)
+               ${componentsSql("pairs", "documents")}
                SELECT doc_id, rep_id,
                  CAST(count(*) OVER w AS BIGINT) AS cluster_size,
                  doc_id = rep_id AS canonical,
                  CAST(1 AS DOUBLE) / CAST(count(*) OVER w AS DOUBLE) AS weight
-               FROM lab
+               FROM cc
                WINDOW w AS (PARTITION BY rep_id)
                ORDER BY doc_id""")),
 
@@ -1692,20 +1645,10 @@ object Dedup {
           .orderBy("cluster_size")
       },
       Some(s"""WITH RECURSIVE $JaccardPairsCte,
-               ${undirectedSql("edges")},
-               reach(u, v) AS (
-                 SELECT u, v FROM edges
-                 UNION
-                 SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-               rep AS (
-                 SELECT u AS doc_id, least(u, min(v)) AS rep_id
-                 FROM reach GROUP BY u),
-               lab AS (
-                 SELECT doc.doc_id, COALESCE(rep.rep_id, doc.doc_id) AS rep_id
-                 FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id),
+               ${componentsSql("pairs", "documents")},
                fam AS (
                  SELECT rep_id, count(*) AS cluster_size
-                 FROM lab GROUP BY rep_id)
+                 FROM cc GROUP BY rep_id)
                SELECT cluster_size,
                  CAST(count(*) AS BIGINT) AS n_clusters,
                  CAST(sum(cluster_size) AS BIGINT) AS n_docs
@@ -2690,6 +2633,9 @@ object Dedup {
     * mislabels documents, which for a dedup pipeline means silently
     * dropping non-duplicates (round-2 advice).
     *
+    * [[componentsSql]] is its DuckDB mirror: every oracle over a
+    * component map closes its pairs through it.
+    *
     * @param vertices (doc_id) — the full corpus
     * @param pairs    (a_id, b_id) undirected near-dup candidate edges
     * @return (doc_id, rep_id) with rep_id = min doc_id of the component */
@@ -2758,4 +2704,24 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
   }
+
+  /** The SQL mirror of [[connectedComponents]] over the oracle's (a_id,
+    * b_id) CTE `pairs` and the relation `vertices` keyed by `id`. Three
+    * CTEs: `edges`, both orientations of `pairs`; `reach`(u, v), their
+    * transitive closure (UNION, so the set semantics end the
+    * recursion); and `cc`(`id`, `rep`), every vertex with the smallest
+    * id its component holds, itself when it has no edge. The caller's
+    * query opens with WITH RECURSIVE. */
+  private[graft] def componentsSql(pairs: String, vertices: String,
+      id: String = "doc_id", rep: String = "rep_id"): String =
+    s"""${undirectedSql("edges", pairs)},
+       reach(u, v) AS (
+         SELECT u, v FROM edges
+         UNION
+         SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       cc AS (
+         SELECT x.$id, COALESCE(m.rep, x.$id) AS $rep
+         FROM $vertices x LEFT JOIN (
+           SELECT u, least(u, min(v)) AS rep FROM reach GROUP BY u) m
+           ON m.u = x.$id)"""
 }

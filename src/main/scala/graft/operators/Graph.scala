@@ -32,6 +32,18 @@ import graft.functions.EngineFns.hash31Sql
   * combined aggregation on v — the textbook distributed PageRank step
   * with per-iteration shuffle proportional to the edge count, never
   * quadratic. Ranks stay distributed; the driver holds only N.
+  *
+  * Every graph step has one Spark helper and one DuckDB builder, so a
+  * change to a step is one edit on each side: [[nearDupGraph]] is the
+  * undirected near-dup graph (the oracle's `e`, Dedup.undirectedSql),
+  * [[degrees]] its degree count (DegSql), [[cappedAdjacency]] the
+  * per-vertex adjacency cap (cappedSql), [[neighborSim]] both
+  * neighbor-similarity forms (neighborSimSql), [[ranked]] the
+  * PageRank/PPR loop (rankedSql), [[lpaLabels]] the LPA rounds
+  * (LpaRoundsCte), [[labeledPairs]] and [[communityVolume]] the
+  * community joins (LabeledPairsSql, CommunityVolumeSql), and the HITS
+  * half-step its own oracle (HitsOracleSql). The two BFS queries run
+  * reachSql in a [[recursionSession]], and their oracles replay it.
   */
 object Graph {
   private val Q = 1000000000000L // 10^12 rank quantization
@@ -46,7 +58,7 @@ object Graph {
   private val KcoreRounds = 3
   private val BfsHops = 2
   private val BfsCapF = 4 // per-node adjacency cap for the bounded BFS
-  private val NbrCapF = 8 // per-node adjacency cap for capped neighbor-sim
+  private[graft] val NbrCapF = 8 // per-node adjacency cap for capped neighbor-sim
   private val PprSeedMod = 20L // seeds = doc_id % 20 == 0 (~5% of corpus)
 
   val defs: Seq[QueryDef] = Seq(
@@ -172,9 +184,9 @@ object Graph {
     // norm step rescales by the 1-row broadcast maximum with pure
     // integer division — so the fixpoint is bit-identical in any
     // engine (no sqrt normalization; max-norm is the standard integer-
-    // safe substitute). Two full iterations, unrolled in the oracle CTE
-    // chain. Products stay ≤ deg·HitsQ² ≈ 10^16 — overflow-safe in
-    // BIGINT at any corpus where degree ≤ 10^6.
+    // safe substitute). HitsIters full iterations, generated as the
+    // oracle's CTE chain. Products stay ≤ deg·HitsQ² ≈ 10^16 —
+    // overflow-safe in BIGINT at any corpus where degree ≤ 10^6.
     QueryDef(
       "graph_hits",
       (s, dir) => {
@@ -220,19 +232,20 @@ object Graph {
           val touched = pairs.select(col("u").as("doc_id"))
             .union(pairs.select(col("v").as("doc_id")))
             .distinct().transform(Tables.materialize)
+          // one half-step: score c of each doc = the rescaled sum of x's
+          // score (its last column) over the edges `from` -> `to` into it
+          def half(x: DataFrame, from: String, to: String, c: String): DataFrame = {
+            val xc = x.columns.last
+            val sums = pairs.join(x.select(col("doc_id").as(from), col(xc)), from)
+              .groupBy(col(to).as("doc_id")).agg(sum(col(xc)).as(c))
+            rescale(touched.join(sums, Seq("doc_id"), "left")
+              .select(col("doc_id"), coalesce(col(c), lit(0L)).as(c)), c)
+          }
           var h = touched.select(col("doc_id"), lit(HitsQ).as("h"))
           var a: DataFrame = null
           for (_ <- 0 until HitsIters) {
-            val aSum = pairs
-              .join(h.select(col("doc_id").as("u"), col("h")), "u")
-              .groupBy(col("v").as("doc_id")).agg(sum(col("h")).as("a"))
-            a = rescale(touched.join(aSum, Seq("doc_id"), "left")
-              .select(col("doc_id"), coalesce(col("a"), lit(0L)).as("a")), "a")
-            val hSum = pairs
-              .join(a.select(col("doc_id").as("v"), col("a")), "v")
-              .groupBy(col("u").as("doc_id")).agg(sum(col("a")).as("h"))
-            h = rescale(touched.join(hSum, Seq("doc_id"), "left")
-              .select(col("doc_id"), coalesce(col("h"), lit(0L)).as("h")), "h")
+            a = half(h, "u", "v", "a")
+            h = half(a, "v", "u", "h")
           }
           docs.join(a.join(h, "doc_id"), Seq("doc_id"), "left")
             .select(col("doc_id"),
@@ -245,45 +258,7 @@ object Graph {
             .orderBy("doc_id")
         }
       },
-      Some(s"""WITH ${Dedup.JaccardPairsCte},
-                 nd AS MATERIALIZED (SELECT doc_id FROM documents),
-                 e AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM pairs),
-                 h0 AS MATERIALIZED (SELECT doc_id, CAST($HitsQ AS BIGINT) AS h FROM nd),
-                 a1r AS MATERIALIZED (SELECT e.v AS doc_id, sum(h0.h) AS a
-                         FROM e JOIN h0 ON h0.doc_id = e.u GROUP BY e.v),
-                 a1f AS MATERIALIZED (SELECT nd.doc_id, COALESCE(a1r.a, 0) AS a
-                         FROM nd LEFT JOIN a1r USING (doc_id)),
-                 a1 AS MATERIALIZED (SELECT doc_id,
-                          (a * $HitsQ) // (SELECT max(a) FROM a1f) AS a
-                        FROM a1f),
-                 h1r AS MATERIALIZED (SELECT e.u AS doc_id, sum(a1.a) AS h
-                         FROM e JOIN a1 ON a1.doc_id = e.v GROUP BY e.u),
-                 h1f AS MATERIALIZED (SELECT nd.doc_id, COALESCE(h1r.h, 0) AS h
-                         FROM nd LEFT JOIN h1r USING (doc_id)),
-                 h1 AS MATERIALIZED (SELECT doc_id,
-                          (h * $HitsQ) // (SELECT max(h) FROM h1f) AS h
-                        FROM h1f),
-                 a2r AS MATERIALIZED (SELECT e.v AS doc_id, sum(h1.h) AS a
-                         FROM e JOIN h1 ON h1.doc_id = e.u GROUP BY e.v),
-                 a2f AS MATERIALIZED (SELECT nd.doc_id, COALESCE(a2r.a, 0) AS a
-                         FROM nd LEFT JOIN a2r USING (doc_id)),
-                 a2 AS MATERIALIZED (SELECT doc_id,
-                          (a * $HitsQ) // (SELECT max(a) FROM a2f) AS a
-                        FROM a2f),
-                 h2r AS MATERIALIZED (SELECT e.u AS doc_id, sum(a2.a) AS h
-                         FROM e JOIN a2 ON a2.doc_id = e.v GROUP BY e.u),
-                 h2f AS MATERIALIZED (SELECT nd.doc_id, COALESCE(h2r.h, 0) AS h
-                         FROM nd LEFT JOIN h2r USING (doc_id)),
-                 h2 AS MATERIALIZED (SELECT doc_id,
-                          (h * $HitsQ) // (SELECT max(h) FROM h2f) AS h
-                        FROM h2f)
-               SELECT a2.doc_id,
-                 CAST(a2.a AS BIGINT) AS auth_q,
-                 CAST(h2.h AS BIGINT) AS hub_q,
-                 CAST(a2.a AS DOUBLE) / $HitsQ.0 AS authority,
-                 CAST(h2.h AS DOUBLE) / $HitsQ.0 AS hub
-               FROM a2 JOIN h2 USING (doc_id)
-               ORDER BY doc_id""")),
+      Some(HitsOracleSql)),
 
     // Triangle enumeration over the near-dup graph — the clustering-
     // coefficient / community-density primitive. Edges arrive oriented
@@ -330,9 +305,8 @@ object Graph {
       "graph_labelprop",
       (s, dir) => {
         // lpaLabels materializes the edges
-        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
         val docs = Tables.load(s, dir, "documents").select("doc_id")
-        val lbl = lpaLabels(docs, edges)
+        val lbl = lpaLabels(docs, nearDupGraph(s, dir))
         val sizes = lbl.groupBy("label")
           .agg(count(lit(1)).as("community_size"))
         lbl.join(sizes, "label")
@@ -355,46 +329,9 @@ object Graph {
     // common neighbor never materialize.
     QueryDef(
       "graph_neighbor_sim",
-      (s, dir) => {
-        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .transform(Tables.materialize)
-        val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-        val wedges = edges.toDF("z", "a")
-          .join(deg.select(col("u").as("z"), col("deg").as("deg_z")), "z")
-          .join(edges.toDF("z", "b"), "z")
-          .filter(col("a") < col("b"))
-        val scored = wedges.groupBy("a", "b").agg(
-          count(lit(1)).as("common_neighbors"),
-          sum(expr("1000000000 div deg_z")).as("ra_index_q"))
-        scored
-          .join(deg.select(col("u").as("a"), col("deg").as("deg_a")), "a")
-          .join(deg.select(col("u").as("b"), col("deg").as("deg_b")), "b")
-          .select(col("a").as("a_id"), col("b").as("b_id"),
-            col("common_neighbors"), col("ra_index_q"),
-            (col("common_neighbors").cast("double") /
-              (col("deg_a") + col("deg_b") - col("common_neighbors"))
-                .cast("double")).as("nbr_jaccard"))
-          .orderBy("a_id", "b_id")
-      },
-      Some(s"""WITH ${Dedup.JaccardPairsCte},
-                 ${Dedup.undirectedSql("e")},
-                 deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-                 w AS (
-                   SELECT e1.v AS a, e2.v AS b, d.deg AS deg_z
-                   FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-                        JOIN deg d ON d.u = e1.u),
-                 sc AS (
-                   SELECT a, b, count(*) AS common_neighbors,
-                     CAST(sum(1000000000 // deg_z) AS BIGINT) AS ra_index_q
-                   FROM w GROUP BY a, b)
-               SELECT sc.a AS a_id, sc.b AS b_id,
-                 sc.common_neighbors, sc.ra_index_q,
-                 CAST(sc.common_neighbors AS DOUBLE)
-                   / CAST(da.deg + db.deg - sc.common_neighbors AS DOUBLE)
-                   AS nbr_jaccard
-               FROM sc JOIN deg da ON da.u = sc.a
-                       JOIN deg db ON db.u = sc.b
-               ORDER BY a_id, b_id"""),
+      (s, dir) =>
+        neighborSim(nearDupGraph(s, dir).transform(Tables.materialize), None),
+      Some(neighborSimSql(None)),
       // bench=false: the wedge self-join's shuffle is Σdeg(z)² — the
       // suite's highest measured growth exponent (0.69 at r6, SCALE.md's
       // watch row) and the first shape to blow up if corpora densify.
@@ -421,37 +358,9 @@ object Graph {
     // integers throughout; the oracle replays the identical cap.
     QueryDef(
       "graph_neighbor_sim_capped",
-      (s, dir) => {
-        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .transform(Tables.materialize)
-        neighborSimCapped(edges)
-      },
-      Some(s"""WITH ${Dedup.JaccardPairsCte},
-                 ${Dedup.undirectedSql("e")},
-                 deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-                 cap AS (
-                   SELECT u, v FROM (
-                     SELECT u, v,
-                       row_number() OVER (PARTITION BY u ORDER BY v) AS rn
-                     FROM e) t
-                   WHERE rn <= $NbrCapF),
-                 rdeg AS (SELECT v, count(*) AS rdeg FROM cap GROUP BY v),
-                 w AS (
-                   SELECT e1.v AS a, e2.v AS b, d.deg AS deg_z
-                   FROM cap e1 JOIN cap e2 ON e1.u = e2.u AND e1.v < e2.v
-                        JOIN deg d ON d.u = e1.u),
-                 sc AS (
-                   SELECT a, b, count(*) AS common_neighbors,
-                     CAST(sum(1000000000 // deg_z) AS BIGINT) AS ra_index_q
-                   FROM w GROUP BY a, b)
-               SELECT sc.a AS a_id, sc.b AS b_id,
-                 sc.common_neighbors, sc.ra_index_q,
-                 CAST(sc.common_neighbors AS DOUBLE)
-                   / CAST(da.rdeg + db.rdeg - sc.common_neighbors AS DOUBLE)
-                   AS nbr_jaccard
-               FROM sc JOIN rdeg da ON da.v = sc.a
-                       JOIN rdeg db ON db.v = sc.b
-               ORDER BY a_id, b_id""")),
+      (s, dir) => neighborSim(
+        nearDupGraph(s, dir).transform(Tables.materialize), Some(NbrCapF)),
+      Some(neighborSimSql(Some(NbrCapF)))),
 
     // Deterministic random walks over the near-dup graph — the
     // node2vec/DeepWalk sampling primitive, made oracle-replayable by
@@ -466,8 +375,7 @@ object Graph {
     QueryDef(
       "graph_random_walk",
       (s, dir) => {
-        val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .transform(Tables.materialize)
+        val edges = nearDupGraph(s, dir).transform(Tables.materialize)
         val starts = edges.select(col("u").as("doc_id")).distinct()
         var walk = starts.select(col("doc_id"), col("doc_id").as("cur"))
         for (k <- 1 to WalkSteps) {
@@ -508,8 +416,7 @@ object Graph {
         // the edge set is materialized: `keep` is referenced by both
         // semi-joins and `edges` by three subtrees, so an un-checkpointed
         // edge set multiplies the plan ~3x per round
-        var edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-          .transform(Tables.materialize)
+        var edges = nearDupGraph(s, dir).transform(Tables.materialize)
         // rounds stay LAZY over the checkpointed edge blocks (r14:
         // per-round localCheckpoints were tried and measured worse —
         // three extra eager barriers for a plan whose 3-deep nesting
@@ -518,8 +425,8 @@ object Graph {
         for (_ <- 1 to KcoreRounds) {
           edges = kcorePeelRound(edges, K)
         }
-        edges.groupBy("u").agg(count(lit(1)).as("core_degree"))
-          .select(col("u").as("doc_id"), col("core_degree"))
+        degrees(edges)
+          .select(col("u").as("doc_id"), col("deg").as("core_degree"))
           .orderBy("doc_id")
       },
       Some(KcoreOracleSql)),
@@ -538,31 +445,13 @@ object Graph {
     QueryDef(
       "graph_bfs_2hop",
       (s, dir) => {
-        // Spark guards recursive CTEs with a cumulative-row safety valve
-        // (spark.sql.cteRecursionRowLimit, default 10^6) against
-        // unbounded recursion. THIS recursion is hop-bounded (hop < 2 in
-        // the recursive member), so its total row count is at most
-        // nodes x the 2-hop neighborhood size — finite by construction —
-        // and the sf0.1 corpus's duplicate families already exceed the
-        // default (first seen as a bench-only failure: sf0.01 fit under
-        // 10^6, sf0.1 did not). The valve is raised on a CLONED session
-        // (shared SparkContext, isolated SQLConf + temp-view catalog):
-        // the limit must still be raised when the lazy DataFrame
-        // actually executes, so a set-and-restore around plan
-        // construction would break the query — while a raise on the
-        // caller's session would weaken the runaway-recursion valve for
-        // every later query sharing it (round-5 advice). The returned
-        // DataFrame is bound to the clone, so it executes under the
-        // raised limit; the caller's session is untouched.
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
+        val s2 = recursionSession(s)
         // the symmetric edge set is MATERIALIZED before the recursion
         // (r14): a plain temp view is re-planned at every reference, so
         // each recursion level re-ran the entire posting-join pair
         // generator; the checkpointed view makes every frontier join a
         // block read
-        Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
-          .transform(Tables.materialize)
+        nearDupGraph(s2, dir).transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_edges")
         // DISTINCT in the recursive member: the frontier is a SET of
         // (src, node) per hop, not a bag of paths — on a dense family
@@ -571,17 +460,7 @@ object Graph {
         // the deduped frontier is <= nodes^2 per hop. min(hop) over the
         // union of per-hop sets is unchanged, so the oracle hash is
         // identical on every corpus (degenerate-corpus sweep, r8).
-        s2.sql(s"""
-          WITH RECURSIVE
-          reach(src, node, hop) AS (
-            SELECT u, u, 0 FROM (SELECT DISTINCT u FROM graft_bfs_edges)
-            UNION ALL
-            SELECT DISTINCT r.src, e2.v, r.hop + 1
-            FROM reach r JOIN graft_bfs_edges e2 ON e2.u = r.node
-            WHERE r.hop < $BfsHops)
-          SELECT src, node, CAST(min(hop) AS BIGINT) AS dist
-          FROM reach GROUP BY src, node
-          ORDER BY src, node""")
+        s2.sql(s"WITH RECURSIVE ${reachSql("graft_bfs_edges", distinct = true)}")
       },
       // bench=false: the 2-hop reach SET is a reporting query, not a
       // pipeline stage (SCALE.md classifies closures so) — its output is
@@ -592,19 +471,8 @@ object Graph {
       // (per-source bounded expansion, output ∝ nodes).
       bench = false,
       oracle = Some(s"""WITH RECURSIVE ${Dedup.JaccardPairsCte},
-            e AS MATERIALIZED (
-              SELECT a_id AS u, b_id AS v FROM pairs
-              UNION ALL
-              SELECT b_id, a_id FROM pairs),
-            reach(src, node, hop) AS (
-              SELECT u, u, 0 FROM (SELECT DISTINCT u FROM e)
-              UNION ALL
-              SELECT DISTINCT r.src, e2.v, r.hop + 1
-              FROM reach r JOIN e e2 ON e2.u = r.node
-              WHERE r.hop < $BfsHops)
-          SELECT src, node, CAST(min(hop) AS BIGINT) AS dist
-          FROM reach GROUP BY src, node
-          ORDER BY src, node""")),
+            ${Dedup.undirectedSql("e")},
+            ${reachSql("e", distinct = true)}""")),
 
     // Bounded 2-hop expansion — the PIPELINE form of the closure: each
     // node expands only its F=4 smallest-id neighbors per hop (the
@@ -620,53 +488,21 @@ object Graph {
     QueryDef(
       "graph_bfs_2hop_capped",
       (s, dir) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
+        val s2 = recursionSession(s)
         // the CAPPED adjacency is MATERIALIZED before the recursion
         // (r14): a plain temp view is re-planned at every reference, so
         // each recursion level re-ran the pair generator AND the
         // per-u cap window; the checkpointed view makes every frontier
         // join a block read.
-        // Same relation: symmetric edges → row_number per u ordered by
-        // v → rn <= F, exactly the former cap CTE.
-        val capW = Window.partitionBy("u").orderBy("v")
-        Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s2, dir)))
-          .withColumn("rn", row_number().over(capW))
-          .filter(col("rn") <= BfsCapF).select("u", "v")
+        cappedAdjacency(nearDupGraph(s2, dir), BfsCapF)
           .transform(Tables.materialize)
           .createOrReplaceTempView("graft_bfs_cap")
-        s2.sql(s"""
-          WITH RECURSIVE
-          reach(src, node, hop) AS (
-            SELECT u, u, 0 FROM (SELECT DISTINCT u FROM graft_bfs_cap)
-            UNION ALL
-            SELECT r.src, c.v, r.hop + 1
-            FROM reach r JOIN graft_bfs_cap c ON c.u = r.node
-            WHERE r.hop < $BfsHops)
-          SELECT src, node, CAST(min(hop) AS BIGINT) AS dist
-          FROM reach GROUP BY src, node
-          ORDER BY src, node""")
+        s2.sql(s"WITH RECURSIVE ${reachSql("graft_bfs_cap", distinct = false)}")
       },
       Some(s"""WITH RECURSIVE ${Dedup.JaccardPairsCte},
-            e AS MATERIALIZED (
-              SELECT a_id AS u, b_id AS v FROM pairs
-              UNION ALL
-              SELECT b_id, a_id FROM pairs),
-            cap AS MATERIALIZED (
-              SELECT u, v FROM (
-                SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY v)
-                  AS rn
-                FROM e) t
-              WHERE rn <= $BfsCapF),
-            reach(src, node, hop) AS (
-              SELECT u, u, 0 FROM (SELECT DISTINCT u FROM cap)
-              UNION ALL
-              SELECT r.src, c.v, r.hop + 1
-              FROM reach r JOIN cap c ON c.u = r.node
-              WHERE r.hop < $BfsHops)
-          SELECT src, node, CAST(min(hop) AS BIGINT) AS dist
-          FROM reach GROUP BY src, node
-          ORDER BY src, node""")),
+            ${Dedup.undirectedSql("e")},
+            ${cappedSql("cap", BfsCapF)},
+            ${reachSql("cap", distinct = false)}""")),
 
     // Personalized PageRank — rank relative to a SEED SET rather than the
     // uniform prior: restart mass goes only to seeds (doc_id % 20 == 0,
@@ -728,24 +564,17 @@ object Graph {
         val docs = Tables.load(s, dir, "documents").select("doc_id")
         val lbl = Tables.materialize(lpaLabels(docs, edges))
         val mDf = pairs.agg(count(lit(1)).as("m"))
-        val intraDf = pairs
-          .join(lbl.select(col("doc_id").as("a_id"), col("label").as("la")),
-            "a_id")
-          .join(lbl.select(col("doc_id").as("b_id"), col("label").as("lb")),
-            "b_id")
+        val intraDf = labeledPairs(pairs, lbl)
           .filter(col("la") === col("lb"))
           .agg(count(lit(1)).as("intra_edges"))
-        val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
         // the degree-square sum accumulates in DECIMAL(38,0) (exact to
         // ~1e38); the BIGINT downcast for the report is GUARDED so that
         // past Long.Max the query THROWS in any ANSI mode — a silent
         // non-ANSI null here would diverge from the DuckDB oracle's
         // erroring HUGEINT->BIGINT cast (round-5 advice)
-        val s2 = deg
-          .join(lbl.select(col("doc_id").as("u"), col("label")), "u")
-          .groupBy("label").agg(sum(col("deg")).as("d_c"))
+        val s2 = communityVolume(edges, lbl)
           .agg(sum(expr(
-            "CAST(d_c AS DECIMAL(19,0)) * CAST(d_c AS DECIMAL(19,0))"))
+            "CAST(volume AS DECIMAL(19,0)) * CAST(volume AS DECIMAL(19,0))"))
             .as("sq_dec"))
           .select(expr(
             """CASE WHEN sq_dec IS NULL OR sq_dec <= 9223372036854775807
@@ -788,21 +617,13 @@ object Graph {
         // TWICE (la side + lb side), and Spark's subtree reuse does not
         // fire across a self-union — without the checkpoint the
         // pairs×labels×labels join runs twice (plan-audited)
-        val labeled = pairs
-          .join(lbl.select(col("doc_id").as("a_id"), col("label").as("la")),
-            "a_id")
-          .join(lbl.select(col("doc_id").as("b_id"), col("label").as("lb")),
-            "b_id")
+        val labeled = labeledPairs(pairs, lbl)
           .filter(col("la") =!= col("lb"))
           .transform(Tables.materialize)
         val cut = labeled.select(col("la").as("community"))
           .union(labeled.select(col("lb").as("community")))
           .groupBy("community").agg(count(lit(1)).as("cut_edges"))
-        val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-        val vol = deg
-          .join(lbl.select(col("doc_id").as("u"), col("label")), "u")
-          .groupBy("label").agg(sum(col("deg")).as("volume"))
-          .withColumnRenamed("label", "community")
+        val vol = communityVolume(edges, lbl)
         val tot = vol.agg(sum(col("volume")).as("vol_total"))
         vol.join(cut, Seq("community"), "left")
           .crossJoin(broadcast(tot))
@@ -819,6 +640,134 @@ object Graph {
       Some(ConductanceOracleSql))
   )
 
+  /** The undirected near-dup graph (u, v), both orientations of every
+    * Dedup.jaccardEdges pair; its oracle form is Dedup.undirectedSql's
+    * `e` over Dedup.JaccardPairsCte. */
+  private def nearDupGraph(s: SparkSession, dir: String): DataFrame =
+    Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
+
+  /** (u, deg): each vertex's edge count in an undirected (u, v) frame.
+    * Its oracle form is [[DegSql]]. */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.groupBy("u").agg(count(lit(1)).as("deg"))
+
+  /** The degree CTE deg(u, deg) over the oracle's `e` (a literal: the
+    * oracles built while `defs` initializes read it). */
+  private final val DegSql = "deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u)"
+
+  /** Each vertex's `f` smallest-id neighbors in an undirected (u, v)
+    * frame: one per-u window, so the expansion from any vertex is
+    * bounded by `f`. Its oracle form is [[cappedSql]]. */
+  private def cappedAdjacency(edges: DataFrame, f: Int): DataFrame =
+    edges.withColumn("rn", row_number().over(Window.partitionBy("u").orderBy("v")))
+      .filter(col("rn") <= f).select("u", "v")
+
+  /** The SQL mirror of [[cappedAdjacency]] over the oracle's `e`: the
+    * MATERIALIZED CTE `rel`(u, v). */
+  private def cappedSql(rel: String, f: Int): String =
+    s"""$rel AS MATERIALIZED (
+          SELECT u, v FROM (
+            SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY v) AS rn
+            FROM e) t
+          WHERE rn <= $f)"""
+
+  /** graph_neighbor_sim over an undirected (u, v) frame, and with a
+    * `cap` its pipeline form graph_neighbor_sim_capped (see that
+    * QueryDef's comment for the reverse-cap Jaccard and its (0,1]
+    * argument). The wedges run over the adjacency, capped or not; the
+    * RA weight keeps z's true degree. The Jaccard's endpoint sizes are
+    * |R(x)|, x's count in the adjacency's v column: with no cap R(x) is
+    * x's neighbor set, so the degree relation serves both. Its oracle
+    * form is [[neighborSimSql]]. */
+  private[graft] def neighborSim(edges: DataFrame, cap: Option[Int]): DataFrame = {
+    val deg = degrees(edges)
+    val adj = cap.fold(edges)(cappedAdjacency(edges, _))
+    // (x, |R(x)|) and its column names
+    val (ends, x, dx) = cap.fold((deg, "u", "deg"))(_ =>
+      (adj.groupBy("v").agg(count(lit(1)).as("rdeg")), "v", "rdeg"))
+    val wedges = adj.toDF("z", "a")
+      .join(deg.select(col("u").as("z"), col("deg").as("deg_z")), "z")
+      .join(adj.toDF("z", "b"), "z")
+      .filter(col("a") < col("b"))
+    val scored = wedges.groupBy("a", "b").agg(
+      count(lit(1)).as("common_neighbors"),
+      sum(expr("1000000000 div deg_z")).as("ra_index_q"))
+    scored
+      .join(ends.select(col(x).as("a"), col(dx).as(s"${dx}_a")), "a")
+      .join(ends.select(col(x).as("b"), col(dx).as(s"${dx}_b")), "b")
+      .select(col("a").as("a_id"), col("b").as("b_id"),
+        col("common_neighbors"), col("ra_index_q"),
+        (col("common_neighbors").cast("double") /
+          (col(s"${dx}_a") + col(s"${dx}_b") - col("common_neighbors"))
+            .cast("double")).as("nbr_jaccard"))
+      .orderBy("a_id", "b_id")
+  }
+
+  /** The SQL mirror of [[neighborSim]]. The endpoint sizes come from
+    * the CTE `dx`(x, dx): deg(u, deg), or with a cap rdeg(v, rdeg). */
+  private def neighborSimSql(cap: Option[Int]): String = {
+    val (adj, capCtes, x, dx) = cap.fold(("e", "", "u", "deg"))(f =>
+      ("cap", s"""${cappedSql("cap", f)},
+          rdeg AS (SELECT v, count(*) AS rdeg FROM cap GROUP BY v),""", "v", "rdeg"))
+    s"""WITH ${Dedup.JaccardPairsCte},
+          ${Dedup.undirectedSql("e")},
+          $DegSql,
+          $capCtes
+          w AS (
+            SELECT e1.v AS a, e2.v AS b, d.deg AS deg_z
+            FROM $adj e1 JOIN $adj e2 ON e1.u = e2.u AND e1.v < e2.v
+                 JOIN deg d ON d.u = e1.u),
+          sc AS (
+            SELECT a, b, count(*) AS common_neighbors,
+              CAST(sum(1000000000 // deg_z) AS BIGINT) AS ra_index_q
+            FROM w GROUP BY a, b)
+        SELECT sc.a AS a_id, sc.b AS b_id,
+          sc.common_neighbors, sc.ra_index_q,
+          CAST(sc.common_neighbors AS DOUBLE)
+            / CAST(da.$dx + db.$dx - sc.common_neighbors AS DOUBLE)
+            AS nbr_jaccard
+        FROM sc JOIN $dx da ON da.$x = sc.a
+                JOIN $dx db ON db.$x = sc.b
+        ORDER BY a_id, b_id"""
+  }
+
+  /** A clone of `s` for a hop-bounded recursive CTE. Spark guards
+    * recursive CTEs with a cumulative-row safety valve
+    * (spark.sql.cteRecursionRowLimit, default 10^6) against unbounded
+    * recursion. [[reachSql]]'s recursion is hop-bounded, so its total
+    * row count is at most nodes x the 2-hop neighborhood size — finite
+    * by construction — and the sf0.1 corpus's duplicate families already
+    * exceed the default (first seen as a bench-only failure: sf0.01 fit
+    * under 10^6, sf0.1 did not). The valve is raised on a CLONED session
+    * (shared SparkContext, isolated SQLConf + temp-view catalog): the
+    * limit must still be raised when the lazy DataFrame actually
+    * executes, so a set-and-restore around plan construction would break
+    * the query — while a raise on the caller's session would weaken the
+    * runaway-recursion valve for every later query sharing it (round-5
+    * advice). A DataFrame built on the clone executes under the raised
+    * limit; the caller's session is untouched. */
+  private def recursionSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
+    s2
+  }
+
+  /** Multi-source BFS over the (u, v) relation `rel`, up to BfsHops hops:
+    * the recursive CTE reach(src, node, hop), then each (src, node)'s
+    * shortest distance. `distinct` makes each hop's frontier a set. The
+    * text follows a caller's WITH RECURSIVE: Spark runs it over a temp
+    * view, and the oracle replays it over its CTE. */
+  private def reachSql(rel: String, distinct: Boolean): String =
+    s"""reach(src, node, hop) AS (
+          SELECT u, u, 0 FROM (SELECT DISTINCT u FROM $rel)
+          UNION ALL
+          SELECT ${if (distinct) "DISTINCT " else ""}r.src, e.v, r.hop + 1
+          FROM reach r JOIN $rel e ON e.u = r.node
+          WHERE r.hop < $BfsHops)
+        SELECT src, node, CAST(min(hop) AS BIGINT) AS dist
+        FROM reach GROUP BY src, node
+        ORDER BY src, node"""
+
   /** The quantized-integer rank loop graph_pagerank and graph_ppr share:
     * `Iters` rounds of r(v) = restart(v) + Σ over edges u→v of
     * (85 · r(u)) div (100 · deg(u)) on the undirected near-dup graph,
@@ -831,10 +780,9 @@ object Graph {
     * quantized rank and its double value, over every document. */
   private def ranked(s: SparkSession, dir: String, init: Column,
       restart: Column, out: String): DataFrame = {
-    val edges = Dedup.undirected(Dedup.jaccardEdges(Dedup.shingled(s, dir)))
-    val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
+    val edges = nearDupGraph(s, dir)
     // (u, v, deg_u) is re-read every round: materialize once
-    val eD = Tables.materialize(edges.join(deg, "u"))
+    val eD = Tables.materialize(edges.join(degrees(edges), "u"))
     val touched = eD.select(col("u").as("doc_id")).distinct()
       .transform(Tables.materialize)
     var r = touched.select(col("doc_id"), init.as("r"))
@@ -860,96 +808,15 @@ object Graph {
       .orderBy("doc_id")
   }
 
-  /** DuckDB replay of the synchronous LPA rounds — generated like
-    * PagerankOracleSql so round count and tie-break can never drift. */
-  private lazy val LabelPropOracleSql: String =
-    s"""WITH ${Dedup.JaccardPairsCte},
-          ${Dedup.undirectedSql("e")},
-          $LpaRoundsCte
-        SELECT f.doc_id, f.label AS community,
-          sz.community_size
-        FROM l$Iters f JOIN (
-          SELECT label, CAST(count(*) AS BIGINT) AS community_size
-          FROM l$Iters GROUP BY label) sz ON sz.label = f.label
-        ORDER BY f.doc_id"""
-
-  /** DuckDB replay of the modularity scorecard over the SAME LPA rounds
-    * CTE the labelprop oracle uses. The closing arithmetic is written
-    * with the identical operand order as the Spark expr (two divisions,
-    * one left-associated product, one subtraction — all IEEE double), so
-    * the score matches bit-for-bit. */
-  private lazy val ModularityOracleSql: String =
-    s"""WITH ${Dedup.JaccardPairsCte},
-          ${Dedup.undirectedSql("e")},
-          $LpaRoundsCte,
-          deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-          mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs),
-          intra AS (
-            SELECT CAST(count(*) AS BIGINT) AS intra_edges
-            FROM pairs p
-            JOIN l$Iters x ON x.doc_id = p.a_id
-            JOIN l$Iters y ON y.doc_id = p.b_id
-            WHERE x.label = y.label),
-          dc AS (
-            SELECT l.label, CAST(sum(d.deg) AS BIGINT) AS d_c
-            FROM deg d JOIN l$Iters l ON l.doc_id = d.u
-            GROUP BY l.label),
-          s2 AS (
-            SELECT CAST(sum(CAST(d_c AS HUGEINT) * d_c) AS BIGINT)
-              AS sum_deg_sq
-            FROM dc)
-        SELECT mm.m, intra.intra_edges, s2.sum_deg_sq,
-          CAST(intra.intra_edges AS DOUBLE) / CAST(mm.m AS DOUBLE)
-            - CAST(s2.sum_deg_sq AS DOUBLE)
-              / (4.0 * CAST(mm.m AS DOUBLE) * CAST(mm.m AS DOUBLE))
-            AS modularity
-        FROM mm, intra, s2"""
-
-  /** DuckDB replay of the conductance scorecard over the SAME LPA
-    * rounds CTE — labels, cut, volume, and the guarded closing division
-    * in the identical operand order. */
-  private lazy val ConductanceOracleSql: String =
-    s"""WITH ${Dedup.JaccardPairsCte},
-          ${Dedup.undirectedSql("e")},
-          $LpaRoundsCte,
-          lab AS (
-            SELECT p.a_id, p.b_id, x.label AS la, y.label AS lb
-            FROM pairs p
-            JOIN l$Iters x ON x.doc_id = p.a_id
-            JOIN l$Iters y ON y.doc_id = p.b_id
-            WHERE x.label != y.label),
-          cut AS (
-            SELECT community, CAST(count(*) AS BIGINT) AS cut_edges
-            FROM (SELECT la AS community FROM lab
-                  UNION ALL SELECT lb FROM lab)
-            GROUP BY community),
-          deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-          vol AS (
-            SELECT l.label AS community,
-              CAST(sum(d.deg) AS BIGINT) AS volume
-            FROM deg d JOIN l$Iters l ON l.doc_id = d.u
-            GROUP BY l.label),
-          tot AS (SELECT CAST(sum(volume) AS BIGINT) AS vol_total FROM vol)
-        SELECT v.community, v.volume,
-          COALESCE(c.cut_edges, 0) AS cut_edges, tot.vol_total,
-          CASE WHEN least(v.volume, tot.vol_total - v.volume) > 0
-            THEN CAST(COALESCE(c.cut_edges, 0) AS DOUBLE)
-                 / CAST(least(v.volume, tot.vol_total - v.volume) AS DOUBLE)
-          END AS conductance
-        FROM vol v LEFT JOIN cut c ON c.community = v.community
-        CROSS JOIN tot
-        ORDER BY v.community"""
-
-  /** DuckDB replay of the quantized iterations — generated so iteration
-    * count and arithmetic can never drift from the Spark loop. `//` and
-    * Spark's `div` agree on positive operands (truncation); sums are cast
-    * back to BIGINT because DuckDB widens integer sums to HUGEINT. */
-  private lazy val PagerankOracleSql: String = {
+  /** The SQL mirror of [[ranked]]: `Iters` rounds over every document
+    * from r0 = `init`, each r = `restart` + the damped contributions
+    * along `e`, with `init` and `restart` expressions over doc_id. `//`
+    * and Spark's `div` agree on positive operands (truncation); sums are
+    * cast back to BIGINT because DuckDB widens integer sums to HUGEINT. */
+  private def rankedSql(init: String, restart: String, out: String): String = {
     val iters = (1 to Iters).map { i =>
       s"""r$i AS MATERIALIZED (
-            SELECT doc.doc_id,
-              (15 * $Q // (100 * (SELECT count(*) FROM documents)))
-                + COALESCE(c.cs, 0) AS r
+            SELECT doc_id, ($restart) + COALESCE(c.cs, 0) AS r
             FROM documents doc LEFT JOIN (
               SELECT e.v, CAST(sum((85 * r.r) // (100 * dg.deg)) AS BIGINT) AS cs
               FROM e JOIN deg dg ON e.u = dg.u
@@ -958,15 +825,72 @@ object Graph {
     }.mkString(",\n")
     s"""WITH ${Dedup.JaccardPairsCte},
           ${Dedup.undirectedSql("e")},
-          deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-          r0 AS MATERIALIZED (
-            SELECT doc_id,
-              $Q // (SELECT count(*) FROM documents) AS r
-            FROM documents),
+          $DegSql,
+          r0 AS MATERIALIZED (SELECT doc_id, $init AS r FROM documents),
           $iters
-        SELECT doc_id, CAST(r AS BIGINT) AS pagerank_q,
-          CAST(r AS DOUBLE) / ${Q.toDouble} AS pagerank
+        SELECT doc_id, CAST(r AS BIGINT) AS ${out}_q,
+          CAST(r AS DOUBLE) / ${Q.toDouble} AS $out
         FROM r$Iters ORDER BY doc_id"""
+  }
+
+  /** DuckDB replay of the quantized iterations — generated so iteration
+    * count and arithmetic can never drift from the Spark loop. */
+  private lazy val PagerankOracleSql: String = {
+    val n = "(SELECT count(*) FROM documents)"
+    rankedSql(init = s"$Q // $n", restart = s"15 * $Q // (100 * $n)", "pagerank")
+  }
+
+  /** DuckDB replay of the seeded iterations — generated like
+    * PagerankOracleSql so iteration count, seed rule, and integer
+    * arithmetic can never drift from the Spark loop. */
+  private lazy val PprOracleSql: String = {
+    val seedCount =
+      s"(SELECT count(*) FROM documents WHERE doc_id % $PprSeedMod = 0)"
+    // COALESCE around the seed-share divisions: when the corpus has no
+    // seeds the predicate never selects the THEN branch, so the NULL
+    // that DuckDB's `$Q // 0` produces can only leak if an engine folds
+    // the branch eagerly — the coalesce pins both readings to the same
+    // all-zero ranks the Spark guard emits (nSeeds==0 → seedShare=0L).
+    // On any corpus with ≥1 seed the divisions are non-NULL and the
+    // coalesce is an identity, so healthy hashes are unchanged (r9
+    // advice, Graph.scala graph_ppr seedless guard).
+    def seeded(share: String) =
+      s"CASE WHEN doc_id % $PprSeedMod = 0 THEN COALESCE($share, 0) ELSE 0 END"
+    rankedSql(init = seeded(s"$Q // $seedCount"),
+      restart = seeded(s"15 * $Q // (100 * $seedCount)"), "ppr")
+  }
+
+  /** DuckDB replay of graph_hits, generated from HitsIters like the other
+    * iterative oracles. The half-step `x` sums the previous score `prev`
+    * along `e` (`from` -> `to`), fills 0 over every document and
+    * max-norm rescales, exactly as the Spark loop's `half`. */
+  private lazy val HitsOracleSql: String = {
+    def half(x: String, prev: String, from: String, to: String): String = {
+      val (c, pc) = (x.take(1), prev.take(1))
+      s"""${x}r AS MATERIALIZED (SELECT e.$to AS doc_id, sum($prev.$pc) AS $c
+              FROM e JOIN $prev ON $prev.doc_id = e.$from GROUP BY e.$to),
+          ${x}f AS MATERIALIZED (SELECT nd.doc_id, COALESCE(${x}r.$c, 0) AS $c
+              FROM nd LEFT JOIN ${x}r USING (doc_id)),
+          $x AS MATERIALIZED (SELECT doc_id,
+              ($c * $HitsQ) // (SELECT max($c) FROM ${x}f) AS $c
+            FROM ${x}f)"""
+    }
+    val iters = (1 to HitsIters).map { i =>
+      s"${half(s"a$i", s"h${i - 1}", "u", "v")},\n${half(s"h$i", s"a$i", "v", "u")}"
+    }.mkString(",\n")
+    val (a, h) = (s"a$HitsIters", s"h$HitsIters")
+    s"""WITH ${Dedup.JaccardPairsCte},
+          nd AS MATERIALIZED (SELECT doc_id FROM documents),
+          e AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM pairs),
+          h0 AS MATERIALIZED (SELECT doc_id, CAST($HitsQ AS BIGINT) AS h FROM nd),
+          $iters
+        SELECT $a.doc_id,
+          CAST($a.a AS BIGINT) AS auth_q,
+          CAST($h.h AS BIGINT) AS hub_q,
+          CAST($a.a AS DOUBLE) / $HitsQ.0 AS authority,
+          CAST($h.h AS DOUBLE) / $HitsQ.0 AS hub
+        FROM $a JOIN $h USING (doc_id)
+        ORDER BY doc_id"""
   }
 
   /** One synchronous k-core peel round over an undirected (u, v) edge
@@ -975,42 +899,11 @@ object Graph {
     * (un-checkpointed rounds tripled the plan per round) while PlanSpec
     * still asserts the round's semi-join shape directly. */
   private[graft] def kcorePeelRound(edges: DataFrame, k: Int): DataFrame = {
-    val keep = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= k).select("u")
+    val keep = degrees(edges).filter(col("deg") >= k).select("u")
     edges
       .join(keep, Seq("u"), "left_semi")
       .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
       .select("u", "v")
-  }
-
-  /** Core of graph_neighbor_sim_capped over an undirected (u,v) edge
-    * frame — extracted so fixture tests can drive it on hand-built dense
-    * graphs where the cap actually bites. See the QueryDef comment for
-    * the reverse-cap Jaccard semantics and the [0,1] argument. */
-  private[graft] def neighborSimCapped(edges: DataFrame): DataFrame = {
-    val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
-    val capW = Window.partitionBy("u").orderBy("v")
-    val cap = edges.withColumn("rn", row_number().over(capW))
-      .filter(col("rn") <= NbrCapF).select("u", "v")
-    // reverse-capped degree: in how many capped adjacency lists does v
-    // appear — |R(v)| — the set the wedge numerator intersects
-    val rdeg = cap.groupBy("v").agg(count(lit(1)).as("rdeg"))
-    val wedges = cap.toDF("z", "a")
-      .join(deg.select(col("u").as("z"), col("deg").as("deg_z")), "z")
-      .join(cap.toDF("z", "b"), "z")
-      .filter(col("a") < col("b"))
-    val scored = wedges.groupBy("a", "b").agg(
-      count(lit(1)).as("common_neighbors"),
-      sum(expr("1000000000 div deg_z")).as("ra_index_q"))
-    scored
-      .join(rdeg.select(col("v").as("a"), col("rdeg").as("rdeg_a")), "a")
-      .join(rdeg.select(col("v").as("b"), col("rdeg").as("rdeg_b")), "b")
-      .select(col("a").as("a_id"), col("b").as("b_id"),
-        col("common_neighbors"), col("ra_index_q"),
-        (col("common_neighbors").cast("double") /
-          (col("rdeg_a") + col("rdeg_b") - col("common_neighbors"))
-            .cast("double")).as("nbr_jaccard"))
-      .orderBy("a_id", "b_id")
   }
 
   /** The synchronous label-propagation rounds — shared by
@@ -1079,46 +972,103 @@ object Graph {
         $rounds"""
   }
 
-  /** DuckDB replay of the seeded iterations — generated like
-    * PagerankOracleSql so iteration count, seed rule, and integer
-    * arithmetic can never drift from the Spark loop. */
-  private lazy val PprOracleSql: String = {
-    val seedCount =
-      s"(SELECT count(*) FROM documents WHERE doc_id % $PprSeedMod = 0)"
-    // COALESCE around the seed-share divisions: when the corpus has no
-    // seeds the predicate never selects the THEN branch, so the NULL
-    // that DuckDB's `$Q // 0` produces can only leak if an engine folds
-    // the branch eagerly — the coalesce pins both readings to the same
-    // all-zero ranks the Spark guard emits (nSeeds==0 → seedShare=0L).
-    // On any corpus with ≥1 seed the divisions are non-NULL and the
-    // coalesce is an identity, so healthy hashes are unchanged (r9
-    // advice, Graph.scala graph_ppr seedless guard).
-    val iters = (1 to Iters).map { i =>
-      s"""r$i AS MATERIALIZED (
-            SELECT doc.doc_id,
-              (CASE WHEN doc.doc_id % $PprSeedMod = 0
-                 THEN COALESCE(15 * $Q // (100 * $seedCount), 0)
-                 ELSE 0 END)
-                + COALESCE(c.cs, 0) AS r
-            FROM documents doc LEFT JOIN (
-              SELECT e.v, CAST(sum((85 * r.r) // (100 * dg.deg)) AS BIGINT) AS cs
-              FROM e JOIN deg dg ON e.u = dg.u
-                     JOIN r${i - 1} r ON r.doc_id = e.u
-              GROUP BY e.v) c ON c.v = doc.doc_id)"""
-    }.mkString(",\n")
+  /** (b_id, a_id, la, lb): each (a_id, b_id) pair with its endpoints'
+    * labels in `lbl` (doc_id, label). Its oracle form is
+    * [[LabeledPairsSql]]. */
+  private def labeledPairs(pairs: DataFrame, lbl: DataFrame): DataFrame =
+    pairs
+      .join(lbl.select(col("doc_id").as("a_id"), col("label").as("la")), "a_id")
+      .join(lbl.select(col("doc_id").as("b_id"), col("label").as("lb")), "b_id")
+
+  /** The SQL mirror of [[labeledPairs]] over the oracle's `pairs` and
+    * the last LPA round: the CTE lab(a_id, b_id, la, lb). */
+  private lazy val LabeledPairsSql: String =
+    s"""lab AS (
+          SELECT p.a_id, p.b_id, x.label AS la, y.label AS lb
+          FROM pairs p
+          JOIN l$Iters x ON x.doc_id = p.a_id
+          JOIN l$Iters y ON y.doc_id = p.b_id)"""
+
+  /** (community, volume): each label's degree mass in the undirected
+    * (u, v) `edges`. Its oracle form is [[CommunityVolumeSql]]. */
+  private def communityVolume(edges: DataFrame, lbl: DataFrame): DataFrame =
+    degrees(edges)
+      .join(lbl.select(col("doc_id").as("u"), col("label")), "u")
+      .groupBy("label").agg(sum(col("deg")).as("volume"))
+      .withColumnRenamed("label", "community")
+
+  /** The SQL mirror of [[communityVolume]] over the oracle's `e` and the
+    * last LPA round: the CTEs deg and vol(community, volume). */
+  private lazy val CommunityVolumeSql: String =
+    s"""$DegSql,
+        vol AS (
+          SELECT l.label AS community, CAST(sum(d.deg) AS BIGINT) AS volume
+          FROM deg d JOIN l$Iters l ON l.doc_id = d.u
+          GROUP BY l.label)"""
+
+  /** DuckDB replay of the synchronous LPA rounds — generated like
+    * PagerankOracleSql so round count and tie-break can never drift. */
+  private lazy val LabelPropOracleSql: String =
     s"""WITH ${Dedup.JaccardPairsCte},
           ${Dedup.undirectedSql("e")},
-          deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM e GROUP BY u),
-          r0 AS MATERIALIZED (
-            SELECT doc_id,
-              CASE WHEN doc_id % $PprSeedMod = 0
-                THEN COALESCE($Q // $seedCount, 0) ELSE 0 END AS r
-            FROM documents),
-          $iters
-        SELECT doc_id, CAST(r AS BIGINT) AS ppr_q,
-          CAST(r AS DOUBLE) / ${Q.toDouble} AS ppr
-        FROM r$Iters ORDER BY doc_id"""
-  }
+          $LpaRoundsCte
+        SELECT f.doc_id, f.label AS community,
+          sz.community_size
+        FROM l$Iters f JOIN (
+          SELECT label, CAST(count(*) AS BIGINT) AS community_size
+          FROM l$Iters GROUP BY label) sz ON sz.label = f.label
+        ORDER BY f.doc_id"""
+
+  /** DuckDB replay of the modularity scorecard over the SAME LPA rounds
+    * CTE the labelprop oracle uses. The closing arithmetic is written
+    * with the identical operand order as the Spark expr (two divisions,
+    * one left-associated product, one subtraction — all IEEE double), so
+    * the score matches bit-for-bit. */
+  private lazy val ModularityOracleSql: String =
+    s"""WITH ${Dedup.JaccardPairsCte},
+          ${Dedup.undirectedSql("e")},
+          $LpaRoundsCte,
+          $LabeledPairsSql,
+          $CommunityVolumeSql,
+          mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs),
+          intra AS (
+            SELECT CAST(count(*) AS BIGINT) AS intra_edges
+            FROM lab WHERE la = lb),
+          s2 AS (
+            SELECT CAST(sum(CAST(volume AS HUGEINT) * volume) AS BIGINT)
+              AS sum_deg_sq
+            FROM vol)
+        SELECT mm.m, intra.intra_edges, s2.sum_deg_sq,
+          CAST(intra.intra_edges AS DOUBLE) / CAST(mm.m AS DOUBLE)
+            - CAST(s2.sum_deg_sq AS DOUBLE)
+              / (4.0 * CAST(mm.m AS DOUBLE) * CAST(mm.m AS DOUBLE))
+            AS modularity
+        FROM mm, intra, s2"""
+
+  /** DuckDB replay of the conductance scorecard over the SAME LPA
+    * rounds CTE — labels, cut, volume, and the guarded closing division
+    * in the identical operand order. */
+  private lazy val ConductanceOracleSql: String =
+    s"""WITH ${Dedup.JaccardPairsCte},
+          ${Dedup.undirectedSql("e")},
+          $LpaRoundsCte,
+          $LabeledPairsSql,
+          $CommunityVolumeSql,
+          cut AS (
+            SELECT community, CAST(count(*) AS BIGINT) AS cut_edges
+            FROM (SELECT la AS community FROM lab WHERE la != lb
+                  UNION ALL SELECT lb FROM lab WHERE la != lb)
+            GROUP BY community),
+          tot AS (SELECT CAST(sum(volume) AS BIGINT) AS vol_total FROM vol)
+        SELECT v.community, v.volume,
+          COALESCE(c.cut_edges, 0) AS cut_edges, tot.vol_total,
+          CASE WHEN least(v.volume, tot.vol_total - v.volume) > 0
+            THEN CAST(COALESCE(c.cut_edges, 0) AS DOUBLE)
+                 / CAST(least(v.volume, tot.vol_total - v.volume) AS DOUBLE)
+          END AS conductance
+        FROM vol v LEFT JOIN cut c ON c.community = v.community
+        CROSS JOIN tot
+        ORDER BY v.community"""
 
   /** DuckDB replay of the hash-driven walk — generated per step like the
     * pagerank/LPA oracles so step count and the md5 step-draw can never

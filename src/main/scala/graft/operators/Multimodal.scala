@@ -678,22 +678,10 @@ object Multimodal {
                 FROM sig a JOIN sig b
                   ON a.format = b.format AND a.doc_id < b.doc_id
                 WHERE bit_count(xor(a.phash, b.phash)) <= 3),
-              edges AS (
-                SELECT a_id AS u, b_id AS v FROM pairs
-                UNION ALL SELECT b_id, a_id FROM pairs),
-              reach(u, v) AS (
-                SELECT u, v FROM edges
-                UNION
-                SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-              rep AS (
-                SELECT u AS doc_id, least(u, min(v)) AS rep_id
-                FROM reach GROUP BY u)
-              SELECT doc.doc_id,
-                COALESCE(rep.rep_id, doc.doc_id) AS rep_id,
-                CASE WHEN doc.doc_id % 2 = 0 THEN 'png' ELSE 'wav' END
-                  AS format
-              FROM documents doc LEFT JOIN rep ON doc.doc_id = rep.doc_id
-              ORDER BY doc.doc_id"""))
+              ${Dedup.componentsSql("pairs", "documents")}
+              SELECT doc_id, rep_id,
+                CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'wav' END AS format
+              FROM cc ORDER BY doc_id"""))
   ,
     // Resize/downsample — the thumbnailing step of a media pipeline, on
     // the same mapPartitions plumbing: nearest-neighbor sample 16 evenly

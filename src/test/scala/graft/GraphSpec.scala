@@ -232,6 +232,11 @@ class GraphSpec extends AnyFunSuite {
     assert(out(4L) === ((3L, 1L)))
   }
 
+  // a directed (u, v) 12-clique: every degree is 11
+  private lazy val cliqueEdges = (for {
+    a <- 0L until 12L; b <- 0L until 12L; if a != b
+  } yield (a, b)).toDF("u", "v")
+
   test("capped neighbor-sim stays in (0,1] on a dense graph where the cap bites") {
     // 12-clique: every degree is 11 > NbrCapF=8, so cap(u) keeps u's 8
     // smallest-id neighbors. Reverse-cap sets R(x) = {z : x in cap(z)}:
@@ -240,11 +245,8 @@ class GraphSpec extends AnyFunSuite {
     // ADVICE bug (forward capped degrees in the denominator) would give
     // pair (0,1) jaccard 10/(8+8-10) = 1.67 > 1 here; the reverse-cap
     // Jaccard gives |R0∩R1|/|R0∪R1| = 10/12.
-    val n = 12L
-    val cliqueEdges = (for {
-      a <- 0L until n; b <- 0L until n; if a != b
-    } yield (a, b)).toDF("u", "v")
-    val out = operators.Graph.neighborSimCapped(cliqueEdges).collect()
+    val out = operators.Graph.neighborSim(cliqueEdges, Some(operators.Graph.NbrCapF))
+      .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         (r.getAs[Long]("common_neighbors"), r.getAs[Double]("nbr_jaccard")))
       .toMap
@@ -256,6 +258,20 @@ class GraphSpec extends AnyFunSuite {
     assert(out((0L, 8L)) === ((7L, 7.0 / 12.0)))
     // nodes with an empty reverse-cap set never appear as pair endpoints
     out.keys.foreach { case (a, b) => assert(a <= 8L && b <= 8L) }
+  }
+
+  test("neighbor-sim capped above the maximum degree returns graph_neighbor_sim's rows") {
+    // a cap of 11 or more keeps every adjacency list of the 12-clique
+    // whole, so each reverse-cap set R(x) is x's neighbor set and the
+    // capped form's reverse-cap degree equals the degree the exact form
+    // reads — the argument that lets both forms share one body
+    def rows(cap: Option[Int]) = operators.Graph.neighborSim(cliqueEdges, cap)
+      .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
+        r.getAs[Long]("common_neighbors"), r.getAs[Long]("ra_index_q"),
+        r.getAs[Double]("nbr_jaccard"))).toSeq
+    val exact = rows(None)
+    assert(exact.size === 66) // every pair of the clique shares 10 neighbors
+    assert(rows(Some(12)) === exact)
   }
 
   test("conductance scores reconcile with the labelprop communities") {

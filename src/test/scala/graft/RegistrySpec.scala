@@ -380,6 +380,35 @@ class RegistrySpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  // Each graph step has one Spark helper and one SQL mirror. A copied
+  // closure, BFS or degree count is one more place a round structure
+  // has to be changed and the two engines can drift apart.
+  test("the component closure is written only by Dedup.componentsSql") {
+    val hits = operatorSourceHits(Seq("least(u, min("), dirs = Seq(""))
+      .filterNot(inMember(Set("Dedup.scala" -> "componentsSql")))
+    assert(hits.isEmpty,
+      "hand-written component closure (call Dedup.componentsSql):\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the hop-bounded reach is written only by Graph.reachSql, in a Graph.recursionSession") {
+    val hits = operatorSourceHits(Seq("reach(src, node, hop) AS ("), dirs = Seq(""))
+      .filterNot(inMember(Set("Graph.scala" -> "reachSql"))) ++
+      operatorSourceHits(Seq("\"spark.sql.cteRecursionRowLimit\""), dirs = Seq(""))
+        .filterNot(inMember(Set("Graph.scala" -> "recursionSession")))
+    assert(hits.isEmpty,
+      "hand-written bounded reach or recursion valve (call Graph.reachSql " +
+        "in a Graph.recursionSession):\n" + hits.mkString("\n"))
+  }
+
+  test("the vertex degree is counted only by Graph.degrees and Graph.DegSql") {
+    val hits = operatorSourceHits(Seq("count(*) AS deg FROM", ".as(\"deg\")"), dirs = Seq(""))
+      .filterNot(inMember(Set("Graph.scala" -> "degrees", "Graph.scala" -> "DegSql")))
+    assert(hits.isEmpty,
+      "hand-written degree count (call Graph.degrees or use Graph.DegSql):\n" +
+        hits.mkString("\n"))
+  }
+
   // The similarity searches share one skeleton: one query set, one
   // cosine top-k and one IVF assignment, each with its DuckDB mirror in
   // Similarity. A copy elsewhere is a search whose probe set, ranking or
