@@ -13,7 +13,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * "before" / "after"); with no query names it dumps the whole registry.
   * Plans are written [[normalize]]d, so `diff -r` between a before dump
   * and an after dump shows only real plan changes, construction-time
-  * checkpoints included.
+  * checkpoints included. Diff a whole-registry dump only against
+  * another whole-registry dump: the first query in a JVM to read a
+  * table carries the memoized split measurement as an extra execution,
+  * and Spark numbers lambda variables per JVM.
   * Env: SPARK_GRAFT_SF_DIR.
   * Dev/evidence tooling only — never on the bench or verify path. */
 object PlanDump {
@@ -23,7 +26,8 @@ object PlanDump {
     * evidence whenever a later run forgot to name its own. */
   private[graft] def parseArgs(args: Seq[String]): (Path, String, Seq[String]) = {
     if (args.length < 2)
-      throw new IllegalArgumentException("usage: PlanDump <outDir> <tag> [query...]")
+      throw new IllegalArgumentException("usage: PlanDump <outDir> <tag> [query...] " +
+        "(diff a whole-registry dump only against another whole-registry dump)")
     (Paths.get(args(0)), args(1), args.drop(2))
   }
 

@@ -4,22 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine operator exposed through the driver contract.
   *
-  * ==Session-scoped-state contract (operator authors)==
-  * `graft.Verify` runs operators CONCURRENTLY, each worker on its own
-  * `spark.newSession()` over one shared `SparkContext`. An operator's
-  * `run` may therefore touch only state scoped to the session it is
-  * handed: temp views (`createOrReplaceTempView`), session `conf.set`,
-  * session UDF registrations, catalog reads. It must NOT mutate
-  * SparkContext-global state — `setCheckpointDir`, `hadoopConfiguration`,
-  * `setJobGroup`/`setLocalProperty` on the shared context, GLOBAL temp
-  * views, or session-builder `config` calls against the running
-  * session — any of which would race across workers and corrupt the
-  * correctness record non-deterministically. `Tables.materialize` (no
-  * checkpoint dir) and per-operator `graft.jvmScratchDir` paths are fine.
-  * RegistrySpec greps every operator source file for the forbidden
-  * calls; add a justified exclusion there if a future operator
-  * genuinely needs one (and then it must also force
-  * SPARK_GRAFT_VERIFY_WORKERS=1).
+  * ==Session state==
+  * A query touches no state of the session it is handed, nor of the
+  * SparkContext its sessions share: a conf, view or function it needs is
+  * set when the session is built (`GraftSession.local`) or on a child
+  * (`GraftSession.child`, `Tables.sqlSession`). `graft.Verify` runs
+  * queries concurrently, one `newSession()` per worker, and a query's
+  * plan must not depend on which query ran before it. RegistrySpec
+  * checks every query and greps the sources.
   *
   * @param name    stable query name (key in SparkEntry.queries)
   * @param run     (session, sfDir) => result DataFrame. Results are

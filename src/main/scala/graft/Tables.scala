@@ -281,15 +281,15 @@ object Tables {
 
   /** events.ts normalized to TimestampType micros whatever the parquet
     * physical type. The corpus has shipped it two ways across driver
-    * rounds: timestamp[ns] (which Spark 4 refuses to read natively —
-    * read nanos as long via the legacy conf and truncate to micros with
-    * integer division; a double division would lose precision on
-    * 2^60-ns epoch values) and timestamp[us] (TIMESTAMP_NTZ in Spark 4
-    * — cast to TIMESTAMP, a micros-identity under the pinned UTC
-    * session timezone). Both match DuckDB's CAST(ts AS TIMESTAMP)
-    * exactly, so oracle comparisons stay bit-for-bit either way. */
+    * rounds: timestamp[ns] (which Spark 4 reads only as raw nanos, under
+    * the `nanosAsLong` conf `GraftSession.local` sets at creation —
+    * truncated to micros with integer division; a double division would
+    * lose precision on 2^60-ns epoch values) and timestamp[us]
+    * (TIMESTAMP_NTZ in Spark 4 — cast to TIMESTAMP, a micros-identity
+    * under the pinned UTC session timezone). Both match DuckDB's
+    * CAST(ts AS TIMESTAMP) exactly, so oracle comparisons stay
+    * bit-for-bit either way. Sets nothing on `spark`. */
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = read(spark, dir, "events")
     df.withColumn("ts", normTsCol(df.schema))
   }
@@ -305,8 +305,17 @@ object Tables {
     }
   }
 
-  /** Register every corpus table as a temp view (idempotent), so SQL-text
-    * queries (scalar subqueries, correlated EXISTS) can run verbatim. */
+  /** Register every corpus table as a temp view of `spark` (idempotent). */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+
+  /** A child of `s` with every corpus table of `dir` registered as a
+    * view, for a query written as SQL text: its views (and any function
+    * it creates) stay off `s`. Schemas are memoized, so registering all
+    * ten tables launches no job once each has been read. */
+  def sqlSession(s: SparkSession, dir: String): SparkSession = {
+    val c = GraftSession.child(s)
+    registerAll(c, dir)
+    c
+  }
 }

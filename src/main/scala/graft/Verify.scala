@@ -72,10 +72,8 @@ object Verify {
     // explains the r8 empty gate). Most of that wall is per-query
     // planning/scheduling gaps, not executor saturation, so overlapping
     // a few queries recovers it. Each worker runs on its own
-    // spark.newSession(): temp views and UDF registrations are
-    // session-scoped, so fixed-name views (graft_neardup_pairs, tpch
-    // tables) cannot race; the shared SparkContext schedules fairly.
-    // Set SPARK_GRAFT_VERIFY_WORKERS=1 to restore the sequential path.
+    // spark.newSession(); the shared SparkContext schedules fairly.
+    // SPARK_GRAFT_VERIFY_WORKERS=1 runs the same pool with one worker.
     val workers = sys.env.get("SPARK_GRAFT_VERIFY_WORKERS")
       .map(_.toInt).getOrElse(math.min(8, GraftSession.cores)).max(1)
     val spark = GraftSession.local("graft-verify")
@@ -100,33 +98,29 @@ object Verify {
         nFailed.incrementAndGet()
         failed.add(name)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // SPARK_GRAFT_TRACE=1: full stack for degenerate-corpus triage
-        if (sys.env.contains("SPARK_GRAFT_TRACE")) e.printStackTrace()
+        // a healthy run has no failure, so every stack is worth printing
+        e.printStackTrace()
       }
 
-    if (workers <= 1) {
-      selected.foreach { case (name, fn) => runOne(spark, name, fn) }
-    } else {
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-      selected.foreach(queue.add)
-      val threads = (1 to workers).map { _ =>
-        val t = new Thread(() => {
-          val sess = spark.newSession()
-          // thread-local active session: operator code that resolves
-          // SparkSession.active (implicit encoders, expr parsing) must
-          // see THIS worker's session, not whichever thread won a race
-          SparkSession.setActiveSession(sess)
-          var item = queue.poll()
-          while (item != null) {
-            runOne(sess, item._1, item._2)
-            item = queue.poll()
-          }
-        })
-        t.setDaemon(true); t.start(); t
-      }
-      threads.foreach(_.join())
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
+    selected.foreach(queue.add)
+    val threads = (1 to workers).map { _ =>
+      val t = new Thread(() => {
+        val sess = spark.newSession()
+        // thread-local active session: operator code that resolves
+        // SparkSession.active (implicit encoders, expr parsing) must
+        // see THIS worker's session, not whichever thread won a race
+        SparkSession.setActiveSession(sess)
+        var item = queue.poll()
+        while (item != null) {
+          runOne(sess, item._1, item._2)
+          item = queue.poll()
+        }
+      })
+      t.setDaemon(true); t.start(); t
     }
+    threads.foreach(_.join())
     val sql = json.createObjectNode()
     SparkEntry.oracleSql.foreach { case (k, v) => sql.put(k, v) }
     json.writeValue(new java.io.File(s"$outDir/oracle_sql.json"), sql)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,11 +102,14 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   private val FnName = "cosine_sim"
 
-  /** Register `cosine_sim` in the session's function registry (idempotent)
-    * and return a Column applying it. */
+  /** A Column applying `cosine_sim`, registered first on a session
+    * that lacks it (a `GraftSession.local` session has it from creation,
+    * through GraftExtensions, and is left as it is). */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(FnName)))
+      registry.createOrReplaceTempFunction(
+        FnName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
     call_function(FnName, a, b)
   }
 }

@@ -54,8 +54,9 @@ case class NGramsGenerator(child: Expression, n: Int)
 }
 
 object NGramsGenerator {
-  /** Register `ngrams_gen` (idempotent) and return a generator Column for
-    * the given text column; `select(ngrams(...))` plans a Generate node. */
+  /** Register `ngrams_gen_<n>` on `spark` (idempotent; a query calls it
+    * on a `GraftSession.child`) and return a generator Column for the
+    * given text column; `select(ngrams(...))` plans a Generate node. */
   def apply(spark: SparkSession, text: Column, n: Int): Column = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       s"ngrams_gen_$n", exprs => NGramsGenerator(exprs(0), n), "built-in")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{GraftSession, QueryDef, Tables}
 import graft.functions.EngineFns.hash31Sql
 
 /** Graph analytics over the near-duplicate graph — PageRank centrality on
@@ -731,26 +731,20 @@ object Graph {
         ORDER BY a_id, b_id"""
   }
 
-  /** A clone of `s` for a hop-bounded recursive CTE. Spark guards
-    * recursive CTEs with a cumulative-row safety valve
+  /** A [[GraftSession.child]] of `s` for a hop-bounded recursive CTE.
+    * Spark guards recursive CTEs with a cumulative-row safety valve
     * (spark.sql.cteRecursionRowLimit, default 10^6) against unbounded
     * recursion. [[reachSql]]'s recursion is hop-bounded, so its total
     * row count is at most nodes x the 2-hop neighborhood size — finite
     * by construction — and the sf0.1 corpus's duplicate families already
     * exceed the default (first seen as a bench-only failure: sf0.01 fit
-    * under 10^6, sf0.1 did not). The valve is raised on a CLONED session
-    * (shared SparkContext, isolated SQLConf + temp-view catalog): the
+    * under 10^6, sf0.1 did not). The valve is raised on the child: the
     * limit must still be raised when the lazy DataFrame actually
     * executes, so a set-and-restore around plan construction would break
     * the query — while a raise on the caller's session would weaken the
-    * runaway-recursion valve for every later query sharing it (round-5
-    * advice). A DataFrame built on the clone executes under the raised
-    * limit; the caller's session is untouched. */
-  private def recursionSession(s: SparkSession): SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
-    s2
-  }
+    * runaway-recursion valve for every later query sharing it. */
+  private def recursionSession(s: SparkSession): SparkSession =
+    GraftSession.child(s, "spark.sql.cteRecursionRowLimit" -> "100000000")
 
   /** Multi-source BFS over the (u, v) relation `rel`, up to BfsHops hops:
     * the recursive CTE reach(src, node, hop), then each (src, node)'s

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryDef, Tables}
+import graft.{GraftSession, QueryDef, Tables}
 
 /** Core relational surface: scan, projection, filter pushdown, DISTINCT,
   * joins (broadcast / shuffle / semi / anti / outer / correlated),
@@ -232,15 +232,12 @@ object Relational {
     // the NAAJ shape.
     QueryDef(
       "q_null_aware_anti",
-      (s, dir) => {
-        Tables.registerAll(s, dir)
-        s.sql("""SELECT c_custkey, c_name FROM customer
+      (s, dir) => Tables.sqlSession(s, dir).sql("""SELECT c_custkey, c_name FROM customer
                  WHERE (CASE WHEN c_acctbal < 0 THEN NULL
                              ELSE c_custkey END) NOT IN
                    (SELECT o_custkey FROM orders
                     WHERE o_totalprice > 400000.0)
-                 ORDER BY c_custkey""")
-      },
+                 ORDER BY c_custkey"""),
       Some("""SELECT c_custkey, c_name FROM customer
               WHERE (CASE WHEN c_acctbal < 0 THEN NULL
                           ELSE c_custkey END) NOT IN
@@ -545,12 +542,9 @@ object Relational {
     // Scalar subquery in a predicate (same SQL text runs on both engines).
     QueryDef(
       "q_scalar_subquery",
-      (s, dir) => {
-        Tables.registerAll(s, dir)
-        s.sql("""SELECT c_custkey, c_name, c_acctbal FROM customer
+      (s, dir) => Tables.sqlSession(s, dir).sql("""SELECT c_custkey, c_name, c_acctbal FROM customer
                  WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*) FROM customer)
-                 ORDER BY c_custkey""")
-      },
+                 ORDER BY c_custkey"""),
       Some("""SELECT c_custkey, c_name, c_acctbal FROM customer
               WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*) FROM customer)
               ORDER BY c_custkey""")),
@@ -558,13 +552,10 @@ object Relational {
     // Correlated EXISTS subquery.
     QueryDef(
       "q_exists_correlated",
-      (s, dir) => {
-        Tables.registerAll(s, dir)
-        s.sql("""SELECT p_partkey, p_name FROM part p
+      (s, dir) => Tables.sqlSession(s, dir).sql("""SELECT p_partkey, p_name FROM part p
                  WHERE EXISTS (SELECT 1 FROM lineitem l
                                WHERE l.l_partkey = p.p_partkey AND l.l_quantity >= 49)
-                 ORDER BY p_partkey""")
-      },
+                 ORDER BY p_partkey"""),
       Some("""SELECT p_partkey, p_name FROM part p
               WHERE EXISTS (SELECT 1 FROM lineitem l
                             WHERE l.l_partkey = p.p_partkey AND l.l_quantity >= 49)
@@ -828,10 +819,7 @@ object Relational {
     // both engines, so no float-summation or rounding ambiguity anywhere.
     QueryDef(
       "q_tpch_q3",
-      (s, dir) => {
-        Seq("customer", "orders", "lineitem")
-          .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-        s.sql("""
+      (s, dir) => Tables.sqlSession(s, dir).sql("""
           SELECT l_orderkey,
                  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
                           CAST(1.0 - l_discount AS DECIMAL(3,2))) AS DOUBLE)
@@ -844,8 +832,7 @@ object Relational {
             AND l_shipdate > TIMESTAMP '1998-01-01'
           GROUP BY l_orderkey, o_orderdate
           ORDER BY revenue DESC, l_orderkey
-          LIMIT 10""")
-      },
+          LIMIT 10"""),
       Some("""SELECT l_orderkey,
                 CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
                          CAST(1.0 - l_discount AS DECIMAL(3,2))) AS DOUBLE)
@@ -951,11 +938,7 @@ object Relational {
 
     QueryDef(
       "q_lateral_join",
-      (s, dir) => {
-        Seq("nation", "customer")
-          .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-        s.sql(LateralSql)
-      },
+      (s, dir) => Tables.sqlSession(s, dir).sql(LateralSql),
       Some(LateralSql)),
 
     // Runtime bloom-filter join pruning — the 100 TB shuffle-join
@@ -967,20 +950,18 @@ object Relational {
     // scale that's the difference between shuffling 100 TB and shuffling
     // the matching fraction). The local[32] corpus is far below the
     // production injection thresholds, so the knobs are lowered on a
-    // CLONED session (config-residue-free, the graph_bfs_2hop
-    // discipline) with broadcast disabled to force the shuffle-join
-    // shape; PlanSpec asserts the might_contain probe actually lands on
-    // the lineitem scan side. Blooms admit false positives only, so the
-    // result equals the plain join — which is exactly what the oracle
-    // checks.
+    // GraftSession.child, with broadcast disabled to force the
+    // shuffle-join shape; PlanSpec asserts the might_contain probe
+    // actually lands on the lineitem scan side. Blooms admit false
+    // positives only, so the result equals the plain join — which is
+    // exactly what the oracle checks.
     QueryDef(
       "q_runtime_filter",
       (s, dir) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s2.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val s2 = GraftSession.child(s,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
         val li = t(s2, dir, "lineitem")
         val p = t(s2, dir, "part").filter(col("p_size") <= 5)
         li.join(p, col("l_partkey") === col("p_partkey"))
@@ -1007,10 +988,7 @@ object Relational {
     // engine contract is that surface syntax must not change semantics.
     QueryDef(
       "q_pipe_syntax",
-      (s, dir) => {
-        Seq("lineitem", "part")
-          .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-        s.sql("""
+      (s, dir) => Tables.sqlSession(s, dir).sql("""
           FROM lineitem
           |> WHERE l_quantity > 10
           |> JOIN part ON l_partkey = p_partkey
@@ -1019,8 +997,7 @@ object Relational {
                CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
                  AS revenue
              GROUP BY p_brand
-          |> ORDER BY p_brand""")
-      },
+          |> ORDER BY p_brand"""),
       Some("""SELECT p.p_brand, count(*) AS n_items,
                 CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
                   AS revenue

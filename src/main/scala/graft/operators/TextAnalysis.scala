@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{GraftSession, QueryDef, Tables}
 import graft.functions.EngineFns.{hash31, hash31Sql, shingles, tokens}
 
 /** Text-analysis operators for LLM training-data pipelines over the
@@ -1283,14 +1283,17 @@ object TextAnalysis {
     // (CosineSimilarity) and the typed Aggregator (MinHashAgg). Catalyst
     // plans it into the same in-stage Generate node as posexplode, so
     // the fan-out is map-only (PlanSpec-asserted); output volume, not
-    // shuffle, is the 100 TB cost.
+    // shuffle, is the 100 TB cost. The generator is registered on a
+    // child session.
     QueryDef(
       "text_ngrams_gen",
-      (s, dir) =>
-        Tables.load(s, dir, "documents")
+      (s, dir) => {
+        val c = GraftSession.child(s)
+        Tables.load(c, dir, "documents")
           .select(col("doc_id"),
-            graft.functions.NGramsGenerator(s, col("text"), 3))
-          .orderBy("doc_id", "pos"),
+            graft.functions.NGramsGenerator(c, col("text"), 3))
+          .orderBy("doc_id", "pos")
+      },
       Some("""SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
                 array_to_string(string_split(text, ' ')[i:i+2], ' ') AS gram
               FROM documents, LATERAL (SELECT unnest(range(1,
@@ -1841,15 +1844,17 @@ object TextAnalysis {
     // map-only Generate as text_ngrams_gen, window membership is a
     // constant w-row expansion (never data × data), the per-window
     // argmin is ONE doc_id-hashed rank window, and the final dedup is
-    // a hash aggregate — work ∝ corpus grams × w at any scale.
+    // a hash aggregate — work ∝ corpus grams × w at any scale. The
+    // generator is registered on a child session.
     QueryDef(
       "text_winnowing",
       (s, dir) => {
         val W = 4
-        val grams = Tables.loadParallel(s, dir, "documents")
+        val c = GraftSession.child(s)
+        val grams = Tables.loadParallel(c, dir, "documents")
           .select(col("doc_id"),
             (size(tokens(col("text"))) - 2).cast("long").as("n_grams"),
-            graft.functions.NGramsGenerator(s, col("text"), 3))
+            graft.functions.NGramsGenerator(c, col("text"), 3))
           .filter(col("n_grams") >= W)
           .select(col("doc_id"), col("n_grams"), col("pos"),
             hash31(col("gram")).as("h"))

@@ -1055,17 +1055,14 @@ object Warehouse {
     // test; DuckDB replays the identical recursion with `//` division.
     QueryDef(
       "q_recursive_cte",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("part")
-        s.sql("""
+      (s, dir) => Tables.sqlSession(s, dir).sql("""
           WITH RECURSIVE walk(p_partkey, cur, steps) AS (
             SELECT p_partkey, CAST(p_partkey AS BIGINT), 0 FROM part
             UNION ALL
             SELECT p_partkey, cur DIV 2, steps + 1 FROM walk WHERE cur > 1
           )
           SELECT p_partkey, CAST(max(steps) AS BIGINT) AS depth
-          FROM walk GROUP BY p_partkey ORDER BY p_partkey""")
-      },
+          FROM walk GROUP BY p_partkey ORDER BY p_partkey"""),
       Some("""WITH RECURSIVE walk(p_partkey, cur, steps) AS (
                 SELECT p_partkey, CAST(p_partkey AS BIGINT), 0 FROM part
                 UNION ALL
@@ -1282,12 +1279,12 @@ object Warehouse {
     QueryDef(
       "q_sql_udf",
       (s, dir) => {
-        t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-        s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_net(
+        val c = Tables.sqlSession(s, dir)
+        c.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_net(
                    p DOUBLE, d DOUBLE) RETURNS DECIMAL(25,4)
                  RETURN CAST(p AS DECIMAL(12,2)) *
                    (CAST(1 AS DECIMAL(12,2)) - CAST(d AS DECIMAL(12,2)))""")
-        s.sql("""SELECT l_returnflag,
+        c.sql("""SELECT l_returnflag,
                    CAST(sum(graft_net(l_extendedprice, l_discount))
                      AS DOUBLE) AS net_revenue,
                    count(*) AS n

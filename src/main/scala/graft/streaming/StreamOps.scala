@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 import graft.QueryDef
 import graft.functions.EngineFns.tokens
 import graft.operators.Analytics.{Ev, SessionRow}
@@ -32,21 +31,12 @@ object StreamOps {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** The raw file schema of a corpus table. `events` ts is read as raw
-    * nanos (a long) when the corpus ships it as parquet timestamp[ns];
-    * `Tables.normTsCol(schema)` turns it into a µs timestamp in-plan. */
-  private def streamSchema(s: SparkSession, dir: String, table: String): StructType = {
-    if (table == "events")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.Tables.fileSchema(s, dir, table)
-  }
-
   /** A corpus table as a file stream. The file source wants a
     * directory: the sf dir is streamed with a glob that selects just
     * `<table>.parquet`. `events` comes with ts normalized to a µs
     * timestamp. */
   private def tableStream(s: SparkSession, dir: String, table: String): DataFrame = {
-    val schema = streamSchema(s, dir, table)
+    val schema = graft.Tables.fileSchema(s, dir, table)
     val src = s.readStream
       .schema(schema)
       .option("pathGlobFilter", s"$table.parquet")
@@ -67,12 +57,14 @@ object StreamOps {
   /** `stream` run into a fresh memory sink `graft_stream_<name>_<n>` in
     * output `mode` by `run` ([[drain]] unless the query needs a second
     * phase, see [[SentinelStage.drainClosing]]); returns the sink
-    * table. */
+    * table, and leaves no view of it on `s`. */
   private[graft] def toMemory(s: SparkSession, name: String, mode: String,
       run: DataStreamWriter[_] => Unit = drain)(stream: Dataset[_]): DataFrame = {
     val sink = s"graft_stream_${name}_${nameCounter.incrementAndGet()}"
     run(stream.writeStream.outputMode(mode).format("memory").queryName(sink))
-    s.table(sink)
+    // the frame holds the resolved sink; the view Spark registered for
+    // it would keep the sink's rows reachable for the session's life
+    try s.table(sink) finally s.catalog.dropTempView(sink)
   }
 
   /** Run the windowed aggregation as a real streaming query to completion
@@ -365,14 +357,16 @@ object StreamOps {
     }
   }
 
-  /** Per-user lifetime stats via transformWithState (see the
-    * stream_transform_state def). The RocksDB provider the API requires
-    * is set on a CLONED session so the shared session keeps its default
-    * provider (config-hygiene discipline). */
-  def transformStateStats(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+  /** A child of `s0` on the RocksDB state store, the provider
+    * transformWithState requires; `s0` keeps its default provider. */
+  private def rocksDbSession(s0: SparkSession): SparkSession =
+    graft.GraftSession.child(s0, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Per-user lifetime stats via transformWithState (see the
+    * stream_transform_state def), on a [[rocksDbSession]]. */
+  def transformStateStats(s0: SparkSession, dir: String): DataFrame = {
+    val s = rocksDbSession(s0)
     import s.implicits._
     val stats = toMemory(s, "tws", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
@@ -461,11 +455,9 @@ object StreamOps {
   }
 
   /** Per-user top-K via transformWithState ListState (see the
-    * stream_transform_state_list def). RocksDB provider on a CLONE. */
+    * stream_transform_state_list def). On a [[rocksDbSession]]. */
   def transformStateTopK(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = rocksDbSession(s0)
     import s.implicits._
     val topk = toMemory(s, "tws_topk", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"), col("event_type"))
@@ -485,11 +477,9 @@ object StreamOps {
   }
 
   /** Per-user per-type counters via transformWithState MapState (see
-    * the stream_transform_state_map def). RocksDB provider on a CLONE. */
+    * the stream_transform_state_map def). On a [[rocksDbSession]]. */
   def transformStateTypeCounts(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = rocksDbSession(s0)
     import s.implicits._
     toMemory(s, "tws_map", "update")(tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"), col("event_type"))
@@ -538,7 +528,7 @@ object StreamOps {
     * flushes. Finite-corpus closure only — a continuous deployment
     * simply never closes. */
   private final class SentinelStage(s: SparkSession, dir: String) {
-    private val schema = streamSchema(s, dir, "events")
+    private val schema = graft.Tables.fileSchema(s, dir, "events")
     private val stage: String = graft.jvmScratchDir("graft_sentinel_stage").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -841,11 +831,9 @@ object StreamOps {
   }
 
   /** Timer-driven sessionization via transformWithState (see the
-    * stream_transform_state_timers def). RocksDB provider on a CLONE. */
+    * stream_transform_state_timers def). On a [[rocksDbSession]]. */
   def transformStateSessions(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = rocksDbSession(s0)
     import s.implicits._
     val staged = new SentinelStage(s, dir)
     // as sessionizeTtl, with timers in place of the timeouts
@@ -1279,11 +1267,10 @@ object StreamOps {
         // exit instead, so repeated verify/test runs stop accumulating
         // state-store files (r9 advice)
         val ckpt = graft.jvmScratchDir("graft_state_rd").toString
-        val sink = s"graft_stream_strd_${nameCounter.incrementAndGet()}"
-        drain(tableStream(s, dir, "events")
-          .groupBy("event_type").agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(sink).option("checkpointLocation", ckpt))
+        toMemory(s, "strd", "complete",
+            w => drain(w.option("checkpointLocation", ckpt)))(
+          tableStream(s, dir, "events")
+            .groupBy("event_type").agg(count(lit(1)).as("n")))
         val st = s.read.format("statestore").load(ckpt)
         // the value struct's buffer field name is engine-internal
         // (count(1) today) — resolve it from the schema, not a literal,

@@ -19,18 +19,28 @@ class RegistrySpec extends AnyFunSuite {
   private val mayBeEmpty = Set("dedup_minhash_pairs",
     "dedup_minhash_pairs_capped", "dedup_simhash_pairs")
 
-  // Conf keys an operator may legitimately leave set on the shared
-  // session: the idempotent corpus-wide parquet-nanos read requirement
-  // (set by Tables.load itself — every reader needs it, the value never
-  // varies). Everything else is residue: a query that weakens a safety
-  // valve (e.g. cteRecursionRowLimit) for every later query sharing the
-  // session is a bug (round-5 advice) — scope such raises to a cloned
-  // session (see graph_bfs_2hop).
-  private val allowedResidue = Set("spark.sql.legacy.parquet.nanosAsLong")
+  /** The state of the shared session a query must leave as it found
+    * it: every conf, temporary view and temporary function, each view
+    * and function with the identity of its definition, so one
+    * registered again under the same name counts too. A query that
+    * needs one sets it on a child (GraftSession.child,
+    * Tables.sqlSession); a raise left on the shared session (say, of a
+    * safety valve such as cteRecursionRowLimit) would reach every later
+    * query. */
+  private def sessionState(): Set[String] = {
+    def id(o: Option[AnyRef]) = System.identityHashCode(o.orNull)
+    val st = spark.sessionState
+    spark.conf.getAll.map { case (k, v) => s"conf $k=$v" }.toSet ++
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(t =>
+        s"view ${t.name}@${id(st.catalog.getRawTempView(t.name))}") ++
+      spark.catalog.listFunctions().collect().filter(_.isTemporary).map(f =>
+        s"function ${f.name}@${id(st.functionRegistry.lookupFunctionBuilder(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)))}")
+  }
 
   Registry.all.foreach { d =>
     test(s"${d.name} executes on sf0.001") {
-      val before = spark.conf.getAll
+      val before = sessionState()
       val persisted = spark.sparkContext.getPersistentRDDs.keySet
       val n = Tables.scoped {
         val df = d.run(spark, TestSpark.sf)
@@ -42,12 +52,11 @@ class RegistrySpec extends AnyFunSuite {
       // streaming query's) is released when its scope closes
       val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
       assert(left.isEmpty, s"${d.name} left persisted RDDs $left")
-      val residue = (spark.conf.getAll.toSet -- before.toSet)
-        .filterNot { case (k, _) => allowedResidue(k) }
+      val after = sessionState()
+      val residue = (after -- before).map("+ " + _) ++ (before -- after).map("- " + _)
       assert(residue.isEmpty,
-        s"${d.name} left session-config residue $residue — operators " +
-          "must leave the session as they found it (clone the session " +
-          "or snapshot-and-restore)")
+        s"${d.name} changed the session it was handed: ${residue.toSeq.sorted} " +
+          "(set what it needs on a GraftSession.child)")
     }
   }
 
@@ -221,6 +230,17 @@ class RegistrySpec extends AnyFunSuite {
     val hits = operatorSourceHits(Seq("\"spark.graft."))
     assert(hits.isEmpty,
       "spark.graft.* conf key in operator code:\n" + hits.mkString("\n"))
+  }
+
+  // A query touches no state of the session it is handed: a conf it
+  // needs is set when the session is built (GraftSession.local) or on a
+  // child, and GraftSession.child is the one place that sets one.
+  test("a session conf is set only by GraftSession.child") {
+    val hits = operatorSourceHits(Seq(".conf.set("), dirs = Seq(""))
+      .filterNot(inMember(Set("GraftSession.scala" -> "child")))
+    assert(hits.isEmpty,
+      "session conf set outside GraftSession.child (build the query on " +
+        "a child):\n" + hits.mkString("\n"))
   }
 
   // The near-duplicate graph has one source: Dedup.jaccardEdges filters
@@ -537,5 +557,48 @@ class RegistrySpec extends AnyFunSuite {
       "keyed repartition in front of Tables.materialize (the checkpoint " +
         "drops its partitioning; materialize the frame as it is):\n" +
         hits.mkString("\n"))
+  }
+
+  /** `plan` with what differs between two builds of the same query in
+    * one JVM masked, on top of PlanDump.normalize: Spark numbers lambda
+    * variables (`lambda x_49`) and common subexpressions
+    * (`_common_expr_70`) per JVM, each memory sink's name carries a
+    * counter (`graft_stream_hourly_7`), an object prints its identity
+    * hash (`CountMinAgg@2c70861`, `[F@5f1642af`), and a scratch
+    * directory its random suffix (`graft_state_rd3184904662404178099`). */
+  private def maskRun(plan: String): String =
+    PlanDump.normalize(plan)
+      .replaceAll("lambda (\\w+?)_\\d+", "lambda $1_N")
+      .replaceAll("_common_expr_\\d+", "_common_expr_N")
+      .replaceAll("(graft_stream_\\w+?)_\\d+", "$1_N")
+      .replaceAll("@[0-9a-f]+", "@N")
+      .replaceAll("(/graft_[a-z_]+?)\\d{6,}", "$1N")
+
+  // Queries whose plans differ between two builds for a reason other
+  // than session state, with the reason.
+  private val planOrderExempt = Map(
+    "q_profile_table" -> ("Spark's distinct-aggregate rewrite orders its " +
+      "Expand projections by a hash of expression ids, drawn anew per build"))
+
+  // Runs last: every query's optimized plan in a fresh child of the
+  // shared session equals its plan in the shared session after the
+  // whole registry has run there, so no query's plan depends on which
+  // queries ran before it.
+  test("every query plans the same in a fresh session as after the whole registry") {
+    def plan(s: org.apache.spark.sql.SparkSession, d: QueryDef): String = {
+      org.apache.spark.sql.SparkSession.setActiveSession(s)
+      try Tables.scoped(maskRun(
+        d.run(s, TestSpark.sf).queryExecution.optimizedPlan.toString))
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+    val differ = Registry.all.filterNot(d => planOrderExempt.contains(d.name)).flatMap { d =>
+      val fresh = plan(spark.newSession(), d)
+      val shared = plan(spark, d)
+      if (fresh == shared) None
+      else Some(s"${d.name}:\n-- fresh session\n$fresh\n-- shared session\n$shared")
+    }
+    assert(differ.isEmpty,
+      s"${differ.size} queries plan differently after the registry ran:\n" +
+        differ.mkString("\n"))
   }
 }

@@ -97,7 +97,7 @@ class TablesSpec extends AnyFunSuite {
   test("load gives every corpus table the schema parquet inference gives") {
     val s = spark.newSession()
     Tables.names.foreach { n =>
-      // loads first: loadEvents sets the nanos conf the raw read needs
+      // the raw events read needs the nanos conf GraftSession.local sets
       val loaded = Tables.load(s, TestSpark.sf, n).schema
       val raw = s.read.parquet(s"${TestSpark.sf}/$n.parquet")
       assert(Tables.fileSchema(s, TestSpark.sf, n) === raw.schema, n)
